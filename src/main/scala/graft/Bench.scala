@@ -1,46 +1,67 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Full-catalog timing run: min-of-N seconds per query plus a per-query
+  * layer breakdown (jobs, stages, tasks, task CPU and GC seconds), as one
+  * JSON line on stdout and in target/bench.json.
+  *
+  * Usage: sbt "runMain graft.Bench [--plans <dir>] [q1 q2 ...]"
+  *   --plans writes each selected query's formatted plan to
+  *   <dir>/<query>.txt before timing it. Multi-job queries (iterative
+  *   chains, streaming folds) explain their FINAL frame.
+  */
 object Bench {
+  /** Local property naming the query a job belongs to. Streaming
+    * microbatch threads and broadcast/subquery threads inherit local
+    * properties, so their jobs carry it too (the job description does
+    * not survive: microbatches overwrite it). */
+  private val QueryProp = "graft.query"
+
+  private final class Layers {
+    var jobs, stages, tasks = 0L
+    var cpuNs, gcMs = 0L
+    private def secs(x: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, x)
+    def json: String = s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+      s""""task_cpu_s":${secs(cpuNs / 1e9)},"task_gc_s":${secs(gcMs / 1e3)}}"""
+  }
+
+  /** Counts jobs, stages, tasks and task CPU/GC per value of [[QueryProp]].
+    * Listener-bus events arrive on one thread; read after `spark.stop()`,
+    * which drains the bus. */
+  private final class Meter extends SparkListener {
+    val byKey = scala.collection.mutable.Map.empty[String, Layers]
+    private val stageKey = scala.collection.mutable.Map.empty[Int, String]
+    private def key(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(QueryProp)))
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      key(e.properties).foreach(k => byKey.getOrElseUpdate(k, new Layers).jobs += 1)
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      key(e.properties).foreach(stageKey(e.stageInfo.stageId) = _)
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      stageKey.remove(si.stageId).foreach { k =>
+        val l = byKey.getOrElseUpdate(k, new Layers)
+        l.stages += 1
+        l.tasks += si.numTasks
+        l.cpuNs += si.taskMetrics.executorCpuTime
+        l.gcMs += si.taskMetrics.jvmGCTime
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
+    val (plansDir, names) = args.toList match {
+      case "--plans" :: dir :: rest => (Some(dir), rest)
+      case rest => (None, rest)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing targets BYTES; several catalog stages are
-      // CPU-dense on tiny bytes (gap-fill explodes, text/geo kernels),
-      // and the 1 MB default floor collapsed them to 1-5 tasks while the
-      // other cores idled. A 64k floor only binds when partitions are
-      // this small -- at production scale partitions are >>1 MB and the
-      // knob is inert (r17 opt, guide SS2.2/SS2.5)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // the JVM-global compiled-codegen cache holds 100 classes by
-      // default; one sweep-shaped query (g28/g28b: 5-9 chained plans x
-      // several compile units each) plus its neighbors overflow it, so
-      // steady-state runs RE-COMPILED every stage -- jstack sampling
-      // showed executor tasks inside CodeGenerator.compile behind the
-      // KeyLock even on the 12th identical run. Cache size is
-      // data-scale-independent (it bounds compiled classes, not rows);
-      // 4096 fits comfortably in a driver heap at any scale (r17 opt)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // tiny-shuffle writer: with reducers <= 200 and no map-side
-      // combine, the bypass writer opens R files per MAP task and
-      // concatenates them via transferTo -- jstack sampling showed the
-      // busy executor threads inside FileChannel map/unmap doing exactly
-      // that on this host. Threshold 1 routes those shuffles through the
-      // serialized sort writer (one file per map task, no concat):
-      // iterative chains win 20-30% (t32 4.66->3.22, g19 3.64->2.52
-      // same-window min-of-5). INERT AT SCALE: production reducer counts
-      // exceed 200, where the bypass path never fires anyway (r17 opt)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // NTZ fixture timestamps are reinterpreted in the session TZ
-      // (Tables.normalizeTs); pin UTC so timings and plans match Verify
-      // regardless of host TZ
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
+    val sc = spark.sparkContext
+    val meter = new Meter
+    sc.addSparkListener(meter)
     // one throwaway action absorbs session warmup (codegen, classloading,
     // parquet driver init) so per-query timings measure the query
     spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format("noop").save()
@@ -57,8 +78,9 @@ object Bench {
       }
     }
     val selected = // optional name filter for local iteration; driver passes none
-      if (args.nonEmpty) SparkEntry.queries.filter(kv => args.contains(kv._1))
+      if (names.nonEmpty) SparkEntry.queries.filter(kv => names.contains(kv._1))
       else SparkEntry.queries
+    plansDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     // best-of-N per query (default 3): this VM's single-sample timings
     // swing ±25% and occasionally 2× under page-cache/GC interference
     // from neighboring queries (the r4 g04-vs-g16 "inversion" was
@@ -70,7 +92,14 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.map { case (name, fn) =>
-      val times = (1 to runs).map { _ =>
+      plansDir.foreach { d =>
+        try java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$d/$name.txt"),
+          fn(spark, sfDir).queryExecution.explainString(FormattedMode))
+        catch { case e: Throwable => System.err.println(s"[bench] plan of $name failed: $e") }
+        GraftSession.release(spark)
+      }
+      val times = (1 to runs).map { run =>
+        sc.setLocalProperty(QueryProp, s"$name#$run")
         val t0 = System.nanoTime()
         // noop sink forces every column of every row to be produced
         // (count() would let Catalyst prune unevaluated projections).
@@ -81,12 +110,8 @@ object Bench {
           }
         // a crashed query records -1, never a plausible-looking elapsed time
         val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        // drop this query's persisted frames so later timings don't pay
-        // GC pressure for earlier queries' caches; localCheckpoint blocks
-        // (t10/t10b rounds) live outside the catalog cache, so sweep the
-        // persistent-RDD registry too
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        sc.setLocalProperty(QueryProp, null)
+        GraftSession.release(spark)
         dt
       }
       // a query that failed on one run but succeeded on another is NOT an
@@ -95,43 +120,46 @@ object Bench {
       if (times.exists(_ >= 0)) errors.remove(name)
       name -> times
     }.toMap
+    // stopping drains the listener bus, so every job of the last query
+    // has been counted before the layers are read
+    spark.stop()
     val mins = results.map { case (k, times) =>
       k -> (if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0)
     }
     val jstr = graft.queries.Portable.jsonEscape _
-    val qs = mins.map { case (k, v) => jstr(k) + ":" + v }
-      .mkString("{", ",", "}")
+    def obj(kvs: Iterable[(String, Any)]): String =
+      kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    // each query's layers are those of the run its headline min came
+    // from (the last run when every run failed), so they explain that
+    // number rather than a sum over runs
+    val layers = obj(results.map { case (k, times) =>
+      val best = if (times.exists(_ >= 0)) times.indexOf(mins(k)) + 1 else runs
+      k -> meter.byKey.getOrElse(s"$k#$best", new Layers).json
+    })
     // every sample per query, not just the min — the noise estimate IS
-    // the spread, and publishing it makes a slow-looking driver delta
-    // checkable (one inflated sample among fast ones = host noise, all
-    // samples slow = a real regression) without an isolated re-run.
-    // Positioned at the HEAD of the line: the driver keeps the tail, so
-    // truncation sheds the diagnostics before the headline totals.
+    // the spread, and publishing it makes a slow-looking delta checkable
+    // (one inflated sample among fast ones = host noise, all samples
+    // slow = a real regression) without an isolated re-run.
     // a failed run publishes as JSON null, not the -1.0 sentinel: a
     // consumer averaging/min-ing a samples array must never fold a
     // sentinel into the statistic (the headline queries map keeps -1.0,
     // where it is documented as "every run failed")
-    val samples = results.map { case (k, times) =>
-      jstr(k) + ":" + times.map(t => if (t >= 0) t.toString else "null")
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
-      .mkString("{", ",", "}")
-    val total = mins.values.filter(_ >= 0).sum
-    // headline fields ("value", error/query counts) go LAST: the round
-    // driver keeps only the TAIL of this one giant line, and the r12
-    // judge had to re-run the whole bench because "value" printed first
-    // and was truncated away. With the summary at the end, any truncated
-    // capture still carries the auditable totals.
-    val json = s"""{"metric":"total","unit":"sec","sf":"$sfDir","samples":$samples,""" +
-      s""""queries":$qs,"errors":$es,""" +
-      s""""n_queries":${mins.size},"n_errors":${errors.size},"value":$total}"""
+    val samples = obj(results.map { case (k, times) =>
+      k -> times.map(t => if (t >= 0) t.toString else "null").mkString("[", ",", "]")
+    })
+    // layers and samples lead and the headline fields ("value",
+    // error/query counts) go LAST: a capture that keeps only the tail of
+    // this one long line sheds the diagnostics and still carries the
+    // auditable totals (r12 lost "value" when it printed first)
+    val json = s"""{"metric":"total","unit":"sec","sf":"$sfDir","layers":$layers,""" +
+      s""""samples":$samples,"queries":${obj(mins)},""" +
+      s""""errors":${obj(errors.map(kv => kv._1 -> jstr(kv._2)))},""" +
+      s""""n_queries":${mins.size},"n_errors":${errors.size},"value":${mins.values.filter(_ >= 0).sum}}"""
     println(json)
     // stdout alone is lossy (the round driver truncated 40/101 r3 timings
     // from the one giant line) — persist the same JSON to a file too
     val out = java.nio.file.Paths.get("target/bench.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, json.getBytes("UTF-8"))
-    spark.stop()
   }
 }

@@ -2,24 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dumps `.explain("formatted")` for named queries to files — the
-  * before/after plan evidence for optimization rounds. Multi-job queries
-  * (iterative chains, streaming folds) explain their FINAL frame; the
-  * intermediate jobs are profiled by [[Profile]] instead.
-  *
-  * Usage: sbt "runMain graft.PlanDump <outDir> <suffix> q1 q2 ..."
-  *   → <outDir>/<query>_<suffix>.txt
-  */
-object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val suffix = args(1)
-    val names = args.drop(2)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+/** The one Spark session factory: Bench, Verify and the test suite all
+  * run under this conf, so a conf change touches this file only. */
+object GraftSession {
+  def build(): SparkSession = {
+    // task slots: SPARK_GRAFT_CPUS, else every core the JVM sees
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       // AQE coalescing targets BYTES; several catalog stages are
       // CPU-dense on tiny bytes (gap-fill explodes, text/geo kernels),
       // and the 1 MB default floor collapsed them to 1-5 tasks while the
@@ -46,30 +37,23 @@ object PlanDump {
       // same-window min-of-5). INERT AT SCALE: production reducer counts
       // exceed 200, where the bypass path never fires anyway (r17 opt)
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      // NTZ fixture timestamps are reinterpreted in the session TZ
+      // (Tables.normalizeTs); pin UTC so timings and plans match Verify
+      // regardless of host TZ
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[plandump] unknown query: $name")
-        case Some(fn) =>
-          try {
-            val df = fn(spark, sfDir)
-            val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
-            println(s"[plandump] wrote $name ($suffix)")
-          } catch { case e: Throwable =>
-            System.err.println(s"[plandump] $name failed: $e")
-          }
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-    }
-    spark.stop()
+    spark
+  }
+
+  /** Drops every persisted frame a query left behind, so the next query
+    * neither pays GC pressure for it nor plans against its cache.
+    * localCheckpoint blocks (t10/t10b rounds) live outside the catalog
+    * cache, so the persistent-RDD registry is swept too. */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 }

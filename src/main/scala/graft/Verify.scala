@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,62 +8,31 @@ object Verify {
     // optional trailing query names subset the run (local iteration;
     // the driver passes none → full catalog)
     val names = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing targets BYTES; several catalog stages are
-      // CPU-dense on tiny bytes (gap-fill explodes, text/geo kernels),
-      // and the 1 MB default floor collapsed them to 1-5 tasks while the
-      // other cores idled. A 64k floor only binds when partitions are
-      // this small -- at production scale partitions are >>1 MB and the
-      // knob is inert (r17 opt, guide SS2.2/SS2.5)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // the JVM-global compiled-codegen cache holds 100 classes by
-      // default; one sweep-shaped query (g28/g28b: 5-9 chained plans x
-      // several compile units each) plus its neighbors overflow it, so
-      // steady-state runs RE-COMPILED every stage -- jstack sampling
-      // showed executor tasks inside CodeGenerator.compile behind the
-      // KeyLock even on the 12th identical run. Cache size is
-      // data-scale-independent (it bounds compiled classes, not rows);
-      // 4096 fits comfortably in a driver heap at any scale (r17 opt)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // tiny-shuffle writer: with reducers <= 200 and no map-side
-      // combine, the bypass writer opens R files per MAP task and
-      // concatenates them via transferTo -- jstack sampling showed the
-      // busy executor threads inside FileChannel map/unmap doing exactly
-      // that on this host. Threshold 1 routes those shuffles through the
-      // serialized sort writer (one file per map task, no concat):
-      // iterative chains win 20-30% (t32 4.66->3.22, g19 3.64->2.52
-      // same-window min-of-5). INERT AT SCALE: production reducer counts
-      // exceed 200, where the bypass path never fires anyway (r17 opt)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     val selected =
       if (names.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter(kv => names.contains(kv._1))
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      val err =
+        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); None }
+        catch { case e: Throwable =>
+          // toString, not getMessage: the message can be null
+          System.err.println(s"[verify] $name failed: $e"); Some(name)
+        }
       // release this query's persisted/cached frames (s11b cacheTable,
       // the dedup self-join persists) — nothing reuses them across
-      // queries, and ~95 accumulated caches is real memory at larger SFs;
-      // localCheckpoint blocks (t10/t10b) are outside the catalog cache
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // queries, and ~95 accumulated caches is real memory at larger SFs
+      GraftSession.release(spark)
+      err
     }
     val q = graft.queries.Portable.jsonEscape _
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // exit code stays 0 on failures: the compare step reads the outputs
+    // and reports each missing query itself
+    println(s"[verify] ${selected.size - failed.size} ok, ${failed.size} failed: ${failed.mkString(" ")}")
   }
 }

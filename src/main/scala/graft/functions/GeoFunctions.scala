@@ -180,9 +180,6 @@ object GeoFunctions {
       (lat1: Double, lon1: Double, lat2: Double, lon2: Double) => haversineMeters(lat1, lon1, lat2, lon2))
   }
 
-  def geohashUdf(p: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((lat: Double, lon: Double) => geohashEncode(lat, lon, p))
-
   val geohashNeighborsUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((gh: String) => geohashNeighbors(gh))
 }

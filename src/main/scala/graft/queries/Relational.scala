@@ -604,7 +604,6 @@ object Relational {
     //    it, so bench's second invocation recreates from clean. ──
     ("s23_managed_table",
       (s: SparkSession, dir: String) => {
-        import s.implicits._
         s.sql("DROP VIEW IF EXISTS s23_active")
         s.sql("DROP TABLE IF EXISTS s23_nation")
         // a PREVIOUS JVM's in-memory catalog dies with its session but
@@ -3247,7 +3246,6 @@ object Relational {
     //    (`GraftCatalogSpec`). ──
     ("s38_alter_table",
       (s: SparkSession, dir: String) => {
-        import s.implicits._
         s.sql("DROP TABLE IF EXISTS s38_docs")
         // a PREVIOUS JVM's warehouse dir survives its in-memory catalog
         val warehouse = new org.apache.hadoop.fs.Path(

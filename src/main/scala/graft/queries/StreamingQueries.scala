@@ -2489,23 +2489,6 @@ object StreamingQueries {
     * (and memory-sink query name) independent. */
   private val st16Invocation = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** State-store partition sizing: a stateful streaming query FIXES its
-    * state partition count at first start (it is baked into the
-    * checkpoint layout), so production deployments size
-    * `spark.sql.shuffle.partitions` to the state KEY SPACE before
-    * launch rather than inheriting the batch default — with the tiny
-    * windowed/joined key spaces here, 32 state-store instances per
-    * operator per microbatch (open, commit, snapshot, close × batches)
-    * were the catalog's single largest bench cost while computing
-    * nothing. Judged results are partition-count-independent (watermarks
-    * are global, the outputs are aggregates/joins); the batch-only st02
-    * keeps the session's batch parallelism.
-    *
-    * The get/set/restore below assumes the harness runs catalog queries
-    * SEQUENTIALLY on the session (Verify/Bench do): two concurrent
-    * queries would race the session conf and could leak the 4-partition
-    * setting into a batch query. A concurrent harness should scope the
-    * override per-query (e.g. on the writeStream) instead. */
   /** Stage every arrival file with ONE Spark write job instead of one
     * scan+filter+write job per arrival (r17 opt, guide §1.3/§5 — the
     * seconds were k job roundtrips of fixed cost, not bytes): rows
@@ -2550,6 +2533,23 @@ object StreamingQueries {
     }
   }
 
+  /** State-store partition sizing: a stateful streaming query FIXES its
+    * state partition count at first start (it is baked into the
+    * checkpoint layout), so production deployments size
+    * `spark.sql.shuffle.partitions` to the state KEY SPACE before
+    * launch rather than inheriting the batch default — with the tiny
+    * windowed/joined key spaces here, 32 state-store instances per
+    * operator per microbatch (open, commit, snapshot, close × batches)
+    * were the catalog's single largest bench cost while computing
+    * nothing. Judged results are partition-count-independent (watermarks
+    * are global, the outputs are aggregates/joins); the batch-only st02
+    * keeps the session's batch parallelism.
+    *
+    * The get/set/restore below assumes the harness runs catalog queries
+    * SEQUENTIALLY on the session (Verify/Bench do): two concurrent
+    * queries would race the session conf and could leak the 4-partition
+    * setting into a batch query. A concurrent harness should scope the
+    * override per-query (e.g. on the writeStream) instead. */
   private def sizedForState(q: Q): Q = (s, dir) => {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)

@@ -80,7 +80,6 @@ class GeoFunctionsSpec extends AnyFunSuite {
   }
 
   test("column geohash agrees with the Scala function") {
-    import org.apache.spark.sql.functions._
     val spark = SparkSpec.spark
     import spark.implicits._
     val pts = (samples(50) ++ Seq((0.0, 0.0), (89.99, -179.99), (-89.99, 179.99)))
@@ -97,7 +96,6 @@ class GeoFunctionsSpec extends AnyFunSuite {
   }
 
   test("column haversine agrees with the Scala function") {
-    import org.apache.spark.sql.functions._
     val spark = SparkSpec.spark
     import spark.implicits._
     val pts = Seq((0.0, 0.0, 1.0, 0.0), (31.2, 121.4, 39.9, 116.4)).toDF("a", "b", "c", "d")

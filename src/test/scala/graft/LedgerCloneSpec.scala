@@ -72,8 +72,6 @@ class LedgerCloneSpec extends SparkSpec {
 
   test("props travel: the clone keeps mor verbs and the CHECK constraint") {
     withCatalog { (cat, root) =>
-      val s = spark
-      import s.implicits._
       wave(0, 50).writeTo(s"$cat.t")
         .tableProperty("mor", "true")
         .tableProperty("check", "n_chars >= 0").createOrReplace()

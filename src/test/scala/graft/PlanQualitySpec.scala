@@ -13,11 +13,10 @@ class PlanQualitySpec extends SparkSpec {
     // another suite (e.g. the smoke run) may have left catalog caches
     // behind in the shared session; a cache-substituted InMemoryRelation
     // would change the very plan shapes asserted here, so every pin
-    // explains against a cache-free session
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    SparkEntry.queries(name)(spark, dir)
-      .queryExecution.explainString(SimpleMode)
+    // explains against a cache-free session, and leaves none behind
+    GraftSession.release(spark)
+    try SparkEntry.queries(name)(spark, dir).queryExecution.explainString(SimpleMode)
+    finally GraftSession.release(spark)
   }
 
   test("s03: quantity filter is pushed into the parquet scan") {
@@ -470,8 +469,7 @@ class PlanQualitySpec extends SparkSpec {
     // region-bounded frames (ranks in, inc back out) and shuffle ONLY at
     // the partial-agg'd groupBy(dst) — a SortMergeJoin or second exchange
     // here multiplies by 5 rounds and by corpus size at 100 TB
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    GraftSession.release(spark)
     val (ew0, nodes0, r0raw) = graft.queries.GeoQueries.pagerankInputs(spark, dir)
     // checkpoint the loop state exactly as the real loop does (ranks IS a
     // localCheckpoint result from round 2 on) — and it keeps the explain
@@ -486,8 +484,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
     assert(p.contains("Scan ExistingRDD"), p) // iterating over pinned state, not re-deriving edges
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    GraftSession.release(spark)
   }
 
   test("g39: one peel round = 2 broadcast semi-joins + exactly 1 shuffle") {
@@ -495,8 +492,7 @@ class PlanQualitySpec extends SparkSpec {
     // survivor set: survivors are region-bounded (broadcast), and the
     // only exchange is the partial-agg'd degree fold — a SortMergeJoin
     // here multiplies by round count and corpus size at 100 TB
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    GraftSession.release(spark)
     val s = spark
     import s.implicits._
     val und = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"))
@@ -508,7 +504,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(p.contains("LeftSemi"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    GraftSession.release(spark)
   }
 
   test("t23b: the BPE training loop's state is checkpoint-truncated each merge") {
@@ -516,13 +512,10 @@ class PlanQualitySpec extends SparkSpec {
     // plan must hang off the LAST checkpointed state — scans of existing
     // RDDs — never re-derive the corpus (no parquet scan, no window), and
     // the 3-row output union is driven by TakeOrderedAndProject argmaxes
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     val p = plan("t23b_bpe_train")
     assert(p.contains("Scan ExistingRDD"), p)
     assert(!p.contains("FileScan parquet"), p)
     assert(!p.contains("Window"), p)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
   test("t24: encode joins the corpus to per-word token counts; no window, no re-train") {
@@ -530,14 +523,11 @@ class PlanQualitySpec extends SparkSpec {
     // loop's checkpointed state (Scan ExistingRDD — never re-derived), the
     // corpus is scanned ONCE (the documents explode), and the rollup is a
     // hash-agg, not a window
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     val p = plan("t24_bpe_encode")
     assert(p.contains("Scan ExistingRDD"), p)
     assert("FileScan parquet".r.findAllIn(p).size == 1, p)
     assert(!p.contains("Window"), p)
     assert("HashAggregate|ObjectHashAggregate".r.findAllIn(p).size >= 2, p)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
   test("t23: pair counting is two partial-final agg pairs, no window, no corpus sort") {
@@ -558,14 +548,11 @@ class PlanQualitySpec extends SparkSpec {
     // on (cell, j, code_id) — a SortMergeJoin here would shuffle the
     // whole compressed corpus per query batch — and the per-(q, vec)
     // ADC sum partial-aggregates map-side before the rank window
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     val p = plan("v19_ann_ivfpq")
     assert(!p.contains("SortMergeJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("partial_sum"), p)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
   test("m08: the audio feature pass is scan-shaped — one pipeline, no shuffle before the sort") {
@@ -690,12 +677,9 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("g33: the BFS chain is checkpoint-truncated — the judged plan never rescans parquet") {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     val p = plan("g33_bfs_hops")
     assert(p.contains("Scan ExistingRDD"), p)
     assert(!p.contains("FileScan parquet"), p)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
   test("q12: the DP mechanism costs one distinct-agg — noise is a codegen'd projection") {
@@ -712,13 +696,10 @@ class PlanQualitySpec extends SparkSpec {
     // round's corpus pass lands eagerly in a localCheckpoint'd 64-row
     // state frame, so the judged output plans off Scan ExistingRDD —
     // re-deriving round 3 through rounds 1-2 would rescan parquet here
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     val p = plan("v24_pca_power")
     assert(p.contains("Scan ExistingRDD"), p)
     assert(!p.contains("FileScan parquet"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("Window"), p)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
   test("v28: the k-center chain is checkpoint-truncated — no recursive dmin re-derivation") {
@@ -752,12 +733,9 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("g36: the LPA chain is checkpoint-truncated — judged labels never rescan parquet") {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     val p = plan("g36_label_communities")
     assert(p.contains("Scan ExistingRDD"), p)
     assert(!p.contains("FileScan parquet"), p)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
   test("t30: BM25 takes the inverted-index path — term filter below the aggs, dims broadcast") {
@@ -909,7 +887,7 @@ class PlanQualitySpec extends SparkSpec {
 
   test("j16: correlated scalar subqueries fully decorrelate — zero survive optimization") {
     import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-    spark.catalog.clearCache()
+    GraftSession.release(spark)
     val qe = SparkEntry.queries("j16_scalar_subqueries")(spark, dir).queryExecution
     // RewriteCorrelatedScalarSubquery must leave NO SubqueryExpression
     // anywhere in the optimized tree: the WHERE scalar becomes an inner
@@ -1061,7 +1039,6 @@ class PlanQualitySpec extends SparkSpec {
     // FilterEstimation sees the real selectivity and keeps the join
     // sort-merge. Same sandboxing discipline as the s40 pin.
     val s = spark
-    import s.implicits._
     s.sql("DROP TABLE IF EXISTS s54cbo_docs")
     val warehouse = new org.apache.hadoop.fs.Path(
       s.conf.get("spark.sql.warehouse.dir")).toUri.getPath

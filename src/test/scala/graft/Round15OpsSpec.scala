@@ -219,7 +219,6 @@ class Round15OpsSpec extends SparkSpec {
     import s.implicits._
     withCatalog { (cat, root) =>
       val t = appendChain(cat) // 3 files of 100 rows each
-      val dir = new File(root, "t").getPath
       // a pushed doc_id filter makes header counts over-counts for the
       // selection: the builder must decline and the full answer stand
       val filtered = spark.table(t).where($"doc_id" >= 95)

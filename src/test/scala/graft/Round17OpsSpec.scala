@@ -87,8 +87,6 @@ class Round17OpsSpec extends SparkSpec {
 
   test("cross-table txn: the rename is the commit point; helping heals a crashed coordinator") {
     withCatalog { (cat, root) =>
-      val s = spark
-      import s.implicits._
       val rootF = new File(root)
       wave(0, 100).writeTo(s"$cat.t1")
         .tableProperty("mor", "true").create()

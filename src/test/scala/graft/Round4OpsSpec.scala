@@ -60,7 +60,6 @@ class Round4OpsSpec extends SparkSpec {
   }
 
   test("v09: quantized cosine stays within quantization error of exact") {
-    import graft.queries.Portable
     val exact = graft.engine.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)

@@ -24,7 +24,7 @@ class Round6OpsSpec extends SparkSpec {
     assert(best.head.getAs[Long]("beta_micro") == 300000L,
       s"fit must recover beta=0.3/day: ${rows.mkString("; ")}")
     assert(best.head.getAs[Long]("sse") == rows.map(_.getAs[Long]("sse")).min)
-    spark.catalog.clearCache()
+    GraftSession.release(spark)
   }
 
   test("v17: one Lloyd step never increases total PQ quantization distortion") {
@@ -37,7 +37,7 @@ class Round6OpsSpec extends SparkSpec {
     info(f"seed distortion $d0%.4f -> trained $d1%.4f")
     assert(d1 <= d0, s"Lloyd step increased distortion: $d0 -> $d1")
     assert(d1 > 0.0)
-    spark.catalog.clearCache()
+    GraftSession.release(spark)
   }
 
   test("siarChain runs at the reference's full-day depth (24 matrices)") {
@@ -93,6 +93,6 @@ class Round6OpsSpec extends SparkSpec {
     assert(blown > 1000,
       s"the unpersisted chain ($blown nodes) no longer dwarfs the judged " +
         s"plan ($fixed) — the guard's premise changed, re-derive the budget")
-    spark.catalog.clearCache()
+    GraftSession.release(spark)
   }
 }

@@ -7,7 +7,6 @@ import graft.queries.{EpiQueries, GeoQueries}
   * draw's exactness, its mean-field limit, the g28b 2-D grid fit's
   * recovery of both true parameters, and g18's derived partition count. */
 class Round7OpsSpec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
 
   test("g29 draw: summed over every rng residue, draws total exactly e") {
     // drawExpr realizes expectation e (x10^4 fixed point) as
@@ -85,7 +84,7 @@ class Round7OpsSpec extends SparkSpec {
       .head().getDouble(0)
     assert(e16 < 0.10 * mass,
       f"reps=16 residual $e16%.3f exceeds 10%% of total mass $mass%.1f")
-    spark.catalog.clearCache()
+    GraftSession.release(spark)
   }
 
   test("g28b: the 2-D grid fit recovers (beta, gamma), uniquely") {
@@ -102,7 +101,7 @@ class Round7OpsSpec extends SparkSpec {
     assert(best.head.getAs[Long]("gamma_micro") == 199992L,
       s"fit must recover gamma=0.2/day: ${rows.mkString("; ")}")
     assert(best.head.getAs[Long]("sse") == rows.map(_.getAs[Long]("sse")).min)
-    spark.catalog.clearCache()
+    GraftSession.release(spark)
   }
 
   test("g18 zorderPartitions: never 0, 1 at tiny scale, linear at volume") {

@@ -52,7 +52,7 @@ class Round8OpsSpec extends SparkSpec {
     val quota = counts.map { case (c, n) => c -> math.min(n, 100L * w(c) / tw) }
     assert(sampled == quota.filter(_._2 > 0),
       s"sampled sizes $sampled != quotas $quota")
-    spark.catalog.clearCache()
+    GraftSession.release(spark)
   }
 
   test("t23: the judged merge ranking equals brute-force pair counting") {

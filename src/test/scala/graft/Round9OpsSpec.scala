@@ -166,7 +166,7 @@ class Round9OpsSpec extends SparkSpec {
     // and the 10 merges are 10 distinct pairs (re-segmentation is real)
     val pairs = merges.map(_.collect().head).map(r => (r.getString(1), r.getString(2)))
     assert(pairs.distinct.size == 10, pairs.toString)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    GraftSession.release(spark)
   }
 
   test("t23b: the greedy fold handles runs and never false-matches a longer symbol") {
@@ -248,7 +248,7 @@ class Round9OpsSpec extends SparkSpec {
     assert(got.exists { case (q, _, v, _) => !v16Top.contains((q, v)) } ||
       got.map(g => (g._1, g._3)).toSet != v16Top,
       "IVF pruning changed nothing — candidate sets identical")
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    GraftSession.release(spark)
   }
 
   test("m08: frames tile each document's waveform — counts and total energy are conserved") {

@@ -3,16 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM under Test/fork). */
+/** Shared local SparkSession for all suites (one JVM under Test/fork),
+  * built with the same conf as the Bench and Verify runners. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val s = GraftSession.build()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.collection.mutable.ListBuffer
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Dataset, Row}
 
 /** Checkpoint recovery — the property that makes Structured Streaming
   * production-grade and that no single-run test can see: a stateful

@@ -7,7 +7,7 @@ import scala.util.Random
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{LedgerSource, TxnLog}
+import graft.sources.TxnLog
 
 /** Seeded fuzz for the cross-table transaction log (judged as
   * s67/st34): random interleavings of
