@@ -56,4 +56,23 @@ object GraftSession {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
+
+  /** Runs `body` with the session conf overrides `kvs` in force, then puts
+    * each key back as it was: its prior value, or unset if it had none.
+    * `getAll` (the explicitly set keys) decides which, since `getOption`
+    * reports a registered key's default as if it were set. Restores on a
+    * throw too, so a failing query cannot leak its overrides into the
+    * next one. Like any session conf change it is not safe under queries
+    * run concurrently on the same session. */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> set.get(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

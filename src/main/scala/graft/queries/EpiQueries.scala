@@ -107,7 +107,7 @@ object EpiQueries {
     * (area, kind, hs) where hs ∈ [0,100) is the user's deterministic
     * status draw: hs<4 → I, hs<10 → A, else S; R starts empty —
     * patient-zero seeding (`patient_zero`, :35-45) made deterministic. */
-  private def seedAggExprs(unit: Long = 10000L): Seq[String] =
+  private def seedAggExprs(unit: Long): Seq[String] =
     Kinds.flatMap { k => Seq(
       s"CAST(sum(CASE WHEN kind = $k AND hs >= 10 THEN $unit ELSE 0 END) AS BIGINT) AS s$k",
       s"CAST(sum(CASE WHEN kind = $k AND hs < 4 THEN $unit ELSE 0 END) AS BIGINT) AS i$k",
@@ -141,7 +141,7 @@ object EpiQueries {
   private def infectStagesEx(div: (String, String) => String,
                              coefExpr: Int => String,
                              extras: Seq[String],
-                             gdExpr: String = GdMicro.toString): Seq[Seq[String]] = {
+                             gdExpr: String): Seq[Seq[String]] = {
     val pass = extras ++ ("area" +: stateCols)
     val stage1 = pass ++ Kinds.map { k =>
       val num = s"(s$k + i$k + a$k + r$k)"
@@ -479,7 +479,7 @@ object EpiQueries {
 
   private def infectSqlCtes(prefix: String, prev: String,
                             coef: Seq[Long],
-                            gd: String = GdMicro.toString): (String, String) = {
+                            gd: String): (String, String) = {
     val names = Seq("a", "b", "c", "d").map(x => s"$prefix$x")
     val ctes = infectStages(duckDiv, coef, gd).zip(names).zip(prev +: names)
       .map { case ((exprs, nm), from) =>

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withConf
 import graft.engine.Tables
 import Portable._
 
@@ -412,13 +413,8 @@ object Relational {
         val incoming = ev.join(broadcast(mx), $"day" === $"md")
           .select($"event_id",
             concat(lit("r2_"), $"event_type").as("event_type"), $"day")
-        val key = "spark.sql.sources.partitionOverwriteMode"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "dynamic")
-        try incoming.write.mode("overwrite").partitionBy("day").parquet(out)
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
+        withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+          incoming.write.mode("overwrite").partitionBy("day").parquet(out)
         }
         // partition-column type inference reads day back as DATE;
         // render it to the written string form for the judged schema
@@ -2235,12 +2231,12 @@ object Relational {
           catch { case e: Exception => e.getMessage.contains("diverged") }
         require(ffRefused, "s53 lineages must have genuinely diverged")
         val row = s.sql("CALL graft_mg.system.merge_branch(" +
-          "'s53docs', 'dev', 'main')").head                      // v5
+          "'s53docs', 'dev', 'main')").head()                      // v5
         require(row.getLong(2) > 0,
           "the merge must have carried dev's post-fork files")
         // the merged manifest owns every file: converge reclaims ZERO
         s.sql("CALL graft_mg.system.drop_branch('s53docs', 'dev')")
-        val conv = s.sql("CALL graft_mg.system.converge('s53docs')").head
+        val conv = s.sql("CALL graft_mg.system.converge('s53docs')").head()
         require(conv.getLong(0) == 0,
           s"a merged lineage leaves nothing to reclaim, got ${conv.getLong(0)}")
         s.table("graft_mg.s53docs")
@@ -2304,7 +2300,7 @@ object Relational {
         } finally { pool.shutdown(): Unit }
         s.sql("CALL graft_brr.system.merge_branch('s58docs', 'dev', 'main')")
         s.sql("CALL graft_brr.system.drop_branch('s58docs', 'dev')")
-        val conv = s.sql("CALL graft_brr.system.converge('s58docs')").head
+        val conv = s.sql("CALL graft_brr.system.converge('s58docs')").head()
         val agg = s.table("graft_brr.s58docs").groupBy($"lang")
           .agg(count(lit(1)).cast("long").as("n_docs"),
             sum($"doc_id").cast("long").as("id_sum"),
@@ -2633,7 +2629,7 @@ object Relational {
           .tableProperty("mor", "true").createOrReplace()      // v1
         // ── the lifecycle, SQL end to end ──
         val created = s.sql("CALL graft_ml.system.create_mv('s68docs', " +
-          "'by_lang', 'lang', 'count::n_docs,sum:n_chars:total_chars')").head
+          "'by_lang', 'lang', 'count::n_docs,sum:n_chars:total_chars')").head()
         require(created.getString(0) == "by_lang" && created.getLong(1) == 1L,
           s"create_mv must build at the pinned head v1, got $created")
         s.sql("CALL graft_ml.system.create_mv('s68docs', " +
@@ -2645,7 +2641,7 @@ object Relational {
           "WHERE lang = 'fr'")                                  // v4
         // refresh advances builtAt to the current head
         val refreshed = s.sql(
-          "CALL graft_ml.system.refresh_mv('s68docs', 'tmp_v')").head
+          "CALL graft_ml.system.refresh_mv('s68docs', 'tmp_v')").head()
         require(refreshed.getLong(1) == 4L,
           s"refresh_mv must rebuild at the head, got $refreshed")
         // a count-only probe is answered by the refreshed narrow view…
@@ -2714,7 +2710,7 @@ object Relational {
         // ── open the transaction: one work branch per participant ──
         val id = s.sql(
           "CALL graft_tx.system.txn_begin('s67state,s67audit')")
-          .head.getString(0)
+          .head().getString(0)
         // the MERGE lands on the state table's work branch…
         docs.where(pmod($"doc_id", lit(2)) === 1)
           .createOrReplaceTempView("s67_delta")
@@ -2784,7 +2780,7 @@ object Relational {
         // the key space, and w2 = w1/2 guarantees the old files
         // straddle the new halves at every SF (round-robin input makes
         // each task's file span its bucket)
-        val maxId = docs.agg(max($"doc_id")).head.getLong(0)
+        val maxId = docs.agg(max($"doc_id")).head().getLong(0)
         val w1 = maxId + 1
         val w2 = math.max(1L, w1 / 2)
         docs.where(pmod($"doc_id", lit(2)) === 0).repartition(4)
@@ -2848,7 +2844,7 @@ object Relational {
         s.conf.set("spark.sql.catalog.graft_wd.root", scratchPath("s66_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
-        val maxId = docs.agg(max($"doc_id")).head.getLong(0)
+        val maxId = docs.agg(max($"doc_id")).head().getLong(0)
         val w = maxId / 8 + 1 // ~8 buckets at every SF
         docs.where(pmod($"doc_id", lit(2)) === 0).repartition(4)
           .writeTo("graft_wd.s66docs")
@@ -3462,14 +3458,10 @@ object Relational {
                 |       CASE WHEN doc_id % 10 < 9 THEN CAST(0 AS BIGINT)
                 |            ELSE doc_id END AS skew_key
                 |FROM s54_src""".stripMargin)
-        val hKey = "spark.sql.statistics.histogram.enabled"
-        val bKey = "spark.sql.statistics.histogram.numBins"
-        val (oldH, oldB) = (s.conf.get(hKey), s.conf.get(bKey))
-        try {
-          s.conf.set(hKey, "true")
-          s.conf.set(bKey, "16")
+        withConf(s, "spark.sql.statistics.histogram.enabled" -> "true",
+            "spark.sql.statistics.histogram.numBins" -> "16") {
           s.sql("ANALYZE TABLE s54_docs COMPUTE STATISTICS FOR COLUMNS skew_key")
-        } finally { s.conf.set(hKey, oldH); s.conf.set(bKey, oldB) }
+        }
         val meta = s.sessionState.catalog.getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier("s54_docs"))
         val hist = meta.stats.getOrElse(sys.error(
@@ -3538,7 +3530,7 @@ object Relational {
           .map(f => (f.getName, f.length)).toSet
         val before = dataFiles()
         val row = s.sql(
-          "CALL graft_rt.system.rewrite_tombstones('s55docs', 0.3)").head
+          "CALL graft_rt.system.rewrite_tombstones('s55docs', 0.3)").head()
         // cold files byte-identical; the scatter overlay survives
         val after = dataFiles()
         require((before -- after).size == 1 && (after -- before).size == 1,

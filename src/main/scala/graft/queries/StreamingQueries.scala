@@ -1,20 +1,23 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, TimeMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, TimeMode, Trigger}
+import graft.GraftSession.withConf
 import graft.engine.Tables
 import Portable._
 
 /** Structured-Streaming surfaces that are ALSO oracle-judged: st01 runs
   * the real streaming engine (file source → windowed agg → memory sink,
-  * `Trigger.AvailableNow`) and must converge to the batch answer DuckDB
+  * AvailableNow trigger) and must converge to the batch answer DuckDB
   * computes; st02 proves `session_window` semantics against an
   * islands-and-gaps SQL oracle; st10 stages multi-batch arrival so a
   * watermark genuinely expires between microbatches and judges the
   * resulting late-data drops arithmetically. The remaining stateful
   * behaviors a batch oracle cannot observe (state timeouts) are covered
-  * by `StreamingPresenceSpec` instead. */
+  * by `StreamingPresenceSpec` instead. Every streaming run goes through
+  * [[drain]]; conf overrides through [[GraftSession.withConf]]. */
 object StreamingQueries {
   type Q = (SparkSession, String) => DataFrame
 
@@ -23,28 +26,10 @@ object StreamingQueries {
     // ── the hourly count query executed BY the streaming engine ──
     ("st01_stream_counts",
       (s: SparkSession, dir: String) => {
-        // the file stream source requires a DIRECTORY; stage the single
-        // parquet file into one (at scale the source would already be a
-        // date-partitioned directory tree — S6)
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_events"))
-        java.nio.file.Files.createDirectories(stage)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          stage.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // raw scan schema + the shared type-adaptive ts normalization
-        // (Tables.normalizeTs) — the fixture's ts encoding has drifted
-        // once already and the streaming surface must follow batch
-        val schema = Tables.rawEvents(s, dir).schema
-        val src = Tables.normalizeTs(
-          s.readStream.schema(schema).parquet(stage.toString))
-        val counts = src
+        val counts = eventStream(s, dir, "stream_events")()
           .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"))
-        val q = counts.writeStream.format("memory").queryName("st01_mem")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st01_mem")
+        drainToMemory(counts, "st01_mem", "complete")
           .select(tsSec(col("w.start")).as("hour"), col("event_type"), col("n"))
           .orderBy(col("hour"), col("event_type"))
       },
@@ -87,23 +72,12 @@ object StreamingQueries {
     //    deterministic regardless of which duplicate row survived. ──
     ("st03_stream_dedup",
       (s: SparkSession, dir: String) => {
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_dedup_events"))
-        java.nio.file.Files.createDirectories(stage)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          stage.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        val schema = Tables.rawEvents(s, dir).schema
-        val deduped = Tables.normalizeTs(
-            s.readStream.schema(schema).parquet(stage.toString))
+        val deduped = eventStream(s, dir, "stream_dedup_events")()
           .withColumn("hour", date_trunc("hour", col("ts")))
           .withWatermark("hour", "2 hours")
           .dropDuplicates("user_id", "hour")
           .select(col("user_id"), col("hour"))
-        val q = deduped.writeStream.format("memory").queryName("st03_mem")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st03_mem")
+        drainToMemory(deduped, "st03_mem", "append")
           .groupBy(col("hour"))
           .agg(count(lit(1)).as("n_users"))
           .select(tsSec(col("hour")).as("hour"), col("n_users"))
@@ -126,15 +100,7 @@ object StreamingQueries {
     //    and the result equals DuckDB's batch interval join exactly. ──
     ("st04_stream_stream_join",
       (s: SparkSession, dir: String) => {
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_join_events"))
-        java.nio.file.Files.createDirectories(stage)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          stage.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        val schema = Tables.rawEvents(s, dir).schema
-        def src() = Tables.normalizeTs(
-          s.readStream.schema(schema).parquet(stage.toString))
+        val src = eventStream(s, dir, "stream_join_events")
         val purchases = src().where(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
           .withWatermark("p_ts", "2 hours")
@@ -145,10 +111,7 @@ object StreamingQueries {
           col("p_user") === col("c_user") &&
             col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
             col("c_ts") <= col("p_ts"))
-        val q = joined.writeStream.format("memory").queryName("st04_mem")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st04_mem")
+        drainToMemory(joined, "st04_mem", "append")
           .groupBy(date_trunc("hour", col("p_ts")).as("hour"))
           .agg(count(lit(1)).as("n_pairs"),
             countDistinct(col("p_user")).as("n_users"))
@@ -174,15 +137,7 @@ object StreamingQueries {
     //    DuckDB running the equivalent batch join. ──
     ("st05_stream_static_join",
       (s: SparkSession, dir: String) => {
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_static_events"))
-        java.nio.file.Files.createDirectories(stage)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          stage.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        val schema = Tables.rawEvents(s, dir).schema
-        val src = Tables.normalizeTs(
-          s.readStream.schema(schema).parquet(stage.toString))
+        val src = eventStream(s, dir, "stream_static_events")()
         val dim = s.read.parquet(s"$dir/customer.parquet")
           .select(col("c_custkey"), col("c_mktsegment"))
         val enriched = src.join(broadcast(dim),
@@ -190,10 +145,7 @@ object StreamingQueries {
         val agg = enriched
           .groupBy(window(col("ts"), "1 hour").as("w"), col("c_mktsegment"))
           .agg(count(lit(1)).as("n_events"), moneySum(col("value")).as("sum_value"))
-        val q = agg.writeStream.format("memory").queryName("st05_mem")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st05_mem")
+        drainToMemory(agg, "st05_mem", "complete")
           .select(tsSec(col("w.start")).as("hour"), col("c_mktsegment"),
             col("n_events"), col("sum_value"))
           .orderBy(col("hour"), col("c_mktsegment"))
@@ -216,18 +168,10 @@ object StreamingQueries {
     //    shuffle, so no key ever concentrates. ──
     ("st06_stateful_counts",
       (s: SparkSession, dir: String) => {
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_state_events"))
-        java.nio.file.Files.createDirectories(stage)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          stage.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        val schema = Tables.rawEvents(s, dir).schema
         import s.implicits._
         // epoch seconds derived from the NORMALIZED timestamp (floor via
         // unix_timestamp), not from raw fixture integers
-        val src = Tables.normalizeTs(
-            s.readStream.schema(schema).parquet(stage.toString))
+        val src = eventStream(s, dir, "stream_state_events")()
           .select(col("user_id").cast("long").as("user_id"),
             unix_timestamp(col("ts")).as("es"))
           .as[(Long, Long)]
@@ -244,11 +188,7 @@ object StreamingQueries {
             state.update((n, mn, mx))
             (user, n, mn, mx)
           }
-        val q = updates.toDF("user_id", "n", "mn", "mx")
-          .writeStream.format("memory").queryName("st06_mem")
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st06_mem")
+        drainToMemory(updates.toDF("user_id", "n", "mn", "mx"), "st06_mem", "update")
           .groupBy(col("user_id"))
           .agg(max(col("n")).as("n_events"), min(col("mn")).as("first_es"),
             max(col("mx")).as("last_es"))
@@ -268,38 +208,17 @@ object StreamingQueries {
     //    two independent stateful engines, one judged answer. ──
     ("st07_transform_with_state",
       (s: SparkSession, dir: String) => {
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_tws_events"))
-          java.nio.file.Files.createDirectories(stage)
-          java.nio.file.Files.copy(
-            java.nio.file.Paths.get(s"$dir/events.parquet"),
-            stage.resolve("events.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          val schema = Tables.rawEvents(s, dir).schema
-          import s.implicits._
-          val src = Tables.normalizeTs(
-              s.readStream.schema(schema).parquet(stage.toString))
+        import s.implicits._
+        withConf(s, RocksDbStateStore) {
+          val src = eventStream(s, dir, "stream_tws_events")()
             .select(col("user_id").cast("long").as("user_id"),
               unix_timestamp(col("ts")).as("es"))
             .as[(Long, Long)]
           val updates = src.groupByKey(_._1)
             .transformWithState(new graft.streaming.UserStatsProcessor,
               TimeMode.None(), OutputMode.Update())
-          val q = updates.toDF("user_id", "n", "mn", "mx")
-            .writeStream.format("memory").queryName("st07_mem")
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+          drainToMemory(updates.toDF("user_id", "n", "mn", "mx"), "st07_mem", "update")
         }
-        s.table("st07_mem")
           .groupBy(col("user_id"))
           .agg(max(col("n")).as("n_events"), min(col("mn")).as("first_es"),
             max(col("mx")).as("last_es"))
@@ -319,22 +238,10 @@ object StreamingQueries {
     //    starts floor_hour(t) and floor_hour(t) − 1h. ──
     ("st08_sliding_window",
       (s: SparkSession, dir: String) => {
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_events_sl"))
-        java.nio.file.Files.createDirectories(stage)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          stage.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        val schema = Tables.rawEvents(s, dir).schema
-        val src = Tables.normalizeTs(
-          s.readStream.schema(schema).parquet(stage.toString))
-        val counts = src
+        val counts = eventStream(s, dir, "stream_events_sl")()
           .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"))
-        val q = counts.writeStream.format("memory").queryName("st08_mem")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st08_mem")
+        drainToMemory(counts, "st08_mem", "complete")
           .select(tsSec(col("w.start")).as("win_start"), col("event_type"), col("n"))
           .orderBy(col("win_start"), col("event_type"))
       },
@@ -365,27 +272,8 @@ object StreamingQueries {
           .repartition(3)
           .write.mode("overwrite").parquet(stage)
         val out = Portable.scratchPath("stream_fb_out")
-        val schema = s.read.parquet(stage).schema
-        val src = Tables.normalizeTs(
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(stage))
-        val counts = src
-          .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-        val q = counts.writeStream
-          .outputMode("complete")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            batch.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("day")
-              .parquet(out): Unit
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.read.parquet(out)
-          .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-            col("event_type"), col("n"))
-          .orderBy(col("day"), col("event_type"))
+        drain(dailyCountsSink(stagedEvents(s, stage), out))
+        readDailyCounts(s, out)
       },
       """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, event_type,
         |       CAST(count(*) AS BIGINT) AS n
@@ -423,29 +311,20 @@ object StreamingQueries {
           .withColumn("__late", tsx < col("mx") - expr("INTERVAL 3 HOUR"))
           .withColumn("__half", half)
         val srcCols = raw.columns.map(col).toSeq
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_late_events"))
-        java.nio.file.Files.createDirectories(stage)
         // one file per arrival batch, mtimes force the arrival order
         // (the file source processes oldest-mtime first); all three
         // arrivals staged by ONE write job ([[stageArrivals]])
         val now = System.currentTimeMillis()
-        stageArrivals(tagged, srcCols,
+        val stage = stageArrivals(tagged, srcCols,
           when(col("__half") === 0, 0)
             .when(!col("__late"), 1).otherwise(2),
-          Seq("arrival0", "arrival1", "arrival2"), stage,
+          Seq("arrival0", "arrival1", "arrival2"), "stream_late_events",
           i => now - (3 - i) * 60000)
-        val schema = s.read.parquet(stage.toString).schema
-        val src = Tables.normalizeTs(
-            s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(stage.toString))
+        val counts = stagedEvents(s, stage)
           .withWatermark("ts", "2 hours")
-        val counts = src
           .groupBy(window(col("ts"), "1 hour").as("w"))
           .agg(count(lit(1)).as("n"))
-        val q = counts.writeStream.format("memory").queryName("st10_mem")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st10_mem")
+        drainToMemory(counts, "st10_mem", "append")
           .select(tsSec(col("w.start")).as("hour"), col("n"))
           .orderBy(col("hour"))
       },
@@ -485,15 +364,7 @@ object StreamingQueries {
     //    watermark-held tail is judged, not hand-waved. ──
     ("st11_stream_outer_join",
       (s: SparkSession, dir: String) => {
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_outer_events"))
-        java.nio.file.Files.createDirectories(stage)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          stage.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        val schema = Tables.rawEvents(s, dir).schema
-        def src() = Tables.normalizeTs(
-          s.readStream.schema(schema).parquet(stage.toString))
+        val src = eventStream(s, dir, "stream_outer_events")
         val purchases = src().where(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
           .withWatermark("p_ts", "2 hours")
@@ -505,10 +376,7 @@ object StreamingQueries {
             col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
             col("c_ts") <= col("p_ts"),
           "leftOuter")
-        val q = joined.writeStream.format("memory").queryName("st11_mem")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st11_mem")
+        drainToMemory(joined, "st11_mem", "append")
           .groupBy(date_trunc("hour", col("p_ts")).as("hour"))
           .agg(count(lit(1)).as("n_rows"),
             sum(when(col("c_user").isNull, 1L).otherwise(0L)).as("n_null"))
@@ -580,14 +448,9 @@ object StreamingQueries {
         val uh3 = pmod(portableHash(col("user_id").cast("string")), lit(3))
         val uh5 = pmod(portableHash(col("user_id").cast("string")), lit(5))
         val srcCols = raw.columns.map(col).toSeq
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_wmdedup_events"))
-        java.nio.file.Files.createDirectories(stage)
-        // the week grid is fixture-bounded (one month); this collect is
-        // staging-only scalars, the t10b discipline — and the closed-form
-        // oracle below assumes exactly this grid, so fail loudly if the
-        // fixtures ever change shape
-        val weeks = raw.select(week.as("w")).distinct().orderBy(col("w"))
-          .collect().map(_.getTimestamp(0))
+        // the closed-form oracle below assumes exactly this week grid, so
+        // fail loudly if the fixtures ever change shape
+        val (weeks, wkIdx) = weekGrid(raw)
         require(weeks.length == 5,
           s"fixtures changed: st12's closed-form oracle assumes a 5-week " +
             s"event span, got ${weeks.length} — re-derive the case analysis")
@@ -599,28 +462,18 @@ object StreamingQueries {
         // arrivals 0-4 = weekly batches minus held rows (the held
         // predicates win the when-chain), 5/6 = the straggler batches;
         // all seven staged by ONE write job ([[stageArrivals]])
-        val wkIdx = weeks.zipWithIndex.tail
-          .foldLeft(when(week === lit(weeks(0)), 0)) {
-            case (acc, (w, i)) => acc.when(week === lit(w), i)
-          }
-        stageArrivals(raw, srcCols,
+        val stage = stageArrivals(raw, srcCols,
           when(heldA, 5).when(heldB, 6).otherwise(wkIdx),
           weeks.indices.map(i => s"arrival$i") ++
             Seq("arrival5_last_week_stragglers", "arrival6_mid_week_stragglers"),
-          stage,
+          "stream_wmdedup_events",
           i => if (i < 5) now - (9 - i) * 60000 else now - (8 - i) * 60000)
-        val schema = s.read.parquet(stage.toString).schema
-        val src = Tables.normalizeTs(
-            s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(stage.toString))
+        val deduped = stagedEvents(s, stage)
           .withColumn("week", date_trunc("week", col("ts")))
           .withWatermark("week", "10 days")
           .dropDuplicatesWithinWatermark("user_id")
           .select(col("user_id"), col("week"))
-        val q = src.writeStream.format("memory").queryName("st12_mem")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st12_mem")
+        drainToMemory(deduped, "st12_mem", "append")
           .select(col("user_id"), tsSec(col("week")).as("week"))
           .orderBy(col("user_id"), col("week"))
       },
@@ -678,54 +531,27 @@ object StreamingQueries {
     ("st13_stream_funnel",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        // transformWithState needs multi-column-family state — RocksDB
-        // only (the st07 provider dance, restored in finally)
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
         val raw = Tables.events(s, dir)
-        val week = date_trunc("week", col("ts"))
-        val srcCols = raw.columns.map(col).toSeq
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_funnel_events"))
-        java.nio.file.Files.createDirectories(stage)
-        // weekly arrival batches in chronological mtime order (staging-
-        // only scalars, the t10b/st12 discipline); ONE write job stages
-        // all of them ([[stageArrivals]])
-        val weeks = raw.select(week.as("w")).distinct().orderBy(col("w"))
-          .collect().map(_.getTimestamp(0))
+        // weekly arrival batches in chronological mtime order; ONE write
+        // job stages all of them ([[stageArrivals]])
+        val (weeks, wkIdx) = weekGrid(raw)
         val now = System.currentTimeMillis()
-        stageArrivals(raw, srcCols,
-          weeks.zipWithIndex.tail
-            .foldLeft(when(week === lit(weeks(0)), 0)) {
-              case (acc, (w, i)) => acc.when(week === lit(w), i)
-            },
-          weeks.indices.map(i => s"arrival$i"), stage,
+        val stage = stageArrivals(raw, raw.columns.map(col).toSeq, wkIdx,
+          weeks.indices.map(i => s"arrival$i"), "stream_funnel_events",
           i => now - (weeks.length + 2 - i) * 60000)
-        val schema = s.read.parquet(stage.toString).schema
-        val src = Tables.normalizeTs(
-            s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(stage.toString))
-          .select(col("user_id").cast("long").as("user_id"),
-            unix_micros(col("ts")).as("tsu"),
-            col("event_id").cast("long").as("event_id"),
-            col("event_type").as("tpe"))
-          .as[(Long, Long, Long, String)]
-        val updates = src.groupByKey(_._1)
-          .transformWithState(new graft.streaming.FunnelProcessor,
-            TimeMode.None(), OutputMode.Update())
-        val q = updates.toDF("user_id", "stage")
-          .writeStream.format("memory").queryName("st13_mem")
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+        // transformWithState needs multi-column-family state: RocksDB only
+        withConf(s, RocksDbStateStore) {
+          val src = stagedEvents(s, stage)
+            .select(col("user_id").cast("long").as("user_id"),
+              unix_micros(col("ts")).as("tsu"),
+              col("event_id").cast("long").as("event_id"),
+              col("event_type").as("tpe"))
+            .as[(Long, Long, Long, String)]
+          val updates = src.groupByKey(_._1)
+            .transformWithState(new graft.streaming.FunnelProcessor,
+              TimeMode.None(), OutputMode.Update())
+          drainToMemory(updates.toDF("user_id", "stage"), "st13_mem", "update")
         }
-        s.table("st13_mem")
           .groupBy(col("user_id")).agg(max(col("stage")).as("stage"))
           .where(col("stage") >= 1L)
           .orderBy(col("user_id"))
@@ -784,13 +610,6 @@ object StreamingQueries {
     ("st14_session_timeout",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        // transformWithState is RocksDB-only (timers are a second column
-        // family) — the st07/st13 provider dance, restored in finally
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
         val week = date_trunc("week", col("ts"))
         // the fixture's users are active nearly every week, so sessions
         // would never time out — thin the stream with a deterministic
@@ -800,49 +619,32 @@ object StreamingQueries {
           col("user_id").cast("string"), lit(":"),
           date_format(week, "yyyy-MM-dd"))), lit(3))
         val raw = Tables.events(s, dir).where(cellCoin =!= 0)
-        val srcCols = raw.columns.map(col).toSeq
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_timeout_events"))
-        java.nio.file.Files.createDirectories(stage)
-        // weekly arrival grid (staging-only scalars, the t10b/st12
-        // discipline); the oracle's batch-index arithmetic assumes it.
-        // ONE write job stages every arrival ([[stageArrivals]])
-        val weeks = raw.select(week.as("w")).distinct().orderBy(col("w"))
-          .collect().map(_.getTimestamp(0))
+        // weekly arrival grid; the oracle's batch-index arithmetic
+        // assumes it. ONE write job stages every arrival ([[stageArrivals]])
+        val (weeks, wkIdx) = weekGrid(raw)
         require(weeks.length == 5,
           s"fixtures changed: st14's closed-form oracle assumes a 5-week " +
             s"event span, got ${weeks.length} — re-derive the case analysis")
         val now = System.currentTimeMillis()
-        stageArrivals(raw, srcCols,
-          weeks.zipWithIndex.tail
-            .foldLeft(when(week === lit(weeks(0)), 0)) {
-              case (acc, (w, i)) => acc.when(week === lit(w), i)
-            },
-          weeks.indices.map(i => s"arrival$i"), stage,
+        val stage = stageArrivals(raw, raw.columns.map(col).toSeq, wkIdx,
+          weeks.indices.map(i => s"arrival$i"), "stream_timeout_events",
           i => now - (weeks.length + 2 - i) * 60000)
-        val schema = s.read.parquet(stage.toString).schema
-        val src = Tables.normalizeTs(
-            s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(stage.toString))
-          .withColumn("week", date_trunc("week", col("ts")))
-          .withWatermark("week", "1 hour")
-          .select(col("user_id").cast("long").as("user_id"),
-            unix_micros(col("week")).as("wku"))
-          .as[(Long, Long)]
-        val sessions = src.groupByKey(_._1)
-          .transformWithState(
-            new graft.streaming.SessionTimeoutProcessor(10L * 24 * 3600 * 1000),
-            TimeMode.EventTime(), OutputMode.Append())
-        val q = sessions.toDF("user_id", "last_wku", "n_events")
-          .writeStream.format("memory").queryName("st14_mem")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+        // transformWithState is RocksDB-only (timers are a second column
+        // family)
+        withConf(s, RocksDbStateStore) {
+          val src = stagedEvents(s, stage)
+            .withColumn("week", date_trunc("week", col("ts")))
+            .withWatermark("week", "1 hour")
+            .select(col("user_id").cast("long").as("user_id"),
+              unix_micros(col("week")).as("wku"))
+            .as[(Long, Long)]
+          val sessions = src.groupByKey(_._1)
+            .transformWithState(
+              new graft.streaming.SessionTimeoutProcessor(10L * 24 * 3600 * 1000),
+              TimeMode.EventTime(), OutputMode.Append())
+          drainToMemory(sessions.toDF("user_id", "last_wku", "n_events"),
+            "st14_mem", "append")
         }
-        s.table("st14_mem")
           .select(col("user_id"),
             tsSec(timestamp_micros(col("last_wku"))).as("session_end"),
             col("n_events"))
@@ -904,20 +706,8 @@ object StreamingQueries {
     ("st15_join_then_timeout",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val stage = java.nio.file.Paths.get(Portable.scratchPath("st15_events"))
-          java.nio.file.Files.createDirectories(stage)
-          java.nio.file.Files.copy(
-            java.nio.file.Paths.get(s"$dir/events.parquet"),
-            stage.resolve("events.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          val schema = Tables.rawEvents(s, dir).schema
-          def src() = Tables.normalizeTs(
-            s.readStream.schema(schema).parquet(stage.toString))
+        withConf(s, RocksDbStateStore) {
+          val src = eventStream(s, dir, "st15_events")
           val purchases = src().where(col("event_type") === "purchase")
             .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
             .withWatermark("p_ts", "2 hours")
@@ -935,17 +725,9 @@ object StreamingQueries {
             .transformWithState(
               new graft.streaming.SessionTimeoutProcessor(3600L * 1000),
               TimeMode.EventTime(), OutputMode.Append())
-          val q = sessions.toDF("user_id", "last_tsu", "n_matches")
-            .writeStream.format("memory").queryName("st15_mem")
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+          drainToMemory(sessions.toDF("user_id", "last_tsu", "n_matches"),
+            "st15_mem", "append")
         }
-        s.table("st15_mem")
           .select(col("user_id"),
             tsSec(timestamp_micros(col("last_tsu"))).as("last_match"),
             col("n_matches"))
@@ -993,59 +775,19 @@ object StreamingQueries {
     //    and that the halves partition the fixture. ──
     ("st16_checkpoint_recovery",
       (s: SparkSession, dir: String) => {
-        val inv = st16Invocation.incrementAndGet()
-        val stage = java.nio.file.Paths.get(
-          Portable.scratchPath(s"st16_events_$inv"))
-        java.nio.file.Files.createDirectories(stage)
+        val inv = invocation.incrementAndGet()
         val out = Portable.scratchPath(s"st16_out_$inv")
         val ckpt = Portable.scratchPath(s"st16_ckpt_$inv")
-        val raw = Tables.rawEvents(s, dir)
-        val srcCols = raw.columns.map(col).toSeq
-        val half = pmod(portableHash(col("event_id").cast("string")), lit(2))
-        def writeArrival(df: DataFrame, name: String, mtime: Long): Unit = {
-          val tmp = Portable.scratchPath(s"st16_stage_${inv}_$name")
-          df.select(srcCols: _*).coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val target = stage.resolve(s"$name.parquet")
-          java.nio.file.Files.copy(part.toPath, target,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          require(target.toFile.setLastModified(mtime),
-            s"mtime update failed for $name — arrival staging cannot " +
-              "guarantee ingestion order on this filesystem")
-        }
+        val arrive = waveArrivals(Tables.rawEvents(s, dir), s"st16_events_$inv")
         // each call builds a FRESH query object — the restart is real,
         // not a paused continuation; only the checkpoint connects them
-        def drainOnce(): Unit = {
-          val schema = s.read.parquet(stage.toString).schema
-          val src = Tables.normalizeTs(
-            s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(stage.toString))
-          val counts = src
-            .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-            .agg(count(lit(1)).as("n"))
-          val q = counts.writeStream
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-              batch.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("day")
-                .parquet(out): Unit
-            }
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        val now = System.currentTimeMillis()
-        writeArrival(raw.where(half === 0), "wave0", now - 120000)
-        drainOnce() // first lifetime: drains wave 0, checkpoints, stops
-        writeArrival(raw.where(half === 1), "wave1", now - 60000)
-        drainOnce() // restart from the SAME checkpoint: resumes state,
-                    // ingests only the new file
-        s.read.parquet(out)
-          .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-            col("event_type"), col("n"))
-          .orderBy(col("day"), col("event_type"))
+        def drainOnce(stage: String): Unit = drain(
+          dailyCountsSink(stagedEvents(s, stage), out)
+            .option("checkpointLocation", ckpt))
+        drainOnce(arrive(0)) // first lifetime: drains wave 0, checkpoints, stops
+        drainOnce(arrive(1)) // restart from the SAME checkpoint: resumes
+                             // state, ingests only the new file
+        readDailyCounts(s, out)
       },
       """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, event_type,
         |       CAST(count(*) AS BIGINT) AS n
@@ -1068,7 +810,7 @@ object StreamingQueries {
     //    offset round-trip) on controlled layouts. ──
     ("st17_ledger_stream",
       (s: SparkSession, dir: String) => {
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val ledgerDir = Portable.scratchPath(s"st17_ledger_$inv")
         Tables(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -1080,10 +822,7 @@ object StreamingQueries {
         val agg = src.groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).cast("long").as("total_chars"))
-        val q = agg.writeStream.format("memory").queryName(s"st17_mem_$inv")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table(s"st17_mem_$inv")
+        drainToMemory(agg, s"st17_mem_$inv", "complete")
           .orderBy(col("lang"))
       },
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1108,15 +847,7 @@ object StreamingQueries {
     //    click hour. ──
     ("st18_stream_full_outer_join",
       (s: SparkSession, dir: String) => {
-        val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_fouter_events"))
-        java.nio.file.Files.createDirectories(stage)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          stage.resolve("events.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        val schema = Tables.rawEvents(s, dir).schema
-        def src() = Tables.normalizeTs(
-          s.readStream.schema(schema).parquet(stage.toString))
+        val src = eventStream(s, dir, "stream_fouter_events")
         val purchases = src().where(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
           .withWatermark("p_ts", "2 hours")
@@ -1128,10 +859,7 @@ object StreamingQueries {
             col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
             col("c_ts") <= col("p_ts"),
           "fullOuter")
-        val q = joined.writeStream.format("memory").queryName("st18_mem")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("st18_mem")
+        drainToMemory(joined, "st18_mem", "append")
           .groupBy(date_trunc("hour", coalesce(col("p_ts"), col("c_ts"))).as("hour"))
           .agg(count(lit(1)).as("n_rows"),
             sum(when(col("c_user").isNull, 1L).otherwise(0L)).as("n_no_click"),
@@ -1191,44 +919,14 @@ object StreamingQueries {
     //    real TTL eviction by name. ──
     ("st19_state_variables",
       (s: SparkSession, dir: String) => {
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val stage = java.nio.file.Paths.get(Portable.scratchPath("stream_sv_events"))
-          java.nio.file.Files.createDirectories(stage)
-          java.nio.file.Files.copy(
-            java.nio.file.Paths.get(s"$dir/events.parquet"),
-            stage.resolve("events.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          val schema = Tables.rawEvents(s, dir).schema
-          import s.implicits._
-          val src = Tables.normalizeTs(
-              s.readStream.schema(schema).parquet(stage.toString))
-            .select(col("user_id").cast("long").as("user_id"),
-              col("event_type"), unix_timestamp(col("ts")).as("es"))
-            .as[(Long, String, Long)]
-          val updates = src.groupByKey(_._1)
+        import s.implicits._
+        withConf(s, RocksDbStateStore) {
+          val updates = eventsByUser(eventStream(s, dir, "stream_sv_events")())
             .transformWithState(new graft.streaming.RecentEventsProcessor(5),
               TimeMode.None(), OutputMode.Update())
-          val q = updates.toDF("user_id", "n_types", "n_events", "topk_sum", "topk_n")
-            .writeStream.format("memory").queryName("st19_mem")
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+            .toDF(recentEventCols: _*)
+          foldRecentEvents(drainToMemory(updates, "st19_mem", "update"))
         }
-        s.table("st19_mem")
-          .groupBy(col("user_id"))
-          .agg(max(col("n_types")).as("n_types"),
-            max(col("n_events")).as("n_events"),
-            max(col("topk_sum")).as("topk_sum"),
-            max(col("topk_n")).as("topk_n"))
-          .orderBy(col("user_id"))
       },
       s"""WITH ev AS (
          |  SELECT user_id, event_type, ${epochSecSql("ts")} AS es FROM events),
@@ -1268,72 +966,28 @@ object StreamingQueries {
     //    judged. ──
     ("st20_state_recovery",
       (s: SparkSession, dir: String) => {
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val inv = st16Invocation.incrementAndGet()
-          val stage = java.nio.file.Paths.get(
-            Portable.scratchPath(s"st20_events_$inv"))
-          java.nio.file.Files.createDirectories(stage)
-          val out = Portable.scratchPath(s"st20_out_$inv")
-          val ckpt = Portable.scratchPath(s"st20_ckpt_$inv")
-          val raw = Tables.rawEvents(s, dir)
-          val srcCols = raw.columns.map(col).toSeq
-          val half = pmod(portableHash(col("event_id").cast("string")), lit(2))
-          def writeArrival(df: DataFrame, name: String, mtime: Long): Unit = {
-            val tmp = Portable.scratchPath(s"st20_stage_${inv}_$name")
-            df.select(srcCols: _*).coalesce(1).write.mode("overwrite").parquet(tmp)
-            val part = new java.io.File(tmp).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val target = stage.resolve(s"$name.parquet")
-            java.nio.file.Files.copy(part.toPath, target,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            require(target.toFile.setLastModified(mtime),
-              s"mtime update failed for $name — arrival staging cannot " +
-                "guarantee ingestion order on this filesystem")
-          }
-          // fresh query object per call — only the checkpoint (offsets +
-          // RocksDB state snapshots) connects the two lifetimes
-          def drainOnce(): Unit = {
-            val schema = s.read.parquet(stage.toString).schema
-            import s.implicits._
-            val src = Tables.normalizeTs(
-                s.readStream.schema(schema).parquet(stage.toString))
-              .select(col("user_id").cast("long").as("user_id"),
-                col("event_type"), unix_timestamp(col("ts")).as("es"))
-              .as[(Long, String, Long)]
-            val updates = src.groupByKey(_._1)
-              .transformWithState(new graft.streaming.RecentEventsProcessor(5),
-                TimeMode.None(), OutputMode.Update())
-            val q = updates.toDF("user_id", "n_types", "n_events", "topk_sum", "topk_n")
-              .writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt)
-              .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-                batch.write.mode("append").parquet(out): Unit
-              }
-              .trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-          }
-          val now = System.currentTimeMillis()
-          writeArrival(raw.where(half === 0), "wave0", now - 120000)
-          drainOnce() // first lifetime: ListState/MapState built, checkpointed
-          writeArrival(raw.where(half === 1), "wave1", now - 60000)
-          drainOnce() // restart: state variables restored, wave 1 folds in
-          s.read.parquet(out)
-            .groupBy(col("user_id"))
-            .agg(max(col("n_types")).as("n_types"),
-              max(col("n_events")).as("n_events"),
-              max(col("topk_sum")).as("topk_sum"),
-              max(col("topk_n")).as("topk_n"))
-            .orderBy(col("user_id"))
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+        import s.implicits._
+        val inv = invocation.incrementAndGet()
+        val out = Portable.scratchPath(s"st20_out_$inv")
+        val ckpt = Portable.scratchPath(s"st20_ckpt_$inv")
+        val arrive = waveArrivals(Tables.rawEvents(s, dir), s"st20_events_$inv")
+        // fresh query object per call — only the checkpoint (offsets +
+        // RocksDB state snapshots) connects the two lifetimes
+        def drainOnce(stage: String): Unit = drain(
+          eventsByUser(stagedEvents(s, stage, perFile = false))
+            .transformWithState(new graft.streaming.RecentEventsProcessor(5),
+              TimeMode.None(), OutputMode.Update())
+            .toDF(recentEventCols: _*)
+            .writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch { (batch: Dataset[Row], _: Long) =>
+              batch.write.mode("append").parquet(out): Unit
+            })
+        withConf(s, RocksDbStateStore) {
+          drainOnce(arrive(0)) // first lifetime: ListState/MapState built, checkpointed
+          drainOnce(arrive(1)) // restart: state variables restored, wave 1 folds in
         }
+        foldRecentEvents(s.read.parquet(out))
       },
       s"""WITH ev AS (
          |  SELECT user_id, event_type, ${epochSecSql("ts")} AS es FROM events),
@@ -1370,77 +1024,41 @@ object StreamingQueries {
     //    the same restriction. ──
     ("st21_initial_state",
       (s: SparkSession, dir: String) => {
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val inv = st16Invocation.incrementAndGet()
-          val stage = java.nio.file.Paths.get(
-            Portable.scratchPath(s"st21_events_$inv"))
-          java.nio.file.Files.createDirectories(stage)
-          import s.implicits._
-          val half = pmod(portableHash(col("event_id").cast("string")), lit(2))
-          // offline bootstrap: the batch prefix aggregated to the exact
-          // state shape (top-5 times pruned HERE, per-type counts) — the
-          // state seed is an aggregate, never a replay
-          val ev0 = Tables.events(s, dir).where(half === 0)
-            .select(col("user_id").cast("long").as("user_id"),
-              col("event_type"), unix_timestamp(col("ts")).as("es"))
-          // top-5 via a rank window (WindowGroupLimit bounds the sort to
-          // 5 rows per key map-side) — never collect a user's full
-          // history just to slice it
-          val wTop = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id")).orderBy(col("es").desc)
-          val topk0 = ev0.withColumn("rn", row_number().over(wTop))
-            .where(col("rn") <= 5)
-            .groupBy(col("user_id"))
-            .agg(reverse(array_sort(collect_list(col("es")))).as("topk"))
-          val types0 = ev0.groupBy(col("user_id"), col("event_type"))
-            .agg(count(lit(1)).as("n"))
-            .groupBy(col("user_id"))
-            .agg(collect_list(struct(col("event_type").as("_1"),
-              col("n").as("_2"))).as("types"))
-          val init = topk0.join(types0, Seq("user_id"))
-            .toDF("_1", "_2", "_3")
-            .as[(Long, Seq[Long], Seq[(String, Long)])]
-            .groupByKey(_._1).mapValues(t => (t._2, t._3))
-          // stream: hash-half 1 staged as the arriving file
-          val raw = Tables.rawEvents(s, dir)
-          val srcCols = raw.columns.map(col).toSeq
-          val tmp = Portable.scratchPath(s"st21_stage_$inv")
-          raw.where(half === 1).select(srcCols: _*)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.copy(part.toPath, stage.resolve("wave1.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          val schema = s.read.parquet(stage.toString).schema
-          val src = Tables.normalizeTs(
-              s.readStream.schema(schema).parquet(stage.toString))
-            .select(col("user_id").cast("long").as("user_id"),
-              col("event_type"), unix_timestamp(col("ts")).as("es"))
-            .as[(Long, String, Long)]
-          val updates = src.groupByKey(_._1)
+        val inv = invocation.incrementAndGet()
+        import s.implicits._
+        // offline bootstrap: the batch prefix aggregated to the exact
+        // state shape (top-5 times pruned HERE, per-type counts) — the
+        // state seed is an aggregate, never a replay
+        val ev0 = Tables.events(s, dir).where(eventHalf === 0)
+          .select(col("user_id").cast("long").as("user_id"),
+            col("event_type"), unix_timestamp(col("ts")).as("es"))
+        // top-5 via a rank window (WindowGroupLimit bounds the sort to
+        // 5 rows per key map-side) — never collect a user's full
+        // history just to slice it
+        val wTop = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id")).orderBy(col("es").desc)
+        val topk0 = ev0.withColumn("rn", row_number().over(wTop))
+          .where(col("rn") <= 5)
+          .groupBy(col("user_id"))
+          .agg(reverse(array_sort(collect_list(col("es")))).as("topk"))
+        val types0 = ev0.groupBy(col("user_id"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .groupBy(col("user_id"))
+          .agg(collect_list(struct(col("event_type").as("_1"),
+            col("n").as("_2"))).as("types"))
+        val init = topk0.join(types0, Seq("user_id"))
+          .toDF("_1", "_2", "_3")
+          .as[(Long, Seq[Long], Seq[(String, Long)])]
+          .groupByKey(_._1).mapValues(t => (t._2, t._3))
+        // stream: hash-half 1 staged as the arriving file
+        val stage = waveArrivals(Tables.rawEvents(s, dir), s"st21_events_$inv")(1)
+        withConf(s, RocksDbStateStore) {
+          val updates = eventsByUser(stagedEvents(s, stage, perFile = false))
             .transformWithState(
               new graft.streaming.BootstrapRecentEventsProcessor(5),
               TimeMode.None(), OutputMode.Update(), init)
-          val q = updates.toDF("user_id", "n_types", "n_events", "topk_sum", "topk_n")
-            .writeStream.format("memory").queryName(s"st21_mem_$inv")
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          s.table(s"st21_mem_$inv")
-            .groupBy(col("user_id"))
-            .agg(max(col("n_types")).as("n_types"),
-              max(col("n_events")).as("n_events"),
-              max(col("topk_sum")).as("topk_sum"),
-              max(col("topk_n")).as("topk_n"))
-            .orderBy(col("user_id"))
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+            .toDF(recentEventCols: _*)
+          foldRecentEvents(drainToMemory(updates, s"st21_mem_$inv", "update"))
         }
       },
       s"""WITH ev AS (
@@ -1484,7 +1102,7 @@ object StreamingQueries {
     ("st22_stream_merge_lakehouse",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         // UNIQUE catalog name per invocation: foreachBatch hands the
         // body a CLONED session whose fresh CatalogManager instantiates
         // the plugin from the CURRENT conf, while the outer session may
@@ -1500,20 +1118,15 @@ object StreamingQueries {
         val stage = Portable.scratchPath(s"st22_stage_$inv")
         Tables.rawEvents(s, dir).repartition(3)
           .write.mode("overwrite").parquet(stage)
-        val schema = s.read.parquet(stage).schema
         // seed an EMPTY ledger table so batch 0 merges like any other
         s.range(0).select($"id".as("doc_id"),
             lit("0").as("lang"), $"id".as("n_chars"))
           .writeTo(tbl).createOrReplace()
-        val src = Tables.normalizeTs(
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(stage))
-          .select($"user_id", $"value")
-        val q = src.writeStream
+        drain(stagedEvents(s, stage).select($"user_id", $"value").writeStream
           .option("checkpointLocation",
             Portable.scratchPath(s"st22_ckpt_$inv"))
           .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            (batch: Dataset[Row],
              _: Long) =>
               val delta = batch.groupBy(col("user_id"))
                 .agg(count(lit(1)).as("c"),
@@ -1528,9 +1141,7 @@ object StreamingQueries {
                    |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
                    |  VALUES (b.user_id, CAST(b.c AS STRING), b.cents)
                    |""".stripMargin): Unit
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         s.sql(s"""SELECT doc_id AS user_id, CAST(lang AS BIGINT) AS n,
                  |       n_chars AS cents
                  |FROM $tbl ORDER BY 1""".stripMargin)
@@ -1556,23 +1167,17 @@ object StreamingQueries {
     ("st23_state_reader",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val stage = Portable.scratchPath(s"st23_stage_$inv")
         val ckpt = Portable.scratchPath(s"st23_ckpt_$inv")
         Tables.rawEvents(s, dir).repartition(3)
           .write.mode("overwrite").parquet(stage)
-        val schema = s.read.parquet(stage).schema
-        val src = Tables.normalizeTs(
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(stage))
-        val q = src
+        drain(stagedEvents(s, stage)
           .groupBy($"user_id")
           .agg(count(lit(1)).as("n"),
             sum(round($"value" * 100).cast("long")).as("cents"))
           .writeStream.outputMode("update").format("noop")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .option("checkpointLocation", ckpt))
         s.read.format("statestore").load(ckpt)
           .select($"key.user_id".as("user_id"),
             $"value.count".as("n"),
@@ -1599,16 +1204,14 @@ object StreamingQueries {
     ("st25_foreach_writer",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val stage = Portable.scratchPath(s"st25_stage_$inv")
         val sink = Portable.scratchPath(s"st25_sink_$inv")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(sink))
+        Files.createDirectories(Paths.get(sink))
         Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars").repartition(3)
           .write.mode("overwrite").parquet(stage)
-        val schema = s.read.parquet(stage).schema
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
+        drain(stagedStream(s, stage)
           .writeStream
           .foreach(new org.apache.spark.sql.ForeachWriter[org.apache.spark.sql.Row] {
             @transient private var out: java.io.PrintWriter = _
@@ -1628,14 +1231,12 @@ object StreamingQueries {
               if (errorOrNull == null) {
                 // rename = the idempotence: a retried partition-epoch
                 // REPLACES its own file, never duplicates rows
-                java.nio.file.Files.move(tmp.toPath, dst.toPath,
-                  java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+                Files.move(tmp.toPath, dst.toPath,
+                  StandardCopyOption.REPLACE_EXISTING,
+                  StandardCopyOption.ATOMIC_MOVE)
               } else tmp.delete(): Unit
             }
-          })
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          }))
         // read the DIRECTORY with a glob filter (a literal `/*.csv`
         // path makes the FileStreamSink-metadata probe log a harmless
         // but noisy FileNotFoundException stack)
@@ -1672,7 +1273,7 @@ object StreamingQueries {
     ("st26_stream_change_feed",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val cat = s"scf$inv"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root",
@@ -1688,19 +1289,15 @@ object StreamingQueries {
           .writeTo(s"$cat.t").append()                              // v2
         val tdir = new java.io.File(
           Portable.scratchPath(s"st26_catroot_$inv"), "t").getPath
-        def drain(): Unit = {
-          val q = s.readStream.format("graft-ledger")
-            .option("changesFrom", "0").load(tdir)
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        drain() // ships v1 + v2 inserts
+        def tail(): Unit = drain(s.readStream.format("graft-ledger")
+          .option("changesFrom", "0").load(tdir)
+          .writeStream.format("parquet")
+          .option("path", sink).option("checkpointLocation", ckpt))
+        tail() // ships v1 + v2 inserts
         s.sql(s"DELETE FROM $cat.t WHERE lang = 'de'")              // v3
         s.sql(s"UPDATE $cat.t SET n_chars = n_chars + 100000 " +
           s"WHERE lang = 'fr'")                                     // v4
-        drain() // a fresh query from the SAME checkpoint: only v3+v4
+        tail() // a fresh query from the SAME checkpoint: only v3+v4
         s.read.parquet(sink)
           .groupBy($"_commit_version", $"_change_type")
           .agg(count(lit(1)).cast("long").as("n"),
@@ -1745,7 +1342,7 @@ object StreamingQueries {
     ("st27_stream_mv_maintenance",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val cat = s"smv$inv"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root",
@@ -1764,41 +1361,32 @@ object StreamingQueries {
           .write.mode("overwrite").parquet(cur)
         val tdir = new java.io.File(
           Portable.scratchPath(s"st27_catroot_$inv"), "t").getPath
-        def drain(): Unit = {
-          val q = s.readStream.format("graft-ledger")
-            .option("changesFrom", "1").load(tdir)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch {
-              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               batchId: Long) =>
-                val st = batch.sparkSession
-                val sign = when($"_change_type" === "insert", lit(1L))
-                  .otherwise(lit(-1L))
-                val delta = batch
-                  .select($"lang", sign.as("sgn"), $"n_chars")
-                  .groupBy($"lang")
-                  .agg(sum($"sgn").as("n_docs"),
-                    sum($"sgn" * $"n_chars").as("total_chars"))
-                val next = s"$stateRoot/v$batchId"
-                st.read.parquet(cur).unionByName(delta)
-                  .groupBy($"lang")
-                  .agg(sum($"n_docs").as("n_docs"),
-                    sum($"total_chars").as("total_chars"))
-                  .where($"n_docs" > 0)
-                  .write.mode("overwrite").parquet(next)
-                cur = next
-            }
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
+        def tail(): Unit = tailChanges(s, tdir, ckpt) { (batch, batchId) =>
+          val st = batch.sparkSession
+          val sign = when($"_change_type" === "insert", lit(1L))
+            .otherwise(lit(-1L))
+          val delta = batch
+            .select($"lang", sign.as("sgn"), $"n_chars")
+            .groupBy($"lang")
+            .agg(sum($"sgn").as("n_docs"),
+              sum($"sgn" * $"n_chars").as("total_chars"))
+          val next = s"$stateRoot/v$batchId"
+          st.read.parquet(cur).unionByName(delta)
+            .groupBy($"lang")
+            .agg(sum($"n_docs").as("n_docs"),
+              sum($"total_chars").as("total_chars"))
+            .where($"n_docs" > 0)
+            .write.mode("overwrite").parquet(next)
+          cur = next
         }
-        drain()                                                     // no-op
+        tail()                                                      // no-op
         docs.where(pmod($"doc_id", lit(2)) === 1)
           .writeTo(s"$cat.t").append()                              // v2
         s.sql(s"DELETE FROM $cat.t WHERE lang = 'es'")              // v3
-        drain()                                                     // v2+v3
+        tail()                                                      // v2+v3
         s.sql(s"UPDATE $cat.t SET n_chars = n_chars + 5000 " +
           s"WHERE lang = 'zh'")                                     // v4
-        drain()                                                     // v4
+        tail()                                                      // v4
         s.read.parquet(cur)
           .select($"lang", $"n_docs".cast("long").as("n_docs"),
             $"total_chars".cast("long").as("total_chars"))
@@ -1830,7 +1418,7 @@ object StreamingQueries {
     ("st28_stream_branch_feed",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val cat = s"sbf$inv"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root",
@@ -1845,15 +1433,11 @@ object StreamingQueries {
         s.sql(s"CALL $cat.system.create_branch('t', 'dev')")
         val tdir = new java.io.File(
           Portable.scratchPath(s"st28_catroot_$inv"), "t").getPath
-        def drain(): Unit = {
-          val q = s.readStream.format("graft-ledger")
-            .option("changesFrom", "1").option("changesTo", "dev")
-            .load(tdir)
-            .writeStream.format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        def tail(): Unit = drain(s.readStream.format("graft-ledger")
+          .option("changesFrom", "1").option("changesTo", "dev")
+          .load(tdir)
+          .writeStream.format("parquet")
+          .option("path", sink).option("checkpointLocation", ckpt))
         // wave A: dev appends the odds; main appends a DECOY wave
         docs.where(pmod($"doc_id", lit(2)) === 1)
           .writeTo(s"$cat.t.branch_dev").append()                   // v2: dev
@@ -1861,12 +1445,12 @@ object StreamingQueries {
           .select(($"doc_id" + 2000000L).as("doc_id"),
             lit("yy").as("lang"), $"n_chars")
           .writeTo(s"$cat.t").append()                              // v3: main
-        drain() // ships dev's append ONLY
+        tail() // ships dev's append ONLY
         // wave B: dev MoR-deletes 'de'; main MoR-updates 'fr' (decoy)
         s.sql(s"DELETE FROM $cat.t.branch_dev WHERE lang = 'de'")   // v4: dev
         s.sql(s"UPDATE $cat.t SET n_chars = n_chars + 100000 " +
           s"WHERE lang = 'fr'")                                     // v5: main
-        drain() // resumes at the checkpoint: ships dev's delete ONLY
+        tail() // resumes at the checkpoint: ships dev's delete ONLY
         s.read.parquet(sink)
           .groupBy($"_commit_version", $"_change_type")
           .agg(count(lit(1)).cast("long").as("n"),
@@ -1908,7 +1492,7 @@ object StreamingQueries {
     ("st24_multi_watermark_policy",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val raw = Tables.events(s, dir)
         val mx = raw.agg(max($"ts").as("m"))
         val stageA = Portable.scratchPath(s"st24_a_$inv")
@@ -1927,16 +1511,9 @@ object StreamingQueries {
         val counts = srcA.unionByName(srcB)
           .groupBy(window($"ts", "1 hour").as("w"))
           .agg(count(lit(1)).as("n"))
-        val old = s.conf.get("spark.sql.streaming.multipleWatermarkPolicy")
-        try {
-          s.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
-          val q = counts.writeStream.format("memory")
-            .queryName("st24_mem").outputMode("append")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        } finally
-          s.conf.set("spark.sql.streaming.multipleWatermarkPolicy", old)
-        s.table("st24_mem")
+        withConf(s, "spark.sql.streaming.multipleWatermarkPolicy" -> "max") {
+          drainToMemory(counts, "st24_mem", "append")
+        }
           .select(tsSec($"w.start").as("hour"), $"n")
           .orderBy($"hour")
       },
@@ -1969,7 +1546,7 @@ object StreamingQueries {
     ("st29_multi_watermark_min",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val raw = Tables.events(s, dir)
         val mx = raw.agg(max($"ts").as("m"))
         val stageA = Portable.scratchPath(s"st29_a_$inv")
@@ -1988,16 +1565,9 @@ object StreamingQueries {
         val counts = srcA.unionByName(srcB)
           .groupBy(window($"ts", "1 hour").as("w"))
           .agg(count(lit(1)).as("n"))
-        val old = s.conf.get("spark.sql.streaming.multipleWatermarkPolicy")
-        try {
-          s.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "min")
-          val q = counts.writeStream.format("memory")
-            .queryName("st29_mem").outputMode("append")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        } finally
-          s.conf.set("spark.sql.streaming.multipleWatermarkPolicy", old)
-        s.table("st29_mem")
+        withConf(s, "spark.sql.streaming.multipleWatermarkPolicy" -> "min") {
+          drainToMemory(counts, "st29_mem", "append")
+        }
           .select(tsSec($"w.start").as("hour"), $"n")
           .orderBy($"hour")
       },
@@ -2034,7 +1604,7 @@ object StreamingQueries {
     ("st30_stream_lsh_maintenance",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val cat = s"slsh$inv"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root",
@@ -2060,49 +1630,40 @@ object StreamingQueries {
         idx1.unpersist()
         val tdir = new java.io.File(
           Portable.scratchPath(s"st30_catroot_$inv"), "t30docs").getPath
-        def drain(): Unit = {
-          val q = s.readStream.format("graft-ledger")
-            .option("changesFrom", "1").load(tdir)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch {
-              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               batchId: Long) =>
-                val st = batch.sparkSession
-                val net = batch.groupBy($"doc_id")
-                  .agg(sum(when($"_change_type" === "insert", 1L)
-                    .otherwise(-1L)).as("net"))
-                  .persist()
-                val delKeys = broadcast(net.where($"net" < 0).select($"doc_id"))
-                val insKeys = net.where($"net" > 0).select($"doc_id")
-                val deltaDocs = docs.as("c")
-                  .join(broadcast(insKeys
-                      .withColumn("content_id",
-                        when($"doc_id" >= TextQueries.SeedOffset,
-                          $"doc_id" - TextQueries.SeedOffset)
-                          .otherwise($"doc_id"))
-                      .as("k")),
-                    col("c.doc_id") === col("k.content_id"))
-                  .select(col("k.doc_id").as("doc_id"), col("c.source"),
-                    col("c.text"))
-                val addIdx = TextQueries.shingleIndex(deltaDocs).persist()
-                val nextIdx = s"$stateRoot/idx_v$batchId"
-                val nextBands = s"$stateRoot/bands_v$batchId"
-                st.read.parquet(curIdx)
-                  .join(delKeys, Seq("doc_id"), "left_anti")
-                  .unionByName(addIdx)
-                  .write.mode("overwrite").parquet(nextIdx)
-                st.read.parquet(curBands)
-                  .join(delKeys, Seq("doc_id"), "left_anti")
-                  .unionByName(TextQueries.bandKeys(addIdx))
-                  .write.mode("overwrite").parquet(nextBands)
-                curIdx = nextIdx
-                curBands = nextBands
-            }
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
+        def tail(): Unit = tailChanges(s, tdir, ckpt) { (batch, batchId) =>
+          val st = batch.sparkSession
+          val net = batch.groupBy($"doc_id")
+            .agg(sum(when($"_change_type" === "insert", 1L)
+              .otherwise(-1L)).as("net"))
+            .persist()
+          val delKeys = broadcast(net.where($"net" < 0).select($"doc_id"))
+          val insKeys = net.where($"net" > 0).select($"doc_id")
+          val deltaDocs = docs.as("c")
+            .join(broadcast(insKeys
+                .withColumn("content_id",
+                  when($"doc_id" >= TextQueries.SeedOffset,
+                    $"doc_id" - TextQueries.SeedOffset)
+                    .otherwise($"doc_id"))
+                .as("k")),
+              col("c.doc_id") === col("k.content_id"))
+            .select(col("k.doc_id").as("doc_id"), col("c.source"),
+              col("c.text"))
+          val addIdx = TextQueries.shingleIndex(deltaDocs).persist()
+          val nextIdx = s"$stateRoot/idx_v$batchId"
+          val nextBands = s"$stateRoot/bands_v$batchId"
+          st.read.parquet(curIdx)
+            .join(delKeys, Seq("doc_id"), "left_anti")
+            .unionByName(addIdx)
+            .write.mode("overwrite").parquet(nextIdx)
+          st.read.parquet(curBands)
+            .join(delKeys, Seq("doc_id"), "left_anti")
+            .unionByName(TextQueries.bandKeys(addIdx))
+            .write.mode("overwrite").parquet(nextBands)
+          curIdx = nextIdx
+          curBands = nextBands
         }
         s.sql(s"DELETE FROM $cat.t30docs WHERE doc_id % 5 = 0")   // v2
-        drain()                                                   // delete wave
+        tail()                                                    // delete wave
         meta.where(pmod($"doc_id", lit(3)) === 2)
           .unionByName(meta.where($"doc_id" < TextQueries.NSeeds &&
               (pmod($"doc_id", lit(3)) === 2 ||
@@ -2110,7 +1671,7 @@ object StreamingQueries {
             .select(($"doc_id" + TextQueries.SeedOffset).as("doc_id"),
               $"lang", $"n_chars"))
           .writeTo(s"$cat.t30docs").append()                      // v3
-        drain()                                                   // ingest wave
+        tail()                                                    // ingest wave
         // the probe over the STREAMED state — the cap re-applies over
         // the merged band set, as in t31/t33
         TextQueries.nearDupPairsOf(
@@ -2134,7 +1695,7 @@ object StreamingQueries {
     ("st31_stream_ivf_maintenance",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val cat = s"sivf$inv"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root",
@@ -2154,41 +1715,32 @@ object StreamingQueries {
           .write.mode("overwrite").parquet(cur)
         val tdir = new java.io.File(
           Portable.scratchPath(s"st31_catroot_$inv"), "t31vecs").getPath
-        def drain(): Unit = {
-          val q = s.readStream.format("graft-ledger")
-            .option("changesFrom", "1").load(tdir)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch {
-              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               batchId: Long) =>
-                val st = batch.sparkSession
-                val net = batch.groupBy($"doc_id".as("vec_id"))
-                  .agg(sum(when($"_change_type" === "insert", 1L)
-                    .otherwise(-1L)).as("net"))
-                  .persist()
-                val delKeys = broadcast(net.where($"net" < 0).select($"vec_id"))
-                val insKeys = net.where($"net" > 0).select($"vec_id")
-                val deltaVecs = emb.as("e")
-                  .join(broadcast(insKeys.as("k")),
-                    col("e.vec_id") === col("k.vec_id"))
-                  .select(col("e.vec_id"), col("e.embedding"), col("e.label"))
-                val next = s"$stateRoot/lists_v$batchId"
-                st.read.parquet(cur)
-                  .join(delKeys, Seq("vec_id"), "left_anti")
-                  .unionByName(VectorQueries.frozenAssign(emb)(deltaVecs))
-                  .write.mode("overwrite").parquet(next)
-                cur = next
-            }
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
+        def tail(): Unit = tailChanges(s, tdir, ckpt) { (batch, batchId) =>
+          val st = batch.sparkSession
+          val net = batch.groupBy($"doc_id".as("vec_id"))
+            .agg(sum(when($"_change_type" === "insert", 1L)
+              .otherwise(-1L)).as("net"))
+            .persist()
+          val delKeys = broadcast(net.where($"net" < 0).select($"vec_id"))
+          val insKeys = net.where($"net" > 0).select($"vec_id")
+          val deltaVecs = emb.as("e")
+            .join(broadcast(insKeys.as("k")),
+              col("e.vec_id") === col("k.vec_id"))
+            .select(col("e.vec_id"), col("e.embedding"), col("e.label"))
+          val next = s"$stateRoot/lists_v$batchId"
+          st.read.parquet(cur)
+            .join(delKeys, Seq("vec_id"), "left_anti")
+            .unionByName(VectorQueries.frozenAssign(emb)(deltaVecs))
+            .write.mode("overwrite").parquet(next)
+          cur = next
         }
         s.sql(s"DELETE FROM $cat.t31vecs " +
           "WHERE doc_id % 5 = 0 AND doc_id >= 20")                // v2
-        drain()                                                   // delete wave
+        tail()                                                    // delete wave
         registryRows(emb.where(pmod($"vec_id", lit(3)) === 2 &&
             $"vec_id" >= 20))
           .writeTo(s"$cat.t31vecs").append()                      // v3
-        drain()                                                   // ingest wave
+        tail()                                                    // ingest wave
         VectorQueries.probeTopK(s.read.parquet(cur).persist())
           .orderBy($"q_id", $"rank")
       },
@@ -2210,7 +1762,7 @@ object StreamingQueries {
     ("st32_stream_bm25_maintenance",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val cat = s"sbm$inv"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root",
@@ -2234,47 +1786,38 @@ object StreamingQueries {
         post1.unpersist()
         val tdir = new java.io.File(
           Portable.scratchPath(s"st32_catroot_$inv"), "t32docs").getPath
-        def drain(): Unit = {
-          val q = s.readStream.format("graft-ledger")
-            .option("changesFrom", "1").load(tdir)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch {
-              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               batchId: Long) =>
-                val st = batch.sparkSession
-                val net = batch.groupBy($"doc_id")
-                  .agg(sum(when($"_change_type" === "insert", 1L)
-                    .otherwise(-1L)).as("net"))
-                  .persist()
-                val delKeys = broadcast(net.where($"net" < 0).select($"doc_id"))
-                val insKeys = net.where($"net" > 0).select($"doc_id")
-                val deltaDocs = docs.as("c")
-                  .join(broadcast(insKeys.as("k")),
-                    col("c.doc_id") === col("k.doc_id"))
-                  .select(col("c.doc_id"), col("c.text"))
-                val addPost = TextQueries.bm25Tokenize(deltaDocs).persist()
-                val nextPost = s"$stateRoot/post_v$batchId"
-                val nextDl = s"$stateRoot/dl_v$batchId"
-                st.read.parquet(curPost)
-                  .join(delKeys, Seq("doc_id"), "left_anti")
-                  .unionByName(addPost)
-                  .write.mode("overwrite").parquet(nextPost)
-                st.read.parquet(curDl)
-                  .join(delKeys, Seq("doc_id"), "left_anti")
-                  .unionByName(
-                    addPost.groupBy($"doc_id").agg(sum($"tf").as("dl")))
-                  .write.mode("overwrite").parquet(nextDl)
-                curPost = nextPost
-                curDl = nextDl
-            }
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
+        def tail(): Unit = tailChanges(s, tdir, ckpt) { (batch, batchId) =>
+          val st = batch.sparkSession
+          val net = batch.groupBy($"doc_id")
+            .agg(sum(when($"_change_type" === "insert", 1L)
+              .otherwise(-1L)).as("net"))
+            .persist()
+          val delKeys = broadcast(net.where($"net" < 0).select($"doc_id"))
+          val insKeys = net.where($"net" > 0).select($"doc_id")
+          val deltaDocs = docs.as("c")
+            .join(broadcast(insKeys.as("k")),
+              col("c.doc_id") === col("k.doc_id"))
+            .select(col("c.doc_id"), col("c.text"))
+          val addPost = TextQueries.bm25Tokenize(deltaDocs).persist()
+          val nextPost = s"$stateRoot/post_v$batchId"
+          val nextDl = s"$stateRoot/dl_v$batchId"
+          st.read.parquet(curPost)
+            .join(delKeys, Seq("doc_id"), "left_anti")
+            .unionByName(addPost)
+            .write.mode("overwrite").parquet(nextPost)
+          st.read.parquet(curDl)
+            .join(delKeys, Seq("doc_id"), "left_anti")
+            .unionByName(
+              addPost.groupBy($"doc_id").agg(sum($"tf").as("dl")))
+            .write.mode("overwrite").parquet(nextDl)
+          curPost = nextPost
+          curDl = nextDl
         }
         s.sql(s"DELETE FROM $cat.t32docs WHERE doc_id % 5 = 0")   // v2
-        drain()                                                   // delete wave
+        tail()                                                    // delete wave
         meta.where(pmod($"doc_id", lit(3)) === 2)
           .writeTo(s"$cat.t32docs").append()                      // v3
-        drain()                                                   // ingest wave
+        tail()                                                    // ingest wave
         TextQueries.bm25ProbeOf(
           s.read.parquet(curPost), s.read.parquet(curDl).persist())
       },
@@ -2299,7 +1842,7 @@ object StreamingQueries {
     ("st33_stream_branch_promote",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val cat = s"sbp$inv"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root",
@@ -2316,12 +1859,10 @@ object StreamingQueries {
         // microbatches under maxFilesPerTrigger=1
         docs.where(pmod($"doc_id", lit(2)) === 1).repartition(3)
           .write.mode("overwrite").parquet(stage)
-        val schema = s.read.parquet(stage).schema
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
+        drain(stagedStream(s, stage)
           .writeStream.option("checkpointLocation", ckpt)
           .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            (batch: Dataset[Row],
              _: Long) =>
               batch.createOrReplaceTempView("st33_delta")
               batch.sparkSession.sql(
@@ -2330,9 +1871,7 @@ object StreamingQueries {
                    |WHEN MATCHED THEN UPDATE SET n_chars = b.n_chars
                    |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
                    |  VALUES (b.doc_id, b.lang, b.n_chars)""".stripMargin): Unit
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         // pin BOTH pre-promotion lineages by version (the judged frame
         // is lazy — the ref moves, a version number cannot)
         val refs = s.table(s"$cat.t33docs.refs")
@@ -2412,7 +1951,7 @@ object StreamingQueries {
     ("st34_stream_txn_sink",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        val inv = st16Invocation.incrementAndGet()
+        val inv = invocation.incrementAndGet()
         val cat = s"stx$inv"
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.root",
@@ -2430,17 +1969,15 @@ object StreamingQueries {
           .tableProperty("mor", "true").create()
         docs.where(pmod($"doc_id", lit(2)) === 1).repartition(3)
           .write.mode("overwrite").parquet(stage)
-        val schema = s.read.parquet(stage).schema
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
+        drain(stagedStream(s, stage)
           .writeStream.option("checkpointLocation", ckpt)
           .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            (batch: Dataset[Row],
              batchId: Long) =>
               val st = batch.sparkSession
               val id = st.sql(
                 s"CALL $cat.system.txn_begin('t34state,t34audit')")
-                .head.getString(0)
+                .head().getString(0)
               batch.createOrReplaceTempView("st34_delta")
               st.sql(
                 s"""MERGE INTO $cat.t34state.branch_txn$id t
@@ -2461,9 +1998,7 @@ object StreamingQueries {
                    |WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
                    |  VALUES (b.doc_id, b.lang, b.n_chars)""".stripMargin)
               st.sql(s"CALL $cat.system.txn_commit('$id')"): Unit
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         s.sql(
           s"""SELECT 'audit' AS src, CAST(count(*) AS BIGINT) AS n_rows,
              |       CAST(sum(n_chars) AS BIGINT) AS chars_sum
@@ -2484,10 +2019,146 @@ object StreamingQueries {
         |ORDER BY 1""".stripMargin)
   )
 
-  /** st16/st17 run twice per Bench invocation in one JVM; per-
-    * invocation scratch names keep each run's checkpoint/stage/sink
-    * (and memory-sink query name) independent. */
-  private val st16Invocation = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Per-invocation counter: Bench reruns every query in one JVM, and the
+    * queries that draw a number from it name their scratch directories,
+    * checkpoints, memory sinks and catalogs after it, so no run resumes
+    * or reads what an earlier run left behind. */
+  private val invocation = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The RocksDB state store as a [[GraftSession.withConf]] override:
+    * `transformWithState` needs its multi-column-family state, while the
+    * default HDFS-backed provider stays in force for the rest of the
+    * catalog. */
+  val RocksDbStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs a stream to completion: the AvailableNow trigger processes
+    * what the source holds at start (plus the no-data batch a moved
+    * watermark asks for), then the query stops. Every st query runs
+    * its streams through here. */
+  private def drain(w: DataStreamWriter[_]): Unit =
+    w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** [[drain]]s `df` into the memory sink `name` and returns the sink. */
+  private def drainToMemory(df: DataFrame, name: String, mode: String): DataFrame = {
+    drain(df.writeStream.format("memory").queryName(name).outputMode(mode))
+    df.sparkSession.table(name)
+  }
+
+  /** Stages the fixture's single events.parquet into scratch directory
+    * `name` (the file stream source reads a DIRECTORY; at scale the
+    * source would already be a date-partitioned tree) and returns an
+    * opener for a stream over it; each call opens an independent source,
+    * as a stream-stream join needs. The schema is the raw batch scan's,
+    * because `Tables.rawEvents` is what engages the nanos fallback conf
+    * when the fixture needs it, and `Tables.normalizeTs` is the batch
+    * path's type-adaptive ts normalization: the fixture's ts encoding
+    * has drifted once already and the streaming surface must follow. */
+  private def eventStream(s: SparkSession, dir: String, name: String): () => DataFrame = {
+    val stage = Paths.get(Portable.scratchPath(name))
+    Files.createDirectories(stage)
+    Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val schema = Tables.rawEvents(s, dir).schema
+    () => Tables.normalizeTs(s.readStream.schema(schema).parquet(stage.toString))
+  }
+
+  /** A file stream over the staged directory `stage`, its schema read
+    * from the staged files. `perFile` admits one file per microbatch
+    * (maxFilesPerTrigger=1), so each staged arrival is its own batch. */
+  private def stagedStream(s: SparkSession, stage: String,
+      perFile: Boolean = true): DataFrame = {
+    val r = s.readStream.schema(s.read.parquet(stage).schema)
+    (if (perFile) r.option("maxFilesPerTrigger", "1") else r).parquet(stage)
+  }
+
+  /** [[stagedStream]] over staged raw events, ts normalized. */
+  private def stagedEvents(s: SparkSession, stage: String,
+      perFile: Boolean = true): DataFrame =
+    Tables.normalizeTs(stagedStream(s, stage, perFile))
+
+  /** A deterministic half of the events, by event_id hash. */
+  private val eventHalf: Column =
+    pmod(portableHash(col("event_id").cast("string")), lit(2))
+
+  /** The two-wave arrival of st16/st20/st21: `arrive(w)` stages the
+    * [[eventHalf]] `w` of `raw` as `wave<w>.parquet` in scratch
+    * directory `stageName`, wave 0's mtime before wave 1's, and returns
+    * the directory. */
+  private def waveArrivals(raw: DataFrame, stageName: String): Int => String = {
+    val now = System.currentTimeMillis()
+    w => stageArrivals(raw.where(eventHalf === w), raw.columns.map(col).toSeq,
+      lit(0), Seq(s"wave$w"), stageName, _ => now - (2 - w) * 60000L)
+  }
+
+  /** The distinct event weeks of `df` in order, and the column mapping
+    * each row to its week's index. The grid is fixture-bounded (one
+    * month), so the collect is staging-only scalars (the t10b
+    * discipline). */
+  private def weekGrid(df: DataFrame): (Array[java.sql.Timestamp], Column) = {
+    val week = date_trunc("week", col("ts"))
+    val weeks = df.select(week.as("w")).distinct().orderBy(col("w"))
+      .collect().map(_.getTimestamp(0))
+    (weeks, weeks.zipWithIndex.tail.foldLeft(when(week === lit(weeks(0)), 0)) {
+      case (acc, (w, i)) => acc.when(week === lit(w), i)
+    })
+  }
+
+  /** st09/st16's idempotent sink: complete-mode day × event_type counts,
+    * each microbatch overwriting exactly the day partitions it touches
+    * (dynamic partition overwrite), so a replayed batch lands identical
+    * bytes. [[readDailyCounts]] is the judged readback. */
+  private def dailyCountsSink(events: DataFrame, out: String): DataStreamWriter[Row] =
+    events.groupBy(to_date(col("ts")).as("day"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .writeStream.outputMode("complete")
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        batch.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("day")
+          .parquet(out): Unit
+      }
+
+  private def readDailyCounts(s: SparkSession, out: String): DataFrame =
+    s.read.parquet(out)
+      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+        col("event_type"), col("n"))
+      .orderBy(col("day"), col("event_type"))
+
+  /** st19-st21's processor input: (user, event_type, epoch second) per
+    * event, grouped by user. */
+  private def eventsByUser(events: DataFrame): KeyValueGroupedDataset[Long, (Long, String, Long)] = {
+    val s = events.sparkSession
+    import s.implicits._
+    events.select(col("user_id").cast("long").as("user_id"),
+        col("event_type"), unix_timestamp(col("ts")).as("es"))
+      .as[(Long, String, Long)].groupByKey(_._1)
+  }
+
+  /** The recent-events processors' update rows. */
+  private val recentEventCols = Seq("user_id", "n_types", "n_events", "topk_sum", "topk_n")
+
+  /** Folds recent-events update rows with max: every emitted field is
+    * monotone, so the fold is the final state however the input was
+    * sliced into microbatches. */
+  private def foldRecentEvents(updates: DataFrame): DataFrame =
+    updates.groupBy(col("user_id"))
+      .agg(max(col("n_types")).as("n_types"),
+        max(col("n_events")).as("n_events"),
+        max(col("topk_sum")).as("topk_sum"),
+        max(col("topk_n")).as("topk_n"))
+      .orderBy(col("user_id"))
+
+  /** [[drain]]s the change feed of the ledger table at `tdir`, from
+    * version 1, through the foreachBatch `fold`, checkpointed at `ckpt`
+    * (so a second call resumes where the first stopped). */
+  private def tailChanges(s: SparkSession, tdir: String, ckpt: String)(
+      fold: (Dataset[Row], Long) => Unit): Unit =
+    drain(s.readStream.format("graft-ledger")
+      .option("changesFrom", "1").load(tdir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch(fold))
 
   /** Stage every arrival file with ONE Spark write job instead of one
     * scan+filter+write job per arrival (r17 opt, guide §1.3/§5 — the
@@ -2495,19 +2166,20 @@ object StreamingQueries {
     * labeled with a dense arrival index are written `partitionBy` that
     * index from a single task (the planner's dynamic-partition sort
     * yields exactly one file per arrival), then each file moves into
-    * `stage` as `<names(i)>.parquet` with mtime `mtimeOf(i)` — the file
-    * source's arrival-order contract, unchanged. An arrival empty at a
-    * tiny SF still materializes (schema-only file), exactly as the
-    * per-arrival writes produced, so the microbatch grid is
-    * SF-independent. */
+    * scratch directory `stageName` as `<names(i)>.parquet` with mtime
+    * `mtimeOf(i)` — the file source's arrival-order contract. An arrival
+    * empty at a tiny SF still materializes (schema-only file), so the
+    * microbatch grid is SF-independent. Returns the directory. */
   private def stageArrivals(data: DataFrame, srcCols: Seq[Column],
-      arrival: Column, names: Seq[String], stage: java.nio.file.Path,
-      mtimeOf: Int => Long): Unit = {
-    val tmp = Portable.scratchPath(s"${stage.getFileName}_staging")
+      arrival: Column, names: Seq[String], stageName: String,
+      mtimeOf: Int => Long): String = {
+    val stage = Paths.get(Portable.scratchPath(stageName))
+    Files.createDirectories(stage)
+    val tmp = Portable.scratchPath(s"${stageName}_staging")
     data.select(srcCols :+ arrival.cast("int").as("__arr"): _*)
       .coalesce(1).write.mode("overwrite").partitionBy("__arr").parquet(tmp)
     // empty-arrival fallback, built lazily and at most once
-    lazy val emptyFile: java.nio.file.Path = {
+    lazy val emptyFile: Path = {
       val e = s"$tmp/__empty"
       data.select(srcCols: _*).limit(0).coalesce(1)
         .write.mode("overwrite").parquet(e)
@@ -2522,8 +2194,8 @@ object StreamingQueries {
         s"arrival staging expected at most one file per arrival, " +
           s"got ${parts.length} for $name — single-task write violated")
       val target = stage.resolve(s"$name.parquet")
-      java.nio.file.Files.copy(parts.headOption.map(_.toPath).getOrElse(emptyFile),
-        target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.copy(parts.headOption.map(_.toPath).getOrElse(emptyFile),
+        target, StandardCopyOption.REPLACE_EXISTING)
       // mtime ORDER is the arrival order contract — a filesystem that
       // rejects the update would ingest out of order and silently
       // diverge from the closed-form oracle; fail loudly
@@ -2531,6 +2203,7 @@ object StreamingQueries {
         s"mtime update failed for $name — arrival staging cannot " +
           "guarantee ingestion order on this filesystem")
     }
+    stage.toString
   }
 
   /** State-store partition sizing: a stateful streaming query FIXES its
@@ -2543,19 +2216,12 @@ object StreamingQueries {
     * were the catalog's single largest bench cost while computing
     * nothing. Judged results are partition-count-independent (watermarks
     * are global, the outputs are aggregates/joins); the batch-only st02
-    * keeps the session's batch parallelism.
-    *
-    * The get/set/restore below assumes the harness runs catalog queries
-    * SEQUENTIALLY on the session (Verify/Bench do): two concurrent
-    * queries would race the session conf and could leak the 4-partition
-    * setting into a batch query. A concurrent harness should scope the
-    * override per-query (e.g. on the writeStream) instead. */
-  private def sizedForState(q: Q): Q = (s, dir) => {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "4")
-    try q(s, dir) finally s.conf.set(key, prev)
-  }
+    * keeps the session's batch parallelism. The override is a session
+    * conf, so catalog queries must run SEQUENTIALLY on the session
+    * (Verify/Bench do); a concurrent harness would have to scope it per
+    * query (e.g. on the writeStream) instead. */
+  private def sizedForState(q: Q): Q = (s, dir) =>
+    withConf(s, "spark.sql.shuffle.partitions" -> "4")(q(s, dir))
 
   def queries: Map[String, Q] = catalog.map { case (n, q, _) =>
     n -> (if (n == "st02_session_window") q else sizedForState(q))

@@ -5,6 +5,7 @@ import java.nio.file.Files
 
 import org.scalacheck.{Gen, Prop, Properties}
 
+import graft.queries.Portable
 import graft.sources.LedgerSource
 
 /** Property suite for the s64 Bloom sidecar kernel: the write/probe
@@ -19,9 +20,7 @@ import graft.sources.LedgerSource
 object BloomProps extends Properties("BloomSidecar") {
 
   private def tmp(): String = {
-    val d = Files.createTempDirectory("bloomprops").toFile
-    d.deleteOnExit()
-    d.getPath
+    Files.createTempDirectory(Portable.scratchRoot, "bloomprops").toString
   }
 
   private val words: Gen[List[String]] =

@@ -3,8 +3,11 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The session factory's two promises: `release` leaves nothing a query
-  * persisted behind, and the session conf lives in one file. */
+import graft.engine.Tables
+
+/** The session factory's promises: `release` leaves nothing a query
+  * persisted behind, `withConf` leaves the conf as it found it, and the
+  * session conf lives in one file. */
 class GraftSessionSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
@@ -24,13 +27,77 @@ class GraftSessionSpec extends SparkSpec {
       spark.sparkContext.getPersistentRDDs.values.mkString(", "))
   }
 
+  // set by GraftSession.build()
+  private val partitions = "spark.sql.shuffle.partitions"
+  // registered with a default but never set: getOption would report the
+  // default, so only getAll shows whether it is set
+  private val policy = "spark.sql.streaming.multipleWatermarkPolicy"
+  private def isSet(key: String): Boolean = spark.conf.getAll.contains(key)
+
+  test("withConf restores a set key's value and unsets a key that had none") {
+    val before = spark.conf.get(partitions)
+    assert(!isSet(policy))
+    GraftSession.withConf(spark, partitions -> "7", policy -> "max") {
+      assert(spark.conf.get(partitions) == "7")
+      assert(spark.conf.get(policy) == "max")
+    }
+    assert(spark.conf.get(partitions) == before)
+    assert(!isSet(policy), "an unset key must come back unset, not as its default")
+  }
+
+  test("withConf restores when the body throws, and under nested use of a key") {
+    val before = spark.conf.get(partitions)
+    val e = intercept[IllegalStateException] {
+      GraftSession.withConf(spark, partitions -> "7", policy -> "max") {
+        GraftSession.withConf(spark, partitions -> "9") {
+          assert(spark.conf.get(partitions) == "9")
+        }
+        assert(spark.conf.get(partitions) == "7", "the inner scope restores the outer value")
+        GraftSession.withConf(spark, partitions -> "9", policy -> "min") {
+          throw new IllegalStateException("boom")
+        }
+      }
+    }
+    assert(e.getMessage == "boom")
+    assert(spark.conf.get(partitions) == before)
+    assert(!isSet(policy))
+  }
+
+  test("the conf-overriding streaming queries leave the session conf as they found it") {
+    // a leaked RocksDB provider, watermark policy or state partition count
+    // would silently change every later streaming query. rawEvents first:
+    // on a NANOS fixture it sets the nanos fallback conf for good, by design
+    Tables.rawEvents(spark, dir)
+    val before = spark.conf.getAll
+    Seq("st01_stream_counts", "st07_transform_with_state", "st13_stream_funnel",
+      "st24_multi_watermark_policy", "st29_multi_watermark_min").foreach { q =>
+      SparkEntry.queries(q)(spark, dir).write.mode("overwrite").format("noop").save()
+      val after = spark.conf.getAll
+      assert(after == before,
+        s"$q changed the conf: ${(after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)}")
+    }
+  }
+
+  /** Each `.scala` file under `src/` holding `needle`, with its count.
+    * Callers split their needles so this file does not match itself. */
+  private def hits(needle: String): Map[String, Int] =
+    Files.walk(Paths.get("src")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map((p: Path) => p.getFileName.toString -> (Files.readString(p).split(needle, -1).length - 1))
+      .filter(_._2 > 0).toMap
+
   test("only GraftSession.scala builds a SparkSession under src/") {
     // a conf change must touch one file: no runner or suite keeps its own
-    // builder (the needle is split so this file does not match itself)
-    val needle = "SparkSession" + ".builder"
-    val hits = Files.walk(Paths.get("src")).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && Files.readString(p).contains(needle))
-      .map((p: Path) => p.getFileName.toString).toList
-    assert(hits == List("GraftSession.scala"), hits)
+    // builder
+    assert(hits("SparkSession" + "\\.builder").keySet == Set("GraftSession.scala"))
+  }
+
+  test("one conf restore, one streaming drain and one RocksDB provider name under src/") {
+    // conf overrides go through GraftSession.withConf, the only unset
+    assert(hits("conf" + "\\.unset") == Map("GraftSession.scala" -> 1))
+    // every st query runs its streams through StreamingQueries.drain
+    assert(hits("Trigger" + "\\.AvailableNow").get("StreamingQueries.scala").contains(1))
+    // the provider is named once, as StreamingQueries.RocksDbStateStore
+    assert(hits("RocksDB" + "StateStoreProvider") == Map("StreamingQueries.scala" -> 1))
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.queries.Portable
 import graft.sources.LedgerSource
 
 /** Connector-contract pins for the graft-ledger DataSource V2
@@ -16,7 +17,7 @@ import graft.sources.LedgerSource
 class LedgerSourceSpec extends SparkSpec {
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"ledger_$tag").toString
+    Files.createTempDirectory(Portable.scratchRoot, s"ledger_$tag").toString
 
   private def sample: DataFrame = {
     val s = spark

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
 
+import graft.queries.Portable
 import graft.sources.{LedgerSource, LedgerTable}
 
 /** Seeded-fuzz equivalence for the connector's row-level verbs: on
@@ -30,7 +31,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
 
   private def writeLedger(data: Seq[(Long, String, Option[Long])],
                           parts: Int, byRange: Boolean): String = {
-    val dir = Files.createTempDirectory("ledger_fuzz").toString
+    val dir = Files.createTempDirectory(Portable.scratchRoot, "ledger_fuzz").toString
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(
         data.map(t => Row(t._1, t._2, t._3.map(Long.box).orNull)), 2),
@@ -96,7 +97,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
     val rng = new scala.util.Random(140004L)
     (1 to 8).foreach { i =>
       val cat = s"fuzz_ow_$i"
-      val root = Files.createTempDirectory("fuzz_ow").toString
+      val root = Files.createTempDirectory(Portable.scratchRoot, "fuzz_ow").toString
       spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
       spark.conf.set(s"spark.sql.catalog.$cat.root", root)
       val base = rows(rng, 80 + rng.nextInt(120))
@@ -126,7 +127,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
     val rng = new scala.util.Random(140005L)
     (1 to 6).foreach { i =>
       val cat = s"fuzz_bk_$i"
-      val root = Files.createTempDirectory("fuzz_bk").toString
+      val root = Files.createTempDirectory(Portable.scratchRoot, "fuzz_bk").toString
       spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
       spark.conf.set(s"spark.sql.catalog.$cat.root", root)
       val width = Seq(50L, 100L, 128L)(rng.nextInt(3))
@@ -160,7 +161,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
     val rng = new scala.util.Random(140003L)
     (1 to 6).foreach { i =>
       val cat = s"fuzz_tt_$i"
-      val root = Files.createTempDirectory("fuzz_tt").toString
+      val root = Files.createTempDirectory(Portable.scratchRoot, "fuzz_tt").toString
       spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
       spark.conf.set(s"spark.sql.catalog.$cat.root", root)
       val waves = (0 until 1 + rng.nextInt(3)).map(_ => rows(rng, 1 + rng.nextInt(80)))
@@ -193,7 +194,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
     val rng = new scala.util.Random(150001L)
     (1 to 6).foreach { i =>
       val cat = s"fuzz_mor_$i"
-      val root = Files.createTempDirectory("fuzz_mor").toString
+      val root = Files.createTempDirectory(Portable.scratchRoot, "fuzz_mor").toString
       spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
       spark.conf.set(s"spark.sql.catalog.$cat.root", root)
       // reference state: doc_id -> (lang, n_chars); unique dense keys

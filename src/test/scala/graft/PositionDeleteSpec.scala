@@ -325,16 +325,14 @@ class PositionDeleteSpec extends SparkSpec {
       // the bucketed self-join stays exchange-free AND overlay-exact
       // (auto-broadcast off: the honest stats make this tiny table
       // broadcastable, which would bypass the SPJ path under test)
-      val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val j = spark.table(s"$cat.t").as("a")
           .join(spark.table(s"$cat.t").as("b"), "doc_id")
         assert(j.count() == 39)
         val plan = j.queryExecution.executedPlan.toString
         assert(!plan.contains("Exchange"),
           s"the storage-partitioned join must stay exchange-free:\n$plan")
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+      }
     }
   }
 

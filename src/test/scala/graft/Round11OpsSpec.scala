@@ -226,15 +226,10 @@ class Round11OpsSpec extends SparkSpec {
     }
     val before = files()
     val maxDay = ev.agg(max($"day")).as[String].head()
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "dynamic")
-    try ev.where($"day" === maxDay)
-      .select($"event_id", concat(lit("r2_"), $"event_type").as("event_type"), $"day")
-      .write.mode("overwrite").partitionBy("day").parquet(out)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+    GraftSession.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      ev.where($"day" === maxDay)
+        .select($"event_id", concat(lit("r2_"), $"event_type").as("event_type"), $"day")
+        .write.mode("overwrite").partitionBy("day").parquet(out)
     }
     val after = files()
     val untouchedBefore = before.filter(!_._1.contains(s"day=$maxDay"))

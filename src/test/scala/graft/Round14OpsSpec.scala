@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 
+import graft.queries.Portable
 import graft.sources.{LedgerSource, LedgerTable}
 
 /** Round-14 pins: the connector's row-level DELETE (judged end-to-end
@@ -15,7 +16,7 @@ import graft.sources.{LedgerSource, LedgerTable}
 class Round14OpsSpec extends SparkSpec {
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"r14_$tag").toString
+    Files.createTempDirectory(Portable.scratchRoot, s"r14_$tag").toString
 
   /** 4 range files over doc_id 0..399 (one per 100-wide interval). */
   private def rangeLayout(dir: String): Unit = {
@@ -237,12 +238,7 @@ class Round14OpsSpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    // conf.get returns null (not an exception) for unset keys with a
-    // null default — flatten both shapes to None so restore unsets them
-    val saved = confs.map { case (k, _) =>
-      k -> util.Try(Option(s.conf.get(k))).toOption.flatten }
-    try {
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
+    GraftSession.withConf(s, confs: _*) {
       // one hot key carries ~99% of the left side's bytes; the right
       // side is uniform, so only the left partition is skew-split
       val left = s.range(0, 60000)
@@ -258,9 +254,6 @@ class Round14OpsSpec extends SparkSpec {
       assert("AQEShuffleRead.*skewed".r.findFirstIn(finalPlan).isDefined ||
         finalPlan.contains("isSkew=true") || finalPlan.contains("skewed"),
         s"OptimizeSkewedJoin left no skew marker:\n${finalPlan.take(4000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -394,10 +387,7 @@ class Round14OpsSpec extends SparkSpec {
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) =>
-      k -> util.Try(Option(s.conf.get(k))).toOption.flatten }
-    try {
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
+    GraftSession.withConf(s, confs: _*) {
       spark.range(0, 400).select($"id".as("doc_id"),
           lit("en").as("lang"), ($"id" * 3).as("n_chars"))
         .writeTo(s"$cat.a").tableProperty("bucket", "100").createOrReplace()
@@ -415,9 +405,6 @@ class Round14OpsSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"), plan.take(3000))
       assert(!plan.contains("Exchange"),
         s"storage-partitioned join should shuffle NOTHING:\n${plan.take(4000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -434,10 +421,7 @@ class Round14OpsSpec extends SparkSpec {
     val confs = Seq(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
-    val saved = confs.map { case (k, _) =>
-      k -> util.Try(Option(s.conf.get(k))).toOption.flatten }
-    try {
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
+    GraftSession.withConf(s, confs: _*) {
       spark.range(0, 400).select($"id".as("doc_id"),
           lit("en").as("lang"), ($"id" * 3).as("n_chars"))
         .writeTo(s"$cat.a").tableProperty("bucket", "100").createOrReplace()
@@ -451,9 +435,6 @@ class Round14OpsSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"), plan.take(2000))
       assert(!plan.contains("Exchange hashpartitioning(doc_id"),
         s"asymmetric SPJ still must not shuffle the join key:\n${plan.take(4000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 

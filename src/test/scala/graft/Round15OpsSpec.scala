@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.Portable
 import graft.sources.LedgerSource
 
 /** Round-15 pins around the new verbs and hardening:
@@ -170,7 +171,7 @@ class Round15OpsSpec extends SparkSpec {
   test("TopN pushdown: the cutoff never opens pruned files and survives overlapping ranges") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r15_topn").toString
+    val dir = java.nio.file.Files.createTempDirectory(Portable.scratchRoot, "r15_topn").toString
     // 4 disjoint range files over [0,400)
     spark.range(0, 400).select($"id".as("doc_id"),
         lit("x").as("lang"), $"id".as("n_chars"))
@@ -200,7 +201,7 @@ class Round15OpsSpec extends SparkSpec {
     assert(lim.count() == 7)
     // overlapping ranges: a wide file hides the smallest keys — the
     // cutoff must keep it even though a narrow file alone covers n
-    val dir2 = java.nio.file.Files.createTempDirectory("r15_topn2").toString
+    val dir2 = java.nio.file.Files.createTempDirectory(Portable.scratchRoot, "r15_topn2").toString
     // file W: [0, 1000] sparse (2 rows); file Nw: [2,3] dense (60 rows)
     Seq(0L, 1000L).toDF("doc_id")
       .select($"doc_id", lit("w").as("lang"), $"doc_id".as("n_chars"))
@@ -331,7 +332,7 @@ class Round15OpsSpec extends SparkSpec {
   test("path-API time travel: versionAsOf / timestampAsOf options mirror the catalog verbs") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r15_ttopt").toString
+    val dir = java.nio.file.Files.createTempDirectory(Portable.scratchRoot, "r15_ttopt").toString
     def wave(lo: Int, hi: Int) = spark.range(lo, hi)
       .select($"id".as("doc_id"), lit("w").as("lang"), $"id".as("n_chars"))
       .coalesce(1)
@@ -624,11 +625,8 @@ class Round15OpsSpec extends SparkSpec {
     implicit val sqlCtx = s.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     def ts(x: String) = java.sql.Timestamp.valueOf(x)
-    def finalWatermark(policy: String): String = {
-      val key = "spark.sql.streaming.multipleWatermarkPolicy"
-      val prev = s.conf.get(key)
-      s.conf.set(key, policy)
-      try {
+    def finalWatermark(policy: String): String =
+      GraftSession.withConf(s, "spark.sql.streaming.multipleWatermarkPolicy" -> policy) {
         val a = MemoryStream[java.sql.Timestamp]
         val b = MemoryStream[java.sql.Timestamp]
         val counts = a.toDF().toDF("ts").withWatermark("ts", "10 minutes")
@@ -646,8 +644,7 @@ class Round15OpsSpec extends SparkSpec {
           q.recentProgress.toSeq
             .flatMap(p => Option(p.eventTime.get("watermark"))).max
         } finally q.stop()
-      } finally s.conf.set(key, prev)
-    }
+      }
     assert(finalWatermark("min") == "2019-07-01T09:50:01.000Z",
       "min policy: the laggard input's frontier bounds the global watermark")
     assert(finalWatermark("max") == "2019-07-01T11:50:01.000Z",

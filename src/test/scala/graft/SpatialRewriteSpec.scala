@@ -55,8 +55,8 @@ class SpatialRewriteSpec extends SparkSpec {
   }
 
   test("bounds on stored columns reach the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_spatial").toFile
-    dir.deleteOnExit()
+    val dir = java.nio.file.Files.createTempDirectory(
+      graft.queries.Portable.scratchRoot, "graft_spatial").toFile
     grid.write.mode("overwrite").parquet(dir.getAbsolutePath)
     val df = radiusFilter(spark.read.parquet(dir.getAbsolutePath), 31.2, 121.5, 500e3)
     // the rendered plan truncates PushedFilters; read the scan node's

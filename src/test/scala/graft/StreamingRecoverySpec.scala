@@ -7,6 +7,8 @@ import scala.collection.mutable.ListBuffer
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.{Dataset, Row}
 
+import graft.queries.{Portable, StreamingQueries}
+
 /** Checkpoint recovery — the property that makes Structured Streaming
   * production-grade and that no single-run test can see: a stateful
   * query stopped mid-stream and restarted FROM ITS CHECKPOINT must
@@ -33,20 +35,6 @@ import org.apache.spark.sql.{Dataset, Row}
   * pipeline. */
 class StreamingRecoverySpec extends SparkSpec {
 
-  private def withRocksDb[T](body: => T): T = {
-    val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally {
-      prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None => s.conf.unset(key)
-      }
-    }
-  }
-
   /** One observed microbatch: (batchId, updated (k, count) rows). */
   private type Batch = (Long, Set[(Long, Long)])
 
@@ -54,7 +42,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val ckpt = Files.createTempDirectory(s"graft_recovery_$tag").toString
+    val ckpt = Files.createTempDirectory(Portable.scratchRoot, s"graft_recovery_$tag").toString
     val in = MemoryStream[Long]
     val counts = in.toDF().toDF("k").groupBy($"k").count()
     // a fresh buffer per query life: replayed batches would surface as
@@ -107,6 +95,8 @@ class StreamingRecoverySpec extends SparkSpec {
   }
 
   test("stateful restart from checkpoint under RocksDB state store") {
-    withRocksDb { recoveryScenario("rocks") }
+    GraftSession.withConf(spark, StreamingQueries.RocksDbStateStore) {
+      recoveryScenario("rocks")
+    }
   }
 }

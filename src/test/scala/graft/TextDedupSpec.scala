@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
-import graft.queries.TextQueries
+import graft.queries.{Portable, TextQueries}
 
 /** Pins the skew-guard ("df cap") semantics of the pair-generating
   * dedup queries against a constructed hot-key corpus:
@@ -26,7 +26,7 @@ class TextDedupSpec extends SparkSpec {
     * named judged query against it. All doc_ids are >= 10 so the t08
     * seeding branch (copies of doc_id < 10) adds nothing. */
   private def run(name: String, docs: Seq[(Long, String, String)]): DataFrame = {
-    val dir = Files.createTempDirectory("graft_dedup_spec").toString
+    val dir = Files.createTempDirectory(Portable.scratchRoot, "graft_dedup_spec").toString
     val s = spark
     import s.implicits._
     docs.toDF("doc_id", "source", "text")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+import graft.queries.StreamingQueries
 
 /** Pinned semantics for the Spark 4 `transformWithState` state-variable
   * family that the judged rows cannot observe: st19 hash-judges
@@ -13,20 +14,6 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
   * TTL (state must survive), so "TTL evicts" is a named regression
   * instead of an untested config knob. */
 class TransformWithStateSpec extends SparkSpec {
-
-  private def withRocksDb[T](body: => T): T = {
-    val s = spark
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally {
-      prevProvider match {
-        case Some(p) => s.conf.set(providerKey, p)
-        case None => s.conf.unset(providerKey)
-      }
-    }
-  }
 
   /** Run the TTL probe: batch 1 writes state, sleep, batch 2 reports the
     * PREVIOUS value (-1 when absent/expired). Returns batch 2's report.
@@ -70,7 +57,7 @@ class TransformWithStateSpec extends SparkSpec {
   }
 
   test("TTL evicts value state after its wall-clock duration; long TTL survives") {
-    withRocksDb {
+    GraftSession.withConf(spark, StreamingQueries.RocksDbStateStore) {
       // generous margins against scheduler jitter: 1s TTL vs a 4s sleep
       // (must expire), 10min TTL vs the same sleep (must survive)
       assert(probe(ttlMs = 1000L, sleepMs = 4000L, name = "ttl_short") == -1L,

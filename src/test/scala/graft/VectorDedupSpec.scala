@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
-import graft.queries.VectorQueries
+import graft.queries.{Portable, VectorQueries}
 
 /** Pins the v04 hot-bucket skew guard (`BucketCap`): the 8-plane bucket
   * space is fixed (256 values), so one over-dense bucket would generate
@@ -23,7 +23,7 @@ class VectorDedupSpec extends SparkSpec {
     * named judged query against it. All vec_ids are >= 10 so the v04
     * seeding branch (2x-scaled copies of vec_id < 10) adds nothing. */
   private def run(name: String, vecs: Seq[(Long, Seq[Float])]): DataFrame = {
-    val dir = Files.createTempDirectory("graft_vec_spec").toString
+    val dir = Files.createTempDirectory(Portable.scratchRoot, "graft_vec_spec").toString
     val s = spark
     import s.implicits._
     vecs.toDF("vec_id", "embedding").withColumn("label",

@@ -3,6 +3,8 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withConf
+import graft.queries.StreamingQueries.RocksDbStateStore
 
 /** Pins the MICROBATCH WATERMARK LAG the st10/st11 oracles encode
   * (probed on Spark 4.1, SPARK-40925 era): at batch N the state-store
@@ -19,54 +21,49 @@ class WatermarkSemanticsSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  private val noDataOff = "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
   test("late-input filter lags the eviction watermark by exactly one batch") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    val in = MemoryStream[(Long, Timestamp)]
-    val counts = in.toDF().toDF("user_id", "ts")
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "60 minutes").as("w"))
-      .count()
-      .select(col("w.start").as("ws"), col("count"))
-    val q = counts.writeStream.format("memory").queryName("wm_probe")
-      .outputMode("append").start()
-    try {
-      // b0: seeds the [10:00, 11:00) window; max event time 10:00
-      in.addData((1L, ts("2019-07-01 10:00:00"))); q.processAllAvailable()
-      // b1: advances max event time to 12:00. Eviction wm THIS batch is
-      // still 09:50 (b0's max − delay), so nothing emits yet.
-      in.addData((1L, ts("2019-07-01 12:00:00"))); q.processAllAvailable()
-      // b2: eviction wm is now 11:50 — [10:00, 11:00) closes this batch.
-      // The 10:05 row is BELOW that (late for eviction) but the filter
-      // still uses b1's 09:50, so the row is ACCEPTED and counted into
-      // the window as it closes. A filter running at 11:50 would drop it.
-      in.addData((1L, ts("2019-07-01 10:05:00"))); q.processAllAvailable()
-      // b3: the filter has caught up to 11:50 — the same-shaped row is
-      // now dropped on input, and the counter proves it.
-      in.addData((1L, ts("2019-07-01 10:06:00"))); q.processAllAvailable()
+    withConf(s, noDataOff) {
+      val in = MemoryStream[(Long, Timestamp)]
+      val counts = in.toDF().toDF("user_id", "ts")
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "60 minutes").as("w"))
+        .count()
+        .select(col("w.start").as("ws"), col("count"))
+      val q = counts.writeStream.format("memory").queryName("wm_probe")
+        .outputMode("append").start()
+      try {
+        // b0: seeds the [10:00, 11:00) window; max event time 10:00
+        in.addData((1L, ts("2019-07-01 10:00:00"))); q.processAllAvailable()
+        // b1: advances max event time to 12:00. Eviction wm THIS batch is
+        // still 09:50 (b0's max − delay), so nothing emits yet.
+        in.addData((1L, ts("2019-07-01 12:00:00"))); q.processAllAvailable()
+        // b2: eviction wm is now 11:50 — [10:00, 11:00) closes this batch.
+        // The 10:05 row is BELOW that (late for eviction) but the filter
+        // still uses b1's 09:50, so the row is ACCEPTED and counted into
+        // the window as it closes. A filter running at 11:50 would drop it.
+        in.addData((1L, ts("2019-07-01 10:05:00"))); q.processAllAvailable()
+        // b3: the filter has caught up to 11:50 — the same-shaped row is
+        // now dropped on input, and the counter proves it.
+        in.addData((1L, ts("2019-07-01 10:06:00"))); q.processAllAvailable()
 
-      val rows = s.sql("SELECT ws, count FROM wm_probe")
-        .collect().map(r => (r.getTimestamp(0), r.getLong(1))).toSeq
-      assert(rows.contains((ts("2019-07-01 10:00:00"), 2L)),
-        s"b2's late row must be filtered IN (one-batch lag) and emitted " +
-          s"with the closing window: $rows")
-      assert(!rows.exists(r => r._1 == ts("2019-07-01 10:00:00") && r._2 != 2L), rows)
+        val rows = s.sql("SELECT ws, count FROM wm_probe")
+          .collect().map(r => (r.getTimestamp(0), r.getLong(1))).toSeq
+        assert(rows.contains((ts("2019-07-01 10:00:00"), 2L)),
+          s"b2's late row must be filtered IN (one-batch lag) and emitted " +
+            s"with the closing window: $rows")
+        assert(!rows.exists(r => r._1 == ts("2019-07-01 10:00:00") && r._2 != 2L), rows)
 
-      val drops = q.recentProgress.toSeq.flatMap(p =>
-        Option(p.stateOperators).toSeq.flatMap(_.toSeq.map(_.numRowsDroppedByWatermark)))
-      assert(drops.sum == 1,
-        s"exactly b3's row must be dropped by the (caught-up) filter; " +
-          s"per-batch drops: $drops")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+        val drops = q.recentProgress.toSeq.flatMap(p =>
+          Option(p.stateOperators).toSeq.flatMap(_.toSeq.map(_.numRowsDroppedByWatermark)))
+        assert(drops.sum == 1,
+          s"exactly b3's row must be dropped by the (caught-up) filter; " +
+            s"per-batch drops: $drops")
+      } finally q.stop()
     }
   }
 
@@ -84,61 +81,40 @@ class WatermarkSemanticsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    val in = MemoryStream[(Long, Timestamp)]
-    val deduped = in.toDF().toDF("user_id", "ts")
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("user_id")
-    val q = deduped.writeStream.format("memory").queryName("wm_dedup_probe")
-      .outputMode("append").start()
-    try {
-      // b0: first occurrence — emits; state expiry 10:10
-      in.addData((1L, ts("2019-07-01 10:00:00"))); q.processAllAvailable()
-      // b1: new key — emits; advances max event time to 11:00
-      in.addData((2L, ts("2019-07-01 11:00:00"))); q.processAllAvailable()
-      // b2: duplicate of key 1 — deduped (state live during the batch);
-      // at batch END the eviction wm is 10:50 (b1's max − delay) and the
-      // UNREFRESHED expiry 10:10 sits below it → state evicted
-      in.addData((1L, ts("2019-07-01 10:45:00"))); q.processAllAvailable()
-      // b3: key 1 again, above the (lagging) 10:50 late filter — state
-      // is gone, so the row RE-EMITS
-      in.addData((1L, ts("2019-07-01 10:58:00"))); q.processAllAvailable()
-      // b4: the late filter has caught up to 10:50 — dropped on input
-      in.addData((1L, ts("2019-07-01 09:00:00"))); q.processAllAvailable()
+    withConf(s, noDataOff) {
+      val in = MemoryStream[(Long, Timestamp)]
+      val deduped = in.toDF().toDF("user_id", "ts")
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark("user_id")
+      val q = deduped.writeStream.format("memory").queryName("wm_dedup_probe")
+        .outputMode("append").start()
+      try {
+        // b0: first occurrence — emits; state expiry 10:10
+        in.addData((1L, ts("2019-07-01 10:00:00"))); q.processAllAvailable()
+        // b1: new key — emits; advances max event time to 11:00
+        in.addData((2L, ts("2019-07-01 11:00:00"))); q.processAllAvailable()
+        // b2: duplicate of key 1 — deduped (state live during the batch);
+        // at batch END the eviction wm is 10:50 (b1's max − delay) and the
+        // UNREFRESHED expiry 10:10 sits below it → state evicted
+        in.addData((1L, ts("2019-07-01 10:45:00"))); q.processAllAvailable()
+        // b3: key 1 again, above the (lagging) 10:50 late filter — state
+        // is gone, so the row RE-EMITS
+        in.addData((1L, ts("2019-07-01 10:58:00"))); q.processAllAvailable()
+        // b4: the late filter has caught up to 10:50 — dropped on input
+        in.addData((1L, ts("2019-07-01 09:00:00"))); q.processAllAvailable()
 
-      val rows = s.sql("SELECT user_id, ts FROM wm_dedup_probe")
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1))).toSeq.sorted
-      assert(rows == Seq(
-        (1L, ts("2019-07-01 10:00:00")),
-        (1L, ts("2019-07-01 10:58:00")),
-        (2L, ts("2019-07-01 11:00:00"))),
-        s"expected first-emit + re-emit + second key, got: $rows")
-      val drops = q.recentProgress.toSeq.flatMap(p =>
-        Option(p.stateOperators).toSeq.flatMap(_.toSeq.map(_.numRowsDroppedByWatermark)))
-      assert(drops.sum == 1,
-        s"exactly b4's row must be dropped by the late filter; per-batch drops: $drops")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }
-  }
-
-  private def withRocksDb[T](body: => T): T = {
-    val s = spark
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally {
-      prevProvider match {
-        case Some(p) => s.conf.set(providerKey, p)
-        case None => s.conf.unset(providerKey)
-      }
+        val rows = s.sql("SELECT user_id, ts FROM wm_dedup_probe")
+          .collect().map(r => (r.getLong(0), r.getTimestamp(1))).toSeq.sorted
+        assert(rows == Seq(
+          (1L, ts("2019-07-01 10:00:00")),
+          (1L, ts("2019-07-01 10:58:00")),
+          (2L, ts("2019-07-01 11:00:00"))),
+          s"expected first-emit + re-emit + second key, got: $rows")
+        val drops = q.recentProgress.toSeq.flatMap(p =>
+          Option(p.stateOperators).toSeq.flatMap(_.toSeq.map(_.numRowsDroppedByWatermark)))
+        assert(drops.sum == 1,
+          s"exactly b4's row must be dropped by the late filter; per-batch drops: $drops")
+      } finally q.stop()
     }
   }
 
@@ -173,15 +149,10 @@ class WatermarkSemanticsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    // conf restore wraps EVERYTHING after the capture: a throw from
-    // MemoryStream/timeoutSessions setup must not leak the disabled
-    // no-data-batch setting into the next test, which depends on the
-    // default (enabled) semantics.
-    try {
-      s.conf.set(key, "false")
-      withRocksDb {
+    // the restore covers setup too: a throw from MemoryStream or
+    // timeoutSessions must not leak the disabled no-data-batch setting
+    // into the next test, which depends on the default (enabled) semantics
+    withConf(s, noDataOff, RocksDbStateStore) {
       val in = MemoryStream[(Long, Timestamp)]
       val q = timeoutSessions(in, "timer_probe")
       try {
@@ -208,12 +179,6 @@ class WatermarkSemanticsSpec extends SparkSpec {
           (2L, us("2019-07-01 11:00:00"), 1L)),
           s"expected k1 merged-then-fired + k2 fired, k3/k4 still live: $rows")
       } finally q.stop()
-      }
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
     }
   }
 
@@ -259,47 +224,37 @@ class WatermarkSemanticsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    try {
-      s.conf.set(key, "false")
-      withRocksDb {
-        val p = MemoryStream[(Long, Timestamp)]
-        val c = MemoryStream[(Long, Timestamp)]
-        val q = joinThenTimeout(p, c, "join_timer_probe")
-        def add(u: Long, t: String): Unit = {
-          p.addData((u, ts(t))); c.addData((u, ts(t))); q.processAllAvailable()
-        }
-        try {
-          // b0: u1@10:00 matches itself → timer 10:10; src wm → 09:50
-          add(1L, "2019-07-01 10:00:00")
-          // b1: u2@11:20 → timer 11:30; timers fire vs b0's effective
-          //     wm (09:50 − 1h): none. src wm → 11:10
-          add(2L, "2019-07-01 11:20:00")
-          // b2: u3@12:30 → timer 12:40; timers fire vs b1's effective
-          //     wm = 11:10 − 1h = 10:10 — EXACTLY u1's timer. Strict
-          //     expiry + the 1h join delay ⇒ nothing fires (an
-          //     undelayed wm of 11:10 would fire u1; so would <=).
-          add(3L, "2019-07-01 12:30:00")
-          val afterB2 = s.sql("SELECT user_id FROM join_timer_probe")
-            .collect().map(_.getLong(0)).toSeq
-          assert(afterB2.isEmpty,
-            s"u1's 10:10 timer must NOT fire at effective wm 10:10 " +
-              s"(join-delayed, strict): emitted $afterB2")
-          // b3: u4@13:30 → timers fire vs b2's effective wm = 12:20 −
-          //     1h = 11:20: u1 (10:10) fires, u2 (11:30) does not
-          add(4L, "2019-07-01 13:30:00")
-          val rows = s.sql("SELECT user_id, last_tsu, n_matches FROM join_timer_probe")
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-          assert(rows == Seq((1L, ts("2019-07-01 10:00:00").getTime * 1000L, 1L)),
-            s"only u1 may have fired by b3 (u2's 11:30 > 11:20): $rows")
-        } finally q.stop()
+    withConf(s, noDataOff, RocksDbStateStore) {
+      val p = MemoryStream[(Long, Timestamp)]
+      val c = MemoryStream[(Long, Timestamp)]
+      val q = joinThenTimeout(p, c, "join_timer_probe")
+      def add(u: Long, t: String): Unit = {
+        p.addData((u, ts(t))); c.addData((u, ts(t))); q.processAllAvailable()
       }
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+      try {
+        // b0: u1@10:00 matches itself → timer 10:10; src wm → 09:50
+        add(1L, "2019-07-01 10:00:00")
+        // b1: u2@11:20 → timer 11:30; timers fire vs b0's effective
+        //     wm (09:50 − 1h): none. src wm → 11:10
+        add(2L, "2019-07-01 11:20:00")
+        // b2: u3@12:30 → timer 12:40; timers fire vs b1's effective
+        //     wm = 11:10 − 1h = 10:10 — EXACTLY u1's timer. Strict
+        //     expiry + the 1h join delay ⇒ nothing fires (an
+        //     undelayed wm of 11:10 would fire u1; so would <=).
+        add(3L, "2019-07-01 12:30:00")
+        val afterB2 = s.sql("SELECT user_id FROM join_timer_probe")
+          .collect().map(_.getLong(0)).toSeq
+        assert(afterB2.isEmpty,
+          s"u1's 10:10 timer must NOT fire at effective wm 10:10 " +
+            s"(join-delayed, strict): emitted $afterB2")
+        // b3: u4@13:30 → timers fire vs b2's effective wm = 12:20 −
+        //     1h = 11:20: u1 (10:10) fires, u2 (11:30) does not
+        add(4L, "2019-07-01 13:30:00")
+        val rows = s.sql("SELECT user_id, last_tsu, n_matches FROM join_timer_probe")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        assert(rows == Seq((1L, ts("2019-07-01 10:00:00").getTime * 1000L, 1L)),
+          s"only u1 may have fired by b3 (u2's 11:30 > 11:20): $rows")
+      } finally q.stop()
     }
   }
 
@@ -311,7 +266,7 @@ class WatermarkSemanticsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    withRocksDb {
+    withConf(s, RocksDbStateStore) {
       val in = MemoryStream[(Long, Timestamp)]
       val q = timeoutSessions(in, "nodata_timer_probe")
       try {
@@ -344,10 +299,7 @@ class WatermarkSemanticsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    try {
-      s.conf.set(key, "false")
+    withConf(s, noDataOff) {
       val p = MemoryStream[(Long, Timestamp)]
       val c = MemoryStream[(Long, Timestamp)]
       val pf = p.toDF().toDF("p_user", "p_ts").withWatermark("p_ts", "10 minutes")
@@ -387,11 +339,6 @@ class WatermarkSemanticsSpec extends SparkSpec {
         assert(nullCounts() == ((1, 1)),
           "click tail flushes only once wm passes c_ts + the interval bound")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
     }
   }
 }

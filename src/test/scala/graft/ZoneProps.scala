@@ -6,6 +6,7 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
   GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 
+import graft.queries.Portable
 import graft.sources.LedgerSource
 
 /** Property suite for the s71 zone-map sidecar kernel: the write/probe
@@ -22,9 +23,7 @@ import graft.sources.LedgerSource
 object ZoneProps extends Properties("ZoneSidecar") {
 
   private def tmp(): String = {
-    val d = Files.createTempDirectory("zoneprops").toFile
-    d.deleteOnExit()
-    d.getPath
+    Files.createTempDirectory(Portable.scratchRoot, "zoneprops").toString
   }
 
   private def longBytes(l: Long) =
@@ -132,9 +131,7 @@ object ZoneProps extends Properties("ZoneSidecar") {
 object PositionOverlayProps extends Properties("PositionOverlay") {
 
   private def tmp(): String = {
-    val d = Files.createTempDirectory("posprops").toFile
-    d.deleteOnExit()
-    d.getPath
+    Files.createTempDirectory(Portable.scratchRoot, "posprops").toString
   }
 
   private val posSets: Gen[List[Long]] =
