@@ -1098,13 +1098,13 @@ object GeoQueries {
         var labels = adj.select(col("v")).distinct()
           .select(col("v"), col("v").as("lbl"))
         for (_ <- 1 to 3) {
-          labels = adj
+          // region-bounded round state
+          labels = Portable.pinRound(adj
             .join(broadcast(labels.select(col("v").as("u"), col("lbl"))), "u")
             .groupBy(col("v"), col("lbl")).agg(sum(col("w")).as("wsum"))
             .groupBy(col("v"))
             .agg(min(struct((-col("wsum")).as("nw"), col("lbl").as("lbl"))).as("m"))
-            .select(col("v"), col("m.lbl").as("lbl"))
-            .coalesce(1).localCheckpoint() // region-bounded round state
+            .select(col("v"), col("m.lbl").as("lbl")))
         }
         labels.select(col("v").as("region"), col("lbl").as("community"))
           .orderBy(col("region"))

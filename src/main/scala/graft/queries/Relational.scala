@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GraftSession.withConf
 import graft.engine.Tables
+import graft.sources.GraftCatalog
 import Portable._
 
 /** Relational operator catalog over the TPC-H-ish testdata — one judged
@@ -664,8 +665,7 @@ object Relational {
     ("s24_writer_v2",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.root", scratchPath("s24_catroot"))
+        GraftCatalog.register(s, "graft_cat", scratchPath("s24_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -709,8 +709,7 @@ object Relational {
     ("s25_delete_where",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_del", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_del.root", scratchPath("s25_catroot"))
+        GraftCatalog.register(s, "graft_del", scratchPath("s25_catroot"))
         Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
           .repartitionByRange(8, $"doc_id")
@@ -748,8 +747,7 @@ object Relational {
     ("s27_update_where",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_upd", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_upd.root", scratchPath("s27_catroot"))
+        GraftCatalog.register(s, "graft_upd", scratchPath("s27_catroot"))
         Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
           .repartitionByRange(8, $"doc_id")
@@ -792,8 +790,7 @@ object Relational {
     ("s28_merge_into",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_mrg", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_mrg.root", scratchPath("s28_catroot"))
+        GraftCatalog.register(s, "graft_mrg", scratchPath("s28_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.repartitionByRange(8, $"doc_id")
@@ -853,8 +850,7 @@ object Relational {
     ("s29_file_metadata",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_fm", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_fm.root", scratchPath("s29_catroot"))
+        GraftCatalog.register(s, "graft_fm", scratchPath("s29_catroot"))
         Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
           .repartitionByRange(8, $"doc_id")
@@ -887,8 +883,7 @@ object Relational {
     ("s30_call_compact",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_proc", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_proc.root", scratchPath("s30_catroot"))
+        GraftCatalog.register(s, "graft_proc", scratchPath("s30_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(4)) === 0).coalesce(1)
@@ -927,8 +922,7 @@ object Relational {
     ("s32_time_travel",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_tt", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_tt.root", scratchPath("s32_catroot"))
+        GraftCatalog.register(s, "graft_tt", scratchPath("s32_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(3)) === 0)
@@ -976,8 +970,7 @@ object Relational {
         import s.implicits._
         s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        s.conf.set("spark.sql.catalog.graft_spj", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_spj.root", scratchPath("s35_catroot"))
+        GraftCatalog.register(s, "graft_spj", scratchPath("s35_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.writeTo("graft_spj.corpus")
@@ -1021,8 +1014,7 @@ object Relational {
     ("s34_replace_where",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_ow", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_ow.root", scratchPath("s34_catroot"))
+        GraftCatalog.register(s, "graft_ow", scratchPath("s34_catroot"))
         Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
           .repartitionByRange(8, $"doc_id")
@@ -1072,8 +1064,7 @@ object Relational {
     ("s33_lakehouse_lifecycle",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_lh", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_lh.root", scratchPath("s33_catroot"))
+        GraftCatalog.register(s, "graft_lh", scratchPath("s33_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         // 1. ingest + 2. incremental append
@@ -1148,8 +1139,7 @@ object Relational {
     ("s37_merge_on_read",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_mor", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_mor.root", scratchPath("s37_catroot"))
+        GraftCatalog.register(s, "graft_mor", scratchPath("s37_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.repartitionByRange(8, $"doc_id")
@@ -1236,8 +1226,7 @@ object Relational {
     ("s41_write_amplification",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_amp", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_amp.root", scratchPath("s41_catroot"))
+        GraftCatalog.register(s, "graft_amp", scratchPath("s41_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.repartitionByRange(8, $"doc_id")
@@ -1368,8 +1357,7 @@ object Relational {
     ("s43_table_history",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_hist", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_hist.root", scratchPath("s43_catroot"))
+        GraftCatalog.register(s, "graft_hist", scratchPath("s43_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0).coalesce(1)
@@ -1413,8 +1401,7 @@ object Relational {
     ("s44_check_constraint",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_chk", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_chk.root", scratchPath("s44_catroot"))
+        GraftCatalog.register(s, "graft_chk", scratchPath("s44_catroot"))
         s.sql("DROP TABLE IF EXISTS graft_chk.s44docs")
         s.sql("""CREATE TABLE graft_chk.s44docs
                 |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -1458,8 +1445,7 @@ object Relational {
     ("s45_dataframe_merge",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_dfm", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_dfm.root", scratchPath("s45_catroot"))
+        GraftCatalog.register(s, "graft_dfm", scratchPath("s45_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.repartitionByRange(8, $"doc_id")
@@ -1533,8 +1519,7 @@ object Relational {
     ("s46_change_feed",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_cdf", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cdf.root", scratchPath("s46_catroot"))
+        GraftCatalog.register(s, "graft_cdf", scratchPath("s46_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -1600,8 +1585,7 @@ object Relational {
     ("s47_mv_incremental",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_mv", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_mv.root", scratchPath("s47_catroot"))
+        GraftCatalog.register(s, "graft_mv", scratchPath("s47_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -1664,8 +1648,7 @@ object Relational {
     ("s56_mv_auto_rewrite",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_ar", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_ar.root", scratchPath("s56_catroot"))
+        GraftCatalog.register(s, "graft_ar", scratchPath("s56_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         // a previous invocation's registration must not see the rebuilt
@@ -1728,8 +1711,7 @@ object Relational {
     ("s60_mv_filtered_rewrite",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_fl", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_fl.root", scratchPath("s60_catroot"))
+        GraftCatalog.register(s, "graft_fl", scratchPath("s60_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         val tdir = new java.io.File(
@@ -1790,8 +1772,7 @@ object Relational {
     ("s59_mv_rewrite_fallback",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_fb", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_fb.root", scratchPath("s59_catroot"))
+        GraftCatalog.register(s, "graft_fb", scratchPath("s59_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         val tdir = new java.io.File(
@@ -1843,8 +1824,7 @@ object Relational {
     ("s57_mv_rollup_rewrite",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_ru", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_ru.root", scratchPath("s57_catroot"))
+        GraftCatalog.register(s, "graft_ru", scratchPath("s57_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         val tdir = new java.io.File(
@@ -1905,8 +1885,7 @@ object Relational {
     ("s49_concurrent_appends",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_occ", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_occ.root", scratchPath("s49_catroot"))
+        GraftCatalog.register(s, "graft_occ", scratchPath("s49_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(5)) === 0)
@@ -1961,8 +1940,7 @@ object Relational {
     ("s48_branch_tag",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_br", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_br.root", scratchPath("s48_catroot"))
+        GraftCatalog.register(s, "graft_br", scratchPath("s48_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -2035,8 +2013,7 @@ object Relational {
     ("s50_refs_table",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_rf", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_rf.root", scratchPath("s50_catroot"))
+        GraftCatalog.register(s, "graft_rf", scratchPath("s50_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -2073,8 +2050,7 @@ object Relational {
     ("s51_zero_copy_clone",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_cl", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cl.root", scratchPath("s51_catroot"))
+        GraftCatalog.register(s, "graft_cl", scratchPath("s51_catroot"))
         // a previous invocation's clone target survives createOrReplace
         // of the source — drop it for determinism
         s.sql("DROP TABLE IF EXISTS graft_cl.s51copy")
@@ -2141,8 +2117,7 @@ object Relational {
     ("s52_branch_change_feed",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_bf", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_bf.root", scratchPath("s52_catroot"))
+        GraftCatalog.register(s, "graft_bf", scratchPath("s52_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -2210,8 +2185,7 @@ object Relational {
     ("s53_branch_merge",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_mg", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_mg.root", scratchPath("s53_catroot"))
+        GraftCatalog.register(s, "graft_mg", scratchPath("s53_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -2276,8 +2250,7 @@ object Relational {
     ("s58_branch_append_race",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_brr", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_brr.root", scratchPath("s58_catroot"))
+        GraftCatalog.register(s, "graft_brr", scratchPath("s58_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(5)) === 0)
@@ -2336,8 +2309,7 @@ object Relational {
         import s.implicits._
         import graft.plans.MvRegistry
         import graft.plans.MvRegistry.{MvAgg, MvDef}
-        s.conf.set("spark.sql.catalog.graft_gn", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_gn.root", scratchPath("s63_catroot"))
+        GraftCatalog.register(s, "graft_gn", scratchPath("s63_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         val tdir = new java.io.File(
@@ -2422,8 +2394,7 @@ object Relational {
         import s.implicits._
         import graft.plans.MvRegistry
         import graft.plans.MvRegistry.{MvAgg, MvDef}
-        s.conf.set("spark.sql.catalog.graft_ex", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_ex.root", scratchPath("s63b_catroot"))
+        GraftCatalog.register(s, "graft_ex", scratchPath("s63b_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         val tdir = new java.io.File(
@@ -2489,8 +2460,7 @@ object Relational {
     ("s69_indexes_table",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_ix", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_ix.root", scratchPath("s69_catroot"))
+        GraftCatalog.register(s, "graft_ix", scratchPath("s69_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where($"doc_id" < 300).coalesce(1)
@@ -2552,8 +2522,7 @@ object Relational {
     ("s70_position_delete",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_pd", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_pd.root", scratchPath("s70_catroot"))
+        GraftCatalog.register(s, "graft_pd", scratchPath("s70_catroot"))
         val slice = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
           .where($"doc_id" < 2000)
@@ -2617,8 +2586,7 @@ object Relational {
     ("s68_mv_sql_lifecycle",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_ml", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_ml.root", scratchPath("s68_catroot"))
+        GraftCatalog.register(s, "graft_ml", scratchPath("s68_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         val tdir = new java.io.File(
@@ -2696,8 +2664,7 @@ object Relational {
     ("s67_txn_atomic",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_tx", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_tx.root", scratchPath("s67_catroot"))
+        GraftCatalog.register(s, "graft_tx", scratchPath("s67_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -2772,8 +2739,7 @@ object Relational {
         s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
           "true")
-        s.conf.set("spark.sql.catalog.graft_le", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_le.root", scratchPath("s65_catroot"))
+        GraftCatalog.register(s, "graft_le", scratchPath("s65_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         // widths scaled to the ACTUAL key range: one w1 bucket covers
@@ -2840,8 +2806,7 @@ object Relational {
         s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
           "true")
-        s.conf.set("spark.sql.catalog.graft_wd", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_wd.root", scratchPath("s66_catroot"))
+        GraftCatalog.register(s, "graft_wd", scratchPath("s66_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         val maxId = docs.agg(max($"doc_id")).head().getLong(0)
@@ -2915,8 +2880,7 @@ object Relational {
     ("s64_bloom_skip",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_bl", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_bl.root", scratchPath("s64_catroot"))
+        GraftCatalog.register(s, "graft_bl", scratchPath("s64_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         // files CLUSTERED by content (each task writes one file, so
@@ -2973,8 +2937,7 @@ object Relational {
     ("s73_dedup_rows",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_dd", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_dd.root", scratchPath("s73_catroot"))
+        GraftCatalog.register(s, "graft_dd", scratchPath("s73_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.writeTo("graft_dd.s73docs")
@@ -3022,8 +2985,7 @@ object Relational {
     ("s72_files_table",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_fs", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_fs.root", scratchPath("s72_catroot"))
+        GraftCatalog.register(s, "graft_fs", scratchPath("s72_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0).coalesce(1)
@@ -3088,8 +3050,7 @@ object Relational {
     ("s71_zonemap_skip",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_zm", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_zm.root", scratchPath("s71_catroot"))
+        GraftCatalog.register(s, "graft_zm", scratchPath("s71_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         // files CLUSTERED by the probe column — each task writes one
@@ -3145,8 +3106,7 @@ object Relational {
     ("s62_cdf_by_timestamp",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_ts", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_ts.root", scratchPath("s62_catroot"))
+        GraftCatalog.register(s, "graft_ts", scratchPath("s62_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -3193,8 +3153,7 @@ object Relational {
     ("s61_lineage_table",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_lg", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_lg.root", scratchPath("s61_catroot"))
+        GraftCatalog.register(s, "graft_lg", scratchPath("s61_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         docs.where(pmod($"doc_id", lit(2)) === 0)
@@ -3318,8 +3277,7 @@ object Relational {
     ("s39_expire_versions",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_ret", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_ret.root", scratchPath("s39_catroot"))
+        GraftCatalog.register(s, "graft_ret", scratchPath("s39_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         // v1: range-clustered ingest; v2: append; v3: retention delete
@@ -3508,8 +3466,7 @@ object Relational {
     ("s55_rewrite_tombstones",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_rt", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_rt.root", scratchPath("s55_catroot"))
+        GraftCatalog.register(s, "graft_rt", scratchPath("s55_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
         // one task + bucket layout = one file per 128-wide id range,
@@ -5880,8 +5837,7 @@ object Relational {
     ("f21_catalog_function",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_fn", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_fn.root", scratchPath("f21_catroot"))
+        GraftCatalog.register(s, "graft_fn", scratchPath("f21_catroot"))
         Tables(s, dir, "documents")
           .select($"doc_id", $"n_chars").createOrReplaceTempView("docs_f21")
         s.sql(
@@ -6195,8 +6151,7 @@ object Relational {
     ("f22_catalog_aggregate",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.catalog.graft_fn2", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_fn2.root", scratchPath("f22_catroot"))
+        GraftCatalog.register(s, "graft_fn2", scratchPath("f22_catroot"))
         Tables(s, dir, "documents")
           .select($"doc_id", $"lang").createOrReplaceTempView("docs_f22")
         s.sql(

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, TimeMode, Trigger}
 import graft.GraftSession.withConf
 import graft.engine.Tables
+import graft.sources.GraftCatalog
 import Portable._
 
 /** Structured-Streaming surfaces that are ALSO oracle-judged: st01 runs
@@ -1111,9 +1112,7 @@ object StreamingQueries {
         // the seed table and the MERGE across two roots in any JVM that
         // referenced the shared catalog before this query
         val cat = s"st22cat_$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          Portable.scratchPath("st22_catroot"))
+        GraftCatalog.register(s, cat, Portable.scratchPath("st22_catroot"))
         val tbl = s"$cat.st22state_$inv"
         val stage = Portable.scratchPath(s"st22_stage_$inv")
         Tables.rawEvents(s, dir).repartition(3)
@@ -1275,9 +1274,7 @@ object StreamingQueries {
         import s.implicits._
         val inv = invocation.incrementAndGet()
         val cat = s"scf$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          Portable.scratchPath(s"st26_catroot_$inv"))
+        GraftCatalog.register(s, cat, Portable.scratchPath(s"st26_catroot_$inv"))
         val sink = Portable.scratchPath(s"st26_sink_$inv")
         val ckpt = Portable.scratchPath(s"st26_ckpt_$inv")
         val docs = Tables(s, dir, "documents")
@@ -1344,9 +1341,7 @@ object StreamingQueries {
         import s.implicits._
         val inv = invocation.incrementAndGet()
         val cat = s"smv$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          Portable.scratchPath(s"st27_catroot_$inv"))
+        GraftCatalog.register(s, cat, Portable.scratchPath(s"st27_catroot_$inv"))
         val ckpt = Portable.scratchPath(s"st27_ckpt_$inv")
         val stateRoot = Portable.scratchPath(s"st27_state_$inv")
         val docs = Tables(s, dir, "documents")
@@ -1420,9 +1415,7 @@ object StreamingQueries {
         import s.implicits._
         val inv = invocation.incrementAndGet()
         val cat = s"sbf$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          Portable.scratchPath(s"st28_catroot_$inv"))
+        GraftCatalog.register(s, cat, Portable.scratchPath(s"st28_catroot_$inv"))
         val sink = Portable.scratchPath(s"st28_sink_$inv")
         val ckpt = Portable.scratchPath(s"st28_ckpt_$inv")
         val docs = Tables(s, dir, "documents")
@@ -1606,9 +1599,7 @@ object StreamingQueries {
         import s.implicits._
         val inv = invocation.incrementAndGet()
         val cat = s"slsh$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          Portable.scratchPath(s"st30_catroot_$inv"))
+        GraftCatalog.register(s, cat, Portable.scratchPath(s"st30_catroot_$inv"))
         val ckpt = Portable.scratchPath(s"st30_ckpt_$inv")
         val stateRoot = Portable.scratchPath(s"st30_state_$inv")
         val docs = Tables(s, dir, "documents")
@@ -1697,9 +1688,7 @@ object StreamingQueries {
         import s.implicits._
         val inv = invocation.incrementAndGet()
         val cat = s"sivf$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          Portable.scratchPath(s"st31_catroot_$inv"))
+        GraftCatalog.register(s, cat, Portable.scratchPath(s"st31_catroot_$inv"))
         val ckpt = Portable.scratchPath(s"st31_ckpt_$inv")
         val stateRoot = Portable.scratchPath(s"st31_state_$inv")
         val emb = Tables(s, dir, "embeddings")
@@ -1764,9 +1753,7 @@ object StreamingQueries {
         import s.implicits._
         val inv = invocation.incrementAndGet()
         val cat = s"sbm$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          Portable.scratchPath(s"st32_catroot_$inv"))
+        GraftCatalog.register(s, cat, Portable.scratchPath(s"st32_catroot_$inv"))
         val ckpt = Portable.scratchPath(s"st32_ckpt_$inv")
         val stateRoot = Portable.scratchPath(s"st32_state_$inv")
         val docs = Tables(s, dir, "documents")
@@ -1844,9 +1831,7 @@ object StreamingQueries {
         import s.implicits._
         val inv = invocation.incrementAndGet()
         val cat = s"sbp$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          Portable.scratchPath(s"st33_catroot_$inv"))
+        GraftCatalog.register(s, cat, Portable.scratchPath(s"st33_catroot_$inv"))
         val ckpt = Portable.scratchPath(s"st33_ckpt_$inv")
         val stage = Portable.scratchPath(s"st33_stage_$inv")
         val docs = Tables(s, dir, "documents")
@@ -1953,9 +1938,7 @@ object StreamingQueries {
         import s.implicits._
         val inv = invocation.incrementAndGet()
         val cat = s"stx$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          Portable.scratchPath(s"st34_catroot_$inv"))
+        GraftCatalog.register(s, cat, Portable.scratchPath(s"st34_catroot_$inv"))
         val ckpt = Portable.scratchPath(s"st34_ckpt_$inv")
         val stage = Portable.scratchPath(s"st34_stage_$inv")
         val docs = Tables(s, dir, "documents")

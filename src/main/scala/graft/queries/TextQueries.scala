@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
+import graft.sources.GraftCatalog
 import Portable._
 
 /** Text-analysis + deduplication catalog over `documents` — the
@@ -340,37 +341,46 @@ object TextQueries {
             struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst"))
           .persist()
-        // Per-round lineage truncation is load-bearing: persist() caches
-        // rows but Catalyst still re-optimizes the whole accumulated plan
-        // every round (it doubles per iteration — round 4 spent 6x round
-        // 1 purely in the optimizer). localCheckpoint(eager) pins the
-        // rows AND cuts the plan; on a real cluster use checkpoint() to
-        // reliable storage for fault tolerance.
-        var labels = sym.select(col("src").as("doc_id")).distinct()
-          .select(col("doc_id"), col("doc_id").as("cluster"))
-          .localCheckpoint(true)
-        var changed = 1L
-        var rounds = 0
-        while (changed > 0 && rounds < 25) {
-          val nmin = sym
-            .join(labels.select(col("doc_id").as("dst"), col("cluster").as("ncl")), "dst")
-            .groupBy(col("src")).agg(min(col("ncl")).as("nmin"))
-          val next = labels
-            .join(nmin.select(col("src").as("doc_id"), col("nmin")), Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
-            .localCheckpoint(true)
-          changed = next
-            .join(labels.select(col("doc_id"), col("cluster").as("old")), "doc_id")
-            .where(col("cluster") =!= col("old")).count()
-          labels = next
-          rounds += 1
-        }
-        // a silent round-cap exit would return plausible but WRONG
-        // labels for a component of diameter > the cap — fail loudly
-        require(changed == 0,
-          s"t10 label propagation not converged after $rounds rounds")
-        labels
+        minLabels(sym, "t10")
+  }
+
+  /** Min-label propagation over the symmetric edge frame `sym` (src,
+    * dst): every vertex ends labelled (doc_id, cluster) with its
+    * component's min doc_id. Fails loudly, naming `query`, when 25
+    * rounds do not converge. */
+  private def minLabels(sym: org.apache.spark.sql.DataFrame,
+                        query: String): org.apache.spark.sql.DataFrame = {
+    // Per-round lineage truncation is load-bearing: persist() caches
+    // rows but Catalyst still re-optimizes the whole accumulated plan
+    // every round (it doubles per iteration — round 4 spent 6x round
+    // 1 purely in the optimizer). localCheckpoint(eager) pins the
+    // rows AND cuts the plan; on a real cluster use checkpoint() to
+    // reliable storage for fault tolerance.
+    var labels = sym.select(col("src").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("cluster"))
+      .localCheckpoint(true)
+    var changed = 1L
+    var rounds = 0
+    while (changed > 0 && rounds < 25) {
+      val nmin = sym
+        .join(labels.select(col("doc_id").as("dst"), col("cluster").as("ncl")), "dst")
+        .groupBy(col("src")).agg(min(col("ncl")).as("nmin"))
+      val next = labels
+        .join(nmin.select(col("src").as("doc_id"), col("nmin")), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
+        .localCheckpoint(true)
+      changed = next
+        .join(labels.select(col("doc_id"), col("cluster").as("old")), "doc_id")
+        .where(col("cluster") =!= col("old")).count()
+      labels = next
+      rounds += 1
+    }
+    // a silent round-cap exit would return plausible but WRONG
+    // labels for a component of diameter > the cap — fail loudly
+    require(changed == 0,
+      s"$query label propagation not converged after $rounds rounds")
+    labels
   }
 
   /** One oracle, two judged engines: the recursive-CTE transitive
@@ -849,41 +859,11 @@ object TextQueries {
               struct(col("doc_a").as("src"), col("doc_b").as("dst")),
               struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
             .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        def converge(sym: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame = {
-          var labels = sym.select(col("src").as("doc_id")).distinct()
-            .select(col("doc_id"), col("doc_id").as("cluster"))
-            .localCheckpoint(true)
-          var changed = 1L
-          var rounds = 0
-          while (changed > 0 && rounds < 25) {
-            val nmin = sym
-              .join(labels.select(col("doc_id").as("dst"),
-                col("cluster").as("ncl")), "dst")
-              .groupBy(col("src")).agg(min(col("ncl")).as("nmin"))
-            val next = labels
-              .join(nmin.select(col("src").as("doc_id"), col("nmin")),
-                Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                least(col("cluster"),
-                  coalesce(col("nmin"), col("cluster"))).as("cluster"))
-              .localCheckpoint(true)
-            changed = next
-              .join(labels.select(col("doc_id"), col("cluster").as("old")),
-                "doc_id")
-              .where(col("cluster") =!= col("old")).count()
-            labels = next
-            rounds += 1
-          }
-          require(changed == 0,
-            s"t32 label propagation not converged after $rounds rounds")
-          labels
-        }
         val even = (c: org.apache.spark.sql.Column) => pmod(c, lit(2)) === 0
         // ── phase 1: the base slice's fixpoint, persisted as state ──
         val statePath = scratchPath("t32_cc_state")
-        converge(symOf(edges.where(even(col("doc_a")) &&
-            even(col("doc_b")))).persist())
+        minLabels(symOf(edges.where(even(col("doc_a")) &&
+            even(col("doc_b")))).persist(), "t32")
           .write.mode("overwrite").parquet(statePath)
         // ── phase 2: Δ edges + contracted state — never the base edges
         val state = s.read.parquet(statePath)
@@ -891,7 +871,7 @@ object TextQueries {
           even(col("doc_b")))))
         val labelSym = symOf(state.where(col("doc_id") =!= col("cluster"))
           .select(col("doc_id").as("doc_a"), col("cluster").as("doc_b")))
-        converge(deltaSym.unionByName(labelSym).persist())
+        minLabels(deltaSym.unionByName(labelSym).persist(), "t32")
           .select(col("doc_id"), col("cluster"),
             (col("doc_id") === col("cluster")).as("is_rep"))
           .orderBy(col("doc_id"))
@@ -982,9 +962,7 @@ object TextQueries {
       (s: SparkSession, dir: String) => {
         val inv = t33Invocation.incrementAndGet()
         val cat = s"graft_t33_$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          scratchPath(s"t33_catroot_$inv"))
+        GraftCatalog.register(s, cat, scratchPath(s"t33_catroot_$inv"))
         val docs = Tables(s, dir, "documents")
           .select(col("doc_id"), col("source"), col("text"))
         val meta = Tables(s, dir, "documents")
@@ -1070,9 +1048,7 @@ object TextQueries {
       (s: SparkSession, dir: String) => {
         val inv = t33Invocation.incrementAndGet()
         val cat = s"graft_t34_$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          scratchPath(s"t34_catroot_$inv"))
+        GraftCatalog.register(s, cat, scratchPath(s"t34_catroot_$inv"))
         val docs = Tables(s, dir, "documents")
           .select(col("doc_id"), col("text"))
         val meta = Tables(s, dir, "documents")
@@ -1142,9 +1118,7 @@ object TextQueries {
       (s: SparkSession, dir: String) => {
         val inv = t33Invocation.incrementAndGet()
         val cat = s"graft_t36_$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          scratchPath(s"t36_catroot_$inv"))
+        GraftCatalog.register(s, cat, scratchPath(s"t36_catroot_$inv"))
         val docs = Tables(s, dir, "documents")
           .select(col("doc_id"), col("text"))
         val meta = Tables(s, dir, "documents")

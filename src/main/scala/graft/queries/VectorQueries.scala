@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
+import graft.sources.GraftCatalog
 import Portable._
 
 /** Similarity search over `embeddings` (64-dim float vectors) — the
@@ -918,9 +919,7 @@ object VectorQueries {
       (s: SparkSession, dir: String) => {
         val inv = v34Invocation.incrementAndGet()
         val cat = s"graft_v34_$inv"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root",
-          scratchPath(s"v34_catroot_$inv"))
+        GraftCatalog.register(s, cat, scratchPath(s"v34_catroot_$inv"))
         val emb = Tables(s, dir, "embeddings")
         val inCorpus1 = pmod(col("vec_id"), lit(3)) =!= 2 ||
           col("vec_id") < 20
@@ -1890,15 +1889,15 @@ object VectorQueries {
             .orderBy(col("mmr").desc, col("vec_id")).limit(1).persist()
           rows = rows :+ pick.select(lit(k.toLong).as("rank"), col("vec_id"),
             col("rel_us"), col("mmr").as("mmr_score"))
-          state = state
+          // shortlist-bounded (50 rows)
+          state = Portable.pinRound(state
             .join(broadcast(pick.select(col("vec_id").as("p_id"))),
               col("vec_id") === col("p_id"), "left_anti")
             .crossJoin(broadcast(pick.select(col("embedding").as("p_emb"))))
             .select(col("vec_id"), col("embedding"), col("rel_us"),
               greatest(col("smax_us"),
                 round(cosine(col("p_emb"), col("embedding")) * 1000000).cast("long"))
-                .as("smax_us"))
-            .coalesce(1).localCheckpoint() // shortlist-bounded (50 rows)
+                .as("smax_us")))
         }
         rows.reduce(_ union _).orderBy(col("rank"))
       },

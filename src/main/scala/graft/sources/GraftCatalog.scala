@@ -2,19 +2,21 @@ package graft.sources
 
 import java.io.File
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException,
   NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier,
-  ProcedureCatalog, Table, TableCatalog, TableChange}
+  ProcedureCatalog, SupportsRead, Table, TableCapability, TableCatalog,
+  TableChange}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction,
   ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure,
   ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType,
   StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,11 +32,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Register per session:
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
-  *   spark.conf.set("spark.sql.catalog.graft_cat.root", "/data/ledger")
+  *   GraftCatalog.register(spark, "graft_cat", "/data/ledger")
   * }}}
   * Catalog plugins instantiate lazily on first reference and are cached
-  * for the session — the root is read once at initialize.
+  * for the session — the root is read once at initialize, which is why
+  * `register` refuses to re-point a name at a second root.
   *
   * Layout: table `ns1.ns2.t` ↔ directory `root/ns1__ns2__t` (flat — the
   * namespace flattens into the directory name; no SupportsNamespaces, so
@@ -98,88 +100,8 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
 
   override def loadTable(ident: Identifier): Table = {
     val d = tableDir(ident)
-    if (!cleanSegments(ident) || !d.isDirectory) {
-      // `<table>.history` — the METADATA TABLE spelling every lakehouse
-      // catalog offers (Iceberg's t.history, Delta's DESCRIBE HISTORY):
-      // the trailing segment addresses a system view OF the table named
-      // by the preceding segments. Only offered when no real table
-      // shadows the name (a genuine `history` table wins).
-      if (ident.name().equalsIgnoreCase("history") &&
-          ident.namespace().nonEmpty) {
-        val base = Identifier.of(ident.namespace().init,
-          ident.namespace().last)
-        val bd = tableDir(base)
-        if (cleanSegments(base) && bd.isDirectory)
-          return new LedgerHistoryTable(bd.getPath, ident.toString)
-      }
-      // `<table>.refs` — the REF LISTING metadata table (Iceberg's
-      // t.refs): one row per tag/branch with its target version and
-      // whether that version still reconstructs.
-      if (ident.name().equalsIgnoreCase("refs") &&
-          ident.namespace().nonEmpty) {
-        val base = Identifier.of(ident.namespace().init,
-          ident.namespace().last)
-        val bd = tableDir(base)
-        if (cleanSegments(base) && bd.isDirectory)
-          return new LedgerRefsTable(bd.getPath, ident.toString)
-      }
-      // `<table>.lineage` — the COMMIT GRAPH as a metadata table: one
-      // row per version with its `#parent`, the manifest-diff
-      // quantities the change-feed planner derives (rows/tombstones
-      // the commit added), and whether the commit is on the CURRENT
-      // read's lineage — the observability surface for a chain that
-      // can interleave branches and carry dead side commits (CAS
-      // losers). Same only-when-no-real-table-shadows rule.
-      if (ident.name().equalsIgnoreCase("lineage") &&
-          ident.namespace().nonEmpty) {
-        val base = Identifier.of(ident.namespace().init,
-          ident.namespace().last)
-        val bd = tableDir(base)
-        if (cleanSegments(base) && bd.isDirectory)
-          return new LedgerLineageTable(bd.getPath, ident.toString)
-      }
-      // `<table>.indexes` — INDEX COVERAGE (s69): one row per live
-      // data file and declared Bloom column with whether a sidecar
-      // covers it — which files a probe will still scan.
-      if (ident.name().equalsIgnoreCase("indexes") &&
-          ident.namespace().nonEmpty) {
-        val base = Identifier.of(ident.namespace().init,
-          ident.namespace().last)
-        val bd = tableDir(base)
-        if (cleanSegments(base) && bd.isDirectory)
-          return new LedgerIndexesTable(bd.getPath, ident.toString)
-      }
-      // `<table>.files` — the LIVE FILE inventory (s72, Iceberg's
-      // t.files): one row per current-read data file with its stats
-      // header and both overlay kinds' dead counts — header and
-      // section arithmetic only, zero record decodes.
-      if (ident.name().equalsIgnoreCase("files") &&
-          ident.namespace().nonEmpty) {
-        val base = Identifier.of(ident.namespace().init,
-          ident.namespace().last)
-        val bd = tableDir(base)
-        if (cleanSegments(base) && bd.isDirectory)
-          return new LedgerFilesTable(bd.getPath, ident.toString)
-      }
-      // `<table>.branch_<name>` — the BRANCH pseudo-table (Iceberg's
-      // branch_ identifier spelling): a handle that reads the branch
-      // head and whose appends advance the branch ref. Same only-when-
-      // no-real-table-shadows rule as `.history`.
-      if (ident.name().toLowerCase.startsWith("branch_") &&
-          ident.namespace().nonEmpty) {
-        val bname = ident.name().substring("branch_".length)
-        val base = Identifier.of(ident.namespace().init,
-          ident.namespace().last)
-        val bd = tableDir(base)
-        if (cleanSegments(base) && bd.isDirectory &&
-            LedgerSource.readRef(bd.getPath, "branch", bname).isDefined)
-          return new LedgerTable(bd.getPath,
-            bucketWidth = LedgerSource.readBucketWidth(bd.getPath),
-            morEnabled = LedgerSource.readMorFlag(bd.getPath),
-            ref = Some(bname))
-      }
-      throw new NoSuchTableException(ident)
-    }
+    if (!cleanSegments(ident) || !d.isDirectory)
+      return viewOf(ident).getOrElse(throw new NoSuchTableException(ident))
     // a table that has branched reads/writes through its main ref
     val mainRef =
       if (LedgerSource.readRef(d.getPath, "branch", "main").isDefined)
@@ -198,6 +120,30 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       bucketWidth = LedgerSource.readBucketWidth(d.getPath),
       morEnabled = LedgerSource.readMorFlag(d.getPath),
       ref = mainRef)
+  }
+
+  /** `<table>.<suffix>` — a view OF the table named by the preceding
+    * segments, offered only when no real table shadows the name (a
+    * genuine `history` table wins): one of the [[LedgerMetadataTables]]
+    * (Iceberg's `t.history`/`t.refs`/`t.files` spelling), or the BRANCH
+    * pseudo-table `<table>.branch_<name>` (Iceberg's branch_ identifier
+    * spelling) — a handle that reads the branch head and whose appends
+    * advance the branch ref. */
+  private def viewOf(ident: Identifier): Option[Table] = {
+    val ns = ident.namespace()
+    val base = if (ns.isEmpty) None else Some(Identifier.of(ns.init, ns.last))
+    base.filter(cleanSegments).map(tableDir).filter(_.isDirectory).flatMap { dir =>
+      val bd = dir.getPath
+      val name = ident.name()
+      LedgerMetadataTables.bySuffix.get(name.toLowerCase).map(_(bd, ident.toString))
+        .orElse(Some(name).filter(_.toLowerCase.startsWith("branch_"))
+          .map(_.substring("branch_".length))
+          .filter(LedgerSource.readRef(bd, "branch", _).isDefined)
+          .map(bname => new LedgerTable(bd,
+            bucketWidth = LedgerSource.readBucketWidth(bd),
+            morEnabled = LedgerSource.readMorFlag(bd),
+            ref = Some(bname))))
+    }
   }
 
   /** Time travel (`VERSION AS OF v`): every committed mutation stamps a
@@ -453,65 +399,35 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
 
   // ── system procedures (`ProcedureCatalog`, Spark 4's CALL verb) ──
 
-  /** `CALL <cat>.system.compact('<table>', <target_files>)` — the
-    * lakehouse maintenance verb (Iceberg's `rewrite_data_files`, the
-    * s17 compaction idea as an ENGINE procedure): merges a table's
-    * small ledger files into `target_files` range-clustered files.
-    * The rewrite is a regular DISTRIBUTED Spark job through the
-    * connector's own scan and truncate-overwrite write (never a
-    * driver-side record loop): read → repartitionByRange on the key →
-    * overwrite, so each output file is a contiguous key interval and
-    * the stats-header file skip stays maximally selective afterwards.
-    * Writing the same directory is safe with this source: input files
-    * are listed at plan time, fresh files are UUID-named (no
-    * collisions), and the truncate commit drops exactly the files the
-    * job didn't write. Returns one summary row (files_before,
-    * files_after, n_rows) computed from stats headers — zero record
-    * decodes for the report. */
-  override def loadProcedure(ident: Identifier): UnboundProcedure = {
+  /** The `system` verbs, one instance each: procedures hold nothing but
+    * the catalog root, so `loadProcedure` and `listProcedures` both read
+    * this one list, and each verb's name is the procedure's own. */
+  private lazy val procedures: Seq[LedgerProcedure] = Seq(
+    new CompactProcedure(root), new ExpireVersionsProcedure(root),
+    new RefProcedure(root, "create_tag"), new RefProcedure(root, "drop_tag"),
+    new RefProcedure(root, "create_branch"), new RefProcedure(root, "drop_branch"),
+    new RefProcedure(root, "fast_forward"), new MergeBranchProcedure(root),
+    new RewriteTombstonesProcedure(root), new DeleteAtProcedure(root),
+    new DedupRowsProcedure(root), new ConvergeProcedure(root),
+    new CloneProcedure(root), new BuildBloomProcedure(root),
+    new BuildZoneMapProcedure(root), new TxnProcedure(root, "txn_begin"),
+    new TxnProcedure(root, "txn_commit"), new TxnProcedure(root, "txn_abort"),
+    new MvProcedure(root, "create_mv"), new MvProcedure(root, "refresh_mv"),
+    new MvProcedure(root, "drop_mv"))
+
+  override def loadProcedure(ident: Identifier): UnboundProcedure =
     // Spark 4.1 ships no NoSuchProcedureException; procedures are
     // routines, so the analysis-layer ROUTINE_NOT_FOUND exception keeps
     // an unknown CALL target pattern-matchable as an analysis error
     // (the same discipline as the table/function/namespace paths above)
-    if (!ident.namespace().sameElements(Array("system")))
-      throw new org.apache.spark.sql.catalyst.analysis
-        .NoSuchFunctionException(ident)
-    ident.name().toLowerCase match {
-      case "compact" => new CompactProcedure(root)
-      case "expire_versions" => new ExpireVersionsProcedure(root)
-      case "create_tag" => new RefProcedure(root, "create_tag")
-      case "drop_tag" => new RefProcedure(root, "drop_tag")
-      case "create_branch" => new RefProcedure(root, "create_branch")
-      case "drop_branch" => new RefProcedure(root, "drop_branch")
-      case "fast_forward" => new RefProcedure(root, "fast_forward")
-      case "merge_branch" => new MergeBranchProcedure(root)
-      case "rewrite_tombstones" => new RewriteTombstonesProcedure(root)
-      case "delete_at" => new DeleteAtProcedure(root)
-      case "dedup_rows" => new DedupRowsProcedure(root)
-      case "converge" => new ConvergeProcedure(root)
-      case "clone" => new CloneProcedure(root)
-      case "build_bloom" => new BuildBloomProcedure(root)
-      case "build_zonemap" => new BuildZoneMapProcedure(root)
-      case "txn_begin" => new TxnProcedure(root, "txn_begin")
-      case "txn_commit" => new TxnProcedure(root, "txn_commit")
-      case "txn_abort" => new TxnProcedure(root, "txn_abort")
-      case "create_mv" => new MvProcedure(root, "create_mv")
-      case "refresh_mv" => new MvProcedure(root, "refresh_mv")
-      case "drop_mv" => new MvProcedure(root, "drop_mv")
-      case _ => throw new org.apache.spark.sql.catalyst.analysis
-        .NoSuchFunctionException(ident)
-    }
-  }
+    Some(ident).filter(_.namespace().sameElements(Array("system")))
+      .flatMap(i => procedures.find(_.name() == i.name().toLowerCase))
+      .getOrElse(throw new org.apache.spark.sql.catalyst.analysis
+        .NoSuchFunctionException(ident))
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     if (namespace.isEmpty || namespace.sameElements(Array("system")))
-      (Seq("compact", "expire_versions", "create_tag", "drop_tag",
-        "create_branch", "drop_branch", "fast_forward", "merge_branch",
-        "rewrite_tombstones", "delete_at", "dedup_rows", "converge", "clone",
-        "build_bloom", "build_zonemap",
-        "txn_begin", "txn_commit", "txn_abort",
-        "create_mv", "refresh_mv", "drop_mv"))
-        .map(n => Identifier.of(Array("system"), n)).toArray
+      procedures.map(p => Identifier.of(Array("system"), p.name())).toArray
     else Array.empty
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
@@ -528,59 +444,111 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
   }
 }
 
-/** See [[GraftCatalog.loadProcedure]]. Bound and unbound in one class:
-  * the parameter list is fixed, so bind() only validates arity/types by
-  * returning itself (Spark coerces arguments to the declared types). */
-private[sources] final class CompactProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "compact"
-  override def description(): String =
-    "merge a ledger table's files into target_files range-clustered files"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // rewrites storage
-
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name in this catalog (flattened form)").build(),
-    ProcedureParameter.in("target_files", IntegerType)
-      .comment("number of range-clustered output files").build())
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val target = input.getInt(1)
-    require(target > 0, s"target_files must be positive, got $target")
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
-    // refuse EARLY on a branched table (the truncate write would refuse
-    // anyway, but only after the whole rewrite job ran)
-    val branches = LedgerSource.listRefs(dir.getPath, "branch")
-    require(branches.isEmpty,
-      s"cannot compact $table while branch refs exist " +
-        s"(${branches.keys.toSeq.sorted.mkString(", ")}) — " +
-        s"CALL system.converge first")
-    val before = LedgerSource.ledgerFiles(dir.getPath).length
-    // a regular distributed job over the connector's own read/write
-    // paths — the procedure is orchestration, not a bespoke engine
-    val spark = org.apache.spark.sql.SparkSession.active
-    spark.read.format("graft-ledger").load(dir.getPath)
-      .repartitionByRange(target, org.apache.spark.sql.functions.col("doc_id"))
-      .write.format("graft-ledger").mode("overwrite").save(dir.getPath)
-    val stats = LedgerSource.statsSnapshot(dir.getPath)
-    val summary = new GenericInternalRow(3)
-    summary.setLong(0, before.toLong)
-    summary.setLong(1, stats.length.toLong)
-    summary.setLong(2, stats.map(_._4).sum)
-    java.util.Collections.singletonList(
-      new SingleRowScan(CompactProcedure.OutputSchema, summary): Scan).iterator()
+object GraftCatalog {
+  /** Registers the ledger catalog `name`, rooted at `root`, in this
+    * session. Re-registering a name with the same root is a no-op; with
+    * a different root it fails loudly, because CatalogManager keeps the
+    * plugin it initialized first and the tables would silently land
+    * under the first root. */
+  def register(spark: SparkSession, name: String, root: String): Unit = {
+    val key = s"spark.sql.catalog.$name"
+    spark.conf.getOption(s"$key.root").foreach { prior =>
+      require(prior == root, s"catalog '$name' is already registered at " +
+        s"$prior; it cannot be re-rooted at $root — pick a unique name")
+    }
+    spark.conf.set(key, "graft.sources.GraftCatalog")
+    spark.conf.set(s"$key.root", root)
   }
 }
 
-private[sources] object CompactProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("files_before", LongType, nullable = false),
-    StructField("files_after", LongType, nullable = false),
-    StructField("n_rows", LongType, nullable = false)))
+/** The one procedure shape behind `CALL <cat>.system.<verb>`. Bound and
+  * unbound in one object: each parameter list is fixed, so bind() only
+  * validates arity/types by returning itself (Spark coerces arguments to
+  * the declared types). No verb is deterministic: each moves storage,
+  * refs or transaction files. A verb supplies its parameters and `call`;
+  * this class supplies the table lookup, the branch refusal and the
+  * one-row result. */
+private[sources] abstract class LedgerProcedure(root: File, verb: String,
+    desc: String) extends UnboundProcedure with BoundProcedure {
+  override def name(): String = verb
+  override def description(): String = desc
+  override def bind(inputType: StructType): BoundProcedure = this
+  override def isDeterministic: Boolean = false
+
+  protected def param(name: String, t: DataType, comment: String): ProcedureParameter =
+    ProcedureParameter.in(name, t).comment(comment).build()
+  protected def tableParam: ProcedureParameter =
+    param("table", StringType, "table name in this catalog (flattened form)")
+
+  /** Argument 0, a table name, and its directory under the root. */
+  protected def tableArg(input: InternalRow): (String, String) = {
+    val table = input.getUTF8String(0).toString
+    val dir = new File(root, table)
+    if (!dir.isDirectory)
+      throw new NoSuchTableException(Identifier.of(Array.empty, table))
+    (table, dir.getPath)
+  }
+
+  /** Refuses `what` while the table at `d` has branch refs; `why` names
+    * what the other lineages would lose. */
+  protected def refuseBranched(d: String, what: String, why: String): Unit = {
+    val branches = LedgerSource.listRefs(d, "branch")
+    require(branches.isEmpty, s"cannot $what while branch refs exist " +
+      s"(${branches.keys.toSeq.sorted.mkString(", ")}) — $why")
+  }
+
+  /** The verb's one summary row, its schema declared by the cells: a
+    * Long is a BIGINT column, a String a STRING column, none nullable. */
+  protected def result(cells: (String, Any)*): java.util.Iterator[Scan] = {
+    val schema = StructType(cells.map {
+      case (n, _: Long) => StructField(n, LongType, nullable = false)
+      case (n, _: String) => StructField(n, StringType, nullable = false)
+    })
+    val row = RowsScan.row(cells.map(_._2): _*)
+    java.util.Collections.singletonList[Scan](new RowsScan(schema, () => Array(row)))
+      .iterator()
+  }
+}
+
+/** `CALL <cat>.system.compact('<table>', <target_files>)` — the
+  * lakehouse maintenance verb (Iceberg's `rewrite_data_files`, the
+  * s17 compaction idea as an ENGINE procedure): merges a table's
+  * small ledger files into `target_files` range-clustered files.
+  * The rewrite is a regular DISTRIBUTED Spark job through the
+  * connector's own scan and truncate-overwrite write (never a
+  * driver-side record loop): read → repartitionByRange on the key →
+  * overwrite, so each output file is a contiguous key interval and
+  * the stats-header file skip stays maximally selective afterwards.
+  * Writing the same directory is safe with this source: input files
+  * are listed at plan time, fresh files are UUID-named (no
+  * collisions), and the truncate commit drops exactly the files the
+  * job didn't write. Returns one summary row (files_before,
+  * files_after, n_rows) computed from stats headers — zero record
+  * decodes for the report. */
+private[sources] final class CompactProcedure(root: File)
+    extends LedgerProcedure(root, "compact",
+      "merge a ledger table's files into target_files range-clustered files") {
+  override def parameters(): Array[ProcedureParameter] = Array(tableParam,
+    param("target_files", IntegerType, "number of range-clustered output files"))
+
+  override def call(input: InternalRow): java.util.Iterator[Scan] = {
+    val target = input.getInt(1)
+    require(target > 0, s"target_files must be positive, got $target")
+    val (table, d) = tableArg(input)
+    // refuse EARLY on a branched table (the truncate write would refuse
+    // anyway, but only after the whole rewrite job ran)
+    refuseBranched(d, s"compact $table", "CALL system.converge first")
+    val before = LedgerSource.ledgerFiles(d).length
+    // a regular distributed job over the connector's own read/write
+    // paths — the procedure is orchestration, not a bespoke engine
+    val spark = org.apache.spark.sql.SparkSession.active
+    spark.read.format("graft-ledger").load(d)
+      .repartitionByRange(target, org.apache.spark.sql.functions.col("doc_id"))
+      .write.format("graft-ledger").mode("overwrite").save(d)
+    val stats = LedgerSource.statsSnapshot(d)
+    result("files_before" -> before.toLong, "files_after" -> stats.length.toLong,
+      "n_rows" -> stats.map(_._4).sum)
+  }
 }
 
 /** `CALL <cat>.system.expire_versions('<table>', <keep>)` — version
@@ -601,45 +569,30 @@ private[sources] object CompactProcedure {
   * documented non-atomic scope): don't run concurrently with an
   * in-flight write whose files have landed but not yet committed. */
 private[sources] final class ExpireVersionsProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "expire_versions"
-  override def description(): String =
-    "drop version manifests older than the newest `keep` and reclaim " +
-      "files no surviving manifest references"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // rewrites storage
-
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name in this catalog (flattened form)").build(),
-    ProcedureParameter.in("keep", IntegerType)
-      .comment("number of newest versions to retain (>= 1)").build())
+    extends LedgerProcedure(root, "expire_versions",
+      "drop version manifests older than the newest `keep` and reclaim " +
+        "files no surviving manifest references") {
+  override def parameters(): Array[ProcedureParameter] = Array(tableParam,
+    param("keep", IntegerType, "number of newest versions to retain (>= 1)"))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
     val keep = input.getInt(1)
     require(keep >= 1, s"keep must be >= 1 (the current version is " +
       s"always retained), got $keep")
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
+    val (table, d) = tableArg(input)
     // a branch ref's target version must never expire out from under
     // it — refuse on branched tables (tags keep the dangle-loudly
     // contract: a tag is a name, not a lineage)
-    val branches = LedgerSource.listRefs(dir.getPath, "branch")
-    require(branches.isEmpty,
-      s"cannot expire versions of $table while branch refs exist " +
-        s"(${branches.keys.toSeq.sorted.mkString(", ")}) — " +
-        s"CALL system.converge first")
-    val versions = LedgerSource.listVersions(dir.getPath)
+    refuseBranched(d, s"expire versions of $table", "CALL system.converge first")
+    val versions = LedgerSource.listVersions(d)
     val (expired, kept) =
       versions.splitAt(math.max(0, versions.length - keep))
     val referenced: Set[String] =
-      kept.flatMap(v => LedgerSource.readManifest(dir.getPath, v)).toSet
+      kept.flatMap(v => LedgerSource.readManifest(d, v)).toSet
     // drop manifests FIRST: if reclamation dies midway, a dangling
     // version can only fail loudly (the s32 contract), never resolve
     // to a partially-reclaimed file set
-    val vdir = new File(dir, LedgerSource.VersionsDir)
+    val vdir = new File(d, LedgerSource.VersionsDir)
     expired.foreach { v =>
       val mf = new File(vdir, s"$v.mf")
       require(mf.delete(), s"cannot remove manifest ${mf.getPath}")
@@ -648,27 +601,15 @@ private[sources] final class ExpireVersionsProcedure(root: File)
     // has nothing to anchor the reference check — reclaim nothing
     val orphans =
       if (kept.isEmpty) Array.empty[File]
-      else (LedgerSource.ledgerFiles(dir.getPath) ++
-        LedgerSource.deleteFiles(dir.getPath))
+      else (LedgerSource.ledgerFiles(d) ++ LedgerSource.deleteFiles(d))
         .filterNot(f => referenced.contains(f.getName))
     orphans.foreach(f =>
       require(f.delete(), s"cannot reclaim orphan ${f.getPath}"))
-    LedgerSource.sweepOrphanSidecars(dir.getPath): Unit
-    val summary = new GenericInternalRow(3)
-    summary.setLong(0, expired.length.toLong)
-    summary.setLong(1, orphans.length.toLong)
-    summary.setLong(2, LedgerSource.statsSnapshot(dir.getPath).map(_._4).sum)
-    java.util.Collections.singletonList(
-      new SingleRowScan(ExpireVersionsProcedure.OutputSchema,
-        summary): Scan).iterator()
+    LedgerSource.sweepOrphanSidecars(d): Unit
+    result("versions_expired" -> expired.length.toLong,
+      "files_reclaimed" -> orphans.length.toLong,
+      "n_rows" -> LedgerSource.statsSnapshot(d).map(_._4).sum)
   }
-}
-
-private[sources] object ExpireVersionsProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("versions_expired", LongType, nullable = false),
-    StructField("files_reclaimed", LongType, nullable = false),
-    StructField("n_rows", LongType, nullable = false)))
 }
 
 /** The REF verbs (round 15 — Iceberg's tag/branch procedures on the
@@ -691,40 +632,27 @@ private[sources] object ExpireVersionsProcedure {
   *
   * Each returns one row `(ref, version)`. */
 private[sources] final class RefProcedure(root: File, verb: String)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = verb
-  override def description(): String = verb match {
-    case "create_tag" => "name a commit: VERSION AS OF '<name>' resolves it"
-    case "drop_tag" => "remove a tag ref"
-    case "create_branch" =>
-      "fork a writable branch at the current main head (metadata-only)"
-    case "drop_branch" => "remove a branch ref (files stay until converge)"
-    case "fast_forward" =>
-      "advance main to a branch head when main is its ancestor"
-    case _ => verb
-  }
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // moves refs
-
+    extends LedgerProcedure(root, verb, verb match {
+      case "create_tag" => "name a commit: VERSION AS OF '<name>' resolves it"
+      case "drop_tag" => "remove a tag ref"
+      case "create_branch" =>
+        "fork a writable branch at the current main head (metadata-only)"
+      case "drop_branch" => "remove a branch ref (files stay until converge)"
+      case "fast_forward" =>
+        "advance main to a branch head when main is its ancestor"
+      case _ => verb
+    }) {
   override def parameters(): Array[ProcedureParameter] = {
-    val base = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table name in this catalog (flattened form)").build(),
-      ProcedureParameter.in("name", StringType)
-        .comment("ref name ([A-Za-z_][A-Za-z0-9_-]*)").build())
+    val base = Array(tableParam,
+      param("name", StringType, "ref name ([A-Za-z_][A-Za-z0-9_-]*)"))
     if (verb == "create_tag")
-      base :+ ProcedureParameter.in("version", LongType)
-        .comment("commit id the tag names").build()
+      base :+ param("version", LongType, "commit id the tag names")
     else base
   }
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
     val name = LedgerSource.validRefName(input.getUTF8String(1).toString)
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
-    val d = dir.getPath
+    val (table, d) = tableArg(input)
     def refuseCollision(): Unit = require(
       LedgerSource.resolveRefVersion(d, name).isEmpty,
       s"a tag or branch named '$name' already exists on $table — " +
@@ -778,18 +706,8 @@ private[sources] final class RefProcedure(root: File, verb: String)
         devV
       case other => throw new IllegalStateException(s"unknown verb $other")
     }
-    val out = new GenericInternalRow(2)
-    out.update(0, UTF8String.fromString(name))
-    out.setLong(1, version)
-    java.util.Collections.singletonList(
-      new SingleRowScan(RefProcedure.OutputSchema, out): Scan).iterator()
+    result("ref" -> name, "version" -> version)
   }
-}
-
-private[sources] object RefProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("ref", StringType, nullable = false),
-    StructField("version", LongType, nullable = false)))
 }
 
 /** `CALL system.build_bloom(t, col)` — declare `col` as the table's
@@ -802,30 +720,18 @@ private[sources] object RefProcedure {
   * negative contract (it may only ADMIT more). Returns one row
   * `(col, files_indexed)`. */
 private[sources] final class BuildBloomProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "build_bloom"
-  override def description(): String =
-    "declare a Bloom-indexed column and backfill per-file sidecars"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // writes sidecars
-
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name in this catalog (flattened form)").build(),
-    ProcedureParameter.in("column", StringType)
-      .comment("the non-key column to index (lang, n_chars)").build())
+    extends LedgerProcedure(root, "build_bloom",
+      "declare a Bloom-indexed column and backfill per-file sidecars") {
+  override def parameters(): Array[ProcedureParameter] = Array(tableParam,
+    param("column", StringType, "the non-key column to index (lang, n_chars)"))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
     val col = input.getUTF8String(1).toString
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
+    val (_, d) = tableArg(input)
     require(LedgerSource.BloomableCols(col),
       s"build_bloom: column must be one of " +
         s"${LedgerSource.BloomableCols.toSeq.sorted.mkString(", ")}; " +
         s"got '$col'")
-    val d = dir.getPath
     LedgerSource.writeProp(d, "bloom", col)
     // the backfill is a regular DISTRIBUTED job over the connector's
     // own scan (the compact discipline): per-file distinct values ride
@@ -868,18 +774,8 @@ private[sources] final class BuildBloomProcedure(root: File)
         LedgerSource.writeBloomSidecar(d, f.getName, col, Nil)
       indexed += 1
     }
-    val out = new GenericInternalRow(2)
-    out.update(0, UTF8String.fromString(col))
-    out.setLong(1, indexed)
-    java.util.Collections.singletonList(
-      new SingleRowScan(BuildBloomProcedure.OutputSchema, out): Scan).iterator()
+    result("column" -> col, "files_indexed" -> indexed)
   }
-}
-
-private[sources] object BuildBloomProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("column", StringType, nullable = false),
-    StructField("files_indexed", LongType, nullable = false)))
 }
 
 /** `CALL <cat>.system.delete_at('<t>', '<file>', '<p1,p2,…>')` —
@@ -898,29 +794,16 @@ private[sources] object BuildBloomProcedure {
   * inside the file's stats-header row count. Returns one row
   * `(file, positions_deleted, version)`. */
 private[sources] final class DeleteAtProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "delete_at"
-  override def description(): String =
-    "merge-on-read delete of one data file's rows by _pos ordinals"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // writes overlay files
-
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name in this catalog (flattened form)").build(),
-    ProcedureParameter.in("file", StringType)
-      .comment("live data file name (a `_file` value)").build(),
-    ProcedureParameter.in("positions", StringType)
-      .comment("comma-separated row ordinals (`_pos` values)").build())
+    extends LedgerProcedure(root, "delete_at",
+      "merge-on-read delete of one data file's rows by _pos ordinals") {
+  override def parameters(): Array[ProcedureParameter] = Array(tableParam,
+    param("file", StringType, "live data file name (a `_file` value)"),
+    param("positions", StringType, "comma-separated row ordinals (`_pos` values)"))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
     val fileName = input.getUTF8String(1).toString
     val posCsv = input.getUTF8String(2).toString
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
-    val d = dir.getPath
+    val (table, d) = tableArg(input)
     require(LedgerSource.readMorFlag(d),
       s"delete_at: $table is not merge-on-read (TBLPROPERTIES " +
         s"mor=true) — copy-on-write tables carry no delete overlay")
@@ -954,7 +837,7 @@ private[sources] final class DeleteAtProcedure(root: File)
     require(live.contains(fileName),
       s"delete_at: '$fileName' is not a live data file of $table — a " +
         s"section scoped to it would never apply")
-    val (_, _, nRows) = LedgerSource.readStats(new File(dir, fileName))
+    val (_, _, nRows) = LedgerSource.readStats(new File(d, fileName))
     require(positions.last < nRows,
       s"delete_at: position ${positions.last} is outside '$fileName' " +
         s"($nRows rows)")
@@ -974,7 +857,7 @@ private[sources] final class DeleteAtProcedure(root: File)
       if (keyTombs == null) Array.empty
       else {
         val reader = new LedgerReader(
-          new File(dir, fileName).getPath, LedgerSource.Schema, Array.empty)
+          new File(d, fileName).getPath, LedgerSource.Schema, Array.empty)
         val dead = scala.collection.mutable.ArrayBuffer.empty[Long]
         try {
           var ordinal = -1L
@@ -990,31 +873,20 @@ private[sources] final class DeleteAtProcedure(root: File)
       (priorPos != null &&
         java.util.Arrays.binarySearch(priorPos, p) >= 0) ||
         java.util.Arrays.binarySearch(deadByKey, p) >= 0)
-    val out = new GenericInternalRow(3)
-    out.update(0, UTF8String.fromString(fileName))
-    if (fresh.isEmpty) {
-      // every named row is already dead: nothing to cut, no commit —
-      // the version chain moves only for real changes
-      out.setLong(1, 0L)
-      out.setLong(2, LedgerSource.readRef(d, "branch", "main").getOrElse(
-        LedgerSource.listVersions(d).lastOption.getOrElse(0L)))
-    } else {
-      val overlayName = LedgerSource.writePositionDeleteFile(
-        d, Map(fileName -> fresh))
-      val v = LedgerSource.additiveCommit(d, None, Seq(overlayName))
-      out.setLong(1, fresh.length.toLong)
-      out.setLong(2, v)
-    }
-    java.util.Collections.singletonList(
-      new SingleRowScan(DeleteAtProcedure.OutputSchema, out): Scan).iterator()
+    val version =
+      if (fresh.isEmpty) {
+        // every named row is already dead: nothing to cut, no commit —
+        // the version chain moves only for real changes
+        LedgerSource.readRef(d, "branch", "main").getOrElse(
+          LedgerSource.listVersions(d).lastOption.getOrElse(0L))
+      } else {
+        val overlayName = LedgerSource.writePositionDeleteFile(
+          d, Map(fileName -> fresh))
+        LedgerSource.additiveCommit(d, None, Seq(overlayName))
+      }
+    result("file" -> fileName, "positions_deleted" -> fresh.length.toLong,
+      "version" -> version)
   }
-}
-
-private[sources] object DeleteAtProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("positions_deleted", LongType, nullable = false),
-    StructField("version", LongType, nullable = false)))
 }
 
 /** `CALL <cat>.system.dedup_rows('<t>')` — PHYSICAL exact-row dedup as
@@ -1034,31 +906,16 @@ private[sources] object DeleteAtProcedure {
   * (compact / rewrite_tombstones). Returns one row
   * `(positions_deleted, files_affected, version)`. */
 private[sources] final class DedupRowsProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "dedup_rows"
-  override def description(): String =
-    "physically dedup exact duplicate rows via distributed position deletes"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // writes overlay files
-
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name in this catalog (flattened form)").build())
+    extends LedgerProcedure(root, "dedup_rows",
+      "physically dedup exact duplicate rows via distributed position deletes") {
+  override def parameters(): Array[ProcedureParameter] = Array(tableParam)
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
-    val d = dir.getPath
+    val (table, d) = tableArg(input)
     require(LedgerSource.readMorFlag(d),
       s"dedup_rows: $table is not merge-on-read (TBLPROPERTIES " +
         s"mor=true) — the cut is a delete overlay")
-    val branches = LedgerSource.listRefs(d, "branch")
-    require(branches.isEmpty,
-      s"cannot dedup_rows $table while branch refs exist " +
-        s"(${branches.keys.toSeq.sorted.mkString(", ")}) — the cut " +
-        s"addresses one lineage's files")
+    refuseBranched(d, s"dedup_rows $table", "the cut addresses one lineage's files")
     val spark = org.apache.spark.sql.SparkSession.active
     import org.apache.spark.sql.functions.{col => c, row_number}
     import org.apache.spark.sql.expressions.Window
@@ -1095,27 +952,12 @@ private[sources] final class DedupRowsProcedure(root: File)
             sections.size.toLong))
         }
       }.collect()
-    val out = new GenericInternalRow(3)
-    if (written.isEmpty) {
-      out.setLong(0, 0L)
-      out.setLong(1, 0L)
-      out.setLong(2, LedgerSource.listVersions(d).lastOption.getOrElse(0L))
-    } else {
-      val v = LedgerSource.additiveCommit(d, None, written.map(_._1).toSeq)
-      out.setLong(0, written.map(_._2).sum)
-      out.setLong(1, written.map(_._3).sum)
-      out.setLong(2, v)
-    }
-    java.util.Collections.singletonList(
-      new SingleRowScan(DedupRowsProcedure.OutputSchema, out): Scan).iterator()
+    val version =
+      if (written.isEmpty) LedgerSource.listVersions(d).lastOption.getOrElse(0L)
+      else LedgerSource.additiveCommit(d, None, written.map(_._1).toSeq)
+    result("positions_deleted" -> written.map(_._2).sum,
+      "files_affected" -> written.map(_._3).sum, "version" -> version)
   }
-}
-
-private[sources] object DedupRowsProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("positions_deleted", LongType, nullable = false),
-    StructField("files_affected", LongType, nullable = false),
-    StructField("version", LongType, nullable = false)))
 }
 
 /** `CALL system.build_zonemap(t, col)` — declare `col` as the table's
@@ -1131,30 +973,18 @@ private[sources] object DedupRowsProcedure {
   * sidecar: comparisons never match NULL, so every probe provably
   * skips them. Returns one row `(col, files_indexed)`. */
 private[sources] final class BuildZoneMapProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "build_zonemap"
-  override def description(): String =
-    "declare a zone-mapped (min/max) column and backfill per-file sidecars"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // writes sidecars
-
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name in this catalog (flattened form)").build(),
-    ProcedureParameter.in("column", StringType)
-      .comment("the non-key column to zone-map (lang, n_chars)").build())
+    extends LedgerProcedure(root, "build_zonemap",
+      "declare a zone-mapped (min/max) column and backfill per-file sidecars") {
+  override def parameters(): Array[ProcedureParameter] = Array(tableParam,
+    param("column", StringType, "the non-key column to zone-map (lang, n_chars)"))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
     val col = input.getUTF8String(1).toString
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
+    val (_, d) = tableArg(input)
     require(LedgerSource.BloomableCols(col),
       s"build_zonemap: column must be one of " +
         s"${LedgerSource.BloomableCols.toSeq.sorted.mkString(", ")}; " +
         s"got '$col'")
-    val d = dir.getPath
     LedgerSource.writeProp(d, "zonemap", col)
     val spark = org.apache.spark.sql.SparkSession.active
     import org.apache.spark.sql.functions.{col => c, min => mn, max => mx}
@@ -1183,19 +1013,8 @@ private[sources] final class BuildZoneMapProcedure(root: File)
           isLong = !isLang, None)
       indexed += 1
     }
-    val out = new GenericInternalRow(2)
-    out.update(0, UTF8String.fromString(col))
-    out.setLong(1, indexed)
-    java.util.Collections.singletonList(
-      new SingleRowScan(BuildZoneMapProcedure.OutputSchema, out): Scan)
-      .iterator()
+    result("column" -> col, "files_indexed" -> indexed)
   }
-}
-
-private[sources] object BuildZoneMapProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("column", StringType, nullable = false),
-    StructField("files_indexed", LongType, nullable = false)))
 }
 
 /** The CROSS-TABLE TRANSACTION verbs (s67 — see [[TxnLog]]):
@@ -1209,24 +1028,17 @@ private[sources] object BuildZoneMapProcedure {
   *   - `txn_abort(id)`: drops the work branches and staged intents —
   *     refused after the commit point. */
 private[sources] final class TxnProcedure(root: File, verb: String)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = verb
-  override def description(): String = verb match {
-    case "txn_begin" =>
-      "open a cross-table transaction: a work branch per participant"
-    case "txn_commit" =>
-      "atomically publish every participant's work branch"
-    case _ => "abort a cross-table transaction before its commit point"
-  }
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // moves refs / txn files
-
+    extends LedgerProcedure(root, verb, verb match {
+      case "txn_begin" =>
+        "open a cross-table transaction: a work branch per participant"
+      case "txn_commit" =>
+        "atomically publish every participant's work branch"
+      case _ => "abort a cross-table transaction before its commit point"
+    }) {
   override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in(
-      if (verb == "txn_begin") "tables" else "txn_id", StringType)
-      .comment(if (verb == "txn_begin")
-        "comma-separated table names in this catalog"
-      else "the id txn_begin returned").build())
+    if (verb == "txn_begin")
+      param("tables", StringType, "comma-separated table names in this catalog")
+    else param("txn_id", StringType, "the id txn_begin returned"))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val arg = input.getUTF8String(0).toString
@@ -1241,18 +1053,8 @@ private[sources] final class TxnProcedure(root: File, verb: String)
         TxnLog.abort(root, arg)
         (arg, 0L)
     }
-    val out = new GenericInternalRow(2)
-    out.update(0, UTF8String.fromString(id))
-    out.setLong(1, n)
-    java.util.Collections.singletonList(
-      new SingleRowScan(TxnProcedure.OutputSchema, out): Scan).iterator()
+    result("txn_id" -> id, "n_tables" -> n)
   }
-}
-
-private[sources] object TxnProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("txn_id", StringType, nullable = false),
-    StructField("n_tables", LongType, nullable = false)))
 }
 
 /** The MATERIALIZED-VIEW lifecycle verbs (s68 — the SQL-facing half of
@@ -1273,29 +1075,19 @@ private[sources] object TxnProcedure {
   *
   * Each returns one row `(name, built_at)`. */
 private[sources] final class MvProcedure(root: File, verb: String)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = verb
-  override def description(): String = verb match {
-    case "create_mv" => "full-build, register, and persist a " +
-      "materialized view the auto-rewrite answers from"
-    case "refresh_mv" => "rebuild a view's state at the current head"
-    case _ => "unregister a materialized view"
-  }
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // writes state parquet
-
+    extends LedgerProcedure(root, verb, verb match {
+      case "create_mv" => "full-build, register, and persist a " +
+        "materialized view the auto-rewrite answers from"
+      case "refresh_mv" => "rebuild a view's state at the current head"
+      case _ => "unregister a materialized view"
+    }) {
   override def parameters(): Array[ProcedureParameter] = {
-    val base = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table name in this catalog (flattened form)").build(),
-      ProcedureParameter.in("name", StringType)
-        .comment("view name ([A-Za-z_][A-Za-z0-9_-]*)").build())
+    val base = Array(tableParam,
+      param("name", StringType, "view name ([A-Za-z_][A-Za-z0-9_-]*)"))
     if (verb == "create_mv") base ++ Array(
-      ProcedureParameter.in("group_cols", StringType)
-        .comment("comma-separated group columns").build(),
-      ProcedureParameter.in("aggs", StringType)
-        .comment("kind:col:alias list, e.g. " +
-          "'count::n_docs,sum:n_chars:total_chars'").build())
+      param("group_cols", StringType, "comma-separated group columns"),
+      param("aggs", StringType, "kind:col:alias list, e.g. " +
+        "'count::n_docs,sum:n_chars:total_chars'"))
     else base
   }
 
@@ -1320,12 +1112,8 @@ private[sources] final class MvProcedure(root: File, verb: String)
   }
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
     val name = LedgerSource.validRefName(input.getUTF8String(1).toString)
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
-    val d = dir.getPath
+    val (table, d) = tableArg(input)
     import graft.plans.MvRegistry
     def head(): Long = LedgerSource.readRef(d, "branch", "main")
       .orElse(LedgerSource.listVersions(d).lastOption).getOrElse(
@@ -1344,7 +1132,7 @@ private[sources] final class MvProcedure(root: File, verb: String)
           }
         val v = head()
         val mv = MvRegistry.MvDef(d,
-          new File(new File(dir, "_mv"), name).getPath, v, groups, aggs)
+          new File(new File(d, "_mv"), name).getPath, v, groups, aggs)
         build(d, mv, v)
         MvRegistry.register(mv)
         LedgerSource.writeProp(d, s"mv.$name", MvRegistry.formatDef(mv))
@@ -1369,18 +1157,8 @@ private[sources] final class MvProcedure(root: File, verb: String)
         LedgerSource.removeProp(d, s"mv.$name")
         old.builtAt
     }
-    val out = new GenericInternalRow(2)
-    out.update(0, UTF8String.fromString(name))
-    out.setLong(1, builtAt)
-    java.util.Collections.singletonList(
-      new SingleRowScan(MvProcedure.OutputSchema, out): Scan).iterator()
+    result("name" -> name, "built_at" -> builtAt)
   }
-}
-
-private[sources] object MvProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("built_at", LongType, nullable = false)))
 }
 
 /** `CALL <cat>.system.rewrite_tombstones('<table>', <frac>)` — TARGETED
@@ -1402,34 +1180,19 @@ private[sources] object MvProcedure {
   * `LedgerMorSpec`). Returns `(files_rewritten, tombstones_dropped,
   * version)`. */
 private[sources] final class RewriteTombstonesProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "rewrite_tombstones"
-  override def description(): String =
-    "fold the merge-on-read overlay for data files whose tombstone " +
-      "fraction exceeds frac; cold files keep their overlay"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // rewrites storage
-
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name in this catalog (flattened form)").build(),
-    ProcedureParameter.in("frac", DoubleType)
-      .comment("rewrite a data file when tombstones/rows > frac").build())
+    extends LedgerProcedure(root, "rewrite_tombstones",
+      "fold the merge-on-read overlay for data files whose tombstone " +
+        "fraction exceeds frac; cold files keep their overlay") {
+  override def parameters(): Array[ProcedureParameter] = Array(tableParam,
+    param("frac", DoubleType, "rewrite a data file when tombstones/rows > frac"))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
     val frac = input.getDouble(1)
     require(frac >= 0.0 && frac <= 1.0,
       s"frac must be in [0, 1], got $frac")
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
-    val d = dir.getPath
-    val branches = LedgerSource.listRefs(d, "branch")
-    require(branches.isEmpty,
-      s"cannot rewrite tombstones of $table while branch refs exist " +
-        s"(${branches.keys.toSeq.sorted.mkString(", ")}) — other " +
-        s"lineages' manifests reference the files this verb unlinks")
+    val (table, d) = tableArg(input)
+    refuseBranched(d, s"rewrite tombstones of $table",
+      "other lineages' manifests reference the files this verb unlinks")
     val overlay = LedgerSource.deleteOverlay(d)
     val posOverlay = LedgerSource.positionOverlay(d)
     // HOT files: dead fraction above the threshold — key tombstones
@@ -1462,7 +1225,7 @@ private[sources] final class RewriteTombstonesProcedure(root: File)
     // overlay, `.gp` a position overlay).
     var dropped = 0L
     LedgerSource.deleteFiles(d).foreach { df =>
-      val sections = LedgerSource.readDeleteSections(df)
+      val sections = LedgerSource.readSections(df)()
       if (sections.exists(s => dead.contains(s._1))) {
         dropped += sections.filter(s => dead.contains(s._1))
           .map(_._2.distinct.length.toLong).sum
@@ -1476,22 +1239,9 @@ private[sources] final class RewriteTombstonesProcedure(root: File)
           s"graft-ledger: cannot remove delete file ${df.getPath}")
       }
     }
-    val v = LedgerSource.commitVersion(d)
-    val out = new GenericInternalRow(3)
-    out.setLong(0, dead.size.toLong)
-    out.setLong(1, dropped)
-    out.setLong(2, v)
-    java.util.Collections.singletonList(
-      new SingleRowScan(RewriteTombstonesProcedure.OutputSchema, out): Scan)
-      .iterator()
+    result("files_rewritten" -> dead.size.toLong, "tombstones_dropped" -> dropped,
+      "version" -> LedgerSource.commitVersion(d))
   }
-}
-
-private[sources] object RewriteTombstonesProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("files_rewritten", LongType, nullable = false),
-    StructField("tombstones_dropped", LongType, nullable = false),
-    StructField("version", LongType, nullable = false)))
 }
 
 /** `CALL <cat>.system.merge_branch('<table>', '<from>', '<into>')` —
@@ -1520,29 +1270,16 @@ private[sources] object RewriteTombstonesProcedure {
   * writer's contract, exactly as in Iceberg: the merge is file-level.
   * Returns one row `(ref, version, files_merged)`. */
 private[sources] final class MergeBranchProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "merge_branch"
-  override def description(): String =
-    "merge a diverged branch into another lineage by file-set union"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // moves refs, commits
-
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name in this catalog (flattened form)").build(),
-    ProcedureParameter.in("from", StringType)
-      .comment("branch whose lineage merges in").build(),
-    ProcedureParameter.in("into", StringType)
-      .comment("branch that receives the merge ('main' included)").build())
+    extends LedgerProcedure(root, "merge_branch",
+      "merge a diverged branch into another lineage by file-set union") {
+  override def parameters(): Array[ProcedureParameter] = Array(tableParam,
+    param("from", StringType, "branch whose lineage merges in"),
+    param("into", StringType, "branch that receives the merge ('main' included)"))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
     val from = LedgerSource.validRefName(input.getUTF8String(1).toString)
     val into = LedgerSource.validRefName(input.getUTF8String(2).toString)
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
-    val d = dir.getPath
+    val (table, d) = tableArg(input)
     require(from != into, s"cannot merge '$from' into itself")
     def head(r: String): Long = LedgerSource.readRef(d, "branch", r)
       .getOrElse(throw new IllegalArgumentException(
@@ -1579,21 +1316,8 @@ private[sources] final class MergeBranchProcedure(root: File)
     require(LedgerSource.casAdvanceRef(d, "branch", into, intoV, v),
       s"'$into' of $table moved concurrently (validated v$intoV) — " +
         s"re-validate and retry the merge")
-    val out = new GenericInternalRow(3)
-    out.update(0, UTF8String.fromString(into))
-    out.setLong(1, v)
-    out.setLong(2, mine.length.toLong)
-    java.util.Collections.singletonList(
-      new SingleRowScan(MergeBranchProcedure.OutputSchema, out): Scan)
-      .iterator()
+    result("ref" -> into, "version" -> v, "files_merged" -> mine.length.toLong)
   }
-}
-
-private[sources] object MergeBranchProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("ref", StringType, nullable = false),
-    StructField("version", LongType, nullable = false),
-    StructField("files_merged", LongType, nullable = false)))
 }
 
 /** `CALL <cat>.system.converge('<table>')` — un-branch: reconcile an
@@ -1607,23 +1331,12 @@ private[sources] object MergeBranchProcedure {
   * files were reclaimed dangle LOUDLY afterwards — the same vacuumed-
   * table contract as expire_versions. */
 private[sources] final class ConvergeProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "converge"
-  override def description(): String =
-    "reconcile a branched table to its main lineage and drop all refs"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // rewrites storage
-
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name in this catalog (flattened form)").build())
+    extends LedgerProcedure(root, "converge",
+      "reconcile a branched table to its main lineage and drop all refs") {
+  override def parameters(): Array[ProcedureParameter] = Array(tableParam)
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val dir = new File(root, table)
-    if (!dir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, table))
-    val d = dir.getPath
+    val (table, d) = tableArg(input)
     val forked = LedgerSource.forkedBranches(d)
     require(forked.isEmpty,
       s"branches still exist on $table (${forked.mkString(", ")}) — " +
@@ -1648,19 +1361,9 @@ private[sources] final class ConvergeProcedure(root: File)
     // (refusing on its appends, or worse silently replaying its
     // MoR-delete events as main's). The diff against main is empty, so
     // CDF continuity across converge is exact.
-    val v = LedgerSource.commitVersion(d, base = Some(mainV))
-    val out = new GenericInternalRow(2)
-    out.setLong(0, orphans.length.toLong)
-    out.setLong(1, v)
-    java.util.Collections.singletonList(
-      new SingleRowScan(ConvergeProcedure.OutputSchema, out): Scan).iterator()
+    result("files_reclaimed" -> orphans.length.toLong,
+      "version" -> LedgerSource.commitVersion(d, base = Some(mainV)))
   }
-}
-
-private[sources] object ConvergeProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("files_reclaimed", LongType, nullable = false),
-    StructField("version", LongType, nullable = false)))
 }
 
 /** `CALL <cat>.system.clone('<src>', '<dst>')` — ZERO-COPY table clone
@@ -1679,26 +1382,16 @@ private[sources] object ConvergeProcedure {
   * constraint), and a branched source clones its MAIN lineage —
   * resolved through the ref, never the mixed live listing. */
 private[sources] final class CloneProcedure(root: File)
-    extends UnboundProcedure with BoundProcedure {
-  override def name(): String = "clone"
-  override def description(): String =
-    "zero-copy clone: hard-link the source's current state into a new " +
-      "independent table with a fresh version chain"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false // creates storage
-
+    extends LedgerProcedure(root, "clone",
+      "zero-copy clone: hard-link the source's current state into a new " +
+        "independent table with a fresh version chain") {
   override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("source", StringType)
-      .comment("existing table name in this catalog (flattened form)").build(),
-    ProcedureParameter.in("target", StringType)
-      .comment("new table name; must not exist").build())
+    param("source", StringType, "existing table name in this catalog (flattened form)"),
+    param("target", StringType, "new table name; must not exist"))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val src = input.getUTF8String(0).toString
     val dst = input.getUTF8String(1).toString
-    val sdir = new File(root, src)
-    if (!sdir.isDirectory)
-      throw new NoSuchTableException(Identifier.of(Array.empty, src))
+    val (_, src) = tableArg(input)
     val ddir = new File(root, dst)
     if (ddir.exists())
       throw new TableAlreadyExistsException(
@@ -1708,17 +1401,17 @@ private[sources] final class CloneProcedure(root: File)
     // the source's CURRENT state: the main lineage when branched
     // (never the mixed live listing), the live listing otherwise
     val files: Seq[File] =
-      LedgerSource.readRef(sdir.getPath, "branch", "main") match {
-        case Some(v) => LedgerSource.resolvePinned(sdir.getPath, v).toSeq
-        case None => (LedgerSource.ledgerFiles(sdir.getPath) ++
-          LedgerSource.deleteFiles(sdir.getPath)).toSeq
+      LedgerSource.readRef(src, "branch", "main") match {
+        case Some(v) => LedgerSource.resolvePinned(src, v).toSeq
+        case None => (LedgerSource.ledgerFiles(src) ++
+          LedgerSource.deleteFiles(src)).toSeq
       }
     require(ddir.mkdirs(), s"cannot create ${ddir.getPath}")
     files.foreach { f =>
       java.nio.file.Files.createLink(
         new File(ddir, f.getName).toPath, f.toPath)
     }
-    val props = new File(sdir, "_props")
+    val props = new File(src, "_props")
     if (props.isFile)
       java.nio.file.Files.copy(props.toPath,
         new File(ddir, "_props").toPath)
@@ -1737,21 +1430,9 @@ private[sources] final class CloneProcedure(root: File)
           posOverlay.get(f.getName).map(_.distinct.length.toLong)
             .getOrElse(0L)
     }.sum
-    val summary = new GenericInternalRow(3)
-    summary.setLong(0, files.length.toLong)
-    summary.setLong(1, liveRows)
-    summary.setLong(2, v)
-    java.util.Collections.singletonList(
-      new SingleRowScan(CloneProcedure.OutputSchema, summary): Scan)
-      .iterator()
+    result("files_linked" -> files.length.toLong, "n_rows" -> liveRows,
+      "version" -> v)
   }
-}
-
-private[sources] object CloneProcedure {
-  val OutputSchema: StructType = StructType(Seq(
-    StructField("files_linked", LongType, nullable = false),
-    StructField("n_rows", LongType, nullable = false),
-    StructField("version", LongType, nullable = false)))
 }
 
 /** See [[GraftCatalog.loadFunction]]. The unbound form validates arity
@@ -1878,316 +1559,225 @@ private[sources] object BucketLayoutBound extends ScalarFunction[java.lang.Long]
     java.lang.Long.valueOf(invoke(input.getInt(0), input.getLong(1)))
 }
 
-/** One-row local result relation for procedure output (Spark currently
-  * requires procedure result scans to be [[LocalScan]]s — the summary
-  * is driver-computed metadata, so local is also the honest shape). */
-private[sources] final class SingleRowScan(schema: StructType, row: InternalRow)
-    extends LocalScan {
+/** The one local result relation: procedure summaries and metadata
+  * tables are driver-computed metadata (and Spark requires procedure
+  * result scans to be [[LocalScan]]s). `rows` runs when Spark asks. */
+private[sources] final class RowsScan(schema: StructType,
+    rows0: () => Array[InternalRow]) extends LocalScan {
   override def readSchema(): StructType = schema
-  override def rows(): Array[InternalRow] = Array(row)
+  override def rows(): Array[InternalRow] = rows0()
 }
 
-/** `<cat>.<table>.history` — the table's commit log as a queryable
-  * METADATA TABLE (Iceberg's `t.history`, Delta's DESCRIBE HISTORY):
-  * one row per version manifest, carrying the commit instant (the
-  * manifest-embedded `#ts=`), the version's data/tombstone file
-  * counts, its header-summed row count, and whether it still
-  * reconstructs (later destructive verbs may have removed its files —
-  * then `n_rows` is NULL and `reconstructable` false, the same honesty
-  * contract as `VERSION AS OF`'s loud failure). History is manifest
-  * listings + 28-byte headers: metadata-bounded at any scale, read
-  * once at planning into a single local partition. */
-private[sources] final class LedgerHistoryTable(path: String, name0: String)
-    extends Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  import org.apache.spark.sql.types.{BooleanType, TimestampType}
-
-  override def name(): String = name0
-  override def schema(): StructType = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("committed_at", TimestampType, nullable = false),
-    StructField("n_data_files", LongType, nullable = false),
-    StructField("n_delete_files", LongType, nullable = false),
-    StructField("n_rows", LongType, nullable = true),
-    StructField("reconstructable", BooleanType, nullable = false)))
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): org.apache.spark.sql.connector.read.ScanBuilder =
-    () => new LocalScan {
-      override def readSchema(): StructType = schema()
-      override def rows(): Array[InternalRow] =
-        LedgerSource.listVersions(path).toArray.map { v =>
-          val names = LedgerSource.readManifest(path, v)
-          val (data, dels) = names.partition(_.endsWith(".gl"))
-          val rows: java.lang.Long =
-            try {
-              val files = data.map(n => new File(new File(path), n))
-              require(files.forall(_.isFile))
-              java.lang.Long.valueOf(LedgerSource.statsOf(files).map(_._4).sum)
-            } catch { case _: Exception => null }
-          val row = new GenericInternalRow(6)
-          row.setLong(0, v)
-          row.setLong(1, LedgerSource.commitTimeMillis(path, v) * 1000L)
-          row.setLong(2, data.length.toLong)
-          row.setLong(3, dels.count(n =>
-            n.endsWith(".gd") || n.endsWith(".gp")).toLong)
-          if (rows == null) row.setNullAt(4) else row.setLong(4, rows.longValue())
-          row.setBoolean(5, rows != null)
-          row
-        }
-    }
+private[sources] object RowsScan {
+  /** One row from plain values: a String becomes a UTF8String, a null
+    * stays a SQL NULL, every other value is stored as it is. */
+  def row(values: Any*): InternalRow = new GenericInternalRow(values.map {
+    case s: String => UTF8String.fromString(s)
+    case v => v
+  }.toArray)
 }
 
-/** `<cat>.<table>.lineage` — the COMMIT GRAPH, queryable: one row per
-  * version carrying its `#parent` header, the manifest-diff quantities
-  * the change-feed planner computes (data rows / tombstone keys the
-  * commit ADDED vs its parent — header and section arithmetic, no
-  * record decodes), and `on_current`: whether the commit lies on the
-  * parent chain of the current read's head (main's ref on a branched
-  * table, the chain head otherwise). Interleaved branch commits and a
-  * CAS loser's dead side commits show `on_current = false` — exactly
-  * the rows an operator needs to SEE to understand a multi-lineage
-  * chain. Tiny driver-side metadata, LocalScan like `.history`. */
-private[sources] final class LedgerLineageTable(path: String, name0: String)
-    extends Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  import org.apache.spark.sql.types.BooleanType
-
+/** One read-only metadata table: `name`, `schema`, and rows computed on
+  * the driver from the ledger directory's metadata files. */
+private[sources] final class MetadataTable(name0: String, schema0: StructType,
+    rows: () => Array[InternalRow]) extends Table with SupportsRead {
   override def name(): String = name0
-  override def schema(): StructType = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("parent", LongType, nullable = false),
-    StructField("rows_added", LongType, nullable = true),
-    StructField("tombstones_added", LongType, nullable = true),
-    StructField("on_current", BooleanType, nullable = false)))
+  override def schema(): StructType = schema0
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    () => new RowsScan(schema0, rows)
+}
 
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): org.apache.spark.sql.connector.read.ScanBuilder =
-    () => new LocalScan {
-      override def readSchema(): StructType = schema()
-      override def rows(): Array[InternalRow] = {
-        val head = LedgerSource.readRef(path, "branch", "main")
-          .orElse(LedgerSource.listVersions(path).lastOption)
-        val current = scala.collection.mutable.Set.empty[Long]
-        var c = head.getOrElse(0L)
-        while (c > 0) {
-          current += c
-          val p = LedgerSource.parentVersion(path, c)
-          if (p >= c) c = 0 else c = p
-        }
-        LedgerSource.listVersions(path).toArray.map { v =>
-          val parent = LedgerSource.parentVersion(path, v)
-          val names = LedgerSource.readManifest(path, v).toSet
-          val prev: Set[String] =
-            if (parent == 0) Set.empty
-            else
-              try LedgerSource.readManifest(path, parent).toSet
-              catch { case _: Exception => null }
-          val row = new GenericInternalRow(5)
-          row.setLong(0, v)
-          row.setLong(1, parent)
-          if (prev == null) { row.setNullAt(2); row.setNullAt(3) }
+/** The `<cat>.<table>.<suffix>` metadata tables, each built from the
+  * table's directory `path` and named `name`. All are tiny driver-side
+  * metadata read at planning into a single local partition. */
+private[sources] object LedgerMetadataTables {
+  import RowsScan.row
+
+  val bySuffix: Map[String, (String, String) => Table] = Map(
+    "history" -> (history _), "refs" -> (refs _), "lineage" -> (lineage _),
+    "indexes" -> (indexes _), "files" -> (files _))
+
+  /** `<cat>.<table>.history` — the table's commit log as a queryable
+    * METADATA TABLE (Iceberg's `t.history`, Delta's DESCRIBE HISTORY):
+    * one row per version manifest, carrying the commit instant (the
+    * manifest-embedded `#ts=`), the version's data/tombstone file
+    * counts, its header-summed row count, and whether it still
+    * reconstructs (later destructive verbs may have removed its files —
+    * then `n_rows` is NULL and `reconstructable` false, the same honesty
+    * contract as `VERSION AS OF`'s loud failure). History is manifest
+    * listings + 28-byte headers: metadata-bounded at any scale. */
+  private def history(path: String, name: String): Table = new MetadataTable(name,
+    StructType.fromDDL("version BIGINT NOT NULL, committed_at TIMESTAMP NOT NULL, " +
+      "n_data_files BIGINT NOT NULL, n_delete_files BIGINT NOT NULL, " +
+      "n_rows BIGINT, reconstructable BOOLEAN NOT NULL"),
+    () => LedgerSource.listVersions(path).toArray.map { v =>
+      val names = LedgerSource.readManifest(path, v)
+      val (data, dels) = names.partition(_.endsWith(".gl"))
+      val rows: java.lang.Long =
+        try {
+          val files = data.map(n => new File(new File(path), n))
+          require(files.forall(_.isFile))
+          java.lang.Long.valueOf(LedgerSource.statsOf(files).map(_._4).sum)
+        } catch { case _: Exception => null }
+      row(v, LedgerSource.commitTimeMillis(path, v) * 1000L, data.length.toLong,
+        dels.count(n => n.endsWith(".gd") || n.endsWith(".gp")).toLong,
+        rows, rows != null)
+    })
+
+  /** `<cat>.<table>.refs` — the table's TAGS and BRANCHES as a queryable
+    * metadata table (Iceberg's `t.refs`): one row per ref with the
+    * version it names and whether that version still reconstructs (a tag
+    * can outlive its files under the vacuumed-table contract — the
+    * listing says so instead of erroring, so operators can FIND the
+    * dangling refs). */
+  private def refs(path: String, name: String): Table = new MetadataTable(name,
+    StructType.fromDDL("kind STRING NOT NULL, name STRING NOT NULL, " +
+      "version BIGINT NOT NULL, reconstructable BOOLEAN NOT NULL"),
+    () => (LedgerSource.listRefs(path, "tag").toSeq.map(("tag", _)) ++
+      LedgerSource.listRefs(path, "branch").toSeq.map(("branch", _)))
+      .sortBy { case (k, (n, _)) => (k, n) }
+      .map { case (kind, (refName, v)) =>
+        val ok =
+          try { LedgerSource.resolvePinned(path, v); true }
+          catch { case _: Exception => false }
+        row(kind, refName, v, ok)
+      }.toArray)
+
+  /** `<cat>.<table>.lineage` — the COMMIT GRAPH, queryable: one row per
+    * version carrying its `#parent` header, the manifest-diff quantities
+    * the change-feed planner computes (data rows / tombstone keys the
+    * commit ADDED vs its parent — header and section arithmetic, no
+    * record decodes), and `on_current`: whether the commit lies on the
+    * parent chain of the current read's head (main's ref on a branched
+    * table, the chain head otherwise). Interleaved branch commits and a
+    * CAS loser's dead side commits show `on_current = false` — exactly
+    * the rows an operator needs to SEE to understand a multi-lineage
+    * chain. */
+  private def lineage(path: String, name: String): Table = new MetadataTable(name,
+    StructType.fromDDL("version BIGINT NOT NULL, parent BIGINT NOT NULL, " +
+      "rows_added BIGINT, tombstones_added BIGINT, on_current BOOLEAN NOT NULL"),
+    () => {
+      val head = LedgerSource.readRef(path, "branch", "main")
+        .orElse(LedgerSource.listVersions(path).lastOption)
+      val current = scala.collection.mutable.Set.empty[Long]
+      var c = head.getOrElse(0L)
+      while (c > 0) {
+        current += c
+        val p = LedgerSource.parentVersion(path, c)
+        if (p >= c) c = 0 else c = p
+      }
+      LedgerSource.listVersions(path).toArray.map { v =>
+        val parent = LedgerSource.parentVersion(path, v)
+        val names = LedgerSource.readManifest(path, v).toSet
+        val prev: Set[String] =
+          if (parent == 0) Set.empty
+          else
+            try LedgerSource.readManifest(path, parent).toSet
+            catch { case _: Exception => null }
+        val (rowsAdded, tombstonesAdded): (Any, Any) =
+          if (prev == null) (null, null)
           else {
             val added = (names -- prev).map(n => new File(new File(path), n))
             try {
               require(added.forall(_.isFile))
               val (data, dels) = added.partition(_.getName.endsWith(".gl"))
-              row.setLong(2, LedgerSource.statsOf(data.toArray).map(_._4).sum)
-              row.setLong(3, dels.toSeq
-                .filter(f => f.getName.endsWith(".gd") ||
-                  f.getName.endsWith(".gp"))
-                .map(LedgerSource.tombstoneTotal).sum)
+              (LedgerSource.statsOf(data.toArray).map(_._4).sum,
+                dels.toSeq
+                  .filter(f => f.getName.endsWith(".gd") ||
+                    f.getName.endsWith(".gp"))
+                  .map(LedgerSource.tombstoneTotal).sum)
             } catch { // the diff's files were reclaimed — report honestly
-              case _: Exception => row.setNullAt(2); row.setNullAt(3)
+              case _: Exception => (null, null)
             }
           }
-          row.setBoolean(4, current.contains(v))
-          row
+        row(v, parent, rowsAdded, tombstonesAdded, current.contains(v))
+      }
+    })
+
+  /** `<cat>.<table>.indexes` — INDEX COVERAGE as a metadata table (s69,
+    * completing the `.history`/`.refs`/`.lineage` observability family):
+    * one row per live data file per DECLARED index — the Bloom column
+    * and, since s71, the zone-map column, distinguished by `kind` — with
+    * whether a well-formed sidecar covers it. The rows answer the
+    * operator question the skip indexes raise — "which files will a
+    * probe still scan?" — because back-off is per file: writer-stamped
+    * and backfilled files skip, files minted by CoW clip-rewrites (fresh
+    * names, raw byte copies) scan until the next build_bloom /
+    * build_zonemap. Metadata-only: existence + a header magic check per
+    * sidecar, zero record decodes. */
+  private def indexes(path: String, name: String): Table = new MetadataTable(name,
+    StructType.fromDDL("file STRING NOT NULL, kind STRING NOT NULL, " +
+      "`column` STRING NOT NULL, indexed BOOLEAN NOT NULL"),
+    () => {
+      def wellFormed(side: File, magic: Int): Boolean =
+        side.isFile && {
+          val in = new java.io.DataInputStream(
+            new java.io.FileInputStream(side))
+          try in.readInt() == magic
+          catch { case _: java.io.IOException => false }
+          finally in.close()
+        }
+      // one row per live file per DECLARED index — the Bloom column
+      // and/or the zone-map column (s71 joined the family)
+      val bloom = LedgerSource.readBloomCol(path).map { c =>
+        ("bloom", c, (f: String) =>
+          wellFormed(LedgerSource.bloomSidecar(path, f, c),
+            LedgerSource.BloomMagic))
+      }
+      val zone = LedgerSource.readZoneCol(path).map { c =>
+        ("zone", c, (f: String) =>
+          wellFormed(LedgerSource.zoneSidecar(path, f, c),
+            LedgerSource.ZoneMagic))
+      }
+      LedgerSource.ledgerFiles(path).sortBy(_.getName).flatMap { f =>
+        (bloom.toSeq ++ zone.toSeq).map { case (kind, c, check) =>
+          row(f.getName, kind, c, check(f.getName))
         }
       }
-    }
-}
+    })
 
-/** `<cat>.<table>.refs` — the table's TAGS and BRANCHES as a queryable
-  * metadata table (Iceberg's `t.refs`): one row per ref with the
-  * version it names and whether that version still reconstructs (a tag
-  * can outlive its files under the vacuumed-table contract — the
-  * listing says so instead of erroring, so operators can FIND the
-  * dangling refs). Like `.history`, tiny driver-side metadata
-  * materialized as a LocalScan. */
-/** `<cat>.<table>.indexes` — INDEX COVERAGE as a metadata table (s69,
-  * completing the `.history`/`.refs`/`.lineage` observability family):
-  * one row per live data file per DECLARED index — the Bloom column
-  * and, since s71, the zone-map column, distinguished by `kind` — with
-  * whether a well-formed sidecar covers it. The rows answer the
-  * operator question the skip indexes raise — "which files will a
-  * probe still scan?" — because back-off is per file: writer-stamped
-  * and backfilled files skip, files minted by CoW clip-rewrites (fresh
-  * names, raw byte copies) scan until the next build_bloom /
-  * build_zonemap. Metadata-only: existence + a header magic check per
-  * sidecar, zero record decodes. */
-private[sources] final class LedgerIndexesTable(path: String, name0: String)
-    extends Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  import org.apache.spark.sql.types.BooleanType
-
-  override def name(): String = name0
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def schema(): StructType = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("column", StringType, nullable = false),
-    StructField("indexed", BooleanType, nullable = false)))
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): org.apache.spark.sql.connector.read.ScanBuilder =
-    () => new LocalScan {
-      override def readSchema(): StructType = schema()
-      override def rows(): Array[InternalRow] = {
-        def wellFormed(side: File, magic: Int): Boolean =
-          side.isFile && {
-            val in = new java.io.DataInputStream(
-              new java.io.FileInputStream(side))
-            try in.readInt() == magic
-            catch { case _: java.io.IOException => false }
-            finally in.close()
-          }
-        // one row per live file per DECLARED index — the Bloom column
-        // and/or the zone-map column (s71 joined the family)
-        val bloom = LedgerSource.readBloomCol(path).map { c =>
-          ("bloom", c, (f: String) =>
-            wellFormed(LedgerSource.bloomSidecar(path, f, c),
-              LedgerSource.BloomMagic))
+  /** `<cat>.<table>.files` — the LIVE FILE inventory as a metadata table
+    * (s72, Iceberg's `t.files`): one row per data file of the CURRENT
+    * read state (main's manifest when branched — the live listing holds
+    * other lineages' files — else the listing) with its stats header,
+    * on-disk size, and how many of its rows each merge-on-read overlay
+    * kind suppresses (distinct keys from `.gd` sections, distinct
+    * ordinals from `.gp`). The operator answer to "where do my rows
+    * physically live, and how dead is each file?" — the input to
+    * compaction / rewrite_tombstones decisions. Header + section
+    * arithmetic only, zero record decodes; a row dead BOTH ways counts
+    * in both columns (the two sets are not decodable-free to intersect —
+    * documented, and irrelevant to the maintenance decisions the counts
+    * drive). */
+  private def files(path: String, name: String): Table = new MetadataTable(name,
+    StructType.fromDDL("file STRING NOT NULL, n_rows BIGINT NOT NULL, " +
+      "min_doc_id BIGINT, max_doc_id BIGINT, bytes BIGINT NOT NULL, " +
+      "dead_keys BIGINT NOT NULL, dead_positions BIGINT NOT NULL"),
+    () => {
+      val (dataFiles, delFiles) =
+        LedgerSource.readRef(path, "branch", "main") match {
+          case Some(v) =>
+            val fs = LedgerSource.resolvePinned(path, v)
+            (fs.filter(_.getName.endsWith(".gl")),
+              fs.filterNot(_.getName.endsWith(".gl")))
+          case None =>
+            (LedgerSource.ledgerFiles(path), LedgerSource.deleteFiles(path))
         }
-        val zone = LedgerSource.readZoneCol(path).map { c =>
-          ("zone", c, (f: String) =>
-            wellFormed(LedgerSource.zoneSidecar(path, f, c),
-              LedgerSource.ZoneMagic))
-        }
-        LedgerSource.ledgerFiles(path).sortBy(_.getName).flatMap { f =>
-          (bloom.toSeq ++ zone.toSeq).map { case (kind, c, check) =>
-            val row = new GenericInternalRow(4)
-            row.update(0, UTF8String.fromString(f.getName))
-            row.update(1, UTF8String.fromString(kind))
-            row.update(2, UTF8String.fromString(c))
-            row.setBoolean(3, check(f.getName))
-            row: InternalRow
-          }
-        }
+      def deadBy(ext: String): Map[String, Long] =
+        delFiles.filter(_.getName.endsWith(ext)).toSeq
+          .flatMap(LedgerSource.readSections(_)())
+          .groupBy(_._1)
+          .map { case (f, secs) =>
+            f -> secs.flatMap(_._2).distinct.length.toLong }
+      val deadKeys = deadBy(".gd")
+      val deadPos = deadBy(".gp")
+      LedgerSource.statsOf(dataFiles).sortBy(_._1.getName).map {
+        case (f, mn, mx, n) =>
+          row(f.getName, n, if (n == 0) null else mn, if (n == 0) null else mx,
+            f.length(), deadKeys.getOrElse(f.getName, 0L),
+            deadPos.getOrElse(f.getName, 0L))
       }
-    }
-}
-
-/** `<cat>.<table>.files` — the LIVE FILE inventory as a metadata table
-  * (s72, Iceberg's `t.files`): one row per data file of the CURRENT
-  * read state (main's manifest when branched — the live listing holds
-  * other lineages' files — else the listing) with its stats header,
-  * on-disk size, and how many of its rows each merge-on-read overlay
-  * kind suppresses (distinct keys from `.gd` sections, distinct
-  * ordinals from `.gp`). The operator answer to "where do my rows
-  * physically live, and how dead is each file?" — the input to
-  * compaction / rewrite_tombstones decisions. Header + section
-  * arithmetic only, zero record decodes; a row dead BOTH ways counts
-  * in both columns (the two sets are not decodable-free to intersect —
-  * documented, and irrelevant to the maintenance decisions the counts
-  * drive). */
-private[sources] final class LedgerFilesTable(path: String, name0: String)
-    extends Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-
-  override def name(): String = name0
-  override def schema(): StructType = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("n_rows", LongType, nullable = false),
-    StructField("min_doc_id", LongType, nullable = true),
-    StructField("max_doc_id", LongType, nullable = true),
-    StructField("bytes", LongType, nullable = false),
-    StructField("dead_keys", LongType, nullable = false),
-    StructField("dead_positions", LongType, nullable = false)))
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): org.apache.spark.sql.connector.read.ScanBuilder =
-    () => new LocalScan {
-      override def readSchema(): StructType = schema()
-      override def rows(): Array[InternalRow] = {
-        val (dataFiles, delFiles) =
-          LedgerSource.readRef(path, "branch", "main") match {
-            case Some(v) =>
-              val fs = LedgerSource.resolvePinned(path, v)
-              (fs.filter(_.getName.endsWith(".gl")),
-                fs.filterNot(_.getName.endsWith(".gl")))
-            case None =>
-              (LedgerSource.ledgerFiles(path), LedgerSource.deleteFiles(path))
-          }
-        def deadBy(ext: String): Map[String, Long] =
-          delFiles.filter(_.getName.endsWith(ext)).toSeq
-            .flatMap(LedgerSource.readDeleteSections)
-            .groupBy(_._1)
-            .map { case (f, secs) =>
-              f -> secs.flatMap(_._2).distinct.length.toLong }
-        val deadKeys = deadBy(".gd")
-        val deadPos = deadBy(".gp")
-        LedgerSource.statsOf(dataFiles).sortBy(_._1.getName).map {
-          case (f, mn, mx, n) =>
-            val row = new GenericInternalRow(7)
-            row.update(0, UTF8String.fromString(f.getName))
-            row.setLong(1, n)
-            if (n == 0) { row.setNullAt(2); row.setNullAt(3) }
-            else { row.setLong(2, mn); row.setLong(3, mx) }
-            row.setLong(4, f.length())
-            row.setLong(5, deadKeys.getOrElse(f.getName, 0L))
-            row.setLong(6, deadPos.getOrElse(f.getName, 0L))
-            row: InternalRow
-        }
-      }
-    }
-}
-
-private[sources] final class LedgerRefsTable(path: String, name0: String)
-    extends Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  import org.apache.spark.sql.types.BooleanType
-
-  override def name(): String = name0
-  override def schema(): StructType = StructType(Seq(
-    StructField("kind", StringType, nullable = false),
-    StructField("name", StringType, nullable = false),
-    StructField("version", LongType, nullable = false),
-    StructField("reconstructable", BooleanType, nullable = false)))
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): org.apache.spark.sql.connector.read.ScanBuilder =
-    () => new LocalScan {
-      override def readSchema(): StructType = schema()
-      override def rows(): Array[InternalRow] =
-        (LedgerSource.listRefs(path, "tag").toSeq.map(("tag", _)) ++
-          LedgerSource.listRefs(path, "branch").toSeq.map(("branch", _)))
-          .sortBy { case (k, (n, _)) => (k, n) }
-          .map { case (kind, (refName, v)) =>
-            val ok =
-              try { LedgerSource.resolvePinned(path, v); true }
-              catch { case _: Exception => false }
-            val row = new GenericInternalRow(4)
-            row.update(0, UTF8String.fromString(kind))
-            row.update(1, UTF8String.fromString(refName))
-            row.setLong(2, v)
-            row.setBoolean(3, ok)
-            row
-          }.toArray
-    }
+    })
 }

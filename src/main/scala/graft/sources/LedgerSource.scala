@@ -503,24 +503,8 @@ object LedgerSource {
                                dataFile: String): Array[Long] = {
     val buf = ArrayBuffer.empty[Long]
     paths.foreach { p =>
-      val in = new DataInputStream(
-        new java.io.BufferedInputStream(new FileInputStream(p), 1 << 16))
-      try {
-        requireOverlayMagic(in.readInt(), p)
-        in.skipBytes(8)
-        val nSections = in.readInt()
-        var i = 0
-        while (i < nSections) {
-          val nameLen = in.readInt()
-          val nameBytes = new Array[Byte](nameLen); in.readFully(nameBytes)
-          val nKeys = in.readInt()
-          if (new String(nameBytes, "UTF-8") == dataFile) {
-            var k = 0
-            while (k < nKeys) { buf += in.readLong(); k += 1 }
-          } else in.skipBytes(nKeys * 8)
-          i += 1
-        }
-      } finally in.close()
+      readSections(new File(p), _ == dataFile)(requireOverlayMagic(_, p))
+        .foreach(buf ++= _._2)
     }
     // sorted DISTINCT: several overlay files may name one value (e.g. a
     // key deleted again after partial compaction lineage) — membership
@@ -534,27 +518,33 @@ object LedgerSource {
     }
   }
 
-  /** ONE delete file's sections, in stored order — the targeted
-    * tombstone-rewrite verb reads per-`.gd` so it can drop exactly the
-    * folded files' sections and keep cold files' overlay intact. */
-  private[sources] def readDeleteSections(
-      f: File): Seq[(String, Array[Long])] = {
+  /** The one reader of the `.gd`/`.gp` section layout: the header magic
+    * (checked by `checkMagic` before anything else is read), the total
+    * value count, then per section the data file's name and its longs.
+    * Returns the sections `want` selects, in stored order; every other
+    * section is `skipBytes`-ed, never materialized, so the executor-side
+    * application path costs its own values plus section headers. */
+  private[sources] def readSections(f: File, want: String => Boolean = _ => true)(
+      checkMagic: Int => Unit = requireOverlayMagic(_, f.getName))
+      : Seq[(String, Array[Long])] = {
     val out = ArrayBuffer.empty[(String, Array[Long])]
     val in = new DataInputStream(
       new java.io.BufferedInputStream(new FileInputStream(f), 1 << 16))
     try {
-      requireOverlayMagic(in.readInt(), f.getName)
+      checkMagic(in.readInt())
       in.skipBytes(8)
       val nSections = in.readInt()
       var i = 0
       while (i < nSections) {
-        val nameLen = in.readInt()
-        val nameBytes = new Array[Byte](nameLen); in.readFully(nameBytes)
+        val nameBytes = new Array[Byte](in.readInt()); in.readFully(nameBytes)
+        val name = new String(nameBytes, "UTF-8")
         val nKeys = in.readInt()
-        val ks = new Array[Long](nKeys)
-        var k = 0
-        while (k < nKeys) { ks(k) = in.readLong(); k += 1 }
-        out += ((new String(nameBytes, "UTF-8"), ks))
+        if (want(name)) {
+          val ks = new Array[Long](nKeys)
+          var k = 0
+          while (k < nKeys) { ks(k) = in.readLong(); k += 1 }
+          out += ((name, ks))
+        } else in.skipBytes(nKeys * 8)
         i += 1
       }
     } finally in.close()
@@ -575,32 +565,11 @@ object LedgerSource {
     overlayOf(dir, ".gp")
 
   private def overlayOf(dir: String,
-                        ext: String): Map[String, Array[Long]] = {
-    val acc = scala.collection.mutable.HashMap.empty[String, ArrayBuffer[Long]]
-    deleteFiles(dir).filter(_.getName.endsWith(ext)).foreach { f =>
-      val in = new DataInputStream(
-        new java.io.BufferedInputStream(new FileInputStream(f), 1 << 16))
-      try {
-        requireOverlayMagic(in.readInt(), f.getName)
-        in.skipBytes(8)
-        val nSections = in.readInt()
-        var i = 0
-        while (i < nSections) {
-          val nameLen = in.readInt()
-          val nameBytes = new Array[Byte](nameLen); in.readFully(nameBytes)
-          val nKeys = in.readInt()
-          val b = acc.getOrElseUpdate(new String(nameBytes, "UTF-8"),
-            ArrayBuffer.empty[Long])
-          var k = 0
-          while (k < nKeys) { b += in.readLong(); k += 1 }
-          i += 1
-        }
-      } finally in.close()
-    }
-    acc.map { case (n, b) =>
-      val a = b.toArray; java.util.Arrays.sort(a); (n, a)
-    }.toMap
-  }
+                        ext: String): Map[String, Array[Long]] =
+    deleteFiles(dir).filter(_.getName.endsWith(ext)).toSeq
+      .flatMap(readSections(_)()).groupBy(_._1).map { case (n, secs) =>
+        val a = secs.flatMap(_._2).toArray; java.util.Arrays.sort(a); (n, a)
+      }
 
   // ── version manifests (time travel) ──
   //
@@ -3105,33 +3074,16 @@ final class LedgerDeleteChangeReader(deleteFile: String, version: Long,
                                      positional: Boolean = false)
     extends PartitionReader[InternalRow] {
   private val sections: Iterator[(String, Array[Long])] = {
-    val dir = new File(deleteFile).getParentFile
-    val acc = ArrayBuffer.empty[(String, Array[Long])]
-    val in = new DataInputStream(new java.io.BufferedInputStream(
-      new FileInputStream(deleteFile), 1 << 16))
-    try {
-      val m = in.readInt()
+    val f = new File(deleteFile)
+    LedgerSource.readSections(f) { m =>
       require(m ==
         (if (positional) LedgerSource.PositionDeleteMagic
          else LedgerSource.DeleteMagic),
         s"$deleteFile: wrong overlay magic for " +
           s"${if (positional) "position-delete" else "delete"} replay")
-      in.skipBytes(8)
-      val n = in.readInt()
-      var i = 0
-      while (i < n) {
-        val nameLen = in.readInt()
-        val nameBytes = new Array[Byte](nameLen); in.readFully(nameBytes)
-        val nKeys = in.readInt()
-        val keys = new Array[Long](nKeys)
-        var k = 0
-        while (k < nKeys) { keys(k) = in.readLong(); k += 1 }
-        acc += ((new File(dir, new String(nameBytes, "UTF-8"))
-          .getAbsolutePath, keys))
-        i += 1
-      }
-    } finally in.close()
-    acc.iterator
+    }.iterator.map { case (n, ks) =>
+      (new File(f.getParentFile, n).getAbsolutePath, ks)
+    }
   }
   private var inner: LedgerReader = _
   private var keys: Array[Long] = _

@@ -24,16 +24,6 @@ import graft.sources.LedgerSource
   *     once. */
 class ConcurrentCommitSpec extends SparkSpec {
 
-  private val catSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def withCatalog[T](body: (String, String) => T): T = {
-    val cat = s"occ_spec${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"occspec_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    body(cat, root)
-  }
-
   test("racing appenders: distinct contiguous versions, monotone manifests, exact union") {
     withCatalog { (cat, root) =>
       val s = spark

@@ -100,4 +100,14 @@ class GraftSessionSpec extends SparkSpec {
     // the provider is named once, as StreamingQueries.RocksDbStateStore
     assert(hits("RocksDB" + "StateStoreProvider") == Map("StreamingQueries.scala" -> 1))
   }
+
+  test("one catalog registration, one procedure shape and one LocalScan under src/") {
+    // GraftCatalog.register is the only code that names the plugin class
+    assert(hits("\"graft.sources." + "GraftCatalog\"") == Map("GraftCatalog.scala" -> 1))
+    // every CALL verb extends GraftCatalog's one procedure base
+    assert(hits("with " + "BoundProcedure") == Map("GraftCatalog.scala" -> 1))
+    // procedures and metadata tables share RowsScan
+    assert(hits("extends " + "LocalScan") == Map("GraftCatalog.scala" -> 1))
+    assert(hits("new " + "LocalScan").isEmpty)
+  }
 }

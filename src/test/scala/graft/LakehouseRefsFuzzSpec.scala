@@ -17,15 +17,9 @@ import org.apache.spark.sql.functions._
   * destructive verbs re-enabled. */
 class LakehouseRefsFuzzSpec extends SparkSpec {
 
-  private val catSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def runScenario(seed: Int): Unit = {
     val rnd = new Random(seed)
-    val cat = s"refsfuzz${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"refsfuzz_${seed}_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val s = spark
     import s.implicits._
 

@@ -25,16 +25,6 @@ import graft.sources.LedgerSource
   *     (each ref advanced by its own writer, the chain by the CAS). */
 class LakehouseRefsSpec extends SparkSpec {
 
-  private val catSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def withCatalog[T](body: (String, String) => T): T = {
-    val cat = s"refs_spec${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"refsspec_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    body(cat, root)
-  }
-
   private def wave(lo: Int, hi: Int, lang: String = "w") = {
     val s = spark
     import s.implicits._

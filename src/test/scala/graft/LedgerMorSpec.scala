@@ -25,13 +25,8 @@ import graft.sources.LedgerSource
   *     live and returns after compaction consumes them. */
 class LedgerMorSpec extends SparkSpec {
 
-  private val catSeq = new java.util.concurrent.atomic.AtomicInteger(0)
   private def withMorTable[T](body: (String, String) => T): T = {
-    val cat = s"mor_spec${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"morspec_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val s = spark
     import s.implicits._
     spark.range(0, 400).select($"id".as("doc_id"),
@@ -204,11 +199,7 @@ class LedgerMorSpec extends SparkSpec {
 
   private def withBucketed[T](n: Long, width: Int)(
       body: (String, String) => T): T = {
-    val cat = s"mor_spec${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"morspec_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val s = spark
     import s.implicits._
     spark.range(0, n).select($"id".as("doc_id"),

@@ -96,10 +96,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
   test("fuzz: REPLACE WHERE equals delete-interval-then-union on arbitrary layouts") {
     val rng = new scala.util.Random(140004L)
     (1 to 8).foreach { i =>
-      val cat = s"fuzz_ow_$i"
-      val root = Files.createTempDirectory(Portable.scratchRoot, "fuzz_ow").toString
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val (cat, root) = freshCatalog()
       val base = rows(rng, 80 + rng.nextInt(120))
       val incoming = rows(rng, rng.nextInt(60))
       def df(d: Seq[(Long, String, Option[Long])]) = spark.createDataFrame(
@@ -126,10 +123,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
   test("fuzz: verbs on a BUCKETED table preserve the every-file-in-one-bucket invariant") {
     val rng = new scala.util.Random(140005L)
     (1 to 6).foreach { i =>
-      val cat = s"fuzz_bk_$i"
-      val root = Files.createTempDirectory(Portable.scratchRoot, "fuzz_bk").toString
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val (cat, root) = freshCatalog()
       val width = Seq(50L, 100L, 128L)(rng.nextInt(3))
       val base = rows(rng, 100 + rng.nextInt(150))
       def df(d: Seq[(Long, String, Option[Long])]) = spark.createDataFrame(
@@ -160,10 +154,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
   test("fuzz: every append version reconstructs exactly its prefix") {
     val rng = new scala.util.Random(140003L)
     (1 to 6).foreach { i =>
-      val cat = s"fuzz_tt_$i"
-      val root = Files.createTempDirectory(Portable.scratchRoot, "fuzz_tt").toString
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val (cat, root) = freshCatalog()
       val waves = (0 until 1 + rng.nextInt(3)).map(_ => rows(rng, 1 + rng.nextInt(80)))
       waves.zipWithIndex.foreach { case (w, idx) =>
         val df = spark.createDataFrame(
@@ -193,10 +184,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
     // documents (same as Iceberg identifier fields).
     val rng = new scala.util.Random(150001L)
     (1 to 6).foreach { i =>
-      val cat = s"fuzz_mor_$i"
-      val root = Files.createTempDirectory(Portable.scratchRoot, "fuzz_mor").toString
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val (cat, root) = freshCatalog()
       // reference state: doc_id -> (lang, n_chars); unique dense keys
       val state = scala.collection.mutable.LinkedHashMap.empty[Long, (String, Long)]
       var nextKey = 0L

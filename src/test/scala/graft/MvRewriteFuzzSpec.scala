@@ -30,15 +30,9 @@ import org.apache.spark.sql.functions._
   * (coarse) state whenever they fire — the multi-view cost choice. */
 class MvRewriteFuzzSpec extends SparkSpec {
 
-  private val catSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def runScenario(seed: Int): Unit = {
     val rnd = new Random(seed)
-    val cat = s"mvfuzz${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"mvfuzz_${seed}_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val s = spark
     import s.implicits._
 
@@ -211,10 +205,7 @@ class MvRewriteFuzzSpec extends SparkSpec {
   test("edge shapes keep the base-scan answer: count(NULL), UDF filter, NULL group") {
     val s = spark
     import s.implicits._
-    val cat = s"mvfuzz${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(s"mvedge_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     // lang is NULL for every fifth row, so the view carries a NULL group
     spark.range(0, 60).select($"id".as("doc_id"),
       when($"id" % 5 =!= 0, concat(lit("l"), ($"id" % 3).cast("string"))).as("lang"),

@@ -984,9 +984,10 @@ class PlanQualitySpec extends SparkSpec {
     s.sql("CREATE TABLE s40cbo_docs USING parquet AS SELECT * FROM s40cbo_src")
     s.sql("ANALYZE TABLE s40cbo_docs COMPUTE STATISTICS")
     s.sql("ANALYZE TABLE s40cbo_docs COMPUTE STATISTICS FOR COLUMNS doc_id, lang")
-    val oldCbo = s.conf.get("spark.sql.cbo.enabled")
-    val oldThresh = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
+    // broadcast stays off until the body pins the threshold between the
+    // two estimates
+    try GraftSession.withConf(s, "spark.sql.cbo.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val sql =
         """SELECT f.doc_id, f.lang, f.n_chars, d.lang AS d_lang
           |FROM s40cbo_docs f
@@ -1023,11 +1024,7 @@ class PlanQualitySpec extends SparkSpec {
       assert(cbo.contains("BroadcastHashJoin"),
         s"CBO + column stats must flip the filtered dim to broadcast:\n$cbo")
       assert(!cbo.contains("SortMergeJoin"), cbo)
-    } finally {
-      s.conf.set("spark.sql.cbo.enabled", oldCbo)
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      s.sql("DROP TABLE IF EXISTS s40cbo_docs")
-    }
+    } finally s.sql("DROP TABLE IF EXISTS s40cbo_docs")
   }
 
   test("s54: the histogram corrects the uniform estimate's provably-wrong broadcast") {
@@ -1056,11 +1053,10 @@ class PlanQualitySpec extends SparkSpec {
             |       CASE WHEN doc_id % 10 < 9 THEN CAST(0 AS BIGINT)
             |            ELSE doc_id END AS skew_key
             |FROM s54cbo_src""".stripMargin)
-    val oldCbo = s.conf.get("spark.sql.cbo.enabled")
-    val oldThresh = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val oldHist = s.conf.get("spark.sql.statistics.histogram.enabled")
-    val oldBins = s.conf.get("spark.sql.statistics.histogram.numBins")
-    try {
+    try GraftSession.withConf(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.statistics.histogram.enabled" -> "false",
+        "spark.sql.statistics.histogram.numBins" -> "16") {
       s.sql("ANALYZE TABLE s54cbo_docs COMPUTE STATISTICS")
       def analyzeCols(withHistogram: Boolean): Unit = {
         s.conf.set("spark.sql.statistics.histogram.enabled",
@@ -1107,13 +1103,7 @@ class PlanQualitySpec extends SparkSpec {
       assert(uniform.contains("BroadcastHashJoin"),
         s"the uniform estimate must make the provably-wrong broadcast " +
           s"(the premise of the pin):\n$uniform")
-    } finally {
-      s.conf.set("spark.sql.cbo.enabled", oldCbo)
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      s.conf.set("spark.sql.statistics.histogram.enabled", oldHist)
-      s.conf.set("spark.sql.statistics.histogram.numBins", oldBins)
-      s.sql("DROP TABLE IF EXISTS s54cbo_docs")
-    }
+    } finally s.sql("DROP TABLE IF EXISTS s54cbo_docs")
   }
 
   test("s56: the MV auto-rewrite removes the base scan; non-subsumed shapes keep it") {

@@ -83,9 +83,7 @@ class Round14OpsSpec extends SparkSpec {
     // …and the SQL verb then routes through the copy-on-write rewrite
     // (SupportsRowLevelOperations) instead of erroring: exactly the
     // predicate rows disappear, every other row survives
-    val cat = "r14_decline_cat"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmpDir("decline_root"))
+    val (cat, _) = freshCatalog()
     spark.range(0, 10).select(col("id").as("doc_id"),
         when(col("id") % 2 === 0, "en").otherwise("fr").as("lang"),
         col("id").as("n_chars"))
@@ -97,10 +95,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("UPDATE rewrites only the groups holding matching rows; others stay byte-identical") {
-    val cat = "r14_upd_cat"
-    val root = tmpDir("upd_root")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val s = spark
     import s.implicits._
     spark.range(0, 400).select($"id".as("doc_id"),
@@ -132,10 +127,7 @@ class Round14OpsSpec extends SparkSpec {
     // statically still prunes groups, because
     // RowLevelOperationRuntimeGroupFiltering hands the matching rows'
     // doc_ids to the scan as a runtime In-set before planning
-    val cat = "r14_rgf_cat"
-    val root = tmpDir("rgf_root")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val s = spark
     import s.implicits._
     // 'hot' lives ONLY in doc_id [100, 199] = the second of 4 range files
@@ -157,9 +149,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("MERGE INTO: matched update + not-matched insert + not-matched-by-source delete") {
-    val cat = "r14_mrg_cat"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmpDir("mrg_root"))
+    val (cat, _) = freshCatalog()
     val s = spark
     import s.implicits._
     spark.range(0, 100).select($"id".as("doc_id"),
@@ -185,10 +175,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("_file metadata column: hidden from SELECT *, surfaced when named, matches the real file") {
-    val cat = "r14_meta_cat"
-    val root = tmpDir("meta_root")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     spark.range(0, 20).select(col("id").as("doc_id"),
         lit("en").as("lang"), col("id").as("n_chars"))
       .repartitionByRange(2, col("doc_id"))
@@ -204,9 +191,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("TRUNCATE TABLE routes through deleteWhere(always-true): table empties, survives") {
-    val cat = "r14_trunc_cat"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmpDir("trunc_root"))
+    val (cat, _) = freshCatalog()
     spark.range(0, 50).select(col("id").as("doc_id"),
         lit("en").as("lang"), col("id").as("n_chars"))
       .writeTo(s"$cat.t").createOrReplace()
@@ -258,10 +243,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("CALL system.compact: summary row, range-clustered output, named args, unknown proc errors") {
-    val cat = "r14_proc_cat"
-    val root = tmpDir("proc_root")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val docs = spark.range(0, 200).select(col("id").as("doc_id"),
       lit("en").as("lang"), (col("id") * 2).as("n_chars"))
     docs.where(col("doc_id") % 2 === 0).coalesce(1)
@@ -288,10 +270,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("REPLACE WHERE: purges only the interval from old files; declines non-interval filters") {
-    val cat = "r14_ow_cat"
-    val root = tmpDir("ow_root")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val s = spark
     import s.implicits._
     spark.range(0, 400).select($"id".as("doc_id"),
@@ -320,10 +299,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("time travel: manifests pin versions; snapshots are read-only; dangling versions fail loudly") {
-    val cat = "r14_tt_cat"
-    val root = tmpDir("tt_root")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val docs = spark.range(0, 300).select(col("id").as("doc_id"),
       lit("en").as("lang"), col("id").as("n_chars"))
     docs.where(col("doc_id") < 100)
@@ -377,9 +353,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("storage-partitioned join: two bucketed ledger tables join with ZERO exchange") {
-    val cat = "r14_spj_cat"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmpDir("spj_root"))
+    val (cat, _) = freshCatalog()
     val s = spark
     import s.implicits._
     val confs = Seq(
@@ -413,9 +387,7 @@ class Round14OpsSpec extends SparkSpec {
     // pushPartValues machinery aligns the partition value sets instead
     // of giving up — the realistic shape after retention deletes shrink
     // one table's key range
-    val cat = "r14_spja_cat"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmpDir("spja_root"))
+    val (cat, _) = freshCatalog()
     val s = spark
     import s.implicits._
     val confs = Seq(
@@ -439,10 +411,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("bucket layout is validated, not trusted: an unbucketed write degrades the scan gracefully") {
-    val cat = "r14_deg_cat"
-    val root = tmpDir("deg_root")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val s = spark
     import s.implicits._
     spark.range(0, 200).select($"id".as("doc_id"), lit("en").as("lang"),
@@ -474,10 +443,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("compaction preserves the bucket layout (and SPJ eligibility) of a bucketed table") {
-    val cat = "r14_cmpb_cat"
-    val root = tmpDir("cmpb_root")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val s = spark
     import s.implicits._
     val docs = spark.range(0, 300).select($"id".as("doc_id"),
@@ -504,9 +470,7 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("SHOW TABLES in an unknown namespace errors instead of listing empty") {
-    val cat = "r14_ns_cat"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", tmpDir("ns_root"))
+    val (cat, _) = freshCatalog()
     spark.range(0, 3).select(col("id").as("doc_id"),
         lit("en").as("lang"), col("id").as("n_chars"))
       .writeTo(s"$cat.ns1.t").createOrReplace()

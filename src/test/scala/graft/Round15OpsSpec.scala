@@ -22,16 +22,6 @@ import graft.sources.LedgerSource
   *     instant, surviving mtime damage (backup-restore). */
 class Round15OpsSpec extends SparkSpec {
 
-  private val catSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def withCatalog[T](body: (String, String) => T): T = {
-    val cat = s"r15_spec${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"r15spec_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    body(cat, root)
-  }
-
   /** Three append-only versions: v1 = [0,100), v2 adds [100,200),
     * v3 adds [200,300). Early files stay referenced by every later
     * manifest — the sharing expire must respect. */
@@ -232,11 +222,7 @@ class Round15OpsSpec extends SparkSpec {
     // tombstones: MoR-delete the low keys, then TopN — the scan must
     // back off the file cutoff, or the dead rows' header counts would
     // under-deliver live rows
-    val cat2 = s"r15_lim${catSeq.incrementAndGet()}"
-    val root2 = graft.queries.Portable.scratchPath(
-      s"r15lim_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat2", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat2.root", root2)
+    val (cat2, root2) = freshCatalog()
     spark.range(0, 300).select($"id".as("doc_id"), lit("w").as("lang"),
         $"id".as("n_chars"))
       .repartitionByRange(3, $"doc_id")

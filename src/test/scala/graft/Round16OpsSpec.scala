@@ -23,16 +23,6 @@ import graft.sources.LedgerSource
   *     everywhere on this surface). */
 class Round16OpsSpec extends SparkSpec {
 
-  private val catSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def withCatalog[T](body: (String, String) => T): T = {
-    val cat = s"r16spec${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"r16spec_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    body(cat, root)
-  }
-
   private def wave(lo: Int, hi: Int, lang: String = "w") = {
     val s = spark
     import s.implicits._

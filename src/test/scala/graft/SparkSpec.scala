@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,8 +13,26 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+  private val catalogs = new AtomicInteger(0)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
+
+  /** Registers a ledger catalog under a name no other test in this JVM
+    * uses, rooted at its own directory under `Portable.scratchRoot`, and
+    * returns (name, root). Catalog plugins are cached by name for the
+    * session, so a shared name would keep the first test's root. */
+  def freshCatalog(): (String, String) = {
+    val name = s"${getClass.getSimpleName.toLowerCase}_${SparkSpec.catalogs.incrementAndGet()}"
+    val root = graft.queries.Portable.scratchPath(s"catalog_$name")
+    graft.sources.GraftCatalog.register(spark, name, root)
+    (name, root)
+  }
+
+  /** `body(name, root)` over a [[freshCatalog]]. */
+  def withCatalog[T](body: (String, String) => T): T = {
+    val (name, root) = freshCatalog()
+    body(name, root)
+  }
 }

@@ -29,15 +29,9 @@ import graft.sources.TxnLog
   * CONSERVATION under interleaving. */
 class TxnFuzzSpec extends SparkSpec {
 
-  private val catSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def runScenario(seed: Int): Unit = {
     val rnd = new Random(seed)
-    val cat = s"txnfuzz${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"txnfuzz_${seed}_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     val rootF = new File(root)
     val s = spark
     import s.implicits._

@@ -21,16 +21,6 @@ import graft.sources.LedgerSource
   *   - appends are born indexed; bloom + zone compose on one table. */
 class ZoneMapSpec extends SparkSpec {
 
-  private val catSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def withCatalog[T](body: (String, String) => T): T = {
-    val cat = s"zmspec${catSeq.incrementAndGet()}"
-    val root = graft.queries.Portable.scratchPath(
-      s"zmspec_${System.nanoTime()}")
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    body(cat, root)
-  }
-
   test("range probes skip files and stay exact; impossible ranges plan empty") {
     withCatalog { (cat, root) =>
       val s = spark
