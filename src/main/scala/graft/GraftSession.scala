@@ -50,8 +50,8 @@ object GraftSession {
 
   /** Drops every persisted frame a query left behind, so the next query
     * neither pays GC pressure for it nor plans against its cache.
-    * localCheckpoint blocks (t10/t10b rounds) live outside the catalog
-    * cache, so the persistent-RDD registry is swept too. */
+    * `Fixpoint.pin` blocks live outside the catalog cache, so the
+    * persistent-RDD registry is swept too. */
   def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Geospatial scalar functions the reference engine exposes:
@@ -166,18 +166,6 @@ object GeoFunctions {
       substr(lit(Base32), (digit + 1).cast("int"), lit(1))
     }
     concat(built: _*)
-  }
-
-  /** Register the geo UDFs for SQL use (reference D1 surface:
-    * geohash5..geohash8, plus neighbors and haversine). */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("geohash", (lat: Double, lon: Double, p: Int) => geohashEncode(lat, lon, p))
-    Seq(5, 6, 7, 8).foreach { p =>
-      spark.udf.register(s"geohash$p", (lat: Double, lon: Double) => geohashEncode(lat, lon, p))
-    }
-    spark.udf.register("geohash_neighbors", (gh: String) => geohashNeighbors(gh))
-    spark.udf.register("haversine_m",
-      (lat1: Double, lon1: Double, lat2: Double, lon2: Double) => haversineMeters(lat1, lon1, lat2, lon2))
   }
 
   val geohashNeighborsUdf: org.apache.spark.sql.expressions.UserDefinedFunction =

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{Tables, Trajectory}
+import graft.engine.{Fixpoint, Tables, Trajectory}
 import Portable._
 
 /** The reference's SIAR epidemic-model step (`1108Fit_para_multi.py`) —
@@ -43,31 +43,12 @@ import Portable._
   * the largest intermediate is `load·10⁶ ≤ N·10¹⁰`, overflow-free to
   * N ≈ 9·10⁸ users; past that, drop the ×10⁴ state scale a decimal.
   *
-  * CHAIN DISCIPLINE (the round-5 judge's #1 finding): every step of
-  * the chain is localCheckpoint-ed before the next consumes it. Without
-  * any barrier, CollapseProject inlines the fixed-point arithmetic
-  * across all projection stages and the expression tree grows
-  * MULTIPLICATIVELY per step (nf/fl are each referenced several times
-  * downstream) — driver-side optimization alone took ~30 s for the
-  * 3-step chain, and it worsens with depth. A plain `persist()` barrier
-  * stops the inlining but still carries the whole lineage prefix in
-  * every step's analyzed plan, so driver-side planning grows
-  * QUADRATICALLY with depth — the 13-step g22b measured 30 s persisted
-  * vs 6 s checkpointed at sf0.1. The frames are #areas × 13 —
-  * block-manager noise at any corpus size (the t10/g19 iterative
-  * recipe). `siarChain` is the single shared builder, so no query can
-  * reintroduce the unbarriered shape; `Round6OpsSpec` pins the
-  * optimized-plan size.
-  *
-  * Fault-tolerance trade: `localCheckpoint` is eager but NOT
-  * fault-tolerant — lineage is truncated, so losing an executor (or an
-  * external unpersist of a checkpointed block) mid-chain fails the
-  * query unrecoverably rather than recomputing. Single-JVM local mode
-  * cannot lose an executor, so the cheap barrier is right here; a
-  * long chain on a real cluster should flip to reliable
-  * `checkpoint()` against the cluster checkpoint dir (same barrier
-  * semantics, adds an HDFS round-trip per step) when executor loss is
-  * a live risk.
+  * CHAIN DISCIPLINE: every step of the chain is pinned through
+  * `Fixpoint.pin` (bounded: the frames are #areas × 13 at any corpus
+  * size) before the next consumes it; its doc gives the reasons.
+  * `siarChainEx`, `siarChainFinal` and `stochChain` are the only chain
+  * builders, so no query can reintroduce the unbarriered shape;
+  * `Round6OpsSpec` pins the optimized-plan size.
   */
 object EpiQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -364,15 +345,9 @@ object EpiQueries {
 
   /** The full interleaved chain — `mats.size + 1` infection steps with a
     * move through `mats(i)` between consecutive ones. Every inter-step
-    * frame is localCheckpoint-ed (see CHAIN DISCIPLINE above): the
-    * checkpoint both truncates the LINEAGE for the successor (with
-    * plain persist every step's analyzed plan still carries the whole
-    * prefix, so driver-side planning grows quadratically with depth —
-    * measured as the dominant cost of the 13-step g22b) and serves the
+    * frame is pinned (see CHAIN DISCIPLINE above), which also serves the
     * per-step NI aggregate (g23/g28) from the same materialized blocks.
-    * The frames are #areas × 13 — block-manager noise at any corpus
-    * size; this is the t10/g19 iterative-query recipe. Returns
-    * (per-step transfer frames, post-move states, final state). */
+    * Returns (per-step transfer frames, post-move states, final state). */
   private[graft] def siarChain(s0: DataFrame, mats: Seq[DataFrame],
                                coef: Seq[Long] = Coef)
       : (Seq[DataFrame], Seq[DataFrame], DataFrame) =
@@ -390,20 +365,18 @@ object EpiQueries {
     val transfers = Seq.newBuilder[DataFrame]
     val moved = Seq.newBuilder[DataFrame]
     var state = s0
-    // every frame here is #areas(×reps) rows — Portable.pinRound keeps
-    // each round's checkpoint to a single block
     mats.foreach { m =>
-      val t = Portable.pinRound(infectPre(state))
+      val t = Fixpoint.pin(infectPre(state), bounded = true)
       transfers += t
-      state = Portable.pinRound(moveStep(t.selectExpr(stages(3): _*), m, extras))
+      state = Fixpoint.pin(moveStep(t.selectExpr(stages(3): _*), m, extras), bounded = true)
       moved += state
     }
-    val tLast = Portable.pinRound(infectPre(state))
+    val tLast = Fixpoint.pin(infectPre(state), bounded = true)
     transfers += tLast
     (transfers.result(), moved.result(), tLast.selectExpr(stages(3): _*))
   }
 
-  /** Final-state-only chain: one localCheckpoint per STEP (infect+move
+  /** Final-state-only chain: one pin per STEP (infect+move
     * fused into a single barrier span) instead of [[siarChainEx]]'s two.
     * Correct only when the caller consumes nothing but the final state —
     * the per-step transfer frames are never materialized (g22/g22b;
@@ -423,7 +396,7 @@ object EpiQueries {
       stages.foldLeft(st)((d, sg) => d.selectExpr(sg: _*))
     var state = s0
     mats.foreach { m =>
-      state = Portable.pinRound(moveStep(infect(state), m))
+      state = Fixpoint.pin(moveStep(infect(state), m), bounded = true)
     }
     infect(state)
   }
@@ -439,7 +412,7 @@ object EpiQueries {
   /** The stochastic chain (g29): same interleave as [[siarChainEx]],
     * every transfer drawn by the counter-based RNG. `s0rep` must carry
     * (rep, area, s0..r2) in whole persons. Returns the final wide state
-    * per replica. Same CHAIN DISCIPLINE: localCheckpoint per step. */
+    * per replica. Same CHAIN DISCIPLINE: one pin per step. */
   private[graft] def stochChain(s0rep: DataFrame,
                                 mats: Seq[DataFrame]): DataFrame = {
     def infect(st: DataFrame, step: Int): DataFrame =
@@ -454,10 +427,10 @@ object EpiQueries {
     // cached generated class
     mats.foreach { m =>
       val aggs = stochMoveExprs(sparkDiv, sparkRng, step).map(expr)
-      state = Portable.pinRound(infect(state, step).alias("p")
+      state = Fixpoint.pin(infect(state, step).alias("p")
         .join(broadcast(m.alias("m")), expr("p.area = m.src"), "left")
         .groupBy(expr("p.rep").as("rep"), expr("coalesce(m.dst, p.area)").as("area"))
-        .agg(aggs.head, aggs.tail: _*))
+        .agg(aggs.head, aggs.tail: _*), bounded = true)
       step += 1
     }
     infect(state, step)
@@ -600,7 +573,7 @@ object EpiQueries {
     // ── g22: three infection steps interleaved with two move steps
     //    through the two busiest hourly mobility matrices (chosen
     //    in-plan, deterministically: top-2 hours by transition count,
-    //    applied chronologically). Inter-step frames persisted — see
+    //    applied chronologically). Inter-step frames pinned — see
     //    CHAIN DISCIPLINE in the object doc. ──
     ("g22_siar_step",
       (s: SparkSession, dir: String) => {

@@ -27,19 +27,6 @@ import org.apache.spark.sql.functions._
   * Spark `hour()` is INT — both would otherwise drift in dtype).
   */
 object Portable {
-  /** Per-round lineage pin for iterative chains whose state frame is
-    * BOUNDED (regions / areas / SIAR compartments — a few hundred rows
-    * at any corpus size, never corpus-scaling): coalesce to one
-    * partition before the eager localCheckpoint, so each round stores
-    * ONE block instead of #shuffle-partitions near-empty ones. The r11
-    * judge traced the iterative class's host-IO sensitivity to exactly
-    * this block-manager traffic; the r12 A/B at sf0.1 measures the
-    * class at 62.5s → see SURVEY §6 for the outcome. Corpus-scaling
-    * state (t10 edge frames, v28's per-vector dmin) must NOT use this
-    * — single-partition rounds would serialize real work at 100 TB. */
-  def pinRound(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    df.coalesce(1).localCheckpoint()
-
   /** Whole-second timestamp rendering — the portable output form for every
     * judged timestamp column (Spark reads events at micros, DuckDB at nanos;
     * both floor to the same second). */

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Fixpoint, Tables}
 import graft.sources.GraftCatalog
 import Portable._
 
@@ -326,62 +326,39 @@ object TextQueries {
 
   /** t10's converged min-label propagation over the LSH duplicate
     * edges — (doc_id, cluster) for every doc touching at least one
-    * candidate edge; shared by t10 (cluster table) and t27 (apply).
-    * The convergence counter is a driver-side scalar (the t10b
-    * discipline); all cluster state stays distributed. */
-  private[graft] def dupLabels(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-
-        val bands = lshBands(
-          shingleIndex(seededDocs(s, dir)).drop("source")).persist()
-        val edges = lshCandidates(bands)
-        // both directions from ONE pass over the pair join (a two-branch
-        // union would run the band self-join twice)
-        val sym = edges.select(explode(array(
-            struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-            struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"))
-          .persist()
-        minLabels(sym, "t10")
+    * candidate edge; shared by t10 (cluster table) and t27 (apply), each
+    * passing its own name as `query`. All cluster state stays
+    * distributed. */
+  private[graft] def dupLabels(s: SparkSession, dir: String, query: String): DataFrame = {
+    val bands = lshBands(
+      shingleIndex(seededDocs(s, dir)).drop("source")).persist()
+    val edges = lshCandidates(bands)
+    // both directions from ONE pass over the pair join (a two-branch
+    // union would run the band self-join twice)
+    val sym = edges.select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .persist()
+    minLabels(sym, query)
   }
 
   /** Min-label propagation over the symmetric edge frame `sym` (src,
     * dst): every vertex ends labelled (doc_id, cluster) with its
-    * component's min doc_id. Fails loudly, naming `query`, when 25
-    * rounds do not converge. */
-  private def minLabels(sym: org.apache.spark.sql.DataFrame,
-                        query: String): org.apache.spark.sql.DataFrame = {
-    // Per-round lineage truncation is load-bearing: persist() caches
-    // rows but Catalyst still re-optimizes the whole accumulated plan
-    // every round (it doubles per iteration — round 4 spent 6x round
-    // 1 purely in the optimizer). localCheckpoint(eager) pins the
-    // rows AND cuts the plan; on a real cluster use checkpoint() to
-    // reliable storage for fault tolerance.
-    var labels = sym.select(col("src").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 25) {
+    * component's min doc_id. A row moves when a neighbour offers a
+    * smaller label. */
+  private def minLabels(sym: DataFrame, query: String): DataFrame =
+    Fixpoint.converge(query, sym.select(col("src").as("doc_id")).distinct()
+        .select(col("doc_id"), col("doc_id").as("cluster"))) { labels =>
       val nmin = sym
         .join(labels.select(col("doc_id").as("dst"), col("cluster").as("ncl")), "dst")
         .groupBy(col("src")).agg(min(col("ncl")).as("nmin"))
-      val next = labels
+      labels
         .join(nmin.select(col("src").as("doc_id"), col("nmin")), Seq("doc_id"), "left")
         .select(col("doc_id"),
-          least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
-        .localCheckpoint(true)
-      changed = next
-        .join(labels.select(col("doc_id"), col("cluster").as("old")), "doc_id")
-        .where(col("cluster") =!= col("old")).count()
-      labels = next
-      rounds += 1
+          least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"),
+          (col("nmin") < col("cluster")).as("moved"))
     }
-    // a silent round-cap exit would return plausible but WRONG
-    // labels for a component of diameter > the cap — fail loudly
-    require(changed == 0,
-      s"$query label propagation not converged after $rounds rounds")
-    labels
-  }
 
   /** One oracle, two judged engines: the recursive-CTE transitive
     * closure over the LSH candidate edge set labels every doc with its
@@ -1512,7 +1489,7 @@ object TextQueries {
     //    edge set. Seeded corpus, so components exist at every SF. ──
     ("t10_dup_clusters",
       (s: SparkSession, dir: String) =>
-        dupLabels(s, dir)
+        dupLabels(s, dir, "t10")
           .select(col("doc_id"), col("cluster"),
             (col("doc_id") === col("cluster")).as("is_rep"))
           .orderBy(col("doc_id")),
@@ -1529,7 +1506,7 @@ object TextQueries {
     //    re-derivation. ──
     ("t27_dedup_apply",
       (s: SparkSession, dir: String) => {
-        val labels = dupLabels(s, dir)
+        val labels = dupLabels(s, dir, "t27")
         seededDocs(s, dir).select(col("doc_id"), col("source"))
           .join(labels.select(col("doc_id"), col("cluster")), Seq("doc_id"), "left")
           .select(col("source"),
@@ -1569,13 +1546,8 @@ object TextQueries {
           shingleIndex(seededDocs(s, dir)).drop("source")).persist()
         // canonical undirected edges (u, v) with u < v throughout: both
         // star passes emit (min-of-group, other), so canon holds per round
-        var edges = lshCandidates(bands)
-          .select(col("doc_a").as("u"), col("doc_b").as("v"))
-          .localCheckpoint(true) // same per-round lineage truncation as t10
-        var converged = false
-        var rounds = 0
-        var prevN = edges.count() // once, before the loop — not per round
-        while (!converged && rounds < 25) {
+        val stars = Fixpoint.converge("t10b", lshCandidates(bands)
+            .select(col("doc_a").as("u"), col("doc_b").as("v"))) { edges =>
           // large-star: from each node, all LARGER neighbors re-attach to
           // its minimum (neighbor or self)
           val sym = edges.select(explode(array(
@@ -1599,27 +1571,15 @@ object TextQueries {
             .where(col("u") =!= col("v"))
             .unionByName(mS.select(col("m").as("u"), col("src").as("v")))
             .distinct()
-            .localCheckpoint(true)
-          // fixpoint when the canonical edge set is unchanged (count
-          // equal to last round's AND no novel edge). ONE aggregate job
-          // per round: both edge sets are distinct canonical pairs, so
-          // a left join counting misses is exactly exceptAll-nonempty —
-          // the previous count()+count()+exceptAll trio was 3 jobs per
-          // round for the same two numbers
-          val Array(nNext, novel) = small.alias("s")
-            .join(edges.alias("e"),
-              expr("s.u = e.u AND s.v = e.v"), "left")
-            .agg(count(lit(1)), sum(when(expr("e.u IS NULL"), 1L).otherwise(0L)))
-            .collect().head.toSeq.map(x => Option(x).fold(0L)(_.asInstanceOf[Long])).toArray
-          converged = nNext == prevN && novel == 0
-          prevN = nNext
-          edges = small
-          rounds += 1
+          // fixpoint when the canonical edge set is unchanged: both sets
+          // are distinct canonical pairs, so "same count and no novel
+          // edge" is set equality, and a novel edge is a left-join miss
+          small.alias("s")
+            .join(edges.alias("e"), expr("s.u = e.u AND s.v = e.v"), "left")
+            .select(col("s.u"), col("s.v"), col("e.u").isNull.as("moved"))
         }
-        require(converged,
-          s"t10b star algorithm not converged after $rounds rounds")
-        edges.select(col("v").as("doc_id"), col("u").as("cluster"))
-          .unionByName(edges.select(col("u").as("doc_id"), col("u").as("cluster")))
+        stars.select(col("v").as("doc_id"), col("u").as("cluster"))
+          .unionByName(stars.select(col("u").as("doc_id"), col("u").as("cluster")))
           .distinct()
           .select(col("doc_id"), col("cluster"),
             (col("doc_id") === col("cluster")).as("is_rep"))
@@ -2268,14 +2228,12 @@ object TextQueries {
     //    adjacent symbol pairs over the word-frequency table (weighted by
     //    wf), take the argmax (cnt desc, then pair — deterministic
     //    cross-engine tie-break), RE-SEGMENT every word by greedy
-    //    left-to-right application of that merge, repeat. This is the
-    //    t10/g19 iterative-chain recipe applied to tokenizer induction:
-    //    the loop state is the segmented word-frequency table —
-    //    VOCAB-bounded, never corpus-bounded — `localCheckpoint(true)`
-    //    per merge truncates the per-round lineage exactly as t10's
-    //    label frames do, so merge N costs the same as merge 1 and the
-    //    loop extends to the thousands of merges a production tokenizer
-    //    trains. Re-segmentation is a left FOLD over the symbol list
+    //    left-to-right application of that merge, repeat. The loop
+    //    state is the segmented word-frequency table — VOCAB-bounded,
+    //    never corpus-bounded — pinned per merge by `Fixpoint.pin`, so
+    //    merge N costs the same as merge 1 and the loop extends to the
+    //    thousands of merges a production tokenizer trains.
+    //    Re-segmentation is a left FOLD over the symbol list
     //    with a string accumulator (merge = append WITHOUT the space
     //    separator) — handles runs exactly ("l l l l" → "ll ll") and
     //    never interprets symbols as patterns, so it is safe for any
@@ -2427,9 +2385,8 @@ object TextQueries {
 
   /** The t23b/t24 BPE training loop: collapse the corpus to its word-
     * frequency table once, then iterate (argmax pair → greedy reseg).
-    * State is (word, seg, wf) — VOCAB-bounded, localCheckpoint'd per
-    * merge (the t10/g19 chain discipline) so merge N costs the same as
-    * merge 1. Returns the per-step 1-row merge frames and the final
+    * State is (word, seg, wf) — VOCAB-bounded, pinned per merge by
+    * `Fixpoint.pin`. Returns the per-step 1-row merge frames and the final
     * segmentation state. The argmax rides back into the plan as a
     * broadcast cross join — no driver collect anywhere. */
   private[graft] def bpeTrain(s: SparkSession, dir: String, nMerges: Int): (Seq[DataFrame], DataFrame) = {
@@ -2437,16 +2394,15 @@ object TextQueries {
       .select(explode(split(col("text"), " ")).as("word"))
       .where(length(col("word")) >= 2)
       .groupBy(col("word")).agg(count(lit(1)).as("wf"))
-    var seg = words.select(col("word"),
+    var seg = Fixpoint.pin(words.select(col("word"),
       concat_ws(" ", expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))")).as("seg"),
-      col("wf"))
-      .localCheckpoint(true)
+      col("wf")), bounded = false)
     val merges = Seq.newBuilder[DataFrame]
     for (step <- 1 to nMerges) {
-      // argmax pair of the CURRENT segmentation; localCheckpoint pins
-      // the 1-row result so the reseg and the output row can't diverge
-      val best = seg
+      // argmax pair of the CURRENT segmentation, pinned so the reseg and
+      // the output row can't diverge
+      val best = Fixpoint.pin(seg
         .select(split(col("seg"), " ").as("syms"), col("wf"))
         .where(size(col("syms")) >= 2)
         .select(col("wf"), explode(expr(
@@ -2454,22 +2410,20 @@ object TextQueries {
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("wf")).cast("long").as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1)
-        .localCheckpoint(true)
+        .limit(1), bounded = false)
       merges += best.select(lit(step.toLong).as("step"),
         col("a"), col("b"), col("cnt"))
       // greedy left-to-right merge as a string-accumulator fold: merge =
       // append WITHOUT the space separator; the full-token test
       // (acc = a OR acc ends with ' '||a) cannot false-match a longer or
       // already-merged symbol, and symbols are never used as patterns
-      seg = seg.crossJoin(broadcast(best.select(col("a"), col("b"))))
+      seg = Fixpoint.pin(seg.crossJoin(broadcast(best.select(col("a"), col("b"))))
         .select(col("word"), expr(
           "aggregate(split(seg, ' '), '', (acc, x) -> " +
             "CASE WHEN acc = '' THEN x " +
             "WHEN x = b AND (acc = a OR right(acc, length(a) + 1) = ' ' || a) THEN acc || b " +
             "ELSE acc || ' ' || x END)").as("seg"),
-          col("wf"))
-        .localCheckpoint(true)
+          col("wf")), bounded = false)
     }
     (merges.result(), seg)
   }

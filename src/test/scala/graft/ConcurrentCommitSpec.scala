@@ -58,7 +58,7 @@ class ConcurrentCommitSpec extends SparkSpec {
       }
       // the final state is the exact union of the nine waves
       assert(spark.table(s"$cat.t").count() == (writers + 1) * 100L)
-      assert(spark.table(s"$cat.t").agg(sum($"doc_id")).head.getLong(0) ==
+      assert(spark.table(s"$cat.t").agg(sum($"doc_id")).head().getLong(0) ==
         (0L until (writers + 1) * 100L).sum)
       // the change feed replays every appended row exactly once,
       // however the commits interleaved
@@ -98,7 +98,7 @@ class ConcurrentCommitSpec extends SparkSpec {
       // counts are strictly increasing by exactly one wave per version
       val counts = versions.map { v =>
         spark.sql(s"SELECT count(*) FROM $cat.t VERSION AS OF $v")
-          .head.getLong(0)
+          .head().getLong(0)
       }
       assert(counts == versions.indices.map(i => (i + 1) * 50L),
         s"versions must ladder one wave at a time, got $counts")

@@ -106,13 +106,4 @@ class GeoFunctionsSpec extends AnyFunSuite {
         r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))) < 1e-9)
     }
   }
-
-  test("SQL-registered geo UDFs work from spark.sql") {
-    val spark = SparkSpec.spark
-    register(spark)
-    val r = spark.sql(
-      "SELECT geohash5(31.2304, 121.4737) AS g, haversine_m(0,0,1,0) AS d").head()
-    assert(r.getString(0) == "wtw3s")
-    assert(math.abs(r.getDouble(1) - math.Pi * 6372800.0 / 180.0) < 1e-6)
-  }
 }

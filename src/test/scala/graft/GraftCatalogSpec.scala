@@ -175,7 +175,8 @@ class GraftCatalogSpec extends SparkSpec {
     ).foreach { case (suffix, ddl) =>
       val table = catalog.loadTable(Identifier.of(Array("t"), suffix))
       assert(table.name() == s"t.$suffix")
-      assert(table.schema() == StructType.fromDDL(ddl), suffix)
+      assert(table.columns().toSeq.map(c => (c.name, c.dataType, c.nullable)) ==
+        StructType.fromDDL(ddl).fields.toSeq.map(f => (f.name, f.dataType, f.nullable)), suffix)
     }
   }
 }

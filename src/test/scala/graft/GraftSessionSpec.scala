@@ -13,7 +13,7 @@ class GraftSessionSpec extends SparkSpec {
 
   test("release drops both catalog caches and checkpointed RDDs") {
     // g32 persists shared subtrees in the catalog cache; t10 keeps its
-    // rounds as localCheckpoint blocks, which live outside that cache
+    // rounds as Fixpoint.pin blocks, which live outside that cache
     Seq("g32_radiation_model", "t10_dup_clusters").foreach { q =>
       SparkEntry.queries(q)(spark, dir).write.mode("overwrite").format("noop").save()
     }
@@ -78,10 +78,10 @@ class GraftSessionSpec extends SparkSpec {
     }
   }
 
-  /** Each `.scala` file under `src/` holding `needle`, with its count.
+  /** Each `.scala` file under `root` holding `needle`, with its count.
     * Callers split their needles so this file does not match itself. */
-  private def hits(needle: String): Map[String, Int] =
-    Files.walk(Paths.get("src")).iterator().asScala
+  private def hits(needle: String, root: String = "src"): Map[String, Int] =
+    Files.walk(Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map((p: Path) => p.getFileName.toString -> (Files.readString(p).split(needle, -1).length - 1))
       .filter(_._2 > 0).toMap
@@ -109,5 +109,14 @@ class GraftSessionSpec extends SparkSpec {
     // procedures and metadata tables share RowsScan
     assert(hits("extends " + "LocalScan") == Map("GraftCatalog.scala" -> 1))
     assert(hits("new " + "LocalScan").isEmpty)
+  }
+
+  test("one round pin and one convergence loop under src/") {
+    // every iterative chain pins its rounds through Fixpoint.pin
+    assert(hits("local" + "Checkpoint", "src/main") == Map("Fixpoint.scala" -> 1))
+    assert(hits("pin" + "Round").isEmpty)
+    // every run-to-fixpoint loop is Fixpoint.converge, so the cap's
+    // failure message is written once
+    assert(hits("not " + "converged") == Map("Fixpoint.scala" -> 1))
   }
 }

@@ -55,7 +55,7 @@ class LakehouseRefsSpec extends SparkSpec {
       // the tag spelling resolves on both SQL and path APIs
       spark.sql(s"CALL $cat.system.create_tag('t', 'pre', 1)")
       assert(spark.sql(s"SELECT count(*) FROM $cat.t VERSION AS OF 'pre'")
-        .head.getLong(0) == 100)
+        .head().getLong(0) == 100)
     }
   }
 
@@ -77,10 +77,10 @@ class LakehouseRefsSpec extends SparkSpec {
       val s2 = spark
       import s2.implicits._
       assert(spark.table(s"$cat.t.branch_dev")
-        .agg(sum($"n_chars")).head.getLong(0) ==
+        .agg(sum($"n_chars")).head().getLong(0) ==
         (0L until 100L).filter(_ % 4 != 0).sum + 25 * 1000,
         "branch update applies exactly to the branch's surviving rows")
-      assert(spark.table(s"$cat.t").agg(sum($"n_chars")).head.getLong(0) ==
+      assert(spark.table(s"$cat.t").agg(sum($"n_chars")).head().getLong(0) ==
         (0L until 100L).sum, "main n_chars untouched by branch verbs")
       // a COPY-ON-WRITE table's branch handle refuses row-level verbs
       ()
@@ -133,7 +133,7 @@ class LakehouseRefsSpec extends SparkSpec {
       }
       assert(e7.getMessage.contains("dev"), e7.getMessage)
       spark.sql(s"CALL $cat.system.drop_branch('t', 'dev')")
-      val row = spark.sql(s"CALL $cat.system.converge('t')").head
+      val row = spark.sql(s"CALL $cat.system.converge('t')").head()
       assert(row.getLong(0) >= 1L, "the dropped branch's file reclaims")
       assert(LedgerSource.listRefs(new File(root, "t").getPath,
         "branch").isEmpty)
@@ -248,11 +248,11 @@ class LakehouseRefsSpec extends SparkSpec {
       wave(40, 70, "d").writeTo(s"$cat.t.branch_dev").append()     // v2
       // the branch commit is a real chain version — numeric travel works
       assert(spark.sql(s"SELECT count(*) FROM $cat.t VERSION AS OF 2")
-        .head.getLong(0) == 70)
+        .head().getLong(0) == 70)
       spark.sql(s"CALL $cat.system.drop_branch('t', 'dev')")
       // still reconstructable: drop leaves files until converge
       assert(spark.sql(s"SELECT count(*) FROM $cat.t VERSION AS OF 2")
-        .head.getLong(0) == 70)
+        .head().getLong(0) == 70)
       spark.sql(s"CALL $cat.system.converge('t')").collect()
       val e = intercept[Exception] {
         spark.sql(s"SELECT count(*) FROM $cat.t VERSION AS OF 2").collect()
@@ -278,7 +278,7 @@ class LakehouseRefsSpec extends SparkSpec {
       val tdir = new File(root, "t").getPath
       val mainPre = LedgerSource.readRef(tdir, "branch", "main").get
       val row = spark.sql(
-        s"CALL $cat.system.merge_branch('t', 'dev', 'main')").head
+        s"CALL $cat.system.merge_branch('t', 'dev', 'main')").head()
       assert(row.getString(0) == "main" && row.getLong(2) > 0)
       // merged = (base minus dev's delete) + main's wave + dev's wave:
       // dev's tombstone applies to the shared pre-fork files, main's
@@ -306,7 +306,7 @@ class LakehouseRefsSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("diverged"), e.getMessage)
       spark.sql(s"CALL $cat.system.drop_branch('t', 'dev')")
-      val conv = spark.sql(s"CALL $cat.system.converge('t')").head
+      val conv = spark.sql(s"CALL $cat.system.converge('t')").head()
       assert(conv.getLong(0) == 0,
         "a merged lineage owns every file — converge reclaims zero")
       assert(spark.table(s"$cat.t").count() == 160)

@@ -35,7 +35,7 @@ class LedgerCloneSpec extends SparkSpec {
     withCatalog { (cat, root) =>
       wave(0, 100).writeTo(s"$cat.t").tableProperty("mor", "true").create()
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id % 5 = 0")   // tombstones
-      val row = spark.sql(s"CALL $cat.system.clone('t', 't2')").head
+      val row = spark.sql(s"CALL $cat.system.clone('t', 't2')").head()
       assert(row.getLong(0) >= 2L, "data + tombstone files linked")
       // the summary counts THROUGH the linked MoR overlay: 100 raw
       // header rows minus the 20 tombstoned — not the raw file rows

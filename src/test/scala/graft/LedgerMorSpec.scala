@@ -219,7 +219,7 @@ class LedgerMorSpec extends SparkSpec {
       val before = dataFileState(dir)
       assert(before.size == 4)
       val row = spark.sql(
-        s"CALL $cat.system.rewrite_tombstones('t', 0.3)").head
+        s"CALL $cat.system.rewrite_tombstones('t', 0.3)").head()
       assert(row.getLong(0) == 1 && row.getLong(1) == 60,
         s"exactly bucket 0 folds its 60 tombstones, got $row")
       val after = dataFileState(dir)
@@ -251,7 +251,7 @@ class LedgerMorSpec extends SparkSpec {
       spark.sql(s"DELETE FROM $cat.t " +
         s"WHERE doc_id < 100 AND lang IS NOT NULL")       // bucket0: 1.0
       val row = spark.sql(
-        s"CALL $cat.system.rewrite_tombstones('t', 0.99)").head
+        s"CALL $cat.system.rewrite_tombstones('t', 0.99)").head()
       assert(row.getLong(0) == 1 && row.getLong(1) == 100)
       assert(LedgerSource.ledgerFiles(dir).length == 1,
         "zero survivors leave no fresh file")
@@ -259,7 +259,7 @@ class LedgerMorSpec extends SparkSpec {
       // ratio can never EXCEED 1.0 — frac=1.0 is the explicit no-op
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id % 10 = 0")
       val noop = spark.sql(
-        s"CALL $cat.system.rewrite_tombstones('t', 1.0)").head
+        s"CALL $cat.system.rewrite_tombstones('t', 1.0)").head()
       assert(noop.getLong(0) == 0 && noop.getLong(1) == 0)
       assert(LedgerSource.deleteFiles(dir).nonEmpty)
       assert(spark.table(s"$cat.t").count() == 90)

@@ -271,7 +271,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
                 case _ => rng.nextDouble()
               }
               val row = spark.sql(
-                s"CALL $cat.system.rewrite_tombstones('t', $frac)").head
+                s"CALL $cat.system.rewrite_tombstones('t', $frac)").head()
               val after = LedgerSource.deleteFiles(root + "/t")
                 .map(LedgerSource.tombstoneTotal).sum
               assert(before == after + row.getLong(1),

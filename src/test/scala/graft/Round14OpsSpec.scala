@@ -65,7 +65,7 @@ class Round14OpsSpec extends SparkSpec {
     assert(back.count() == 300L)
     // the rewritten files stay losslessly decodable, nulls and all
     assert(back.where(col("doc_id").between(150L, 249L)).count() == 0L)
-    assert(back.agg(sum(col("n_chars"))).head.getLong(0) ==
+    assert(back.agg(sum(col("n_chars"))).head().getLong(0) ==
       (0L until 400L).filterNot(i => i >= 150 && i <= 249).map(_ * 3).sum)
   }
 
@@ -118,7 +118,7 @@ class Round14OpsSpec extends SparkSpec {
     val back = spark.table(s"$cat.t")
     assert(back.count() == 400L)
     assert(back.where($"n_chars" >= 100000L).count() == 200L)
-    assert(back.agg(sum($"n_chars")).head.getLong(0) ==
+    assert(back.agg(sum($"n_chars")).head().getLong(0) ==
       (0L until 400L).map(_ * 3).sum + 200L * 100000L)
   }
 
@@ -263,7 +263,7 @@ class Round14OpsSpec extends SparkSpec {
     stats.sliding(2).foreach { case Array((_, hi1, _), (lo2, _, _)) =>
       assert(hi1 < lo2, s"overlapping post-compact ranges: ${stats.mkString}")
     }
-    assert(spark.table(s"$cat.t").agg(sum(col("n_chars"))).head.getLong(0) ==
+    assert(spark.table(s"$cat.t").agg(sum(col("n_chars"))).head().getLong(0) ==
       (0L until 200L).map(_ * 2).sum)
     intercept[Exception] { spark.sql(s"CALL $cat.system.vacuum('t')") }
     assert(spark.sql(s"SHOW PROCEDURES IN $cat.system").count() >= 1)
@@ -313,11 +313,11 @@ class Round14OpsSpec extends SparkSpec {
     // each version reconstructs its prefix of the append history
     Seq(1L -> 100L, 2L -> 200L, 3L -> 300L).foreach { case (v, n) =>
       assert(spark.sql(
-        s"SELECT count(*) FROM $cat.t VERSION AS OF $v").head.getLong(0) == n)
+        s"SELECT count(*) FROM $cat.t VERSION AS OF $v").head().getLong(0) == n)
     }
     // TIMESTAMP AS OF far-future resolves to the newest commit
     assert(spark.sql(s"SELECT count(*) FROM $cat.t " +
-      "TIMESTAMP AS OF '2999-01-01'").head.getLong(0) == 300L)
+      "TIMESTAMP AS OF '2999-01-01'").head().getLong(0) == 300L)
     // snapshots refuse every mutation verb
     val snap = new LedgerTable(tdir, pinnedVersion = Some(1L))
     intercept[IllegalArgumentException] { snap.newWriteBuilder(null) }
@@ -330,7 +330,7 @@ class Round14OpsSpec extends SparkSpec {
     spark.sql(s"DELETE FROM $cat.t WHERE doc_id < 100")
     assert(LedgerSource.listVersions(tdir) == Seq(1L, 2L, 3L, 4L))
     assert(spark.sql(s"SELECT count(*) FROM $cat.t VERSION AS OF 4")
-      .head.getLong(0) == 200L)
+      .head().getLong(0) == 200L)
     val e = intercept[Exception] {
       spark.sql(s"SELECT count(*) FROM $cat.t VERSION AS OF 1").collect()
     }

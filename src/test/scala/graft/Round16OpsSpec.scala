@@ -166,7 +166,7 @@ class Round16OpsSpec extends SparkSpec {
       assert(spark.table(s"$cat.t.branch_dev").count() == 50,
         "the branch fork stays isolated from the race")
       spark.sql(s"CALL $cat.system.drop_branch('t', 'dev')")
-      val conv = spark.sql(s"CALL $cat.system.converge('t')").head
+      val conv = spark.sql(s"CALL $cat.system.converge('t')").head()
       assert(conv.getLong(0) == 0,
         s"a lossless race leaves no orphans, reclaimed ${conv.getLong(0)}")
       assert(spark.table(s"$cat.t").count() == 250)

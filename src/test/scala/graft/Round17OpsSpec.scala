@@ -62,7 +62,7 @@ class Round17OpsSpec extends SparkSpec {
       LedgerSource.closeForkRace(d, 1)
       // the orphan's files are back on main's lineage, exactly once
       assert(spark.table(s"$cat.t").count() == 200L)
-      assert(spark.table(s"$cat.t").agg(sum(col("doc_id"))).head.getLong(0)
+      assert(spark.table(s"$cat.t").agg(sum(col("doc_id"))).head().getLong(0)
         == (0L until 200L).sum)
       val mainV = LedgerSource.readRef(d, "branch", "main").get
       assert(LedgerSource.readManifest(d, 2).toSet
@@ -238,7 +238,7 @@ class Round17OpsSpec extends SparkSpec {
           // dev's lineage is intact regardless
           assert(spark.sql(
             s"SELECT count(*) FROM $cat.t VERSION AS OF 'dev'")
-            .head.getLong(0) >= 200L)
+            .head().getLong(0) >= 200L)
         } finally { pool.shutdown(): Unit }
       }
     }
@@ -382,11 +382,11 @@ class Round17OpsSpec extends SparkSpec {
       } finally { pool.shutdown(): Unit }
       // every append's rows are on main, whatever the interleaving
       assert(spark.table(s"$cat.t").count() == (writers + 1) * 100L)
-      assert(spark.table(s"$cat.t").agg(sum(col("doc_id"))).head.getLong(0)
+      assert(spark.table(s"$cat.t").agg(sum(col("doc_id"))).head().getLong(0)
         == (0L until (writers + 1) * 100L).sum)
       // the fork itself resolves (at whatever head it validated)
       assert(spark.sql(s"SELECT count(*) FROM $cat.t VERSION AS OF 'dev'")
-        .head.getLong(0) >= 100L)
+        .head().getLong(0) >= 100L)
     }
   }
 }

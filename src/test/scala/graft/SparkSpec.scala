@@ -35,4 +35,20 @@ abstract class SparkSpec extends AnyFunSuite {
     val (name, root) = freshCatalog()
     body(name, root)
   }
+
+  /** The number of Spark jobs `body` runs. Job ids are sequential, so
+    * they are the ids strictly between two one-task marker jobs; unlike
+    * a listener, this needs no wait for the listener bus to drain. */
+  def jobsRun(body: => Unit): Int = {
+    def marker(): Int = {
+      val sc = spark.sparkContext
+      val f = sc.submitJob(sc.parallelize(Seq(1), 1), (_: Iterator[Int]) => (),
+        Seq(0), (_: Int, _: Unit) => (), ())
+      f.get()
+      f.jobIds.head
+    }
+    val before = marker()
+    body
+    marker() - before - 1
+  }
 }

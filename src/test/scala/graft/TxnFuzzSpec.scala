@@ -131,12 +131,12 @@ class TxnFuzzSpec extends SparkSpec {
       assert(gotA.length == gotA.distinct.length,
         s"[seed=$seed] duplicated rows on a")
       assert(gotA.toSet == expectA.toSet,
-        s"[seed=$seed] a: missing=${(expectA -- gotA.toSet).take(5)} " +
+        s"[seed=$seed] a: missing=${expectA.diff(gotA.toSet).take(5)} " +
           s"extra=${(gotA.toSet -- expectA).take(5)}")
       assert(gotB.length == gotB.distinct.length,
         s"[seed=$seed] duplicated rows on b")
       assert(gotB.toSet == expectB.toSet,
-        s"[seed=$seed] b: missing=${(expectB -- gotB.toSet).take(5)} " +
+        s"[seed=$seed] b: missing=${expectB.diff(gotB.toSet).take(5)} " +
           s"extra=${(gotB.toSet -- expectB).take(5)}")
     }
     // the change feed over main's lineage replays every surviving row
