@@ -58,6 +58,8 @@ object Bench {
       case rest => (None, rest)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional name filter for local iteration; the driver passes none
+    val selected = SparkEntry.select(names)
     val spark = GraftSession.build()
     val sc = spark.sparkContext
     val meter = new Meter
@@ -77,9 +79,6 @@ object Bench {
         System.err.println(s"[bench] WARMUP FAILED for table '$t' in $sfDir: $e")
       }
     }
-    val selected = // optional name filter for local iteration; driver passes none
-      if (names.nonEmpty) SparkEntry.queries.filter(kv => names.contains(kv._1))
-      else SparkEntry.queries
     plansDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     // best-of-N per query (default 3): this VM's single-sample timings
     // swing ±25% and occasionally 2× under page-cache/GC interference

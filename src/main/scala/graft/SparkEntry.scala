@@ -39,6 +39,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatMap(_._1).toMap
 
+  /** The queries a runner was asked for: the whole catalog when `names`
+    * is empty. A name the catalog does not hold fails the run before it
+    * starts, so a misspelling never silently shrinks it. */
+  def select(names: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains).distinct
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(" ")}")
+    if (names.isEmpty) all else all.filter(kv => names.contains(kv._1))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

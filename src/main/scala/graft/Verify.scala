@@ -1,18 +1,15 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each selected query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing query names subset the run (local iteration;
     // the driver passes none → full catalog)
-    val names = args.drop(2).toSet
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (names.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter(kv => names.contains(kv._1))
     val failed = selected.toSeq.flatMap { case (name, fn) =>
       val err =
         try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); None }

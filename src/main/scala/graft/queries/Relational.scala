@@ -968,8 +968,6 @@ object Relational {
     ("s35_storage_partitioned_join",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
         GraftCatalog.register(s, "graft_spj", scratchPath("s35_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
@@ -2736,9 +2734,6 @@ object Relational {
     ("s65_layout_evolution",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-          "true")
         GraftCatalog.register(s, "graft_le", scratchPath("s65_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")
@@ -2803,9 +2798,6 @@ object Relational {
     ("s66_write_distribution",
       (s: SparkSession, dir: String) => {
         import s.implicits._
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-          "true")
         GraftCatalog.register(s, "graft_wd", scratchPath("s66_catroot"))
         val docs = Tables(s, dir, "documents")
           .select($"doc_id", $"lang", $"n_chars")

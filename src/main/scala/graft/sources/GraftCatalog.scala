@@ -112,14 +112,12 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     // FRESH session's first loadTable re-registers them and the
     // auto-rewrite fires with no driver-side setup — the registry is a
     // cache of the catalog's state, not the source of truth
-    LedgerSource.readPropsPrefixed(d.getPath, "mv.").foreach {
-      case (_, spec) => scala.util.Try(graft.plans.MvRegistry.register(
+    val props = LedgerProps.read(d.getPath)
+    props.mvs.foreach { spec =>
+      scala.util.Try(graft.plans.MvRegistry.register(
         graft.plans.MvRegistry.parseDef(d.getPath, spec))): Unit
     }
-    new LedgerTable(d.getPath,
-      bucketWidth = LedgerSource.readBucketWidth(d.getPath),
-      morEnabled = LedgerSource.readMorFlag(d.getPath),
-      ref = mainRef)
+    new LedgerTable(d.getPath, props, ref = mainRef)
   }
 
   /** `<table>.<suffix>` — a view OF the table named by the preceding
@@ -139,9 +137,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         .orElse(Some(name).filter(_.toLowerCase.startsWith("branch_"))
           .map(_.substring("branch_".length))
           .filter(LedgerSource.readRef(bd, "branch", _).isDefined)
-          .map(bname => new LedgerTable(bd,
-            bucketWidth = LedgerSource.readBucketWidth(bd),
-            morEnabled = LedgerSource.readMorFlag(bd),
+          .map(bname => new LedgerTable(bd, LedgerProps.read(bd),
             ref = Some(bname))))
     }
   }
@@ -171,7 +167,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     require(LedgerSource.listVersions(d.getPath).contains(v),
       s"no version $v of $ident (available: " +
         s"${LedgerSource.listVersions(d.getPath).mkString(", ")})")
-    new LedgerTable(d.getPath, pinnedVersion = Some(v))
+    new LedgerTable(d.getPath, LedgerProps.read(d.getPath), pinnedVersion = Some(v))
   }
 
   /** `TIMESTAMP AS OF` maps to the newest manifest committed at or
@@ -189,7 +185,8 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     }
     require(candidates.nonEmpty,
       s"no version of $ident existed at timestamp $timestampMicros")
-    new LedgerTable(d.getPath, pinnedVersion = Some(candidates.max))
+    new LedgerTable(d.getPath, LedgerProps.read(d.getPath),
+      pinnedVersion = Some(candidates.max))
   }
 
   override def tableExists(ident: Identifier): Boolean =
@@ -212,54 +209,15 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         s"BIGINT); got ${schema.simpleString}")
     val d = tableDir(ident)
     if (d.exists()) throw new TableAlreadyExistsException(ident)
+    // every property is validated before the directory exists, so a
+    // refused CREATE leaves no table behind; other keys are ignored
+    val props = LedgerProps.Settable.flatMap { k =>
+      Option(properties.get(k)).flatMap(v =>
+        LedgerProps.parse(k, v, s"table property 'bucket' of $ident")).map(k -> _)
+    }
     require(d.mkdirs(), s"cannot create table directory ${d.getPath}")
-    // the one layout property: `bucket` = doc_id range-bucket width.
-    // Persisted beside the data so writer AND every later reader agree
-    // on the same layout contract (the storage-partitioned-join key).
-    val width = Option(properties.get("bucket")).map { w =>
-      val v = LedgerSource.validBucketWidth(w.toLongOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"table property 'bucket' must be a positive integer; got '$w'")),
-        s"table property 'bucket' of $ident")
-      LedgerSource.writeBucketWidth(d.getPath, v)
-      v
-    }
-    // `mor=true` opts the table's row-level verbs into MERGE-ON-READ
-    // (tombstone files instead of copy-on-write group rewrites);
-    // persisted beside the data so every later loadTable agrees
-    val mor = Option(properties.get("mor")).exists { m =>
-      val v = m.toBooleanOption.getOrElse(throw new IllegalArgumentException(
-        s"table property 'mor' must be true or false; got '$m'"))
-      if (v) LedgerSource.writeProp(d.getPath, "mor", "true")
-      v
-    }
-    // `check` = an enforced table-level CHECK constraint (a SQL
-    // predicate over the fixed schema) — persisted beside the data so
-    // every writer session enforces the same invariant
-    Option(properties.get("check")).filter(_.trim.nonEmpty).foreach { c =>
-      require(!c.contains("\n"), "the 'check' predicate must be one line")
-      LedgerSource.writeProp(d.getPath, "check", c.trim)
-    }
-    // `bloom` = the one non-key column every writer stamps a per-file
-    // Bloom sidecar for (the s64 skip index); persisted beside the
-    // data so writers and scans agree on the indexed column
-    Option(properties.get("bloom")).foreach { c =>
-      require(LedgerSource.BloomableCols(c),
-        s"table property 'bloom' must name a non-key column " +
-          s"(${LedgerSource.BloomableCols.toSeq.sorted.mkString(", ")}); " +
-          s"got '$c'")
-      LedgerSource.writeProp(d.getPath, "bloom", c)
-    }
-    // `zonemap` = the one non-key column every writer stamps a per-file
-    // min/max sidecar for (the s71 range skip); same contract as bloom
-    Option(properties.get("zonemap")).foreach { c =>
-      require(LedgerSource.BloomableCols(c),
-        s"table property 'zonemap' must name a non-key column " +
-          s"(${LedgerSource.BloomableCols.toSeq.sorted.mkString(", ")}); " +
-          s"got '$c'")
-      LedgerSource.writeProp(d.getPath, "zonemap", c)
-    }
-    new LedgerTable(d.getPath, bucketWidth = width, morEnabled = mor)
+    LedgerProps.set(d.getPath, props: _*)
+    new LedgerTable(d.getPath, LedgerProps.read(d.getPath))
   }
 
   /** Schema stays fixed (the format IS the schema) — but CONSTRAINT
@@ -273,23 +231,19 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     changes.foreach {
       case ac: TableChange.AddConstraint => ac.constraint() match {
         case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
-          require(LedgerSource.readCheckConstraint(d.getPath).isEmpty,
-            s"graft-ledger tables hold ONE CHECK constraint — DROP " +
-              s"CONSTRAINT ${LedgerSource.readCheckName(d.getPath)} first")
-          require(!c.predicateSql().contains("\n"),
-            "the CHECK predicate must be one line")
-          LedgerSource.writeProp(d.getPath, "check_name", c.name())
-          LedgerSource.writeProp(d.getPath, "check", c.predicateSql().trim)
+          val have = LedgerProps.read(d.getPath).check
+          require(have.isEmpty, s"graft-ledger tables hold ONE CHECK " +
+            s"constraint — DROP CONSTRAINT ${have.get._1} first")
+          LedgerProps.set(d.getPath, "check_name" -> c.name(),
+            "check" -> LedgerProps.checkSql(c.predicateSql(), "CHECK"))
         case other => throw new UnsupportedOperationException(
           s"graft-ledger supports only CHECK constraints; got ${other.toDDL}")
       }
       case dc: TableChange.DropConstraint =>
-        val have = LedgerSource.readCheckConstraint(d.getPath)
-          .map(_ => LedgerSource.readCheckName(d.getPath))
-        if (have.exists(_.equalsIgnoreCase(dc.name()))) {
-          LedgerSource.removeProp(d.getPath, "check")
-          LedgerSource.removeProp(d.getPath, "check_name")
-        } else if (!dc.ifExists()) throw new IllegalArgumentException(
+        val have = LedgerProps.read(d.getPath).check.map(_._1)
+        if (have.exists(_.equalsIgnoreCase(dc.name())))
+          LedgerProps.remove(d.getPath, "check", "check_name")
+        else if (!dc.ifExists()) throw new IllegalArgumentException(
           s"no constraint named ${dc.name()} on $ident " +
             s"(present: ${have.getOrElse("none")})")
       // `mor` is a WRITE-PATH mode, not a layout fact — toggling it on
@@ -297,14 +251,6 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       // apply whatever tombstones exist; CoW rewrites after a toggle-off
       // leave old tombstone sections dangling harmlessly, scoped to the
       // file names the rewrite retired).
-      case sp: TableChange.SetProperty if sp.property() == "mor" =>
-        val v = sp.value().toBooleanOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"table property 'mor' must be true or false; got '${sp.value()}'"))
-        if (v) LedgerSource.writeProp(d.getPath, "mor", "true")
-        else LedgerSource.removeProp(d.getPath, "mor")
-      case rp: TableChange.RemoveProperty if rp.property() == "mor" =>
-        LedgerSource.removeProp(d.getPath, "mor")
       // LAYOUT (partition-spec) EVOLUTION — s65, Iceberg's spec
       // evolution at ledger scale: `bucket` is a CLAIM the scan
       // VALIDATES per file before reporting KeyGroupedPartitioning,
@@ -315,32 +261,16 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       // migrates every file (its write reads the current width),
       // restoring the storage-partitioned join. Correctness never
       // depends on the claim; only the exchange-free plan does.
-      case sp: TableChange.SetProperty if sp.property() == "bucket" =>
-        val w = LedgerSource.validBucketWidth(
-          sp.value().toLongOption.getOrElse(
-            throw new IllegalArgumentException(
-              s"table property 'bucket' must be a positive integer; " +
-                s"got '${sp.value()}'")),
-          s"ALTER TABLE $ident SET TBLPROPERTIES('bucket')")
-        LedgerSource.writeBucketWidth(d.getPath, w)
-      case rp: TableChange.RemoveProperty if rp.property() == "bucket" =>
-        LedgerSource.removeProp(d.getPath, "bucket")
-      case sp: TableChange.SetProperty if sp.property() == "bloom" =>
-        require(LedgerSource.BloomableCols(sp.value()),
-          s"table property 'bloom' must name a non-key column " +
-            s"(${LedgerSource.BloomableCols.toSeq.sorted.mkString(", ")}); " +
-            s"got '${sp.value()}'")
-        LedgerSource.writeProp(d.getPath, "bloom", sp.value())
-      case rp: TableChange.RemoveProperty if rp.property() == "bloom" =>
-        LedgerSource.removeProp(d.getPath, "bloom")
-      case sp: TableChange.SetProperty if sp.property() == "zonemap" =>
-        require(LedgerSource.BloomableCols(sp.value()),
-          s"table property 'zonemap' must name a non-key column " +
-            s"(${LedgerSource.BloomableCols.toSeq.sorted.mkString(", ")}); " +
-            s"got '${sp.value()}'")
-        LedgerSource.writeProp(d.getPath, "zonemap", sp.value())
-      case rp: TableChange.RemoveProperty if rp.property() == "zonemap" =>
-        LedgerSource.removeProp(d.getPath, "zonemap")
+      // The CHECK slot changes only through ADD/DROP CONSTRAINT.
+      case sp: TableChange.SetProperty if alterable(sp.property()) =>
+        val k = sp.property()
+        LedgerProps.parse(k, sp.value(),
+          s"ALTER TABLE $ident SET TBLPROPERTIES('bucket')") match {
+          case Some(v) => LedgerProps.set(d.getPath, k -> v)
+          case None => LedgerProps.remove(d.getPath, k)
+        }
+      case rp: TableChange.RemoveProperty if alterable(rp.property()) =>
+        LedgerProps.remove(d.getPath, rp.property())
       case _ => throw new UnsupportedOperationException(
         "graft-ledger tables have a fixed schema — ALTER TABLE supports " +
           "only constraint changes and the 'mor'/'bucket'/'bloom'/" +
@@ -348,6 +278,9 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     }
     loadTable(ident)
   }
+
+  private def alterable(key: String): Boolean =
+    key != "check" && LedgerProps.Settable.contains(key)
 
   override def dropTable(ident: Identifier): Boolean = {
     val d = tableDir(ident)
@@ -728,11 +661,7 @@ private[sources] final class BuildBloomProcedure(root: File)
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val col = input.getUTF8String(1).toString
     val (_, d) = tableArg(input)
-    require(LedgerSource.BloomableCols(col),
-      s"build_bloom: column must be one of " +
-        s"${LedgerSource.BloomableCols.toSeq.sorted.mkString(", ")}; " +
-        s"got '$col'")
-    LedgerSource.writeProp(d, "bloom", col)
+    LedgerProps.set(d, "bloom" -> LedgerProps.indexColumn("bloom", col))
     // the backfill is a regular DISTRIBUTED job over the connector's
     // own scan (the compact discipline): per-file distinct values ride
     // the `_file` metadata column, cluster by file, and each task
@@ -804,7 +733,7 @@ private[sources] final class DeleteAtProcedure(root: File)
     val fileName = input.getUTF8String(1).toString
     val posCsv = input.getUTF8String(2).toString
     val (table, d) = tableArg(input)
-    require(LedgerSource.readMorFlag(d),
+    require(LedgerProps.read(d).mor,
       s"delete_at: $table is not merge-on-read (TBLPROPERTIES " +
         s"mor=true) — copy-on-write tables carry no delete overlay")
     val positions = posCsv.split(",").iterator.map(_.trim)
@@ -912,7 +841,7 @@ private[sources] final class DedupRowsProcedure(root: File)
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val (table, d) = tableArg(input)
-    require(LedgerSource.readMorFlag(d),
+    require(LedgerProps.read(d).mor,
       s"dedup_rows: $table is not merge-on-read (TBLPROPERTIES " +
         s"mor=true) — the cut is a delete overlay")
     refuseBranched(d, s"dedup_rows $table", "the cut addresses one lineage's files")
@@ -981,11 +910,7 @@ private[sources] final class BuildZoneMapProcedure(root: File)
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val col = input.getUTF8String(1).toString
     val (_, d) = tableArg(input)
-    require(LedgerSource.BloomableCols(col),
-      s"build_zonemap: column must be one of " +
-        s"${LedgerSource.BloomableCols.toSeq.sorted.mkString(", ")}; " +
-        s"got '$col'")
-    LedgerSource.writeProp(d, "zonemap", col)
+    LedgerProps.set(d, "zonemap" -> LedgerProps.indexColumn("zonemap", col))
     val spark = org.apache.spark.sql.SparkSession.active
     import org.apache.spark.sql.functions.{col => c, min => mn, max => mx}
     val isLang = col == "lang"
@@ -1135,10 +1060,10 @@ private[sources] final class MvProcedure(root: File, verb: String)
           new File(new File(d, "_mv"), name).getPath, v, groups, aggs)
         build(d, mv, v)
         MvRegistry.register(mv)
-        LedgerSource.writeProp(d, s"mv.$name", MvRegistry.formatDef(mv))
+        LedgerProps.set(d, s"mv.$name" -> MvRegistry.formatDef(mv))
         v
       case "refresh_mv" =>
-        val spec = LedgerSource.readPropValue(d, s"mv.$name").getOrElse(
+        val spec = LedgerProps.read(d).mv(name).getOrElse(
           throw new IllegalArgumentException(
             s"no materialized view '$name' on $table"))
         val old = MvRegistry.parseDef(d, spec)
@@ -1146,15 +1071,15 @@ private[sources] final class MvProcedure(root: File, verb: String)
         val mv = old.copy(builtAt = v)
         build(d, mv, v)
         MvRegistry.register(mv)
-        LedgerSource.writeProp(d, s"mv.$name", MvRegistry.formatDef(mv))
+        LedgerProps.set(d, s"mv.$name" -> MvRegistry.formatDef(mv))
         v
       case _ => // drop_mv
-        val spec = LedgerSource.readPropValue(d, s"mv.$name").getOrElse(
+        val spec = LedgerProps.read(d).mv(name).getOrElse(
           throw new IllegalArgumentException(
             s"no materialized view '$name' on $table"))
         val old = MvRegistry.parseDef(d, spec)
         MvRegistry.unregister(d, old.statePath)
-        LedgerSource.removeProp(d, s"mv.$name")
+        LedgerProps.remove(d, s"mv.$name")
         old.builtAt
     }
     result("name" -> name, "built_at" -> builtAt)
@@ -1411,10 +1336,7 @@ private[sources] final class CloneProcedure(root: File)
       java.nio.file.Files.createLink(
         new File(ddir, f.getName).toPath, f.toPath)
     }
-    val props = new File(src, "_props")
-    if (props.isFile)
-      java.nio.file.Files.copy(props.toPath,
-        new File(ddir, "_props").toPath)
+    LedgerProps.copy(src, ddir.getPath)
     // fresh chain: the clone's v1 is exactly the linked state
     val v = LedgerSource.commitVersion(ddir.getPath)
     // n_rows COUNTS THROUGH the MoR overlay the clone carried: header
@@ -1721,12 +1643,13 @@ private[sources] object LedgerMetadataTables {
         }
       // one row per live file per DECLARED index — the Bloom column
       // and/or the zone-map column (s71 joined the family)
-      val bloom = LedgerSource.readBloomCol(path).map { c =>
+      val props = LedgerProps.read(path)
+      val bloom = props.bloom.map { c =>
         ("bloom", c, (f: String) =>
           wellFormed(LedgerSource.bloomSidecar(path, f, c),
             LedgerSource.BloomMagic))
       }
-      val zone = LedgerSource.readZoneCol(path).map { c =>
+      val zone = props.zonemap.map { c =>
         ("zone", c, (f: String) =>
           wellFormed(LedgerSource.zoneSidecar(path, f, c),
             LedgerSource.ZoneMagic))

@@ -89,7 +89,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - **time travel** (round 14): every committed mutation stamps a
   *     `_versions/<N>.mf` manifest of the live file set; names denote
   *     immutable content, so `VERSION AS OF` either reconstructs a
-  *     version exactly or fails loudly after destructive verbs.
+  *     version exactly or fails loudly after destructive verbs;
+  *   - **table properties** (`_props`: bucket layout, mor mode, CHECK
+  *     constraint, Bloom / zone-map columns, durable MVs): read,
+  *     validated and written only through [[LedgerProps]], whose doc is
+  *     the one description of the file's format and vocabulary.
   *
   * File layout (all little-endian via DataOutput's big-endian writers —
   * endianness is internal to the format, symmetric on read):
@@ -109,23 +113,21 @@ class LedgerSource extends TableProvider with DataSourceRegister {
     LedgerSource.Schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
-    // the path API's `bucket` option mirrors the catalog's table
-    // property: a bucketed write through `option("bucket", w)` keeps a
-    // bucketed directory's layout contract (what lets the compaction
-    // procedure preserve storage-partitioned-join eligibility)
-    val width = Option(properties.get("bucket"))
-      .map(w => LedgerSource.validBucketWidth(w.toLong, "option 'bucket'"))
-      .orElse(Option(properties.get("path"))
-        .flatMap(LedgerSource.readBucketWidth))
-    val mor = Option(properties.get("mor")).map(_.toBoolean)
-      .orElse(Option(properties.get("path")).map(LedgerSource.readMorFlag))
-      .getOrElse(false)
     // time travel through the PATH API (the Delta option spelling —
     // the catalog's VERSION AS OF / TIMESTAMP AS OF twins):
     // `versionAsOf` = a commit id, `timestampAsOf` = epoch millis or a
     // `yyyy-MM-dd HH:mm:ss[.SSS]` instant resolved against the
     // manifest-embedded commit times
     val tablePath = properties.get("path")
+    // the path API's `bucket` and `mor` options override the table's
+    // properties and take the same values: a bucketed write through
+    // `option("bucket", w)` keeps a bucketed directory's layout contract
+    // (what lets the compaction procedure preserve
+    // storage-partitioned-join eligibility)
+    val props = Seq("bucket", "mor").foldLeft(LedgerProps.read(tablePath)) {
+      (p, k) => Option(properties.get(k)).fold(p)(v =>
+        p.updated(k, LedgerProps.parse(k, v, s"option '$k'")))
+    }
     // getTable receives the reader options in ORIGINAL case — match
     // the camelCase spellings case-insensitively like every option
     def opt(key: String): Option[String] = {
@@ -235,8 +237,7 @@ class LedgerSource extends TableProvider with DataSourceRegister {
               LedgerSource.readRef(tablePath, "branch", "main").isDefined)
             Some("main")
           else None
-        new LedgerTable(tablePath, pinnedVersion = pinned,
-          bucketWidth = width, morEnabled = mor,
+        new LedgerTable(tablePath, props, pinnedVersion = pinned,
           ref = branchOpt.orElse(mainRef))
     }
   }
@@ -290,100 +291,16 @@ object LedgerSource {
     require(new File(path).isDirectory,
       s"graft-ledger: path does not exist or is not a directory: $path")
 
-  // ── layout properties (bucketed layout → storage-partitioned joins) ──
-
-  /** The width range the layout contract is sound over: the reported
-    * `Expressions.bucket(width.toInt, …)` transform truncates to Int,
-    * so a width above Int.MaxValue would let two tables whose widths
-    * differ by a multiple of 2^32 report IDENTICAL transforms while
-    * bucketing rows differently — a storage-partitioned join would run
-    * exchange-free over incompatible layouts and silently lose matches.
-    * Every ingestion point of a width (catalog property, path-API
-    * option, persisted `_props`) funnels through this check. */
-  private[graft] def validBucketWidth(w: Long, where: String): Long = {
-    require(w > 0 && w <= Int.MaxValue,
-      s"graft-ledger bucket width must be in [1, ${Int.MaxValue}] " +
-        s"(the reported bucket transform carries it as an Int); " +
-        s"got $w from $where")
-    w
-  }
-
-  /** `_props` carries the one layout property: `bucket=<width>`, the
-    * doc_id range-bucket width every writer partitions files by and
-    * every scan reports as its `KeyGroupedPartitioning` transform. */
-  private[graft] def readBucketWidth(dir: String): Option[Long] = {
-    val f = new File(dir, "_props")
-    if (!f.isFile) None
-    else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      .split("\n").collectFirst {
-        case l if l.startsWith("bucket=") =>
-          validBucketWidth(l.stripPrefix("bucket=").trim.toLong,
-            s"$dir/_props")
-      }
-  }
-
-  /** Set one `_props` line, preserving the others (the file is a tiny
-    * key=value table: `bucket`, `mor`). */
-  private[sources] def writeProp(dir: String, key: String, value: String): Unit = {
-    val f = new File(dir, "_props")
-    val others =
-      if (!f.isFile) Seq.empty
-      else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .split("\n").toSeq.map(_.trim)
-        .filter(l => l.nonEmpty && !l.startsWith(s"$key="))
-    java.nio.file.Files.write(f.toPath,
-      (others :+ s"$key=$value").mkString("", "\n", "\n").getBytes("UTF-8")): Unit
-  }
-
-  /** Remove one `_props` line, preserving the others. */
-  private[sources] def removeProp(dir: String, key: String): Unit = {
-    val f = new File(dir, "_props")
-    if (f.isFile) {
-      val others = new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .split("\n").toSeq.map(_.trim)
-        .filter(l => l.nonEmpty && !l.startsWith(s"$key="))
-      if (others.isEmpty) java.nio.file.Files.delete(f.toPath)
-      else java.nio.file.Files.write(f.toPath,
-        others.mkString("", "\n", "\n").getBytes("UTF-8")): Unit
-    }
-  }
-
-  private[sources] def writeBucketWidth(dir: String, w: Long): Unit =
-    writeProp(dir, "bucket", w.toString)
-
-  /** `mor=true` in `_props` switches the table's row-level verbs from
-    * copy-on-write group rewrites to MERGE-ON-READ delta files — see
-    * [[LedgerDeltaOperation]]. */
-  private[graft] def readMorFlag(dir: String): Boolean = {
-    val f = new File(dir, "_props")
-    f.isFile && new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      .split("\n").exists(_.trim == "mor=true")
-  }
-
-  /** `check=<sql>` in `_props`: a table-level CHECK constraint the
-    * table reports as ENFORCED — Spark's analyzer then validates every
-    * V2 write against it (rows violating the predicate fail the job
-    * loudly instead of landing). */
-  private[graft] def readCheckConstraint(dir: String): Option[String] = {
-    val f = new File(dir, "_props")
-    if (!f.isFile) None
-    else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      .split("\n").collectFirst {
-        case l if l.startsWith("check=") => l.stripPrefix("check=").trim
-      }.filter(_.nonEmpty)
-  }
-
-  /** The persisted CHECK constraint's name (`check_name=`), defaulting
-    * to `ledger_check` for tables created via the `check` property. */
-  private[graft] def readCheckName(dir: String): String = {
-    val f = new File(dir, "_props")
-    (if (!f.isFile) None
-     else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-       .split("\n").collectFirst {
-         case l if l.startsWith("check_name=") =>
-           l.stripPrefix("check_name=").trim
-       }).getOrElse("ledger_check")
+  /** Publish `bytes` at `target` atomically: written to a uniquely named
+    * `.tmp` sibling, then renamed over the target, so a reader sees the
+    * old content or the new, never a torn file. */
+  private[sources] def publish(target: File, bytes: Array[Byte]): Unit = {
+    val tmp = new File(target.getParentFile,
+      s"${target.getName}.${UUID.randomUUID()}.tmp")
+    java.nio.file.Files.write(tmp.toPath, bytes)
+    java.nio.file.Files.move(tmp.toPath, target.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
   }
 
   // ── delete files (merge-on-read) ──
@@ -1072,36 +989,6 @@ object LedgerSource {
   private[graft] val BloomDir = "_bloom"
   private[sources] val BloomMagic = 0x47424631 // "GBF1"
   private[sources] val BloomHashesPerKey = 7
-  private[graft] val BloomableCols = Set("lang", "n_chars")
-
-  private[graft] def readPropValue(dir: String, key: String): Option[String] = {
-    val f = new File(dir, "_props")
-    if (!f.isFile) None
-    else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      .split("\n").map(_.trim).collectFirst {
-        case l if l.startsWith(s"$key=") => l.stripPrefix(s"$key=")
-      }
-  }
-
-  /** The declared Bloom column, when valid — an unknown column name in
-    * `_props` disables the index rather than erroring (back-off). */
-  private[graft] def readBloomCol(dir: String): Option[String] =
-    readPropValue(dir, "bloom").filter(BloomableCols)
-
-  /** All `_props` entries under a key prefix, `key -> value` — the
-    * multi-entry families (`mv.<name>`). */
-  private[graft] def readPropsPrefixed(dir: String,
-                                       prefix: String): Map[String, String] = {
-    val f = new File(dir, "_props")
-    if (!f.isFile) Map.empty
-    else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      .split("\n").map(_.trim)
-      .filter(l => l.startsWith(prefix) && l.contains("="))
-      .map { l =>
-        val cut = l.indexOf('=')
-        l.take(cut) -> l.drop(cut + 1)
-      }.toMap
-  }
 
   /** Two independent 32-bit hashes of a value's canonical bytes —
     * Kirsch-Mitzenmacher double hashing derives the k probe bits.
@@ -1128,8 +1015,8 @@ object LedgerSource {
     new File(new File(dir, BloomDir), s"$dataFileName.$col")
 
   /** Land one file's sidecar: ~10 bits/key (<1% fp at k=7), sized by
-    * the file's DISTINCT hash count, atomically published (tmp +
-    * rename) so a reader never sees a torn filter. */
+    * the file's DISTINCT hash count, atomically published so a reader
+    * never sees a torn filter. */
   private[graft] def writeBloomSidecar(dir: String, dataFileName: String,
                                          col: String,
                                          hashes: Iterable[(Int, Int)]): Unit = {
@@ -1145,20 +1032,22 @@ object LedgerSource {
         i += 1
       }
     }
-    val bdir = new File(dir, BloomDir)
-    bdir.mkdirs()
-    val target = bloomSidecar(dir, dataFileName, col)
-    val tmp = new File(bdir, s"${target.getName}.${UUID.randomUUID()}.tmp")
-    val out = new DataOutputStream(new FileOutputStream(tmp))
-    try {
+    new File(dir, BloomDir).mkdirs()
+    publish(bloomSidecar(dir, dataFileName, col), bytesOf { out =>
       out.writeInt(BloomMagic)
       out.writeInt(BloomHashesPerKey)
       out.writeLong(mBits)
       words.foreach(out.writeLong)
-    } finally out.close()
-    java.nio.file.Files.move(tmp.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+    })
+  }
+
+  /** What `body` writes, as bytes — a sidecar's content before [[publish]]. */
+  private def bytesOf(body: DataOutputStream => Unit): Array[Byte] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val out = new DataOutputStream(buf)
+    body(out)
+    out.flush()
+    buf.toByteArray
   }
 
   /** A loaded, well-formed sidecar: (k, mBits, words). `None` on any
@@ -1240,12 +1129,6 @@ object LedgerSource {
   private[graft] val ZoneDir = "_zones"
   private[sources] val ZoneMagic = 0x475A4D31 // "GZM1"
 
-  /** The declared zone-map column, when valid (same vocabulary as the
-    * Bloom: the two non-key columns). Unknown names disable, never
-    * error. */
-  private[graft] def readZoneCol(dir: String): Option[String] =
-    readPropValue(dir, "zonemap").filter(BloomableCols)
-
   private[graft] def zoneSidecar(dir: String, dataFileName: String,
                                  col: String): File =
     new File(new File(dir, ZoneDir), s"$dataFileName.$col")
@@ -1257,12 +1140,8 @@ object LedgerSource {
                                       col: String, isLong: Boolean,
                                       range: Option[(Array[Byte], Array[Byte])])
       : Unit = {
-    val zdir = new File(dir, ZoneDir)
-    zdir.mkdirs()
-    val target = zoneSidecar(dir, dataFileName, col)
-    val tmp = new File(zdir, s"${target.getName}.${UUID.randomUUID()}.tmp")
-    val out = new DataOutputStream(new FileOutputStream(tmp))
-    try {
+    new File(dir, ZoneDir).mkdirs()
+    publish(zoneSidecar(dir, dataFileName, col), bytesOf { out =>
       out.writeInt(ZoneMagic)
       out.writeByte(if (isLong) 0 else 1)
       out.writeByte(if (range.isDefined) 1 else 0)
@@ -1270,10 +1149,7 @@ object LedgerSource {
         out.writeInt(mn.length); out.write(mn)
         out.writeInt(mx.length); out.write(mx)
       }
-    } finally out.close()
-    java.nio.file.Files.move(tmp.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+    })
   }
 
   /** A loaded, well-formed zone sidecar:
@@ -1574,9 +1450,10 @@ object LedgerSource {
   }
 }
 
-final class LedgerTable(path: String, pinnedVersion: Option[Long] = None,
-                        bucketWidth: Option[Long] = None,
-                        morEnabled: Boolean = false,
+/** One handle of the ledger table at `path`, with the properties
+  * snapshot it was loaded with. */
+final class LedgerTable(path: String, props: LedgerProps,
+                        pinnedVersion: Option[Long] = None,
                         ref: Option[String] = None)
     extends Table
     with SupportsRead with SupportsWrite with SupportsDelete
@@ -1658,15 +1535,15 @@ final class LedgerTable(path: String, pinnedVersion: Option[Long] = None,
     * the check predicate). */
   override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
-    bucketWidth.foreach(w => m.put("bucket", w.toString))
-    if (morEnabled) m.put("mor", "true")
+    props.bucket.foreach(w => m.put("bucket", w.toString))
+    if (props.mor) m.put("mor", "true")
     // declared skip indexes — DESCRIBE EXTENDED / SHOW TBLPROPERTIES
     // should say which columns probe through sidecars
-    LedgerSource.readBloomCol(path).foreach(c => m.put("bloom", c))
-    LedgerSource.readZoneCol(path).foreach(c => m.put("zonemap", c))
-    LedgerSource.readCheckConstraint(path).foreach { sql =>
+    props.bloom.foreach(c => m.put("bloom", c))
+    props.zonemap.foreach(c => m.put("zonemap", c))
+    props.check.foreach { case (name, sql) =>
       m.put("check", sql)
-      m.put("check_name", LedgerSource.readCheckName(path))
+      m.put("check_name", name)
     }
     // refs surface through SHOW TBLPROPERTIES — the cheapest ref listing
     LedgerSource.listRefs(path, "tag").foreach { case (n, v) =>
@@ -1688,10 +1565,9 @@ final class LedgerTable(path: String, pinnedVersion: Option[Long] = None,
     * gate. */
   override def constraints(): Array[org.apache.spark.sql.connector
       .catalog.constraints.Constraint] =
-    LedgerSource.readCheckConstraint(path).map { sql =>
+    props.check.map { case (name, sql) =>
       import org.apache.spark.sql.connector.catalog.constraints.Constraint
-      Constraint.check(LedgerSource.readCheckName(path)).predicateSql(sql)
-        .enforced(true).build(): Constraint
+      Constraint.check(name).predicateSql(sql).enforced(true).build(): Constraint
     }.toArray
 
   override def name(): String =
@@ -1712,10 +1588,10 @@ final class LedgerTable(path: String, pinnedVersion: Option[Long] = None,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new LedgerScanBuilder(path,
       Option(options.get("maxFilesPerTrigger")).map(_.toInt),
-      pinned = readPin, bucketWidth = bucketWidth)
+      pinned = readPin, bucketWidth = props.bucket)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     requireMutable("write to")
-    new LedgerWriteBuilder(path, bucketWidth, ref)
+    new LedgerWriteBuilder(path, props.bucket, ref)
   }
 
   /** Row-level DELETE — the lakehouse verb (`DELETE FROM t WHERE …`) on
@@ -1761,7 +1637,7 @@ final class LedgerTable(path: String, pinnedVersion: Option[Long] = None,
       (LedgerSource.exactBounds(filters) match {
         case None => false
         case Some(b) =>
-          !morEnabled || LedgerSource.statsSnapshot(path).forall {
+          !props.mor || LedgerSource.statsSnapshot(path).forall {
             case (_, mn, mx, n) => n == 0 || !b.overlaps(mn, mx) ||
               (b.contains(mn) && b.contains(mx))
           }
@@ -1793,7 +1669,7 @@ final class LedgerTable(path: String, pinnedVersion: Option[Long] = None,
     // lands in that ref's manifest only, and a tombstone cut on a
     // pre-fork file SHARED with other lineages still cannot reach them
     // (the overlay is resolved per manifest, not per directory)
-    if (!morEnabled) {
+    if (!props.mor) {
       require(ref.forall(_ == "main"),
         s"graft-ledger: branch handles of a copy-on-write table are " +
           s"append-only — row-level verbs need mor=true " +
@@ -1808,9 +1684,9 @@ final class LedgerTable(path: String, pinnedVersion: Option[Long] = None,
       // Iceberg MoR), here made sound WITHOUT sequence numbers by
       // scoping every tombstone to an immutable file name
       override def build(): RowLevelOperation =
-        if (morEnabled)
-          new LedgerDeltaOperation(path, info.command(), bucketWidth, ref)
-        else new LedgerRowLevelOperation(path, info.command(), bucketWidth)
+        if (props.mor)
+          new LedgerDeltaOperation(path, info.command(), props.bucket, ref)
+        else new LedgerRowLevelOperation(path, info.command(), props.bucket)
     }
   }
 
@@ -1883,16 +1759,17 @@ final class LedgerScanBuilder(path: String,
     ok
   }
 
+  private lazy val props = LedgerProps.read(path)
+  private def bloomCol: Option[String] = props.bloom
+  // the zone-map column (s71) additionally accepts RANGE probes — the
+  // sidecar's min/max interval can refute <, <=, >, >= and equality
+  private def zoneCol: Option[String] = props.zonemap
   /** Accept doc_id comparisons — plus equality/IN probes on the
     * table's declared Bloom column (s64), which the scan turns into
     * per-file sidecar tests. Everything else stays Spark-side. The
     * accepted ones are STILL returned for Spark re-evaluation (the
     * conservative contract), so reader-level filtering is a pure
     * optimization and can never change results. */
-  private lazy val bloomCol: Option[String] = LedgerSource.readBloomCol(path)
-  // the zone-map column (s71) additionally accepts RANGE probes — the
-  // sidecar's min/max interval can refute <, <=, >, >= and equality
-  private lazy val zoneCol: Option[String] = LedgerSource.readZoneCol(path)
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter {
       case EqualTo("doc_id", _: java.lang.Long) => true
@@ -2200,7 +2077,8 @@ final class LedgerScan(path: String, required: StructType,
     * sidecar (IN: any of its values); a file failing any probe is
     * provably value-free and never becomes a partition. Back-off is
     * per file, inside bloomMightContain — no sidecar means scan. */
-  private lazy val bloomCol: Option[String] = LedgerSource.readBloomCol(path)
+  private lazy val props = LedgerProps.read(path)
+  private def bloomCol: Option[String] = props.bloom
   /** One file's verdict against a batch of probes, with the sidecar
     * loaded ONCE — an IN-probe can carry a join-delivered key set, and
     * re-reading the filter per value would cost O(values x files) at
@@ -2228,7 +2106,7 @@ final class LedgerScan(path: String, required: StructType,
     * against it (s71): a file whose min/max interval provably misses
     * every probe never becomes a partition. Back-off per file inside
     * zoneAdmits — no sidecar means scan. */
-  private lazy val zoneCol: Option[String] = LedgerSource.readZoneCol(path)
+  private def zoneCol: Option[String] = props.zonemap
   private def zoneProbesIn(filters: Array[Filter],
                            c: String): Seq[Filter] =
     filters.toSeq.collect {
@@ -3395,16 +3273,14 @@ final class LedgerWriterFactory(path: String,
   // delta path's lazy insert writer — same shared-filesystem contract
   // as every other `_props` read): a declared Bloom column makes every
   // writer stamp its file's sidecar as part of the write itself, so
-  // fresh data is born indexed — the index needs no refresh job
-  private val bloomCol: Option[String] = LedgerSource.readBloomCol(path)
-  // a declared zone-map column likewise makes every writer stamp its
-  // file's min/max sidecar — fresh data is born zone-indexed
-  private val zoneCol: Option[String] = LedgerSource.readZoneCol(path)
+  // fresh data is born indexed — the index needs no refresh job; a
+  // declared zone-map column likewise stamps its min/max sidecar
+  private val props = LedgerProps.read(path)
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     bucketWidth match {
       case Some(w) =>
-        new BucketedLedgerWriter(path, partitionId, w, bloomCol, zoneCol)
-      case None => new LedgerWriter(path, partitionId, bloomCol, zoneCol)
+        new BucketedLedgerWriter(path, partitionId, w, props.bloom, props.zonemap)
+      case None => new LedgerWriter(path, partitionId, props.bloom, props.zonemap)
     }
 }
 

@@ -112,12 +112,8 @@ private[graft] object TxnLog {
       idir.mkdirs()
       // atomic publication of the intent itself: a helper must never
       // read a torn intent (it would either mis-skip or mis-sweep)
-      val tmp = new File(idir, s"$id.${UUID.randomUUID()}.tmp")
-      java.nio.file.Files.write(tmp.toPath,
+      LedgerSource.publish(new File(idir, id),
         s"$headV\n${txnBase(root, id)}\n".getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp.toPath, new File(idir, id).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
     }
   }
 

@@ -65,14 +65,20 @@ class GraftSessionSpec extends SparkSpec {
 
   test("the conf-overriding streaming queries leave the session conf as they found it") {
     // a leaked RocksDB provider, watermark policy or state partition count
-    // would silently change every later streaming query. rawEvents first:
-    // on a NANOS fixture it sets the nanos fallback conf for good, by design
+    // would silently change every later streaming query, and an explicitly
+    // set default (s35/s65/s66 once set the v2 bucketing keys) would mask a
+    // later change of that default. rawEvents first: on a NANOS fixture it
+    // sets the nanos fallback conf for good, by design. Registering a
+    // ledger catalog is the one conf change a query makes on purpose.
     Tables.rawEvents(spark, dir)
-    val before = spark.conf.getAll
+    def conf = spark.conf.getAll.filter(!_._1.startsWith("spark.sql.catalog."))
+    val before = conf
     Seq("st01_stream_counts", "st07_transform_with_state", "st13_stream_funnel",
-      "st24_multi_watermark_policy", "st29_multi_watermark_min").foreach { q =>
+      "st24_multi_watermark_policy", "st29_multi_watermark_min",
+      "s35_storage_partitioned_join", "s65_layout_evolution",
+      "s66_write_distribution").foreach { q =>
       SparkEntry.queries(q)(spark, dir).write.mode("overwrite").format("noop").save()
-      val after = spark.conf.getAll
+      val after = conf
       assert(after == before,
         s"$q changed the conf: ${(after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)}")
     }
@@ -109,6 +115,19 @@ class GraftSessionSpec extends SparkSpec {
     // procedures and metadata tables share RowsScan
     assert(hits("extends " + "LocalScan") == Map("GraftCatalog.scala" -> 1))
     assert(hits("new " + "LocalScan").isEmpty)
+  }
+
+  test("one table-property file owner and one query-name filter under src/main") {
+    // LedgerProps is the only code that names a ledger table's property
+    // file, and states once what an index column accepts
+    assert(hits("\"_pro" + "ps\"", "src/main") == Map("LedgerProps.scala" -> 1))
+    assert(hits("must name a " + "non-key", "src/main") == Map("LedgerProps.scala" -> 1))
+    // both runners pick their queries through SparkEntry.select, which
+    // refuses unknown names
+    assert(hits("SparkEntry" + "\\.select", "src/main") ==
+      Map("Bench.scala" -> 1, "Verify.scala" -> 1))
+    assert(hits("SparkEntry" + "\\.queries", "src/main").keySet
+      .intersect(Set("Bench.scala", "Verify.scala")).isEmpty)
   }
 
   test("one round pin and one convergence loop under src/") {

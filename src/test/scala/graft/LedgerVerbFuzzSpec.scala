@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
 
 import graft.queries.Portable
-import graft.sources.{LedgerSource, LedgerTable}
+import graft.sources.{LedgerProps, LedgerSource, LedgerTable}
 
 /** Seeded-fuzz equivalence for the connector's row-level verbs: on
   * arbitrary row sets (duplicate keys, nulls, negative keys, empty
@@ -60,7 +60,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
       val dir = writeLedger(data, 1 + rng.nextInt(4), rng.nextBoolean())
       val lo = (rng.nextInt(600) - 150).toLong
       val hi = lo + rng.nextInt(300) - 50 // sometimes empty (hi < lo)
-      new LedgerTable(dir).deleteWhere(Array[Filter](
+      new LedgerTable(dir, LedgerProps.read(dir)).deleteWhere(Array[Filter](
         GreaterThanOrEqual("doc_id", java.lang.Long.valueOf(lo)),
         LessThanOrEqual("doc_id", java.lang.Long.valueOf(hi))))
       val expect = data.filterNot(t => t._1 >= lo && t._1 <= hi)
@@ -79,7 +79,7 @@ class LedgerVerbFuzzSpec extends SparkSpec {
     (1 to 10).foreach { i =>
       val data = rows(rng, 100 + rng.nextInt(150))
       val dir = writeLedger(data, 1 + rng.nextInt(4), byRange = true)
-      val t = new LedgerTable(dir)
+      val t = new LedgerTable(dir, LedgerProps.read(dir))
       val (lo1, hi1) = { val l = rng.nextInt(300) - 100L; (l, l + rng.nextInt(120)) }
       val (lo2, hi2) = { val l = rng.nextInt(300) - 100L; (l, l + rng.nextInt(120)) }
       Seq((lo1, hi1), (lo2, hi2)).foreach { case (lo, hi) =>

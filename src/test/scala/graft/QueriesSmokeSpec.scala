@@ -30,6 +30,16 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.queries.size == names.size)
   }
 
+  test("select takes the whole catalog or the named queries, and refuses unknown names") {
+    assert(SparkEntry.select(Nil).keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.select(Seq("s01_csv_roundtrip", "g04_region_assign")).keySet ==
+      Set("s01_csv_roundtrip", "g04_region_assign"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.select(Seq("g04_region_assign", "g28_siar_sweep", "nope", "nope"))
+    }
+    assert(e.getMessage.endsWith("unknown query names: g28_siar_sweep nope"), e.getMessage)
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
       val df = fn(spark, sfDir)

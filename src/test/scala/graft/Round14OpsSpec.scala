@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 
 import graft.queries.Portable
-import graft.sources.{LedgerSource, LedgerTable}
+import graft.sources.{LedgerProps, LedgerSource, LedgerTable}
 
 /** Round-14 pins: the connector's row-level DELETE (judged end-to-end
   * by `s25_delete_where`) — the metadata-only file drop, the boundary
@@ -40,7 +40,7 @@ class Round14OpsSpec extends SparkSpec {
       .find(f => LedgerSource.readStats(f)._1 == 100L).get
     val raf = new java.io.RandomAccessFile(victim, "rw")
     try raf.setLength(28L) finally raf.close()
-    new LedgerTable(dir).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
+    new LedgerTable(dir, LedgerProps.read(dir)).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
       GreaterThanOrEqual("doc_id", java.lang.Long.valueOf(100L)),
       LessThanOrEqual("doc_id", java.lang.Long.valueOf(199L))))
     val left = LedgerSource.ledgerFiles(dir)
@@ -54,7 +54,7 @@ class Round14OpsSpec extends SparkSpec {
     val dir = tmpDir("rewrite")
     rangeLayout(dir)
     // [150, 249] clips two files: each keeps 50 survivors
-    new LedgerTable(dir).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
+    new LedgerTable(dir, LedgerProps.read(dir)).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
       GreaterThanOrEqual("doc_id", java.lang.Long.valueOf(150L)),
       LessThanOrEqual("doc_id", java.lang.Long.valueOf(249L))))
     val stats = LedgerSource.ledgerFiles(dir).map(LedgerSource.readStats).toSet
@@ -72,7 +72,7 @@ class Round14OpsSpec extends SparkSpec {
   test("delete: the metadata path declines inexact predicates; SQL falls back to the group rewrite") {
     val dir = tmpDir("decline")
     rangeLayout(dir)
-    val t = new LedgerTable(dir)
+    val t = new LedgerTable(dir, LedgerProps.read(dir))
     // the interval fast path refuses what it cannot represent exactly…
     assert(!t.canDeleteWhere(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.EqualTo("lang", "l1"))))
@@ -319,7 +319,7 @@ class Round14OpsSpec extends SparkSpec {
     assert(spark.sql(s"SELECT count(*) FROM $cat.t " +
       "TIMESTAMP AS OF '2999-01-01'").head().getLong(0) == 300L)
     // snapshots refuse every mutation verb
-    val snap = new LedgerTable(tdir, pinnedVersion = Some(1L))
+    val snap = new LedgerTable(tdir, LedgerProps.read(tdir), pinnedVersion = Some(1L))
     intercept[IllegalArgumentException] { snap.newWriteBuilder(null) }
     intercept[IllegalArgumentException] {
       snap.deleteWhere(Array[org.apache.spark.sql.sources.Filter]())
@@ -341,7 +341,7 @@ class Round14OpsSpec extends SparkSpec {
     val dir = tmpDir("freshname")
     rangeLayout(dir)
     val beforeNames = LedgerSource.ledgerFiles(dir).map(_.getName).toSet
-    new LedgerTable(dir).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
+    new LedgerTable(dir, LedgerProps.read(dir)).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
       GreaterThanOrEqual("doc_id", java.lang.Long.valueOf(150L)),
       LessThanOrEqual("doc_id", java.lang.Long.valueOf(249L))))
     val afterNames = LedgerSource.ledgerFiles(dir).map(_.getName).toSet
@@ -429,7 +429,7 @@ class Round14OpsSpec extends SparkSpec {
     raw.commit()
     // the straddling file exists: scan must fall back to per-file
     // partitioning (UnknownPartitioning), never mis-group rows
-    val tbl = new LedgerTable(tdir, bucketWidth = Some(100L))
+    val tbl = new LedgerTable(tdir, LedgerProps.read(tdir))
     val scan = tbl.newScanBuilder(
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(
         java.util.Collections.emptyMap())).build()
@@ -459,7 +459,7 @@ class Round14OpsSpec extends SparkSpec {
       case (mn, mx, n) =>
         if (n > 0) assert(Math.floorDiv(mn, 100L) == Math.floorDiv(mx, 100L))
     }
-    val scan = new LedgerTable(tdir, bucketWidth = Some(100L)).newScanBuilder(
+    val scan = new LedgerTable(tdir, LedgerProps.read(tdir)).newScanBuilder(
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(
         java.util.Collections.emptyMap())).build()
     assert(scan.asInstanceOf[

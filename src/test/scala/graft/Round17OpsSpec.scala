@@ -250,9 +250,6 @@ class Round17OpsSpec extends SparkSpec {
     withCatalog { (cat, root) =>
       val s = spark
       import s.implicits._
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "true")
       def rows(lo: Int, hi: Int) = spark.range(lo, hi)
         .select($"id".as("doc_id"), lit("w").as("lang"),
           ($"id" % 13).as("n_chars"))

@@ -43,6 +43,11 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    # a misspelled name must not silently shrink the compared set
+    unknown = sorted(only - oracle.keys())
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}")
+        sys.exit(2)
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
