@@ -1,114 +1,79 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import graft.functions.GeoFunctions
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.graftbridge.SqlBridge
+import org.apache.spark.sql.types.DoubleType
+import graft.functions.{GeoFunctions, RegionLookup, RegionTable}
 
-/** Cascading fallback join, coalesce form (SURVEY.md §2.3 J4).
+/** Region assignment: the reference's cascading geohash match
+  * (SURVEY.md §2.3 J4; `cal_orig_area.py:24-43`, 8-way at
+  * `cal_subarea_portion.py:34-76`), as one dictionary lookup.
   *
-  * The reference assigns each fix to a region by trying geohash matches at
-  * decreasing precision: join at the finest level, split matched/unmatched
-  * on `type IS NULL`, re-join the unmatched at the next level, union the
-  * pieces (`cal_orig_area.py:24-43`, 8-way at
-  * `cal_subarea_portion.py:34-76`). That is one shuffle + union per level.
+  * Semantics — the one statement of them:
+  *   - each fix takes the agent of the FIRST level, in the caller's
+  *     `precisions` order, whose geohash cell at that precision holds a
+  *     dictionary entry; no match at any level gives `sentinel` (the
+  *     reference uses '0', `cal_orig_area.py:88-89`);
+  *   - within a cell the SMALLEST agent wins (deterministic — the
+  *     reference's `dropDuplicates(['geohash6'])` keeps an arbitrary row,
+  *     which a judged query cannot);
+  *   - with `expandNeighbors` every dictionary entry also claims the 8
+  *     cells around its own at each level (the reference's 3×3 expansion,
+  *     `cal_orig_area.py:62-72`, `cal_subarea_portion.py:170-178`):
+  *     longitude wraps at the antimeridian, latitude clamps at the poles,
+  *     and a cell claimed by several entries keeps the smallest agent;
+  *   - dictionary rows with a null lat, lon or agent are ignored, and a
+  *     fix with a null coordinate gets `sentinel`;
+  *   - cells are `GeoFunctions`' integer cell indices, so a cell here is
+  *     exactly the cell `geohashEncode` names, clamping included;
+  *   - `agent_id` is a long (the agent column is integral).
   *
-  * Here each level is ONE broadcast left join against a per-level deduped
-  * dictionary and the priority is a single `coalesce(agent_p1, agent_p2,
-  * …, sentinel)` — no splits, no unions, no shuffle of the fact side at
-  * all (dims broadcast). At 100 TB the fact table streams through k
-  * broadcast hash joins inside one whole-stage-codegen span.
-  */
+  * Plan (after Raptor, VLDB 2019: sorted ranges in place of geometry
+  * joins): one collect job reads the dictionary, and the driver builds
+  * per level a sorted array of cell codes with each cell's agent. The
+  * fact side encodes its precision-max cell code once per row, and
+  * level p's cell is that code `>> 5·(pMax−p)` (the geohash prefix
+  * property), probed by binary search inside one codegen'd
+  * [[RegionLookup]] — no join, no exchange, no broadcast job. Like the
+  * broadcast join cascade it replaces, the dictionary must fit in the
+  * driver. */
 object RegionAssign {
 
-  /** Dictionary deduped per geohash cell at `p`: smallest agent_id wins
-    * (deterministic — the reference's `dropDuplicates(['geohash6'])` keeps
-    * an arbitrary row, which a judged query cannot).  */
-  def dictAt(dict: DataFrame, lat: Column, lon: Column, agent: Column, p: Int): DataFrame =
-    dict.groupBy(GeoFunctions.geohashCol(lat, lon, p).as(s"gh$p"))
-      .agg(min(agent).as(s"agent_$p"))
-
-  /** [[dictAt]] with the reference's neighbor expansion
-    * (`cal_orig_area.py:62-72`, `cal_subarea_portion.py:170-178`): every
-    * dictionary cell claims itself AND its 8 adjacent cells, so a fix
-    * just outside a POI's cell still matches at this level. Dedup runs
-    * TWICE — once per source cell before the 9× explode (shrinks the
-    * generator input to distinct cells) and once per expanded cell after
-    * it (overlapping 3×3 blocks re-collide; min-of-mins == global min, so
-    * the tie-break stays deterministic). The explode runs on the DICT
-    * side only — the fact side still pays one encode + k substrings. */
-  def dictAtNeighbors(dict: DataFrame, lat: Column, lon: Column, agent: Column, p: Int): DataFrame =
-    dict.groupBy(GeoFunctions.geohashCol(lat, lon, p).as("__gh_self"))
-      .agg(min(agent).as("__agent"))
-      .select(explode(GeoFunctions.geohashNeighborsUdf(col("__gh_self"))).as(s"gh$p"),
-        col("__agent"))
-      .groupBy(col(s"gh$p"))
-      .agg(min(col("__agent")).as(s"agent_$p"))
-
-  /** Left-join `points` against each precision level (finest first) and
-    * coalesce. `sentinel` is the no-match region (reference uses '0',
-    * `cal_orig_area.py:88-89`).
-    *
-    * The fact side encodes ONCE at the finest precision and every level
-    * joins on a `substring` of that one geohash — valid because the
-    * cell-index encode has the standard geohash prefix property
-    * (`floor(x·2^a) >> (a-b) = floor(x·2^b)`, and the first 5p
-    * interleaved bits ARE the precision-p string, clamping included).
-    * Re-encoding per level would put k full ~40-bit encodes in the
-    * per-row hot path — at 7 reference levels that dominated the whole
-    * query; substrings are ~free. */
-  /** `preEncoded`: a geohash column of `points` already encoded at a
-    * precision ≥ max(precisions) — callers that derive other columns
-    * from the same encode (e.g. a region id) pass it here so the fact
-    * side pays ONE encode total, not one per consumer. */
-  /** `expandNeighbors`: use [[dictAtNeighbors]] per level — the
-    * reference's 3×3 dictionary expansion before the join. */
+  /** `points` with an `agent_id` column, by the semantics above. */
   def assign(points: DataFrame, lat: Column, lon: Column,
              dict: DataFrame, dictLat: Column, dictLon: Column, dictAgent: Column,
              precisions: Seq[Int], sentinel: Long,
-             preEncoded: Option[Column] = None,
              expandNeighbors: Boolean = false): DataFrame = {
+    // a precision-12 cell code is 60 bits: the most a long holds
+    require(precisions.nonEmpty && precisions.forall(p => p >= 1 && p <= 12),
+      s"region assignment takes one or more precisions in [1, 12]; got $precisions")
+    val entries = dict
+      .select(dictLat.cast("double"), dictLon.cast("double"), dictAgent.cast("long"))
+      .collect()
+      .collect { case r if !r.anyNull => (r.getDouble(0), r.getDouble(1), r.getLong(2)) }
     val pMax = precisions.max
-    val withGh = points.withColumn("__gh_max",
-      preEncoded.getOrElse(GeoFunctions.geohashCol(lat, lon, pMax)))
-    // Deep cascades (≥3 levels) re-derive every level from ONE encoded,
-    // persisted dictionary base: level p's cell is substring(gh_pMax, 1,
-    // p) by the same prefix property the fact side uses, and min-of-mins
-    // == min keeps the tie-break identical. Without this each level's
-    // broadcast build was its own sequential single-task scan + full
-    // encode of the dict (7 such jobs dominated g13b). Shallow cascades
-    // keep the direct per-level build — a persist job costs more than
-    // the one duplicate encode it would save there (r17 opt, guide §2.4
-    // share one "exchange" / §5 caching).
-    val dictBase: Option[DataFrame] =
-      if (precisions.size > 2)
-        Some(dict.groupBy(
-            GeoFunctions.geohashCol(dictLat, dictLon, pMax).as("__dgh"))
-          .agg(min(dictAgent).as("__dagent")).persist())
-      else None
-    val level: (Int) => DataFrame = dictBase match {
-      case Some(base) if expandNeighbors => p =>
-        base.groupBy(substring(col("__dgh"), 1, p).as("__gh_self"))
-          .agg(min(col("__dagent")).as("__agent"))
-          .select(explode(GeoFunctions.geohashNeighborsUdf(col("__gh_self")))
-            .as(s"gh$p"), col("__agent"))
-          .groupBy(col(s"gh$p"))
-          .agg(min(col("__agent")).as(s"agent_$p"))
-      case Some(base) => p =>
-        base.groupBy(substring(col("__dgh"), 1, p).as(s"gh$p"))
-          .agg(min(col("__dagent")).as(s"agent_$p"))
-      case None =>
-        if (expandNeighbors) p => dictAtNeighbors(dict, dictLat, dictLon, dictAgent, p)
-        else p => dictAt(dict, dictLat, dictLon, dictAgent, p)
+    val levels = precisions.map(p => level(entries, p, expandNeighbors))
+    val table = new RegionTable(pMax, precisions.map(p => 5 * (pMax - p)).toArray,
+      levels.map(_._1).toArray, levels.map(_._2).toArray, sentinel)
+    points.withColumn("agent_id", SqlBridge.expression(lat, lon) { case Seq(la, lo) =>
+      RegionLookup(Cast(la, DoubleType), Cast(lo, DoubleType), table)
+    })
+  }
+
+  /** Level `p`'s sorted cell codes and each cell's smallest agent. */
+  private def level(entries: Array[(Double, Double, Long)], p: Int,
+                    expandNeighbors: Boolean): (Array[Long], Array[Long]) = {
+    val cells = scala.collection.mutable.LongMap.empty[Long]
+    entries.foreach { case (la, lo, agent) =>
+      val xi = GeoFunctions.lonIndex(lo, p); val yi = GeoFunctions.latIndex(la, p)
+      val claimed = if (expandNeighbors) GeoFunctions.neighborIndices(xi, yi, p) else Seq((xi, yi))
+      claimed.foreach { case (x, y) =>
+        val c = GeoFunctions.cellCode(x, y, p)
+        if (cells.get(c).forall(agent < _)) cells(c) = agent
+      }
     }
-    val joined = precisions.foldLeft(withGh) { (acc, p) =>
-      acc.join(broadcast(level(p)),
-        substring(col("__gh_max"), 1, p) === col(s"gh$p"), "left")
-        .drop(s"gh$p")
-    }
-    val agent = coalesce(
-      precisions.map(p => col(s"agent_$p")) :+ lit(sentinel): _*)
-    joined.withColumn("agent_id", agent.cast("long"))
-      .drop("__gh_max")
-      .drop(precisions.map(p => s"agent_$p"): _*)
+    val codes = cells.keys.toArray.sorted
+    (codes, codes.map(cells))
   }
 }

@@ -2,9 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, QuaternaryExpression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo, QuaternaryExpression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the geo scalar functions — the
@@ -81,6 +83,66 @@ case class GeohashNeighbors(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** The dictionary a [[RegionLookup]] probes, built on the driver by
+  * `graft.engine.RegionAssign`: per cascade level, in probe order, the
+  * sorted cell codes at that level's precision (`codes(i)`), each
+  * cell's agent (`agents(i)`, parallel) and the shift that turns a
+  * precision-`pMax` code into the level's code (`shifts(i)`). */
+final class RegionTable(val pMax: Int, val shifts: Array[Int], val codes: Array[Array[Long]],
+                        val agents: Array[Array[Long]], val sentinel: Long) extends Serializable {
+
+  /** The agent of the first level whose cell holds (lat, lon), else
+    * `sentinel`: one encode, then one binary search per level. */
+  def lookup(lat: Double, lon: Double): Long = {
+    val code = GeoFunctions.cellCode(
+      GeoFunctions.lonIndex(lon, pMax), GeoFunctions.latIndex(lat, pMax), pMax)
+    var i = 0
+    while (i < codes.length) {
+      val at = java.util.Arrays.binarySearch(codes(i), code >> shifts(i))
+      if (at >= 0) return agents(i)(at)
+      i += 1
+    }
+    sentinel
+  }
+
+  /** Plan strings show the table's size, never its arrays: Spark keeps
+    * every plan description for the session's life. */
+  override def toString: String = s"${codes.length} levels, ${codes.map(_.length).sum} cells"
+}
+
+/** The region-assignment cascade as one expression (`RegionAssign`):
+  * `table`'s agent for (lat, lon), and `table.sentinel` for a null
+  * coordinate. */
+case class RegionLookup(left: Expression, right: Expression, table: RegionTable)
+  extends BinaryExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "region_lookup"
+
+  override def eval(input: InternalRow): Any = {
+    val lat = left.eval(input)
+    val lon = right.eval(input)
+    if (lat == null || lon == null) table.sentinel
+    else table.lookup(lat.asInstanceOf[Double], lon.asInstanceOf[Double])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("regionTable", table)
+    val lat = left.genCode(ctx)
+    val lon = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${lat.code}
+      ${lon.code}
+      long ${ev.value} = (${lat.isNull} || ${lon.isNull}) ? $t.sentinel() : $t.lookup(${lat.value}, ${lon.value});""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
 }
 
 /** Session extension registering the native expressions as SQL functions

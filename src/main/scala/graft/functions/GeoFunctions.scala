@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Geospatial scalar functions the reference engine exposes:
   *
@@ -41,21 +43,33 @@ object GeoFunctions {
   def lonIndex(lon: Double, precision: Int): Long = cellIndex(lon, -180.0, 360.0, lonBits(precision))
   def latIndex(lat: Double, precision: Int): Long = cellIndex(lat, -90.0, 180.0, latBits(precision))
 
-  /** Encode from integer cell indices (MSB-first interleave, lon first). */
-  def encodeIndices(xi: Long, yi: Long, precision: Int): String = {
+  /** The 5p-bit cell code of integer cell indices: the MSB-first
+    * interleave (lon bit first) whose base-32 digits ARE the geohash, so
+    * precision q's code is this code `>> 5·(p−q)` (prefix property). */
+  def cellCode(xi: Long, yi: Long, precision: Int): Long = {
     val lb = lonBits(precision); val tb = latBits(precision)
-    val sb = new java.lang.StringBuilder(precision)
+    var code = 0L
     var g = 0 // global interleaved bit position
-    var ch = 0; var bits = 0
-    while (sb.length < precision) {
+    while (g < 5 * precision) {
       val bit =
-        if (g % 2 == 0) ((xi >> (lb - 1 - g / 2)) & 1L).toInt
-        else ((yi >> (tb - 1 - (g - 1) / 2)) & 1L).toInt
-      ch = (ch << 1) | bit
-      bits += 1; g += 1
-      if (bits == 5) { sb.append(Base32.charAt(ch)); ch = 0; bits = 0 }
+        if (g % 2 == 0) (xi >> (lb - 1 - g / 2)) & 1L
+        else (yi >> (tb - 1 - g / 2)) & 1L
+      code = (code << 1) | bit
+      g += 1
     }
-    sb.toString
+    code
+  }
+
+  /** Encode from integer cell indices: the base-32 digits of [[cellCode]]. */
+  def encodeIndices(xi: Long, yi: Long, precision: Int): String = {
+    val code = cellCode(xi, yi, precision)
+    val cs = new Array[Char](precision)
+    var k = 0
+    while (k < precision) {
+      cs(k) = Base32.charAt(((code >> (5 * (precision - 1 - k))) & 31L).toInt)
+      k += 1
+    }
+    new String(cs)
   }
 
   def geohashEncode(lat: Double, lon: Double, precision: Int): String = {
@@ -63,17 +77,21 @@ object GeoFunctions {
     encodeIndices(lonIndex(lon, precision), latIndex(lat, precision), precision)
   }
 
-  /** Self + 8 neighbors via integer index arithmetic: lon wraps mod 2^lonBits
-    * (antimeridian), lat clamps at the poles (out-of-range rows dropped). */
-  def geohashNeighbors(gh: String): Seq[String] = {
-    val p = gh.length
-    val (xi, yi) = decodeIndices(gh)
-    val nLon = 1L << lonBits(p); val nLat = 1L << latBits(p)
-    val out = for {
+  /** Self + 8 neighbors of cell (xi, yi) at `precision`, as indices: lon
+    * wraps mod 2^lonBits (antimeridian), lat clamps at the poles
+    * (out-of-range rows dropped), so 6 or 9 distinct cells. */
+  def neighborIndices(xi: Long, yi: Long, precision: Int): Seq[(Long, Long)] = {
+    val nLon = 1L << lonBits(precision); val nLat = 1L << latBits(precision)
+    for {
       dy <- Seq(-1L, 0L, 1L); dx <- Seq(-1L, 0L, 1L)
       ny = yi + dy if ny >= 0 && ny < nLat
-    } yield encodeIndices(java.lang.Math.floorMod(xi + dx, nLon), ny, p)
-    out.distinct
+    } yield (java.lang.Math.floorMod(xi + dx, nLon), ny)
+  }
+
+  /** [[neighborIndices]] of a geohash, encoded. */
+  def geohashNeighbors(gh: String): Seq[String] = {
+    val (xi, yi) = decodeIndices(gh)
+    neighborIndices(xi, yi, gh.length).map { case (x, y) => encodeIndices(x, y, gh.length) }.distinct
   }
 
   /** [[geohashNeighbors]] in Catalyst's internal representation — the
@@ -101,14 +119,6 @@ object GeoFunctions {
       }
     }
     (xi, yi)
-  }
-
-  /** Cell center (lat, lon). */
-  def geohashCenter(gh: String): (Double, Double) = {
-    val p = gh.length
-    val (xi, yi) = decodeIndices(gh)
-    val lonSpan = 360.0 / (1L << lonBits(p)); val latSpan = 180.0 / (1L << latBits(p))
-    (-90.0 + (yi + 0.5) * latSpan, -180.0 + (xi + 0.5) * lonSpan)
   }
 
   /** Great-circle distance in meters (haversine), same Earth radius the
@@ -147,26 +157,12 @@ object GeoFunctions {
     least(greatest(floor((lat + 90.0) / 180.0 * lit(1L << tb)), lit(0)), lit((1L << tb) - 1)).cast("long")
   }
 
-  /** Column-expression geohash encode from the same scaling formula,
-    * built from codegen'd built-ins (conv-free: arithmetic + substring).
-    * Kept for plan-quality; the UDF below is the simpler default. */
-  def geohashCol(lat: Column, lon: Column, precision: Int): Column = {
-    val lb = lonBits(precision); val tb = latBits(precision)
-    val xi = least(greatest(floor((lon + 180.0) / 360.0 * pow(lit(2), lb)), lit(0)), lit((1L << lb) - 1)).cast("long")
-    val yi = least(greatest(floor((lat + 90.0) / 180.0 * pow(lit(2), tb)), lit(0)), lit((1L << tb) - 1)).cast("long")
-    val built = (0 until precision).map { k =>
-      // char k covers interleaved global bits 5k .. 5k+4
-      val digit = (0 until 5).map { j =>
-        val g = 5 * k + j
-        val bit =
-          if (g % 2 == 0) shiftright(xi, lb - 1 - g / 2) % 2
-          else shiftright(yi, tb - 1 - (g - 1) / 2) % 2
-        bit * lit(1 << (4 - j))
-      }.reduce(_ + _)
-      substr(lit(Base32), (digit + 1).cast("int"), lit(1))
+  /** Geohash encode as a Column: the native [[GeohashEncode]]
+    * expression, the same kernel as [[geohashEncode]]. */
+  def geohashCol(lat: Column, lon: Column, precision: Int): Column =
+    org.apache.spark.sql.graftbridge.SqlBridge.expression(lat, lon) { case Seq(la, lo) =>
+      GeohashEncode(Cast(la, DoubleType), Cast(lo, DoubleType), Literal(precision))
     }
-    concat(built: _*)
-  }
 
   val geohashNeighborsUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((gh: String) => geohashNeighbors(gh))

@@ -46,7 +46,7 @@ object GeoQueries {
     * before the sentinel default (cal_subarea_portion.py:34-76). */
   private val CascadePrecisions = Seq(8, 7, 6, 5, 4, 3, 2)
 
-  /** Oracle twin of [[graft.engine.RegionAssign.dictAtNeighbors]]: the
+  /** Oracle twin of [[graft.engine.RegionAssign]]'s neighbor expansion: the
     * `customer` dictionary (CTE `dict(lat, lon, c_nationkey)`, with an
     * `offs(d)` CTE of {-1,0,1}) deduped per cell at precision `p`, then
     * expanded to the 3×3 neighbor block via the same integer-index
@@ -358,7 +358,7 @@ object GeoQueries {
          |       round(${haversineSql("lat", "lon", "31.2304", "121.4737")}, 1) AS dist_m
          |FROM pts ORDER BY user_id, k""".stripMargin),
 
-    // ── J4: cascading fallback region assignment, coalesce form
+    // ── J4: cascading fallback region assignment, one region lookup
     //    (cal_orig_area.py:24-43; customer table as the POI dictionary) ──
     ("g04_region_assign",
       (s: SparkSession, dir: String) => {
@@ -592,20 +592,16 @@ object GeoQueries {
             latFromKey(col("c_custkey")).as("plat"),
             lonFromKey(col("c_custkey")).as("plon"),
             (pmod(col("c_custkey"), lit(7)) + 1).cast("long").as("poi_type"))
-        // one encode at the cascade's finest precision serves BOTH the
-        // region id (substring, prefix property) and every join level
         val fixes = Tables.events(s, dir)
           .select(col("user_id"), col("ts"),
             fixKey(col("user_id"), col("ts")).as("k"))
           .withColumn("lat", latFromKey(col("k")))
           .withColumn("lon", lonFromKey(col("k")))
           .withColumn("hour", date_trunc("hour", col("ts")))
-          .withColumn("gh_fine", GeoFunctions.geohashCol(col("lat"), col("lon"), 4))
-          .withColumn("region", substring(col("gh_fine"), 1, 3))
+          .withColumn("region", GeoFunctions.geohashCol(col("lat"), col("lon"), 3))
         RegionAssign.assign(fixes, col("lat"), col("lon"),
             poiDict, col("plat"), col("plon"), col("poi_type"),
-            precisions = Seq(4, 3), sentinel = 8L,
-            preEncoded = Some(col("gh_fine")))
+            precisions = Seq(4, 3), sentinel = 8L)
           .groupBy(col("hour"), col("region"), col("agent_id").as("type"))
           .agg(count(lit(1)).as("cnt"))
           .select(tsSec(col("hour")).as("hour"), col("region"), col("type"), col("cnt"))
@@ -783,9 +779,9 @@ object GeoQueries {
     // ── J4 at reference depth: the 8-level type-priority cascade of
     //    cal_subarea_portion.py:34-76 — SEVEN precision levels plus the
     //    sentinel default (the reference's fillna('8')). Same RegionAssign
-    //    code path as g13, exercised at full depth: the fact side streams
-    //    through 7 broadcast hash joins with no shuffle until the final
-    //    count aggregation (pinned by PlanQualitySpec). ──
+    //    code path as g13, exercised at full depth: the fact side probes
+    //    all 7 levels in one region lookup, with no join and no shuffle
+    //    until the final count aggregation (pinned by PlanQualitySpec). ──
     ("g13b_type_portion_deep",
       (s: SparkSession, dir: String) => {
         val poiDict = Tables(s, dir, "customer")
@@ -793,20 +789,16 @@ object GeoQueries {
             latFromKey(col("c_custkey")).as("plat"),
             lonFromKey(col("c_custkey")).as("plon"),
             (pmod(col("c_custkey"), lit(7)) + 1).cast("long").as("poi_type"))
-        // one precision-8 encode serves the region id AND all 7 levels
         val fixes = Tables.events(s, dir)
           .select(col("user_id"), col("ts"),
             fixKey(col("user_id"), col("ts")).as("k"))
           .withColumn("lat", latFromKey(col("k")))
           .withColumn("lon", lonFromKey(col("k")))
           .withColumn("hour", date_trunc("hour", col("ts")))
-          .withColumn("gh_fine",
-            GeoFunctions.geohashCol(col("lat"), col("lon"), CascadePrecisions.max))
-          .withColumn("region", substring(col("gh_fine"), 1, 3))
+          .withColumn("region", GeoFunctions.geohashCol(col("lat"), col("lon"), 3))
         RegionAssign.assign(fixes, col("lat"), col("lon"),
             poiDict, col("plat"), col("plon"), col("poi_type"),
-            precisions = CascadePrecisions, sentinel = 8L,
-            preEncoded = Some(col("gh_fine")))
+            precisions = CascadePrecisions, sentinel = 8L)
           .groupBy(col("hour"), col("region"), col("agent_id").as("type"))
           .agg(count(lit(1)).as("cnt"))
           .select(tsSec(col("hour")).as("hour"), col("region"), col("type"), col("cnt"))
@@ -847,8 +839,8 @@ object GeoQueries {
     //    dictionary cell claims itself + its 8 adjacent cells before the
     //    join, so a fix one cell away from a POI still matches at that
     //    precision instead of falling through to a coarser level. Same
-    //    fact-side plan as g04 (one encode, substring keys, broadcast
-    //    dims); only the (small) dict side pays the 9× explode. ──
+    //    fact-side plan as g04 (one region lookup); only the (small)
+    //    dictionary side pays the 3×3 expansion. ──
     ("g16_region_assign_neighbors",
       (s: SparkSession, dir: String) => {
         val cust = Tables(s, dir, "customer")
@@ -2107,17 +2099,16 @@ object GeoQueries {
     //    (cal_mobility_matrix.py:153-206, g10b's tail, shared verbatim).
     //    Where the reference runs four scripts with parquet hand-offs
     //    between them, here the stages FUSE: ONE events scan feeds the
-    //    cascade (broadcast dictionary joins — no handoff materialization,
-    //    no fact shuffle), flows straight into the last-fix-per-hour agg,
+    //    cascade (one region lookup — no join, no handoff
+    //    materialization, no fact shuffle), flows straight into the last-fix-per-hour agg,
     //    and the persisted hourly state is the only barrier (it feeds both
     //    the transition counts and the presence vector — exactly two
     //    consumers, t20's discipline). Regions here are ASSIGNED agent
     //    ids, not raw geohash cells: agents are c_nationkey + 1 so the
     //    cascade's no-match sentinel 0 IS the trajectory machinery's '0'
     //    ("outside") sentinel without colliding with a real nation.
-    //    PlanQualitySpec pins the fusion: one events scan, zero
-    //    SortMergeJoins before the state, no exchange between assignment
-    //    and the state agg. ──
+    //    PlanQualitySpec pins the fusion: one events scan, no join before
+    //    the state, no exchange between assignment and the state agg. ──
     ("g40_pipeline",
       (s: SparkSession, dir: String) => {
         val k = fixKey(col("user_id"), col("ts"))

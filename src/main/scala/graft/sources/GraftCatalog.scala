@@ -228,22 +228,26 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     val d = tableDir(ident)
     if (!cleanSegments(ident) || !d.isDirectory)
       throw new NoSuchTableException(ident)
-    changes.foreach {
+    // every change folds into one new snapshot, validated as it goes;
+    // the file is published once, after the last change is accepted, so
+    // a refused change leaves the table as it was
+    val before = LedgerProps.read(d.getPath)
+    val after = changes.foldLeft(before) { (props, change) => change match {
       case ac: TableChange.AddConstraint => ac.constraint() match {
         case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
-          val have = LedgerProps.read(d.getPath).check
-          require(have.isEmpty, s"graft-ledger tables hold ONE CHECK " +
-            s"constraint — DROP CONSTRAINT ${have.get._1} first")
-          LedgerProps.set(d.getPath, "check_name" -> c.name(),
-            "check" -> LedgerProps.checkSql(c.predicateSql(), "CHECK"))
+          require(props.check.isEmpty, s"graft-ledger tables hold ONE CHECK " +
+            s"constraint — DROP CONSTRAINT ${props.check.get._1} first")
+          props.updated("check_name", Some(c.name()))
+            .updated("check", Some(LedgerProps.checkSql(c.predicateSql(), "CHECK")))
         case other => throw new UnsupportedOperationException(
           s"graft-ledger supports only CHECK constraints; got ${other.toDDL}")
       }
       case dc: TableChange.DropConstraint =>
-        val have = LedgerProps.read(d.getPath).check.map(_._1)
+        val have = props.check.map(_._1)
         if (have.exists(_.equalsIgnoreCase(dc.name())))
-          LedgerProps.remove(d.getPath, "check", "check_name")
-        else if (!dc.ifExists()) throw new IllegalArgumentException(
+          props.updated("check", None).updated("check_name", None)
+        else if (dc.ifExists()) props
+        else throw new IllegalArgumentException(
           s"no constraint named ${dc.name()} on $ident " +
             s"(present: ${have.getOrElse("none")})")
       // `mor` is a WRITE-PATH mode, not a layout fact — toggling it on
@@ -263,19 +267,16 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       // depends on the claim; only the exchange-free plan does.
       // The CHECK slot changes only through ADD/DROP CONSTRAINT.
       case sp: TableChange.SetProperty if alterable(sp.property()) =>
-        val k = sp.property()
-        LedgerProps.parse(k, sp.value(),
-          s"ALTER TABLE $ident SET TBLPROPERTIES('bucket')") match {
-          case Some(v) => LedgerProps.set(d.getPath, k -> v)
-          case None => LedgerProps.remove(d.getPath, k)
-        }
+        props.updated(sp.property(), LedgerProps.parse(sp.property(), sp.value(),
+          s"ALTER TABLE $ident SET TBLPROPERTIES('bucket')"))
       case rp: TableChange.RemoveProperty if alterable(rp.property()) =>
-        LedgerProps.remove(d.getPath, rp.property())
+        props.updated(rp.property(), None)
       case _ => throw new UnsupportedOperationException(
         "graft-ledger tables have a fixed schema — ALTER TABLE supports " +
           "only constraint changes and the 'mor'/'bucket'/'bloom'/" +
           "'zonemap' properties")
-    }
+    }}
+    LedgerProps.publish(before, after)
     loadTable(ident)
   }
 

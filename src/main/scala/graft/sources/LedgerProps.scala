@@ -31,7 +31,8 @@ import java.nio.file.Files
   *   - `mv.<name>=<def>` — a durable materialized view
   *     ([[graft.plans.MvRegistry.formatDef]]), re-registered by a fresh
   *     session's first load of the table. */
-final class LedgerProps private (dir: String, entries: Seq[(String, String)])
+final class LedgerProps private (private val dir: String,
+                                 private val entries: Seq[(String, String)])
     extends Serializable {
   private def get(key: String): Option[String] =
     entries.collectFirst { case (`key`, v) => v }
@@ -52,8 +53,10 @@ final class LedgerProps private (dir: String, entries: Seq[(String, String)])
   def mv(name: String): Option[String] = get(s"mv.$name")
   def mvs: Seq[String] = entries.collect { case (k, v) if k.startsWith("mv.") => v }
 
-  /** This snapshot with `key` replaced by `value` (removed when None):
-    * the path API's `bucket`/`mor` options override the file this way. */
+  /** This snapshot with `key` replaced by `value` (removed when None),
+    * a set key moving to the end as in the file: ALTER folds its changes
+    * this way, and the path API's `bucket`/`mor` options override the
+    * file this way. */
   private[sources] def updated(key: String, value: Option[String]): LedgerProps =
     new LedgerProps(dir, entries.filter(_._1 != key) ++ value.map(key -> _))
 }
@@ -78,6 +81,12 @@ object LedgerProps {
       val cut = l.indexOf('=')
       l.take(cut) -> l.drop(cut + 1)
     })
+
+  /** Write `after`, a snapshot derived from `before` by `updated`, in
+    * one publish — or not at all when it holds the same lines. */
+  def publish(before: LedgerProps, after: LedgerProps): Unit =
+    if (after.entries != before.entries)
+      write(after.dir, after.entries.map { case (k, v) => s"$k=$v" })
 
   /** Set each `key -> value`, in order, keeping every other line. */
   def set(dir: String, kvs: (String, String)*): Unit =

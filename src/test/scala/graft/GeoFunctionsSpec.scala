@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GeoFunctions._
+import GeoFunctionsSpec.geohashCenter
 
 /** Pure-function tests: geohash encode/decode/neighbors and haversine
   * against published vectors (geohash.org test values) and identities.
@@ -105,5 +106,16 @@ class GeoFunctionsSpec extends AnyFunSuite {
       assert(math.abs(r.getDouble(4) - haversineMeters(
         r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))) < 1e-9)
     }
+  }
+}
+
+object GeoFunctionsSpec {
+  /** Cell center (lat, lon) of a geohash: test probes placed inside a
+    * given cell. */
+  def geohashCenter(gh: String): (Double, Double) = {
+    val p = gh.length
+    val (xi, yi) = decodeIndices(gh)
+    val lonSpan = 360.0 / (1L << lonBits(p)); val latSpan = 180.0 / (1L << latBits(p))
+    (-90.0 + (yi + 0.5) * latSpan, -180.0 + (xi + 0.5) * lonSpan)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 import graft.functions.GeoFunctions._
+import GeoFunctionsSpec.geohashCenter
 
 /** ScalaCheck property suites (run natively by sbt's ScalaCheck
   * framework — no scalatest bridge needed). */

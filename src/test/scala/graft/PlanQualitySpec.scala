@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.execution.{ExplainMode, FormattedMode, SimpleMode}
 
 /** Plan-shape regression guards: the scale-posture properties the README
   * promises must stay visible in the physical plans (a refactor that
@@ -9,13 +9,13 @@ import org.apache.spark.sql.execution.SimpleMode
 class PlanQualitySpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
+  private def plan(name: String, mode: ExplainMode = SimpleMode): String = {
     // another suite (e.g. the smoke run) may have left catalog caches
     // behind in the shared session; a cache-substituted InMemoryRelation
     // would change the very plan shapes asserted here, so every pin
     // explains against a cache-free session, and leaves none behind
     GraftSession.release(spark)
-    try SparkEntry.queries(name)(spark, dir).queryExecution.explainString(SimpleMode)
+    try SparkEntry.queries(name)(spark, dir).queryExecution.explainString(mode)
     finally GraftSession.release(spark)
   }
 
@@ -36,27 +36,33 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("g04: cascading region assignment never shuffles the fact side") {
-    val p = plan("g04_region_assign")
-    assert("BroadcastHashJoin".r.findAllIn(p).size == 2, p)
-    assert(!p.contains("SortMergeJoin"), p)
+    // formatted: the lookup fuses into the distinct's final aggregate,
+    // whose result expressions only this mode prints
+    val p = plan("g04_region_assign", FormattedMode)
+    // both levels are one region_lookup over the collected dictionary:
+    // no join, one events scan, and the only exchanges are the points'
+    // distinct and the output sort
+    assert(!p.contains("Join"), p)
+    assert("region_lookup\\(".r.findAllIn(p).size == 1, p)
+    assert(p.contains("2 levels"), p)
+    assert("\\(\\d+\\) Scan parquet".r.findAllIn(p).size == 1, p)
+    assert("hashpartitioning\\(".r.findAllIn(p).size == 1, p)
+    assert("rangepartitioning\\(".r.findAllIn(p).size == 1, p)
   }
 
-  test("g13b: 7-level cascade is 7 broadcast joins, fact side unshuffled") {
+  test("g13b: 7-level cascade is one region_lookup, fact side unshuffled") {
     val p = plan("g13b_type_portion_deep")
-    assert("BroadcastHashJoin".r.findAllIn(p).size == 7, p)
-    assert(!p.contains("SortMergeJoin"), p)
-    // dict side (r17 opt): every level's broadcast build reads the ONE
-    // persisted gh_pMax base and derives its cell by substring — before,
-    // each level was its own scan + full re-encode of the dict table
-    assert("InMemoryTableScan".r.findAllIn(p).size == 7, p)
-    assert("substring\\(__dgh".r.findAllIn(p).size >= 7, p)
-    // the fact side is never repartitioned: the only exchanges outside
-    // the dict builds are the final count agg and the output sort
+    // all 7 levels probe one driver-built dictionary in one expression:
+    // no join, no persisted dictionary base, one events scan
+    assert(!p.contains("Join"), p)
+    assert(!p.contains("InMemoryRelation"), p)
+    assert("region_lookup\\(".r.findAllIn(p).size == 1, p)
+    assert(p.contains("7 levels"), p)
+    assert("Scan parquet".r.findAllIn(p).size == 1, p)
+    // the fact side is never repartitioned: the only exchanges are the
+    // final count agg and the output sort
     assert("Exchange hashpartitioning\\(hour".r.findAllIn(p).size == 1, p)
-    assert("Exchange rangepartitioning".r.findAllIn(p).size == 1, p)
-    // the fact side encodes one geohash and derives every level by
-    // substring — a per-level re-encode would show 7 more encode Projects
-    assert("substring\\(__gh_max".r.findAllIn(p).size == 7, p)
+    assert("Exchange".r.findAllIn(p).size == 2, p)
   }
 
   test("j07: as-of join is one partitioned window pass, no join operator") {
@@ -810,7 +816,7 @@ class PlanQualitySpec extends SparkSpec {
     assert("Exchange rangepartitioning".r.findAllIn(p).size == 1, p)
   }
 
-  test("g40: composed pipeline fuses — one events scan, broadcast cascade, no SMJ") {
+  test("g40: composed pipeline fuses — one events scan, one region_lookup, one join") {
     val p = plan("g40_pipeline")
     // the persisted hourly state is the pipeline's ONLY barrier, and it has
     // exactly two consumers (transition counts + presence vector); the
@@ -821,10 +827,12 @@ class PlanQualitySpec extends SparkSpec {
     // state agg fused into a single scan (the reference's four-script
     // parquet hand-offs are gone)
     assert("Scan parquet \\[event_id".r.findAllIn(p).size == renders, p)
-    // both cascade levels join broadcast on substrings of the one fact-side
-    // encode — the fact never shuffles on its way into the state agg
-    assert("BroadcastHashJoin \\[substring\\(__gh_max".r.findAllIn(p).size == 2 * renders, p)
-    assert(!p.contains("SortMergeJoin"), p)
+    // both cascade levels are one region_lookup per render, and the
+    // assignment adds no join — the one join left is the tail's presence
+    // lookup — so the fact never shuffles on its way into the state agg
+    assert("region_lookup\\(".r.findAllIn(p).size == renders, p)
+    assert("Join".r.findAllIn(p).size == 1, p)
+    assert(p.contains("BroadcastHashJoin [hour"), p)
     // the only fact-side exchanges per render are the two the semantics
     // require: the (user_id, hour) state agg and the (user_id) trajectory
     // window — no exchange sits between assignment and the state
