@@ -257,12 +257,7 @@ object EpiQueries {
 
   // ───────────────────────── Spark side ─────────────────────────
 
-  /** Wide per-area seed state from the testdata (exposed for the
-    * conservation spec). */
-  private[graft] def seedWide(s: SparkSession, dir: String): DataFrame =
-    seedWideFrom(Trajectory.hourlyState(Tables.events(s, dir)))
-
-  private def seedWideFrom(st: DataFrame, unit: Long = 10000L): DataFrame = {
+  private def seedWideFrom(st: DataFrame, unit: Long): DataFrame = {
     val first = st.groupBy(col("user_id"))
       .agg(min_by(col("region"), col("hour")).as("area"))
       .select(col("area"),
@@ -272,22 +267,6 @@ object EpiQueries {
     val aggs = seedAggExprs(unit).map(expr)
     first.groupBy(col("area")).agg(aggs.head, aggs.tail: _*)
   }
-
-  /** Infection step split at the transfer stage: (transfers, next) —
-    * the transfers frame still carries nf/ti per kind, which is what
-    * the reference's `Result` loop records as NI (dS2I sums, :246-249). */
-  private[graft] def infectParts(state: DataFrame,
-                                 coef: Seq[Long] = Coef): (DataFrame, DataFrame) = {
-    val stages = infectStages(sparkDiv, coef)
-    val pre = stages.take(3).foldLeft(state)((d, stage) => d.selectExpr(stage: _*))
-    (pre, pre.selectExpr(stages(3): _*))
-  }
-
-  /** One mean-field infection step (exposed for the conservation spec:
-    * S+I+A+R is invariant per (area, kind) — exactly, in integers). */
-  private[graft] def infectStep(state: DataFrame,
-                                coef: Seq[Long] = Coef): DataFrame =
-    infectParts(state, coef)._2
 
   /** The shared pipeline inputs: seed state + the `nMats` busiest hourly
     * move matrices (chosen in-plan; `mat(1)` is the chronologically

@@ -127,7 +127,7 @@ object VectorQueries {
   }
 
   /** One embedding → its [[NSub]] (j, subvector) slices. */
-  private def subSlices(vcol: Column): Column = explode(array((0 until NSub).map(j =>
+  private[graft] def subSlices(vcol: Column): Column = explode(array((0 until NSub).map(j =>
     struct(lit(j).as("j"), slice(vcol, j * SubDim + 1, SubDim).as("sub"))): _*))
 
   /** v16's PQ encode + ADC probe (seed codebook), the body of the v16
@@ -215,7 +215,7 @@ object VectorQueries {
   /** The corpus's (vec_id, j, sub) subvector rows — shared by every
     * stage of the trained-PQ pipeline (seed assignment, re-encode,
     * query table), so computed once and cached. */
-  private def pqSubs(s: SparkSession, dir: String): DataFrame =
+  private[graft] def pqSubs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
       .select(col("vec_id"), subSlices(col("embedding")).as("e"))
       .select(col("vec_id"), col("e.j").as("j"), col("e.sub").as("sub"))
@@ -226,7 +226,7 @@ object VectorQueries {
     * `min(struct(d2, code_id))` is the deterministic tie-break; the
     * subvector rides along for the training step (constant per group,
     * so `first` is value-deterministic). */
-  private def pqAssign(subs: DataFrame, codebook: DataFrame): DataFrame =
+  private[graft] def pqAssign(subs: DataFrame, codebook: DataFrame): DataFrame =
     subs.join(broadcast(codebook), Seq("j"))
       .groupBy(col("vec_id"), col("j"))
       .agg(min(struct(subD2(col("sub"), col("csub")).as("d2"), col("code_id"))).as("w"),
@@ -240,7 +240,7 @@ object VectorQueries {
     * sums so the two engines agree bit-for-bit, then one double
     * division. Codes that attract no vectors drop out (mirrored in the
     * oracle: the training join only sees assigned codes). */
-  private def pqTrainCodebook(asg0: DataFrame): DataFrame =
+  private[graft] def pqTrainCodebook(asg0: DataFrame): DataFrame =
     asg0.select(col("j"), col("code_id"), posexplode(col("sub")).as(Seq("pos", "v")))
       .groupBy(col("j"), col("code_id"), col("pos"))
       .agg(sum(round(col("v").cast("double") * 1000000).cast("long")).as("sv"),
@@ -251,18 +251,6 @@ object VectorQueries {
       .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
       .select(col("j"), col("code_id"),
         transform(col("pm"), x => x.getField("mv")).as("csub"))
-
-  /** Seed + trained assignments with their distances, for the Lloyd
-    * monotonicity spec (one training step must not increase total
-    * quantization distortion). */
-  private[graft] def pqAssignments(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val subs = pqSubs(s, dir)
-    val codes0 = Tables(s, dir, "embeddings").where(col("vec_id") < 8)
-      .select(col("vec_id").as("code_id"), subSlices(col("embedding")).as("e"))
-      .select(col("e.j").as("j"), col("code_id"), col("e.sub").as("csub"))
-    val asg0 = pqAssign(subs, codes0).persist()
-    (asg0, pqAssign(subs, pqTrainCodebook(asg0)))
-  }
 
   /** v32's dedup stage, exposed for the spec that pins its
     * observability: ingest seeded with 2×-scaled twins of the query ids

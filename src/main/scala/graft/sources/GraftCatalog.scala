@@ -343,8 +343,8 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     new RefProcedure(root, "fast_forward"), new MergeBranchProcedure(root),
     new RewriteTombstonesProcedure(root), new DeleteAtProcedure(root),
     new DedupRowsProcedure(root), new ConvergeProcedure(root),
-    new CloneProcedure(root), new BuildBloomProcedure(root),
-    new BuildZoneMapProcedure(root), new TxnProcedure(root, "txn_begin"),
+    new CloneProcedure(root), new BuildIndexProcedure(root, SkipIndex.Bloom),
+    new BuildIndexProcedure(root, SkipIndex.ZoneMap), new TxnProcedure(root, "txn_begin"),
     new TxnProcedure(root, "txn_commit"), new TxnProcedure(root, "txn_abort"),
     new MvProcedure(root, "create_mv"), new MvProcedure(root, "refresh_mv"),
     new MvProcedure(root, "drop_mv"))
@@ -539,7 +539,7 @@ private[sources] final class ExpireVersionsProcedure(root: File)
         .filterNot(f => referenced.contains(f.getName))
     orphans.foreach(f =>
       require(f.delete(), s"cannot reclaim orphan ${f.getPath}"))
-    LedgerSource.sweepOrphanSidecars(d): Unit
+    SkipIndex.sweepOrphans(d): Unit
     result("versions_expired" -> expired.length.toLong,
       "files_reclaimed" -> orphans.length.toLong,
       "n_rows" -> LedgerSource.statsSnapshot(d).map(_._4).sum)
@@ -644,64 +644,60 @@ private[sources] final class RefProcedure(root: File, verb: String)
   }
 }
 
-/** `CALL system.build_bloom(t, col)` — declare `col` as the table's
-  * Bloom-indexed column (persisted in `_props`, so every LATER write
-  * stamps its file's sidecar itself) and BACKFILL sidecars for every
-  * existing data file by decoding it once. Rebuilding an existing
-  * sidecar is idempotent (atomic replace); sidecars are derived
-  * acceleration data, never in version manifests. Backfill includes
-  * tombstoned rows — a Bloom over a superset keeps the zero-false-
-  * negative contract (it may only ADMIT more). Returns one row
-  * `(col, files_indexed)`. */
-private[sources] final class BuildBloomProcedure(root: File)
-    extends LedgerProcedure(root, "build_bloom",
-      "declare a Bloom-indexed column and backfill per-file sidecars") {
+/** `CALL system.build_bloom(t, col)` / `build_zonemap(t, col)` — declare
+  * `col` as the table's column for skip index `ix` (persisted in
+  * `_props`, so every LATER write stamps its file's sidecar itself) and
+  * BACKFILL sidecars for every existing data file. The backfill is a
+  * regular DISTRIBUTED job over the connector's own scan (the compact
+  * discipline), so it reads LIVE rows, through the merge-on-read overlay:
+  * one aggregate gathers each file's distinct non-null values, clustered
+  * by file, and each task folds the files it owns with the writers' own
+  * [[SkipIndex.Fold]] and publishes their sidecars — the driver never
+  * sees a value. Tombstones only remove rows, so a live-row sidecar
+  * admits a subset of what the file's raw rows would: still zero false
+  * negatives. Files the job never saw (zero rows, all-null values, or
+  * fully dead) and that have no sidecar get the empty fold's, which
+  * refutes every probe.
+  * Rebuilding an existing sidecar is idempotent (atomic replace).
+  * Returns one row `(column, files_indexed)`. */
+private[sources] final class BuildIndexProcedure(root: File, ix: SkipIndex)
+    extends LedgerProcedure(root, s"build_${ix.prop}", ix match {
+      case SkipIndex.Bloom =>
+        "declare a Bloom-indexed column and backfill per-file sidecars"
+      case SkipIndex.ZoneMap =>
+        "declare a zone-mapped (min/max) column and backfill per-file sidecars"
+    }) {
   override def parameters(): Array[ProcedureParameter] = Array(tableParam,
-    param("column", StringType, "the non-key column to index (lang, n_chars)"))
+    param("column", StringType, ix match {
+      case SkipIndex.Bloom => "the non-key column to index (lang, n_chars)"
+      case SkipIndex.ZoneMap => "the non-key column to zone-map (lang, n_chars)"
+    }))
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val col = input.getUTF8String(1).toString
     val (_, d) = tableArg(input)
-    LedgerProps.set(d, "bloom" -> LedgerProps.indexColumn("bloom", col))
-    // the backfill is a regular DISTRIBUTED job over the connector's
-    // own scan (the compact discipline): per-file distinct values ride
-    // the `_file` metadata column, cluster by file, and each task
-    // writes the complete sidecars for the file groups it owns — a
-    // 100-TB backfill decodes each file once, in parallel, driver
-    // untouched. Executors share the table filesystem by the same
-    // contract every writer already relies on.
+    LedgerProps.set(d, ix.prop -> LedgerProps.indexColumn(ix.prop, col))
     val spark = org.apache.spark.sql.SparkSession.active
-    import org.apache.spark.sql.functions.{col => c}
+    import org.apache.spark.sql.functions.{col => c, collect_set}
+    // executors share the table filesystem by the same contract every
+    // writer relies on; `index` keeps the closure off this procedure
+    val index = ix
     val isLang = col == "lang"
     spark.read.format("graft-ledger").load(d)
-      .select(c(LedgerSource.FileColumn).as("f"), c(col).as("v"))
-      .where(c("v").isNotNull).distinct()
-      .repartition(c("f")).sortWithinPartitions("f")
+      .where(c(col).isNotNull)
+      .groupBy(c(LedgerSource.FileColumn))
+      .agg(collect_set(c(col)))
       .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        var cur: String = null
-        val seen = scala.collection.mutable.HashSet.empty[(Int, Int)]
-        def flush(): Unit = if (cur != null) {
-          LedgerSource.writeBloomSidecar(d, cur, col, seen)
-          seen.clear()
+        it.foreach { r =>
+          val fold = index.fold(col)
+          if (isLang) r.getSeq[String](1).foreach(v => fold.add(v.getBytes("UTF-8")))
+          else r.getSeq[Long](1).foreach(v => fold.add(v))
+          fold.publish(d, r.getString(0))
         }
-        while (it.hasNext) {
-          val r = it.next()
-          val f = r.getString(0)
-          if (f != cur) { flush(); cur = f }
-          val bytes =
-            if (isLang) r.getString(1).getBytes("UTF-8")
-            else java.nio.ByteBuffer.allocate(8).putLong(r.getLong(1)).array()
-          seen += LedgerSource.bloomHashes(bytes)
-        }
-        flush()
       }
-    // files the job never saw (zero rows, all-null values, or fully
-    // tombstoned) get an EMPTY filter: no value can live there, so an
-    // equality probe provably skips them — never the back-off path
     var indexed = 0L
     LedgerSource.ledgerFiles(d).foreach { f =>
-      if (!LedgerSource.bloomSidecar(d, f.getName, col).isFile)
-        LedgerSource.writeBloomSidecar(d, f.getName, col, Nil)
+      if (!ix.sidecar(d, f.getName, col).isFile) ix.fold(col).publish(d, f.getName)
       indexed += 1
     }
     result("column" -> col, "files_indexed" -> indexed)
@@ -887,59 +883,6 @@ private[sources] final class DedupRowsProcedure(root: File)
       else LedgerSource.additiveCommit(d, None, written.map(_._1).toSeq)
     result("positions_deleted" -> written.map(_._2).sum,
       "files_affected" -> written.map(_._3).sum, "version" -> version)
-  }
-}
-
-/** `CALL system.build_zonemap(t, col)` — declare `col` as the table's
-  * zone-mapped column (persisted in `_props`, so every LATER write
-  * stamps its file's min/max sidecar itself) and BACKFILL sidecars for
-  * every existing data file: the RANGE complement to build_bloom, and
-  * the same distributed discipline — per-file min/max aggregate over
-  * the connector's own scan, each task stamping the files it owns, the
-  * driver untouched by values. Backfill folds LIVE rows (through the
-  * MoR overlay): tombstones only grow, so a live-row interval can only
-  * be tighter than the raw one — still zero false negatives. Files the
-  * job never saw (zero rows, all-null, fully dead) get a NO-VALUES
-  * sidecar: comparisons never match NULL, so every probe provably
-  * skips them. Returns one row `(col, files_indexed)`. */
-private[sources] final class BuildZoneMapProcedure(root: File)
-    extends LedgerProcedure(root, "build_zonemap",
-      "declare a zone-mapped (min/max) column and backfill per-file sidecars") {
-  override def parameters(): Array[ProcedureParameter] = Array(tableParam,
-    param("column", StringType, "the non-key column to zone-map (lang, n_chars)"))
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val col = input.getUTF8String(1).toString
-    val (_, d) = tableArg(input)
-    LedgerProps.set(d, "zonemap" -> LedgerProps.indexColumn("zonemap", col))
-    val spark = org.apache.spark.sql.SparkSession.active
-    import org.apache.spark.sql.functions.{col => c, min => mn, max => mx}
-    val isLang = col == "lang"
-    spark.read.format("graft-ledger").load(d)
-      .select(c(LedgerSource.FileColumn).as("f"), c(col).as("v"))
-      .where(c("v").isNotNull)
-      .groupBy("f").agg(mn("v").as("lo"), mx("v").as("hi"))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        it.foreach { r =>
-          val range =
-            if (isLang) (r.getString(1).getBytes("UTF-8"),
-              r.getString(2).getBytes("UTF-8"))
-            else (java.nio.ByteBuffer.allocate(8).putLong(r.getLong(1))
-              .array(),
-              java.nio.ByteBuffer.allocate(8).putLong(r.getLong(2)).array())
-          LedgerSource.writeZoneSidecar(d, r.getString(0), col,
-            isLong = !isLang, Some(range))
-        }
-      }
-    // files the job never saw prove out for every comparison probe
-    var indexed = 0L
-    LedgerSource.ledgerFiles(d).foreach { f =>
-      if (!LedgerSource.zoneSidecar(d, f.getName, col).isFile)
-        LedgerSource.writeZoneSidecar(d, f.getName, col,
-          isLong = !isLang, None)
-      indexed += 1
-    }
-    result("column" -> col, "files_indexed" -> indexed)
   }
 }
 
@@ -1276,7 +1219,7 @@ private[sources] final class ConvergeProcedure(root: File)
       .filterNot(f => keep.contains(f.getName))
     orphans.foreach(f =>
       require(f.delete(), s"cannot reclaim orphan ${f.getPath}"))
-    LedgerSource.sweepOrphanSidecars(d): Unit
+    SkipIndex.sweepOrphans(d): Unit
     LedgerSource.dropRef(d, "branch", "main")
     // tags survive converge (they are names, not lineages) — they
     // dangle loudly if the reclaim took their files.
@@ -1621,9 +1564,9 @@ private[sources] object LedgerMetadataTables {
 
   /** `<cat>.<table>.indexes` — INDEX COVERAGE as a metadata table (s69,
     * completing the `.history`/`.refs`/`.lineage` observability family):
-    * one row per live data file per DECLARED index — the Bloom column
-    * and, since s71, the zone-map column, distinguished by `kind` — with
-    * whether a well-formed sidecar covers it. The rows answer the
+    * one row per live data file per DECLARED index ([[SkipIndex]]: the
+    * Bloom column and the zone-map column, distinguished by `kind`) —
+    * with whether a sidecar with the index's magic covers it. The rows answer the
     * operator question the skip indexes raise — "which files will a
     * probe still scan?" — because back-off is per file: writer-stamped
     * and backfilled files skip, files minted by CoW clip-rewrites (fresh
@@ -1634,30 +1577,10 @@ private[sources] object LedgerMetadataTables {
     StructType.fromDDL("file STRING NOT NULL, kind STRING NOT NULL, " +
       "`column` STRING NOT NULL, indexed BOOLEAN NOT NULL"),
     () => {
-      def wellFormed(side: File, magic: Int): Boolean =
-        side.isFile && {
-          val in = new java.io.DataInputStream(
-            new java.io.FileInputStream(side))
-          try in.readInt() == magic
-          catch { case _: java.io.IOException => false }
-          finally in.close()
-        }
-      // one row per live file per DECLARED index — the Bloom column
-      // and/or the zone-map column (s71 joined the family)
-      val props = LedgerProps.read(path)
-      val bloom = props.bloom.map { c =>
-        ("bloom", c, (f: String) =>
-          wellFormed(LedgerSource.bloomSidecar(path, f, c),
-            LedgerSource.BloomMagic))
-      }
-      val zone = props.zonemap.map { c =>
-        ("zone", c, (f: String) =>
-          wellFormed(LedgerSource.zoneSidecar(path, f, c),
-            LedgerSource.ZoneMagic))
-      }
+      val indexes = LedgerProps.read(path).indexes
       LedgerSource.ledgerFiles(path).sortBy(_.getName).flatMap { f =>
-        (bloom.toSeq ++ zone.toSeq).map { case (kind, c, check) =>
-          row(f.getName, kind, c, check(f.getName))
+        indexes.map { case (ix, c) =>
+          row(f.getName, ix.kind, c, ix.covers(path, f.getName, c))
         }
       }
     })

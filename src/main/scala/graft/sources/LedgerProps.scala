@@ -47,8 +47,10 @@ final class LedgerProps private (private val dir: String,
     get("check").map(_.trim).filter(_.nonEmpty).map { sql =>
       (get("check_name").map(_.trim).getOrElse("ledger_check"), sql)
     }
-  val bloom: Option[String] = get("bloom").filter(LedgerProps.IndexColumns)
-  val zonemap: Option[String] = get("zonemap").filter(LedgerProps.IndexColumns)
+  /** The declared skip indexes with their columns, in [[SkipIndex.all]]
+    * order. */
+  val indexes: Seq[(SkipIndex, String)] =
+    SkipIndex.all.flatMap(ix => get(ix.prop).filter(LedgerProps.IndexColumns).map(ix -> _))
   /** The definition persisted for materialized view `name`. */
   def mv(name: String): Option[String] = get(s"mv.$name")
   def mvs: Seq[String] = entries.collect { case (k, v) if k.startsWith("mv.") => v }

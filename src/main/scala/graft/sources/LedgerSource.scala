@@ -969,307 +969,6 @@ object LedgerSource {
                                        name: String): Option[Long] =
     readRef(dir, "tag", name).orElse(readRef(dir, "branch", name))
 
-  // ── s64: per-file BLOOM skip index over a declared non-key column ──
-  //
-  // The stats headers skip files by KEY range only; an equality probe
-  // on a scattered content column (`WHERE lang = 'fr'`) scans every
-  // file. The fix is Iceberg's puffin / Delta's Bloom-index idea at
-  // ledger scale: an OPTIONAL per-file Bloom sidecar
-  // (`_bloom/<dataFile>.<col>`) over ONE declared non-key column
-  // (`bloom=<col>` in `_props`), consulted by the scan for pushed
-  // equality/IN probes. The contract is ZERO FALSE NEGATIVES: a Bloom
-  // may ADMIT a file that lacks the value (the probe re-filters rows),
-  // it must never EXCLUDE a file that contains it — so a missing,
-  // truncated, or foreign-format sidecar backs off to "scan the file",
-  // and file names denote immutable content, so a sidecar can never go
-  // stale (rewrites/compaction mint FRESH names, which simply start
-  // unindexed until the writer or build_bloom stamps them). Sidecars
-  // are derived acceleration data: never in version manifests, losable
-  // and rebuildable at will (CALL system.build_bloom backfills).
-  private[graft] val BloomDir = "_bloom"
-  private[sources] val BloomMagic = 0x47424631 // "GBF1"
-  private[sources] val BloomHashesPerKey = 7
-
-  /** Two independent 32-bit hashes of a value's canonical bytes —
-    * Kirsch-Mitzenmacher double hashing derives the k probe bits.
-    * Strings hash their UTF-8 bytes, longs their big-endian 8 bytes;
-    * both writer fold and scan probe go through HERE, so the two sides
-    * can never disagree on a value's encoding. */
-  private[graft] def bloomHashes(bytes: Array[Byte]): (Int, Int) =
-    (scala.util.hashing.MurmurHash3.bytesHash(bytes, 0x5EEDB100),
-      scala.util.hashing.MurmurHash3.bytesHash(bytes, 0x5EEDB2F1))
-
-  private[sources] def bloomBytes(v: Any): Option[Array[Byte]] = v match {
-    case null => None
-    case s: String => Some(s.getBytes("UTF-8"))
-    case u: UTF8String => Some(u.getBytes)
-    case l: java.lang.Long =>
-      Some(java.nio.ByteBuffer.allocate(8).putLong(l.longValue()).array())
-    case i: java.lang.Integer =>
-      Some(java.nio.ByteBuffer.allocate(8).putLong(i.longValue()).array())
-    case _ => None
-  }
-
-  private[graft] def bloomSidecar(dir: String, dataFileName: String,
-                                    col: String): File =
-    new File(new File(dir, BloomDir), s"$dataFileName.$col")
-
-  /** Land one file's sidecar: ~10 bits/key (<1% fp at k=7), sized by
-    * the file's DISTINCT hash count, atomically published so a reader
-    * never sees a torn filter. */
-  private[graft] def writeBloomSidecar(dir: String, dataFileName: String,
-                                         col: String,
-                                         hashes: Iterable[(Int, Int)]): Unit = {
-    val n = math.max(hashes.size, 1)
-    val mBits = math.max(64L, (n.toLong * 10L + 63L) / 64L * 64L)
-    val words = new Array[Long]((mBits / 64L).toInt)
-    hashes.foreach { case (h1, h2) =>
-      var i = 0
-      while (i < BloomHashesPerKey) {
-        val bit = java.lang.Math.floorMod(
-          h1.toLong + i.toLong * h2.toLong, mBits)
-        words((bit / 64L).toInt) |= (1L << (bit % 64L))
-        i += 1
-      }
-    }
-    new File(dir, BloomDir).mkdirs()
-    publish(bloomSidecar(dir, dataFileName, col), bytesOf { out =>
-      out.writeInt(BloomMagic)
-      out.writeInt(BloomHashesPerKey)
-      out.writeLong(mBits)
-      words.foreach(out.writeLong)
-    })
-  }
-
-  /** What `body` writes, as bytes — a sidecar's content before [[publish]]. */
-  private def bytesOf(body: DataOutputStream => Unit): Array[Byte] = {
-    val buf = new java.io.ByteArrayOutputStream()
-    val out = new DataOutputStream(buf)
-    body(out)
-    out.flush()
-    buf.toByteArray
-  }
-
-  /** A loaded, well-formed sidecar: (k, mBits, words). `None` on any
-    * doubt — no sidecar (unindexed file), foreign magic, torn read —
-    * which callers must treat as BACK OFF (scan the file). Loaded ONCE
-    * per file per probe batch: an IN-probe carrying a join-delivered
-    * key set tests many values against one filter, and re-reading the
-    * sidecar per value would make planning IO cost O(values x files). */
-  private[sources] def loadBloomSidecar(dir: String, dataFileName: String,
-                                        col: String)
-      : Option[(Int, Long, Array[Long])] = {
-    val f = bloomSidecar(dir, dataFileName, col)
-    if (!f.isFile) return None
-    try {
-      val in = new DataInputStream(
-        new java.io.BufferedInputStream(new FileInputStream(f), 1 << 13))
-      try {
-        if (in.readInt() != BloomMagic) return None
-        val k = in.readInt()
-        val mBits = in.readLong()
-        if (k <= 0 || mBits <= 0 || mBits % 64 != 0) return None
-        val words = new Array[Long]((mBits / 64L).toInt)
-        var w = 0
-        while (w < words.length) { words(w) = in.readLong(); w += 1 }
-        Some((k, mBits, words))
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
-  }
-
-  /** Pure membership test against a loaded filter. */
-  private[sources] def bloomTest(filter: (Int, Long, Array[Long]),
-                                 value: Array[Byte]): Boolean = {
-    val (k, mBits, words) = filter
-    val (h1, h2) = bloomHashes(value)
-    var i = 0
-    while (i < k) {
-      val bit = java.lang.Math.floorMod(
-        h1.toLong + i.toLong * h2.toLong, mBits)
-      if ((words((bit / 64L).toInt) & (1L << (bit % 64L))) == 0L)
-        return false
-      i += 1
-    }
-    true
-  }
-
-  /** May `dataFileName` contain a row whose `col` equals the probed
-    * value? `true` on any doubt — no sidecar (unindexed file), foreign
-    * magic, or a torn read all BACK OFF to scanning the file; only a
-    * well-formed filter that proves absence may exclude it (the
-    * zero-false-negative contract `Round17OpsSpec` and `BloomProps`
-    * pin). Single-value convenience over load+test — batch callers
-    * (the scan) load once per file instead. */
-  private[graft] def bloomMightContain(dir: String, dataFileName: String,
-                                       col: String,
-                                       value: Array[Byte]): Boolean =
-    loadBloomSidecar(dir, dataFileName, col).forall(bloomTest(_, value))
-
-  // ── zone maps: per-file MIN/MAX sidecars over a non-key column
-  //    (round 17 — Iceberg/Delta column stats, parquet's zone-map
-  //    idea applied at file granularity): the RANGE complement to the
-  //    Bloom equality skip. A `_zones/<file>.<col>` sidecar holds the
-  //    file's non-null min/max of the declared column, stamped by
-  //    every writer at commit and backfilled by `CALL
-  //    system.build_zonemap`; the scan consults it for pushed
-  //    comparison probes (=, IN, <, <=, >, >=) and skips files whose
-  //    interval provably misses. Same soundness story as the Bloom:
-  //    a sidecar may only EXCLUDE when well-formed (missing/foreign/
-  //    torn → scan), rewrites land fresh names that start unindexed,
-  //    and comparisons never match NULL so an all-null/empty file
-  //    (hasValues=0) skips every comparison probe.
-  //
-  //    Layout: magic "GZM1" | typeTag u8 (0=long, 1=string) |
-  //            hasValues u8 | [minLen i32, min bytes,
-  //                            maxLen i32, max bytes]
-  //    (longs big-endian 8 bytes, DECODED for signed comparison;
-  //    strings raw UTF-8, compared unsigned byte-wise — exactly
-  //    UTF8String's binary ordering, so the sidecar and Spark's
-  //    `min(string)` can never disagree.)
-  private[graft] val ZoneDir = "_zones"
-  private[sources] val ZoneMagic = 0x475A4D31 // "GZM1"
-
-  private[graft] def zoneSidecar(dir: String, dataFileName: String,
-                                 col: String): File =
-    new File(new File(dir, ZoneDir), s"$dataFileName.$col")
-
-  /** Land one file's zone sidecar atomically; `range` is
-    * `(minBytes, maxBytes)` over the file's NON-NULL values in the
-    * [[bloomBytes]] encoding, or None when the file holds none. */
-  private[graft] def writeZoneSidecar(dir: String, dataFileName: String,
-                                      col: String, isLong: Boolean,
-                                      range: Option[(Array[Byte], Array[Byte])])
-      : Unit = {
-    new File(dir, ZoneDir).mkdirs()
-    publish(zoneSidecar(dir, dataFileName, col), bytesOf { out =>
-      out.writeInt(ZoneMagic)
-      out.writeByte(if (isLong) 0 else 1)
-      out.writeByte(if (range.isDefined) 1 else 0)
-      range.foreach { case (mn, mx) =>
-        out.writeInt(mn.length); out.write(mn)
-        out.writeInt(mx.length); out.write(mx)
-      }
-    })
-  }
-
-  /** A loaded, well-formed zone sidecar:
-    * `(isLong, Some((minBytes, maxBytes)) | None-for-no-values)`.
-    * Outer None on any doubt — callers back off to scanning. */
-  private[sources] def loadZoneSidecar(dir: String, dataFileName: String,
-                                       col: String)
-      : Option[(Boolean, Option[(Array[Byte], Array[Byte])])] = {
-    val f = zoneSidecar(dir, dataFileName, col)
-    if (!f.isFile) return None
-    try {
-      val in = new DataInputStream(
-        new java.io.BufferedInputStream(new FileInputStream(f), 1 << 10))
-      try {
-        if (in.readInt() != ZoneMagic) return None
-        val tag = in.readByte()
-        if (tag != 0 && tag != 1) return None
-        val has = in.readByte()
-        if (has != 0 && has != 1) return None
-        if (has == 0) Some((tag == 0, None))
-        else {
-          val mnLen = in.readInt()
-          if (mnLen < 0 || mnLen > (1 << 20)) return None
-          val mn = new Array[Byte](mnLen); in.readFully(mn)
-          val mxLen = in.readInt()
-          if (mxLen < 0 || mxLen > (1 << 20)) return None
-          val mx = new Array[Byte](mxLen); in.readFully(mx)
-          Some((tag == 0, Some((mn, mx))))
-        }
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
-  }
-
-  /** May `dataFileName` contain a row matching ALL the probes, per its
-    * zone sidecar? `true` on any doubt (missing/foreign/torn sidecar —
-    * the back-off contract); only a well-formed interval may exclude.
-    * Single-file convenience over load+admit, mirroring
-    * [[bloomMightContain]] — the scan loads once per file instead. */
-  private[graft] def zoneMightMatch(dir: String, dataFileName: String,
-                                    col: String,
-                                    probes: Seq[Filter]): Boolean =
-    loadZoneSidecar(dir, dataFileName, col) match {
-      case None => true
-      case Some(zone) => zoneAdmits(zone, probes)
-    }
-
-  /** Remove index sidecars whose data file is GONE (plus stale `.tmp`
-    * publish leftovers): sidecars are derived acceleration data, never
-    * in version manifests, so nothing can dangle on them — the
-    * destructive verbs (truncate, expiry, converge) sweep them
-    * opportunistically so `_bloom`/`_zones` don't accumulate entries
-    * for every name a rewrite ever minted. Returns the count swept. */
-  private[graft] def sweepOrphanSidecars(dir: String): Long = {
-    val liveData = ledgerFiles(dir).map(_.getName).toSet
-    var n = 0L
-    Seq(BloomDir, ZoneDir).foreach { sub =>
-      val sd = new File(dir, sub)
-      if (sd.isDirectory)
-        Option(sd.listFiles()).getOrElse(Array.empty[File]).foreach { f =>
-          // sidecar name = <dataFile>.<col>; strip the LAST dot segment
-          val cut = f.getName.lastIndexOf('.')
-          val dataName = if (cut < 0) f.getName else f.getName.take(cut)
-          if (!liveData.contains(dataName) && f.delete()) n += 1
-        }
-    }
-    n
-  }
-
-  /** Unsigned lexicographic byte compare — UTF8String's binary
-    * ordering, the string comparison both the writer's fold and the
-    * probe below use. */
-  private[sources] def unsignedCompare(a: Array[Byte],
-                                       b: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val c = java.lang.Integer.compare(a(i) & 0xff, b(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    java.lang.Integer.compare(a.length, b.length)
-  }
-
-  /** May a file with this (loaded) zone sidecar contain a row matching
-    * ALL the probes? Comparisons never match NULL, so a no-values
-    * sidecar refutes every probe; an unrecognized probe shape admits.
-    * Longs decode for SIGNED comparison (big-endian byte order is not
-    * numeric order for negatives); strings compare unsigned. */
-  private[sources] def zoneAdmits(zone: (Boolean,
-                                   Option[(Array[Byte], Array[Byte])]),
-                                  probes: Seq[Filter]): Boolean = {
-    val (isLong, range) = zone
-    def cmp(v: Array[Byte], w: Array[Byte]): Int =
-      if (isLong)
-        java.lang.Long.compare(java.nio.ByteBuffer.wrap(v).getLong,
-          java.nio.ByteBuffer.wrap(w).getLong)
-      else unsignedCompare(v, w)
-    probes.forall { p =>
-      range match {
-        case None => false // no non-null values: no comparison matches
-        case Some((mn, mx)) =>
-          def inRange(v: Any): Boolean = bloomBytes(v).forall(b =>
-            cmp(b, mn) >= 0 && cmp(b, mx) <= 0)
-          p match {
-            case EqualTo(_, v) => inRange(v)
-            case In(_, vs) => vs.exists(inRange)
-            case GreaterThan(_, v) =>
-              bloomBytes(v).forall(b => cmp(mx, b) > 0)
-            case GreaterThanOrEqual(_, v) =>
-              bloomBytes(v).forall(b => cmp(mx, b) >= 0)
-            case LessThan(_, v) =>
-              bloomBytes(v).forall(b => cmp(mn, b) < 0)
-            case LessThanOrEqual(_, v) =>
-              bloomBytes(v).forall(b => cmp(mn, b) <= 0)
-            case _ => true
-          }
-      }
-    }
-  }
-
   /** Per-file header stats for every ledger file in `path`, as one
     * snapshot: `(file, minDocId, maxDocId, nRows)`. Reads parallelize
     * over a bounded pool once the listing is large — each header is a
@@ -1539,8 +1238,7 @@ final class LedgerTable(path: String, props: LedgerProps,
     if (props.mor) m.put("mor", "true")
     // declared skip indexes — DESCRIBE EXTENDED / SHOW TBLPROPERTIES
     // should say which columns probe through sidecars
-    props.bloom.foreach(c => m.put("bloom", c))
-    props.zonemap.foreach(c => m.put("zonemap", c))
+    props.indexes.foreach { case (ix, c) => m.put(ix.prop, c) }
     props.check.foreach { case (name, sql) =>
       m.put("check", sql)
       m.put("check_name", name)
@@ -1759,13 +1457,11 @@ final class LedgerScanBuilder(path: String,
     ok
   }
 
-  private lazy val props = LedgerProps.read(path)
-  private def bloomCol: Option[String] = props.bloom
-  // the zone-map column (s71) additionally accepts RANGE probes — the
-  // sidecar's min/max interval can refute <, <=, >, >= and equality
-  private def zoneCol: Option[String] = props.zonemap
-  /** Accept doc_id comparisons — plus equality/IN probes on the
-    * table's declared Bloom column (s64), which the scan turns into
+  /** The table's declared skip indexes, read from `_props` once and
+    * handed to the scan. */
+  private lazy val indexes = LedgerProps.read(path).indexes
+  /** Accept doc_id comparisons — plus the probes a declared skip index
+    * can refute ([[SkipIndex.accepts]]), which the scan turns into
     * per-file sidecar tests. Everything else stays Spark-side. The
     * accepted ones are STILL returned for Spark re-evaluation (the
     * conservative contract), so reader-level filtering is a pure
@@ -1777,19 +1473,7 @@ final class LedgerScanBuilder(path: String,
       case GreaterThanOrEqual("doc_id", _: java.lang.Long) => true
       case LessThan("doc_id", _: java.lang.Long) => true
       case LessThanOrEqual("doc_id", _: java.lang.Long) => true
-      // NULL probes stay Spark-side: a Bloom holds no nulls, and
-      // `col = NULL` matches nothing anyway — declining is exact
-      case EqualTo(c, v) if (bloomCol.contains(c) ||
-        zoneCol.contains(c)) && v != null => true
-      case In(c, vs) if (bloomCol.contains(c) || zoneCol.contains(c)) &&
-        vs != null && vs.nonEmpty && !vs.contains(null) => true
-      case GreaterThan(c, v) if zoneCol.contains(c) && v != null => true
-      case GreaterThanOrEqual(c, v) if zoneCol.contains(c) &&
-        v != null => true
-      case LessThan(c, v) if zoneCol.contains(c) && v != null => true
-      case LessThanOrEqual(c, v) if zoneCol.contains(c) &&
-        v != null => true
-      case _ => false
+      case f => SkipIndex.accepts(indexes, f)
     }
     filters
   }
@@ -1838,7 +1522,7 @@ final class LedgerScanBuilder(path: String,
     case Some(agg) if pinned.isEmpty => new LedgerAggScan(path, agg)
     case _ =>
       new LedgerScan(path, required, pushed, maxFilesPerTrigger, group,
-        pinned, bucketWidth, pushedLimit, topNAscending)
+        pinned, bucketWidth, pushedLimit, topNAscending, indexes)
   }
 }
 
@@ -1950,7 +1634,8 @@ final class LedgerScan(path: String, required: StructType,
                        pinned: Option[Long] = None,
                        bucketWidth: Option[Long] = None,
                        pushedLimit: Option[Int] = None,
-                       topNAscending: Option[Boolean] = None)
+                       topNAscending: Option[Boolean] = None,
+                       indexes: Seq[(SkipIndex, String)] = Nil)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -1965,19 +1650,10 @@ final class LedgerScan(path: String, required: StructType,
       // reading through tombstones should say so
       (if (deletePaths.nonEmpty) s", DeleteFiles: ${deletePaths.length}"
        else "") +
-      // surface the Bloom skip in .explain whenever a pushed probe
-      // can consult sidecars — the plan should say why files vanish
-      bloomCol.filter(c => pushed.exists {
-        case EqualTo(`c`, _) | In(`c`, _) => true
-        case _ => false
-      }).map(c => s", BloomSkip: $c").getOrElse("") +
-      // likewise the zone-map skip: say why files vanish on a range probe
-      zoneCol.filter(c => pushed.exists {
-        case EqualTo(`c`, _) | In(`c`, _) | GreaterThan(`c`, _) |
-             GreaterThanOrEqual(`c`, _) | LessThan(`c`, _) |
-             LessThanOrEqual(`c`, _) => true
-        case _ => false
-      }).map(c => s", ZoneSkip: $c").getOrElse("") +
+      // surface each skip index in .explain whenever a pushed probe
+      // can consult its sidecars — the plan should say why files vanish
+      indexes.collect { case (ix, c) if pushed.exists(ix.refutes(_, c)) =>
+        s", ${ix.tag}: $c" }.mkString +
       pushedLimit.map(n => topNAscending match {
         case Some(asc) =>
           s", PushedTopN: ORDER BY doc_id ${if (asc) "ASC" else "DESC"} LIMIT $n"
@@ -1993,8 +1669,8 @@ final class LedgerScan(path: String, required: StructType,
     * the join still re-applies its condition, so an over-broad plan is
     * slower, never wrong. */
   @volatile private var runtime: Array[Filter] = Array.empty
-  // the Bloom column (s64) is also a RUNTIME filter attribute: a
-  // broadcast dim-join on the indexed content column hands its
+  // the indexed columns are also RUNTIME filter attributes: a
+  // broadcast dim-join on an indexed content column hands its
   // observed key set down (DPP), and the sidecars prune files the
   // joined values can't touch — content-column partition pruning.
   // Advertised attributes are GATED by the pruned read schema:
@@ -2002,7 +1678,7 @@ final class LedgerScan(path: String, required: StructType,
   // against the scan's output and THROWS (not skips) on a miss, so a
   // count-style query that pruned doc_id away must not see it offered
   override def filterAttributes(): Array[NamedReference] =
-    (Seq("doc_id") ++ bloomCol ++ zoneCol).distinct
+    (Seq("doc_id") ++ indexes.map(_._2)).distinct
       .filter(required.fieldNames.contains(_))
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
       .toArray
@@ -2072,83 +1748,36 @@ final class LedgerScan(path: String, required: StructType,
       }
     }
 
-  /** The declared Bloom column and the pushed probes against it (s64):
-    * each equality probe must find its value POSSIBLE in a file's
-    * sidecar (IN: any of its values); a file failing any probe is
-    * provably value-free and never becomes a partition. Back-off is
-    * per file, inside bloomMightContain — no sidecar means scan. */
-  private lazy val props = LedgerProps.read(path)
-  private def bloomCol: Option[String] = props.bloom
-  /** One file's verdict against a batch of probes, with the sidecar
-    * loaded ONCE — an IN-probe can carry a join-delivered key set, and
-    * re-reading the filter per value would cost O(values x files) at
-    * plan time. No sidecar (or a torn one) backs off to "scan". */
-  private def bloomSurvivesAll(fileName: String, c: String,
-                               probes: Seq[Filter]): Boolean =
-    probes.isEmpty || (LedgerSource.loadBloomSidecar(path, fileName, c) match {
-      case None => true // unindexed file: back off
-      case Some(filter) => probes.forall {
-        case EqualTo(_, v) => LedgerSource.bloomBytes(v)
-          .forall(LedgerSource.bloomTest(filter, _))
-        case In(_, vs) => vs.exists(v => LedgerSource.bloomBytes(v)
-          .forall(LedgerSource.bloomTest(filter, _)))
-        case _ => true
-      }
-    })
-  private def bloomProbesIn(filters: Array[Filter],
-                            c: String): Seq[Filter] =
-    filters.toSeq.collect {
-      case f @ EqualTo(`c`, _) => f
-      case f @ In(`c`, _) => f
-    }
+  /** Each declared index with the probes among `filters` it can
+    * refute, indexes without any dropped. */
+  private def indexProbes(filters: Array[Filter])
+      : Seq[(SkipIndex, String, Seq[Filter])] =
+    indexes.map { case (ix, c) => (ix, c, filters.toSeq.filter(ix.refutes(_, c))) }
+      .filter(_._3.nonEmpty)
 
-  /** The declared zone-map column and the pushed COMPARISON probes
-    * against it (s71): a file whose min/max interval provably misses
-    * every probe never becomes a partition. Back-off per file inside
-    * zoneAdmits — no sidecar means scan. */
-  private def zoneCol: Option[String] = props.zonemap
-  private def zoneProbesIn(filters: Array[Filter],
-                           c: String): Seq[Filter] =
-    filters.toSeq.collect {
-      case f @ EqualTo(`c`, _) => f
-      case f @ In(`c`, _) => f
-      case f @ GreaterThan(`c`, _) => f
-      case f @ GreaterThanOrEqual(`c`, _) => f
-      case f @ LessThan(`c`, _) => f
-      case f @ LessThanOrEqual(`c`, _) => f
-    }
-  private def zoneSurvivesAll(fileName: String, c: String,
-                              probes: Seq[Filter]): Boolean =
-    probes.isEmpty || (LedgerSource.loadZoneSidecar(path, fileName, c) match {
-      case None => true // unindexed file: back off
-      case Some(zone) => LedgerSource.zoneAdmits(zone, probes)
-    })
-  /** Verdicts for the static pushed zone probes, memoized once per
-    * Scan — the same planning-IO discipline as bloomKeptNames. */
-  private lazy val zoneKeptNames: Set[String] = zoneCol match {
-    case None => fileStats.iterator.map(_._1.getName).toSet
-    case Some(c) =>
-      val probes = zoneProbesIn(pushed, c)
-      fileStats.iterator.map(_._1.getName)
-        .filter(zoneSurvivesAll(_, c, probes)).toSet
-  }
+  /** Does every index keep `fileName` against its probes? A file failing
+    * any probe provably holds no match and never becomes a partition;
+    * back-off is per file, inside [[SkipIndex.keeps]]. */
+  private def indexesKeep(probes: Seq[(SkipIndex, String, Seq[Filter])],
+                          fileName: String): Boolean =
+    probes.forall { case (ix, c, ps) => ix.keeps(path, fileName, c, ps) }
+
   /** Verdicts for the STATIC pushed probes, memoized once per Scan:
     * survivors() runs several times (planInputPartitions,
     * outputPartitioning, statistics) and sidecar probes are file
     * reads — at large file counts re-probing per call would make
     * planning IO-quadratic. */
-  private lazy val bloomKeptNames: Set[String] = bloomCol match {
-    case None => fileStats.iterator.map(_._1.getName).toSet
-    case Some(c) =>
-      val probes = bloomProbesIn(pushed, c)
-      fileStats.iterator.map(_._1.getName)
-        .filter(bloomSurvivesAll(_, c, probes)).toSet
+  private lazy val indexKept: String => Boolean = {
+    val probes = indexProbes(pushed)
+    if (probes.isEmpty) _ => true
+    else fileStats.iterator.map(_._1.getName)
+      .filter(indexesKeep(probes, _)).toSet
   }
 
   /** Post-file-skip survivors. Bucketed scans ignore runtime join-key
     * re-planning so the partition grouping `outputPartitioning()`
     * promised stays exactly what executes (a narrower re-plan would
-    * change the bucket count after the planner consumed it; the Bloom
+    * change the bucket count after the planner consumed it; the index
     * skip is STATIC — derived from pushed filters known before the
     * promise — so it applies in both modes consistently). */
   private def survivors(): Array[(File, Long, Long, Long)] = {
@@ -2156,26 +1785,11 @@ final class LedgerScan(path: String, required: StructType,
     val bounds =
       if (bucketMode) KeyBounds(pushed) else KeyBounds(pushed ++ runtime)
     val inSets = if (bucketMode) Seq.empty else runtimeInSets
-    // runtime probes on the Bloom column (join-delivered value sets):
-    // a file survives each probe iff ANY of its values might be
-    // present; static like-for-like with runtimeInSets, non-bucket
-    // only, one sidecar load per file
-    val runtimeBloomProbes: Seq[Filter] = bloomCol match {
-      case Some(c) if !bucketMode => bloomProbesIn(runtime, c)
-      case _ => Seq.empty
-    }
-    def runtimeBloomOk(name: String): Boolean =
-      runtimeBloomProbes.isEmpty ||
-        bloomSurvivesAll(name, bloomCol.get, runtimeBloomProbes)
-    // runtime (join-delivered) probes against the zone column — DPP
-    // hands down EqualTo/In sets; the interval test is the same
-    val runtimeZoneProbes: Seq[Filter] = zoneCol match {
-      case Some(c) if !bucketMode => zoneProbesIn(runtime, c)
-      case _ => Seq.empty
-    }
-    def runtimeZoneOk(name: String): Boolean =
-      runtimeZoneProbes.isEmpty ||
-        zoneSurvivesAll(name, zoneCol.get, runtimeZoneProbes)
+    // runtime probes on the indexed columns (join-delivered value
+    // sets): a file survives each probe iff ANY of its values might be
+    // present; like-for-like with runtimeInSets, non-bucket only, one
+    // sidecar load per file and index
+    val runtimeProbes = if (bucketMode) Nil else indexProbes(runtime)
     fileStats.filter { case (f, minId, maxId, nRows) =>
       // stats-header file skip: a file whose key range misses the
       // pushed/runtime interval — or misses any runtime join-key set —
@@ -2189,8 +1803,7 @@ final class LedgerScan(path: String, required: StructType,
       }
       nRows > 0 && bounds.overlaps(minId, maxId) &&
         inSets.forall(anyKeyInRange) &&
-        bloomKeptNames.contains(f.getName) && runtimeBloomOk(f.getName) &&
-        zoneKeptNames.contains(f.getName) && runtimeZoneOk(f.getName)
+        indexKept(f.getName) && indexesKeep(runtimeProbes, f.getName)
     }
   }
 
@@ -2310,14 +1923,13 @@ final class LedgerScan(path: String, required: StructType,
     var rows = 0L
     if (new File(path).isDirectory) {
       fileStats.foreach { case (f, minId, maxId, nRows) =>
-        // count only files the STATIC skips keep (key bounds + Bloom +
-        // zone verdicts, all derived from pushed filters available at
+        // count only files the STATIC skips keep (key bounds + index
+        // verdicts, all derived from pushed filters available at
         // stats time) — a narrow indexed probe then reports the few
         // files it will actually open, and Catalyst can AUTO-broadcast
         // the probe side of a join instead of assuming the whole table
         if (nRows > 0 && bounds.overlaps(minId, maxId) &&
-            bloomKeptNames.contains(f.getName) &&
-            zoneKeptNames.contains(f.getName)) {
+            indexKept(f.getName)) {
           bytes += f.length()
           rows += nRows
         }
@@ -3231,7 +2843,7 @@ final class LedgerBatchWrite(path: String, truncate: Boolean,
       LedgerSource.deleteFiles(path).foreach(_.delete())
       // dead files' index sidecars go with them (derived data, not in
       // manifests — nothing can dangle on them)
-      LedgerSource.sweepOrphanSidecars(path): Unit
+      SkipIndex.sweepOrphans(path): Unit
     }
     // REPLACE WHERE: the interval's old rows give way to the new files
     replaceBounds.foreach(b =>
@@ -3271,16 +2883,14 @@ final class LedgerWriterFactory(path: String,
     extends DataWriterFactory {
   // resolved once (driver-side for batch writes, task-side for the MoR
   // delta path's lazy insert writer — same shared-filesystem contract
-  // as every other `_props` read): a declared Bloom column makes every
+  // as every other `_props` read): each declared skip index makes every
   // writer stamp its file's sidecar as part of the write itself, so
-  // fresh data is born indexed — the index needs no refresh job; a
-  // declared zone-map column likewise stamps its min/max sidecar
-  private val props = LedgerProps.read(path)
+  // fresh data is born indexed — an index needs no refresh job
+  private val indexes = LedgerProps.read(path).indexes
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     bucketWidth match {
-      case Some(w) =>
-        new BucketedLedgerWriter(path, partitionId, w, props.bloom, props.zonemap)
-      case None => new LedgerWriter(path, partitionId, props.bloom, props.zonemap)
+      case Some(w) => new BucketedLedgerWriter(path, partitionId, w, indexes)
+      case None => new LedgerWriter(path, partitionId, indexes)
     }
 }
 
@@ -3293,15 +2903,14 @@ final class LedgerWriterFactory(path: String,
   * open exactly one file; a pathological task interleaving all buckets
   * opens at most #buckets small files, never corrupts the contract. */
 final class BucketedLedgerWriter(dir: String, partitionId: Int, width: Long,
-                                 bloomCol: Option[String] = None,
-                                 zoneCol: Option[String] = None)
+                                 indexes: Seq[(SkipIndex, String)] = Nil)
     extends DataWriter[InternalRow] {
   private val writers =
     scala.collection.mutable.LinkedHashMap.empty[Long, LedgerWriter]
   override def write(meta: InternalRow, row: InternalRow): Unit = write(row)
   override def write(row: InternalRow): Unit =
     writers.getOrElseUpdate(Math.floorDiv(row.getLong(0), width),
-      new LedgerWriter(dir, partitionId, bloomCol, zoneCol)).write(row)
+      new LedgerWriter(dir, partitionId, indexes)).write(row)
   override def commit(): WriterCommitMessage =
     LedgerCommit(writers.values.toSeq.flatMap(_.commit() match {
       case LedgerCommit(names) => names
@@ -3311,8 +2920,7 @@ final class BucketedLedgerWriter(dir: String, partitionId: Int, width: Long,
 }
 
 final class LedgerWriter(dir: String, partitionId: Int,
-                         bloomCol: Option[String] = None,
-                         zoneCol: Option[String] = None)
+                         indexes: Seq[(SkipIndex, String)] = Nil)
     extends DataWriter[InternalRow] {
   private val name =
     f"part-$partitionId%05d-${UUID.randomUUID().toString.take(8)}.gl"
@@ -3322,24 +2930,12 @@ final class LedgerWriter(dir: String, partitionId: Int,
   private var minId = Long.MaxValue
   private var maxId = Long.MinValue
   private var nRows = 0L
-  // Bloom fold (s64): the declared column's DISTINCT value hashes,
-  // folded as rows pass exactly like min/max — bounded by the file's
-  // distinct values, and NULLs are never added (an equality probe
-  // cannot match them)
-  private val bloomLang = bloomCol.contains("lang")
-  private val bloomChars = bloomCol.contains("n_chars")
-  private val bloomSeen: scala.collection.mutable.HashSet[(Int, Int)] =
-    if (bloomCol.isDefined) scala.collection.mutable.HashSet.empty else null
-  // zone-map fold (s71): the declared column's non-null MIN/MAX, folded
-  // as rows pass exactly like the key stats; strings compare unsigned
-  // byte-wise (UTF8String's binary order), n_chars as signed longs
-  private val zoneLang = zoneCol.contains("lang")
-  private val zoneChars = zoneCol.contains("n_chars")
-  private var zoneMinB: Array[Byte] = null
-  private var zoneMaxB: Array[Byte] = null
-  private var zoneMinL = Long.MaxValue
-  private var zoneMaxL = Long.MinValue
-  private var zoneHas = false
+  // one skip-index fold per declared index, fed its column's non-null
+  // values as rows pass, exactly like the key stats; with no index
+  // declared both arrays are empty and the row loop skips them
+  private val folds = indexes.map { case (ix, c) => c -> ix.fold(c) }
+  private val langFolds = folds.collect { case ("lang", f) => f }.toArray
+  private val charsFolds = folds.collect { case ("n_chars", f) => f }.toArray
   // placeholder stats — stamped with the real fold on close
   out.writeInt(LedgerSource.Magic)
   out.writeLong(0L); out.writeLong(0L); out.writeLong(0L)
@@ -3361,25 +2957,14 @@ final class LedgerWriter(dir: String, partitionId: Int,
     if (!langNull) {
       val b = row.getUTF8String(1).getBytes
       out.writeInt(b.length); out.write(b)
-      if (bloomLang) bloomSeen += LedgerSource.bloomHashes(b)
-      if (zoneLang) {
-        // clone when RETAINING: getBytes may alias a reused row buffer
-        if (zoneMinB == null ||
-          LedgerSource.unsignedCompare(b, zoneMinB) < 0) zoneMinB = b.clone()
-        if (zoneMaxB == null ||
-          LedgerSource.unsignedCompare(b, zoneMaxB) > 0) zoneMaxB = b.clone()
-        zoneHas = true
-      }
+      var i = 0
+      while (i < langFolds.length) { langFolds(i).add(b); i += 1 }
     }
-    out.writeLong(if (charsNull) 0L else row.getLong(2))
-    if (bloomChars && !charsNull)
-      bloomSeen += LedgerSource.bloomHashes(
-        java.nio.ByteBuffer.allocate(8).putLong(row.getLong(2)).array())
-    if (zoneChars && !charsNull) {
-      val v = row.getLong(2)
-      zoneMinL = math.min(zoneMinL, v)
-      zoneMaxL = math.max(zoneMaxL, v)
-      zoneHas = true
+    val chars = if (charsNull) 0L else row.getLong(2)
+    out.writeLong(chars)
+    if (!charsNull) {
+      var i = 0
+      while (i < charsFolds.length) { charsFolds(i).add(chars); i += 1 }
     }
   }
 
@@ -3395,26 +2980,13 @@ final class LedgerWriter(dir: String, partitionId: Int,
     // the sidecars land BEFORE the commit message: a committed file is
     // born indexed or (on any failure between the two) unindexed —
     // either way the scan's back-off keeps results exact
-    bloomCol.foreach(c =>
-      LedgerSource.writeBloomSidecar(dir, name, c, bloomSeen))
-    zoneCol.foreach { c =>
-      val range: Option[(Array[Byte], Array[Byte])] =
-        if (!zoneHas) None
-        else if (zoneChars) Some((
-          java.nio.ByteBuffer.allocate(8).putLong(zoneMinL).array(),
-          java.nio.ByteBuffer.allocate(8).putLong(zoneMaxL).array()))
-        else Some((zoneMinB, zoneMaxB))
-      LedgerSource.writeZoneSidecar(dir, name, c, isLong = zoneChars, range)
-    }
+    folds.foreach { case (_, f) => f.publish(dir, name) }
     LedgerCommit(Seq(name))
   }
   override def abort(): Unit = {
     out.close()
     file.delete()
-    bloomCol.foreach(c =>
-      LedgerSource.bloomSidecar(dir, name, c).delete(): Unit)
-    zoneCol.foreach(c =>
-      LedgerSource.zoneSidecar(dir, name, c).delete(): Unit)
+    indexes.foreach { case (ix, c) => ix.sidecar(dir, name, c).delete(): Unit }
   }
   override def close(): Unit = ()
 }

@@ -99,8 +99,9 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("one conf restore, one streaming drain and one RocksDB provider name under src/") {
-    // conf overrides go through GraftSession.withConf, the only unset
-    assert(hits("conf" + "\\.unset") == Map("GraftSession.scala" -> 1))
+    // conf overrides go through GraftSession.withConf, the only unset —
+    // counted on the call, so an aliased `val c = spark.conf` is caught
+    assert(hits("\\.un" + "set\\(") == Map("GraftSession.scala" -> 1))
     // every st query runs its streams through StreamingQueries.drain
     assert(hits("Trigger" + "\\.AvailableNow").get("StreamingQueries.scala").contains(1))
     // the provider is named once, as StreamingQueries.RocksDbStateStore
@@ -128,6 +129,16 @@ class GraftSessionSpec extends SparkSpec {
       Map("Bench.scala" -> 1, "Verify.scala" -> 1))
     assert(hits("SparkEntry" + "\\.queries", "src/main").keySet
       .intersect(Set("Bench.scala", "Verify.scala")).isEmpty)
+  }
+
+  test("one skip-index surface and one index backfill under src/main") {
+    // the sidecar directories and magic numbers are stated once, by the
+    // SkipIndex values
+    Seq("\"_bl" + "oom\"", "\"_zo" + "nes\"", "0x4742" + "4631", "0x475A" + "4D31")
+      .foreach { n => assert(hits(n, "src/main") == Map("SkipIndex.scala" -> 1), n) }
+    // build_bloom and build_zonemap are one procedure class
+    assert(hits("extends " + "LedgerProcedure\\(root, s?\"build_", "src/main") ==
+      Map("GraftCatalog.scala" -> 1))
   }
 
   test("one round pin and one convergence loop under src/") {

@@ -249,7 +249,7 @@ class PlanQualitySpec extends SparkSpec {
     // itself: the #areas²-bounded matrix must broadcast and the wide
     // state must never reshuffle for it
     import org.apache.spark.sql.functions.{col, lit}
-    val state = graft.queries.EpiQueries.seedWide(spark, dir)
+    val state = graft.queries.EpiQueries.siarInputs(spark, dir)._1
     val mat = state.select(col("area").as("src"), col("area").as("dst"),
       lit(1L).as("cnt"), lit(1L).as("tot"))
     val p = graft.queries.EpiQueries.moveStep(state, mat)

@@ -8,8 +8,9 @@ class Round5OpsSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("g22: infection step conserves S+I+A+R per (area, kind) exactly") {
-    val s0 = EpiQueries.seedWide(spark, dir)
-    val s1 = EpiQueries.infectStep(s0)
+    val s0 = EpiQueries.siarInputs(spark, dir)._1
+    // a chain with no moves is one infection step, g22's own path
+    val s1 = EpiQueries.siarChainFinal(s0, Nil)
     def totals(df: org.apache.spark.sql.DataFrame) = df.select(
         col("area") +: (0 to 2).map(k =>
           (col(s"s$k") + col(s"i$k") + col(s"a$k") + col(s"r$k")).as(s"n$k")): _*)
@@ -58,7 +59,7 @@ class Round5OpsSpec extends SparkSpec {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(
         rows.map { case (a, vs) => Row.fromSeq(a +: vs) }), schema)
-    val out = graft.queries.EpiQueries.infectStep(df).collect()
+    val out = EpiQueries.siarChainFinal(df, Nil).collect()
       .map(r => r.getString(0) -> (1 to 12).map(r.getLong).toSeq).toMap
     rows.foreach { case (a, vs) =>
       val o = out(a)

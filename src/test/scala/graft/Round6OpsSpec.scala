@@ -31,7 +31,7 @@ class Round6OpsSpec extends SparkSpec {
     // the defining property of the training step: with assignments
     // fixed, the mean minimizes within-code squared distance, and
     // re-assignment then only ever moves a subvector to a closer code
-    val (asg0, asg1) = graft.queries.VectorQueries.pqAssignments(spark, dir)
+    val (asg0, asg1) = PqAssignments(spark, dir)
     val d0 = asg0.agg(sum(col("d2"))).head().getDouble(0)
     val d1 = asg1.agg(sum(col("d2"))).head().getDouble(0)
     info(f"seed distortion $d0%.4f -> trained $d1%.4f")
@@ -49,7 +49,7 @@ class Round6OpsSpec extends SparkSpec {
     // quadratic plan-matching) would visibly hang this suite long
     // before the final assert
     import org.apache.spark.sql.functions.{col, lit}
-    val s0 = EpiQueries.seedWide(spark, dir)
+    val s0 = EpiQueries.siarInputs(spark, dir)._1
     val idMat = s0.select(col("area").as("src"), col("area").as("dst"),
       lit(1L).as("cnt"), lit(1L).as("tot"))
     val (ts, _, fin) = EpiQueries.siarChain(s0, Seq.fill(24)(idMat))
@@ -74,13 +74,14 @@ class Round6OpsSpec extends SparkSpec {
     // the pre-fix shape: the same chain with no barriers. CollapseProject
     // inlines nf/fl across stages and the tree grows multiplicatively
     // per step — this is the regression class the budget guards against.
-    val s0 = EpiQueries.seedWide(spark, dir)
+    val s0 = EpiQueries.siarInputs(spark, dir)._1
     val idMat = s0.select(col("area").as("src"), col("area").as("dst"),
       lit(1L).as("cnt"), lit(1L).as("tot"))
-    val unpersisted = EpiQueries.infectStep(
+    // (a chain with no moves is one unpinned infection step)
+    def infect(st: DataFrame) = EpiQueries.siarChainFinal(st, Nil)
+    val unpersisted = infect(
       EpiQueries.moveStep(
-        EpiQueries.infectStep(
-          EpiQueries.moveStep(EpiQueries.infectStep(s0), idMat)), idMat))
+        infect(EpiQueries.moveStep(infect(s0), idMat)), idMat))
     val blown = exprNodes(unpersisted)
     info(s"unpersisted 3-step chain: $blown expression nodes")
 

@@ -206,9 +206,9 @@ class Round9OpsSpec extends SparkSpec {
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell")).toMap
     val fullAdc = SparkEntry.queries("v16_pq_adc")(spark, dir) // top-5 UNPRUNED
     // v16 only exposes its top-5; rebuild the full pair-score table from
-    // the same primitives it uses (pqAssignments' seed assignment) so the
+    // the same primitives it uses (PqAssignments' seed assignment) so the
     // driver-side compose sees every same-cell candidate
-    val (asg0, _) = graft.queries.VectorQueries.pqAssignments(spark, dir)
+    val (asg0, _) = PqAssignments(spark, dir)
     val codeOf = asg0.select(col("vec_id"), col("j"), col("code_id")).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("j")) -> r.getAs[Long]("code_id")).toMap
     val emb = graft.engine.Tables(spark, dir, "embeddings")

@@ -52,27 +52,20 @@ class RuntimeFilterSpec extends SparkSpec {
   }
 
   test("native bloom runtime filter engages once the dim cannot broadcast") {
-    val c = spark.conf
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-    val saved = keys.map(k => k -> c.getOption(k))
     val baseline = bloomJoin.collect().toSeq // default confs: no bloom
     assert(baseline.nonEmpty)
-    val withBloom =
-      try {
-        c.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        c.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    val withBloom = GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
         // cluster default 10GB is right at 100 TB; 0 emulates a scan
         // big enough to be worth filtering at this test SF
-        c.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-        val df = bloomJoin
-        val rows = df.collect().toSeq
-        val plan = df.queryExecution.executedPlan.toString
-        assert(plan.contains("might_contain"), plan)
-        rows
-      } finally saved.foreach { case (k, v) => v.fold(c.unset(k))(c.set(k, _)) }
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
+      val df = bloomJoin
+      val rows = df.collect().toSeq
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("might_contain"), plan)
+      rows
+    }
     assert(withBloom == baseline)
   }
 }

@@ -4,7 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.LedgerSource
+import graft.sources.{LedgerSource, SkipIndex}
 
 /** Round-17 zone maps (`_zones/<file>.<col>` min/max sidecars + the
   * `build_zonemap` verb): the RANGE complement to the s64 Bloom skip.
@@ -137,13 +137,13 @@ class ZoneMapSpec extends SparkSpec {
         .select($"id".as("doc_id"), lit("w").as("lang"), $"id".as("n_chars"))
         .coalesce(1).writeTo(s"$cat.t").append()
       val unindexed0 = LedgerSource.ledgerFiles(tdir).filterNot(f =>
-        LedgerSource.zoneSidecar(tdir, f.getName, "n_chars").isFile)
+        SkipIndex.ZoneMap.sidecar(tdir, f.getName, "n_chars").isFile)
       assert(unindexed0.isEmpty, "an append must stamp its own sidecar")
       // a CoW clip rewrites survivors under a fresh UNINDEXED name —
       // the probe must scan it (back-off), never lose its rows
       spark.sql(s"DELETE FROM $cat.t WHERE doc_id BETWEEN 10 AND 14")
       val unindexed1 = LedgerSource.ledgerFiles(tdir).filterNot(f =>
-        LedgerSource.zoneSidecar(tdir, f.getName, "n_chars").isFile)
+        SkipIndex.ZoneMap.sidecar(tdir, f.getName, "n_chars").isFile)
       assert(unindexed1.nonEmpty, "the clip must mint an unindexed name")
       val got = spark.table(s"$cat.t").where($"n_chars" < 10)
         .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -230,8 +230,8 @@ class ZoneMapSpec extends SparkSpec {
       val tdir = new File(root, "t").getPath
       def unindexed(): Seq[String] =
         LedgerSource.ledgerFiles(tdir).toSeq.map(_.getName).filterNot(n =>
-          LedgerSource.zoneSidecar(tdir, n, "n_chars").isFile &&
-            LedgerSource.bloomSidecar(tdir, n, "lang").isFile)
+          SkipIndex.ZoneMap.sidecar(tdir, n, "n_chars").isFile &&
+            SkipIndex.Bloom.sidecar(tdir, n, "lang").isFile)
       assert(unindexed().isEmpty, "CREATE-declared indexes stamp at write")
       val props = spark.sql(s"SHOW TBLPROPERTIES $cat.t").collect()
         .map(r => (r.getString(0), r.getString(1))).toMap
@@ -241,7 +241,7 @@ class ZoneMapSpec extends SparkSpec {
       spark.sql(s"CALL $cat.system.compact('t', 2)").collect()
       assert(unindexed().isEmpty, "compacted files must be born indexed")
       val live = LedgerSource.ledgerFiles(tdir).map(_.getName).toSet
-      Seq(LedgerSource.BloomDir, LedgerSource.ZoneDir).foreach { sub =>
+      SkipIndex.all.map(_.subdir).foreach { sub =>
         val names = Option(new File(tdir, sub).listFiles())
           .getOrElse(Array.empty[File]).map(_.getName)
         assert(names.forall(n => live.contains(n.take(n.lastIndexOf('.')))),

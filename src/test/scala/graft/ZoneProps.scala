@@ -8,9 +8,10 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
 
 import graft.queries.Portable
 import graft.sources.LedgerSource
+import graft.sources.SkipIndex.ZoneMap
 
-/** Property suite for the s71 zone-map sidecar kernel: the write/probe
-  * pair must satisfy the ZERO-FALSE-NEGATIVE contract on arbitrary
+/** Property suite for the s71 zone-map sidecar kernel: the writers' fold
+  * and the scan's per-file test (`ZoneMap.keeps`) must satisfy the ZERO-FALSE-NEGATIVE contract on arbitrary
   * value sets and probe shapes — whenever ANY folded value satisfies a
   * probe, the sidecar MUST admit the file (exclusion is only ever an
   * optimization). Checked for both encodings: signed longs (big-endian
@@ -26,8 +27,12 @@ object ZoneProps extends Properties("ZoneSidecar") {
     Files.createTempDirectory(Portable.scratchRoot, "zoneprops").toString
   }
 
-  private def longBytes(l: Long) =
-    java.nio.ByteBuffer.allocate(8).putLong(l).array()
+  /** `vs` folded into `<dir>/_zones/f.gl.n_chars`, as a writer would. */
+  private def longSidecar(dir: String, vs: Seq[Long]): Unit = {
+    val fold = ZoneMap.fold("n_chars")
+    vs.foreach(fold.add(_))
+    fold.publish(dir, "f.gl")
+  }
 
   private val longSets: Gen[List[Long]] =
     Gen.nonEmptyListOf(Gen.choose(-1000L, 1000L))
@@ -61,37 +66,33 @@ object ZoneProps extends Properties("ZoneSidecar") {
     Prop.forAll(longSets, Gen.choose(-1010L, 1010L),
       Gen.choose(0, 5)) { (vs, pv, shape) =>
       val dir = tmp()
-      LedgerSource.writeZoneSidecar(dir, "f.gl", "n_chars", isLong = true,
-        Some((longBytes(vs.min), longBytes(vs.max))))
+      longSidecar(dir, vs)
       val (filter, sat) = longProbe(pv, shape)
       val mustAdmit = vs.exists(sat)
-      val admits = LedgerSource.zoneMightMatch(dir, "f.gl", "n_chars",
-        Seq(filter))
+      val admits = ZoneMap.keeps(dir, "f.gl", "n_chars", Seq(filter))
       !mustAdmit || admits
     }
 
   property("zero false negatives: ASCII strings, every probe shape") =
     Prop.forAll(strSets, asciiStr, Gen.choose(0, 5)) { (vs, pv, shape) =>
       val dir = tmp()
-      val mn = vs.min // ASCII: String order == unsigned byte order
-      val mx = vs.max
-      LedgerSource.writeZoneSidecar(dir, "f.gl", "lang", isLong = false,
-        Some((mn.getBytes("UTF-8"), mx.getBytes("UTF-8"))))
+      // ASCII: String order == the fold's unsigned byte order
+      val fold = ZoneMap.fold("lang")
+      vs.foreach(v => fold.add(v.getBytes("UTF-8")))
+      fold.publish(dir, "f.gl")
       val (filter, sat) = strProbe(pv, shape)
       val mustAdmit = vs.exists(sat)
-      val admits = LedgerSource.zoneMightMatch(dir, "f.gl", "lang",
-        Seq(filter))
+      val admits = ZoneMap.keeps(dir, "f.gl", "lang", Seq(filter))
       !mustAdmit || admits
     }
 
   property("a probe matching an in-range value always admits under conjunction") =
     Prop.forAll(longSets) { vs =>
       val dir = tmp()
-      LedgerSource.writeZoneSidecar(dir, "f.gl", "n_chars", isLong = true,
-        Some((longBytes(vs.min), longBytes(vs.max))))
+      longSidecar(dir, vs)
       // a conjunction of probes all satisfied by one folded value
       val v = vs.head
-      LedgerSource.zoneMightMatch(dir, "f.gl", "n_chars", Seq(
+      ZoneMap.keeps(dir, "f.gl", "n_chars", Seq(
         GreaterThanOrEqual("n_chars", Long.box(v)),
         LessThanOrEqual("n_chars", Long.box(v)),
         EqualTo("n_chars", Long.box(v))))
@@ -100,24 +101,20 @@ object ZoneProps extends Properties("ZoneSidecar") {
   property("a no-values sidecar refutes every comparison probe") =
     Prop.forAll(Gen.choose(-100L, 100L), Gen.choose(0, 5)) { (pv, shape) =>
       val dir = tmp()
-      LedgerSource.writeZoneSidecar(dir, "f.gl", "n_chars", isLong = true,
-        None)
-      !LedgerSource.zoneMightMatch(dir, "f.gl", "n_chars",
-        Seq(longProbe(pv, shape)._1))
+      longSidecar(dir, Nil)
+      !ZoneMap.keeps(dir, "f.gl", "n_chars", Seq(longProbe(pv, shape)._1))
     }
 
   property("missing and torn sidecars back off to admission") =
     Prop.forAll(Gen.choose(-100L, 100L),
       Gen.nonEmptyListOf(Gen.choose(0, 255))) { (pv, junk) =>
       val dir = tmp()
-      val missing = LedgerSource.zoneMightMatch(dir, "f.gl", "n_chars",
+      val missing = ZoneMap.keeps(dir, "f.gl", "n_chars",
         Seq(EqualTo("n_chars", Long.box(pv))))
-      java.nio.file.Files.createDirectories(
-        new java.io.File(dir, LedgerSource.ZoneDir).toPath)
-      java.nio.file.Files.write(
-        LedgerSource.zoneSidecar(dir, "g.gl", "n_chars").toPath,
-        junk.map(_.toByte).toArray)
-      val torn = LedgerSource.zoneMightMatch(dir, "g.gl", "n_chars",
+      val side = ZoneMap.sidecar(dir, "g.gl", "n_chars")
+      java.nio.file.Files.createDirectories(side.getParentFile.toPath)
+      java.nio.file.Files.write(side.toPath, junk.map(_.toByte).toArray)
+      val torn = ZoneMap.keeps(dir, "g.gl", "n_chars",
         Seq(EqualTo("n_chars", Long.box(pv))))
       missing && torn
     }
