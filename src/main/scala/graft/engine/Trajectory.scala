@@ -59,9 +59,9 @@ object Trajectory {
     * `DISTINCT (user_id, hour)` with the region recomputed from the
     * group key afterwards. That replaces the previous
     * `max_by(region, struct(ts, event_id))`, whose struct-typed
-    * aggregation buffer forced a SortAggregate (plan evidence:
-    * `plans/r17/g05_presence_by_region_before.txt` nodes 4-8 — a full
-    * pre-shuffle Sort of every raw event feeding SortAggregate twice)
+    * aggregation buffer forced a SortAggregate (a full pre-shuffle Sort
+    * of every raw event feeding SortAggregate twice; `CENSUS.json`'s
+    * `aggregates` field of g05_presence_by_region pins its absence)
     * into a whole-stage-codegen HashAggregate with map-side partial
     * combine, shuffles (user_id, hour) pairs only (guide §2.3: narrower
     * exchange — no region string, no ts), and evaluates the geohash

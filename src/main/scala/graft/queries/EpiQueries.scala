@@ -714,7 +714,7 @@ object EpiQueries {
             greatest(lit(0L), col("new_i") +
               pmod(portableHash(concat(lit("obs"), col("step").cast("string"))), lit(101)) -
               lit(50L)).as("obs_i"))
-        sim.join(obs, "step")
+        sim.join(broadcast(obs), "step")
           .select(col("beta_micro"),
             expr("abs(new_i - obs_i) DIV 100").as("d"))
           .groupBy(col("beta_micro"))
@@ -873,7 +873,7 @@ object EpiQueries {
           .select(col("step"),
             perturb(col("new_i"), "obs").as("obs_ni"),
             perturb(col("tot_i"), "obst").as("obs_ti"))
-        sim.join(obs, "step")
+        sim.join(broadcast(obs), "step")
           .select(col("beta_micro"), col("gamma_micro"),
             expr("abs(new_i - obs_ni) DIV 10").as("d1"),
             expr("abs(tot_i - obs_ti) DIV 10").as("d2"))

@@ -185,7 +185,8 @@ object GeoQueries {
     // persisted: the broadcast min-hour leg would otherwise re-run the
     // whole trajectory pipeline (the r17 before-plan shows the complete
     // scan→agg→window→explode subtree TWICE, once under the
-    // BroadcastExchange — plans/r17/g17b_wide_hour_month_before.txt)
+    // BroadcastExchange — `CENSUS.json`'s `cached` and `scans` fields of
+    // g17b_wide_hour_month pin the one persisted pass)
     val traj = Trajectory.complete(Tables.events(s, dir))
       .select(col("user_id"), col("region"),
         unix_timestamp(col("hour")).as("es"))

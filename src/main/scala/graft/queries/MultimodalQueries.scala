@@ -146,6 +146,22 @@ object MultimodalQueries {
     }
   }
 
+  /** One codec buffer's little-endian field writers and readers, shared
+    * by the BMP, AVI and WAV codecs: both containers store integers
+    * little-endian, and a fourcc tag is 4 ASCII bytes. */
+  private final class LeBytes(buf: Array[Byte]) {
+    def le16(off: Int, v: Int): Unit = {
+      buf(off) = v.toByte; buf(off + 1) = (v >> 8).toByte
+    }
+    def le32(off: Int, v: Int): Unit = { le16(off, v); le16(off + 2, v >> 16) }
+    def fcc(off: Int, tag: String): Unit =
+      (0 until 4).foreach(i => buf(off + i) = tag.charAt(i).toByte)
+    def u16(off: Int): Long = (buf(off) & 0xffL) | ((buf(off + 1) & 0xffL) << 8)
+    def u32(off: Int): Long = u16(off) | (u16(off + 2) << 16)
+    def fcc(off: Int): String =
+      new String(Array.tabulate(4)(i => (buf(off + i) & 0xff).toChar))
+  }
+
   /** A REAL binary container codec (m02): the encoder emits a VALID
     * 8-bit grayscale BMP (BITMAPFILEHEADER + BITMAPINFOHEADER + 256-entry
     * palette + 4-byte-aligned bottom-up pixel rows — any image tool opens
@@ -168,13 +184,7 @@ object MultimodalQueries {
       val dataOffset = 14 + 40 + 1024
       val fileSize = dataOffset + rowSize * h
       val b = new Array[Byte](fileSize)
-      def le32(off: Int, v: Int): Unit = {
-        b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-        b(off + 2) = ((v >> 16) & 0xff).toByte; b(off + 3) = ((v >> 24) & 0xff).toByte
-      }
-      def le16(off: Int, v: Int): Unit = {
-        b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-      }
+      val le = new LeBytes(b); import le._
       b(0) = 'B'; b(1) = 'M'
       le32(2, fileSize); le32(10, dataOffset)
       le32(14, 40); le32(18, w); le32(22, h); le16(26, 1); le16(28, 8)
@@ -211,23 +221,18 @@ object MultimodalQueries {
       var s = 0L
       var c = 0
       while (c < w) { s += bytes(top + c) & 0xffL; c += 1 }
-      BmpMeta(u32(bytes, 2), w, h, bpp, bytes(top) & 0xffL, s)
+      BmpMeta(new LeBytes(bytes).u32(2), w, h, bpp, bytes(top) & 0xffL, s)
     }
-
-    private def u32(bytes: Array[Byte], off: Int): Long =
-      (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-        ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
 
     /** Validated header fields (dataOffset, width, height, bpp). */
     private def header(bytes: Array[Byte]): (Long, Long, Long, Long) = {
       require(bytes.length >= 54 && bytes(0) == 'B'.toByte && bytes(1) == 'M'.toByte,
         "not a BMP container")
-      def u16(off: Int): Long =
-        (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8)
-      val dataOffset = u32(bytes, 10)
-      val w = u32(bytes, 18)
-      val h = u32(bytes, 22)
-      val compression = u32(bytes, 30)
+      val le = new LeBytes(bytes); import le._
+      val dataOffset = u32(10)
+      val w = u32(18)
+      val h = u32(22)
+      val compression = u32(30)
       require(compression == 0L, s"unsupported biCompression $compression (BI_RGB only)")
       require(h > 0L && (h & 0x80000000L) == 0L && w > 0L,
         "top-down (negative-height) or empty BMPs unsupported")
@@ -286,17 +291,7 @@ object MultimodalQueries {
       val idx1Size = nFrames * 16
       val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize) + (8 + idx1Size)
       val b = new Array[Byte](8 + riffSize)
-      def le32(off: Int, v: Int): Unit = {
-        b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-        b(off + 2) = ((v >> 16) & 0xff).toByte; b(off + 3) = ((v >> 24) & 0xff).toByte
-      }
-      def le16(off: Int, v: Int): Unit = {
-        b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-      }
-      def fcc(off: Int, s: String): Unit = {
-        var i = 0
-        while (i < 4) { b(off + i) = s.charAt(i).toByte; i += 1 }
-      }
+      val le = new LeBytes(b); import le._
       fcc(0, "RIFF"); le32(4, riffSize); fcc(8, "AVI ")
       fcc(12, "LIST"); le32(16, hdrlSize); fcc(20, "hdrl")
       fcc(24, "avih"); le32(28, 56)
@@ -348,15 +343,7 @@ object MultimodalQueries {
       * [[frameDataAt]] resolves an entry to its chunk data, verifying
       * the fourcc the offset lands on. */
     def decode(bytes: Array[Byte]): AviMeta = {
-      def fcc(off: Int): String = {
-        val c = new Array[Char](4)
-        var i = 0
-        while (i < 4) { c(i) = (bytes(off + i) & 0xff).toChar; i += 1 }
-        new String(c)
-      }
-      def u32(off: Int): Long =
-        (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-          ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
+      val le = new LeBytes(bytes); import le._
       require(bytes.length >= 12 && fcc(0) == "RIFF" && fcc(8) == "AVI ",
         "not an AVI container")
       require(8 + u32(4) <= bytes.length, "RIFF size extends past the stream")
@@ -444,17 +431,7 @@ object MultimodalQueries {
       val n = math.max(1, t.length)
       val dataSize = 2 * n
       val b = new Array[Byte](44 + dataSize)
-      def le32(off: Int, v: Int): Unit = {
-        b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-        b(off + 2) = ((v >> 16) & 0xff).toByte; b(off + 3) = ((v >> 24) & 0xff).toByte
-      }
-      def le16(off: Int, v: Int): Unit = {
-        b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-      }
-      def fcc(off: Int, s: String): Unit = {
-        var i = 0
-        while (i < 4) { b(off + i) = s.charAt(i).toByte; i += 1 }
-      }
+      val le = new LeBytes(b); import le._
       fcc(0, "RIFF"); le32(4, 36 + dataSize); fcc(8, "WAVE")
       fcc(12, "fmt "); le32(16, 16)
       le16(20, 1)              // wFormatTag = PCM
@@ -477,17 +454,7 @@ object MultimodalQueries {
     /** The chunk walker: every field read from the BYTES at its spec
       * offset — nothing echoed from the encoder. */
     def decode(bytes: Array[Byte]): WavMeta = {
-      def fcc(off: Int): String = {
-        val c = new Array[Char](4)
-        var i = 0
-        while (i < 4) { c(i) = (bytes(off + i) & 0xff).toChar; i += 1 }
-        new String(c)
-      }
-      def u32(off: Int): Long =
-        (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-          ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-      def u16(off: Int): Long =
-        (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8)
+      val le = new LeBytes(bytes); import le._
       require(bytes.length >= 12 && fcc(0) == "RIFF" && fcc(8) == "WAVE",
         "not a WAVE container")
       require(8 + u32(4) <= bytes.length, "RIFF size extends past the stream")

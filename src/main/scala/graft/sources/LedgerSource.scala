@@ -2012,45 +2012,16 @@ private[graft] object LedgerStreamOffset {
       case c => c.toString
     } + "\""
 
-  /** Inverse of [[LedgerStreamOffset.json]] — a real little scanner
-    * (quoted strings with `\"`, `\\` and `\uXXXX` escapes, comma
-    * separators OUTSIDE quotes), so the round-trip holds for any file
-    * name, not just the writer's comma-free `part-NNNNN-hex.gl` shape
-    * (user-supplied dirs may contain renamed files). */
-  def fromJson(json: String): LedgerStreamOffset = {
-    val t = json.trim
-    require(t.startsWith("[") && t.endsWith("]"), s"bad ledger offset: $json")
-    val names = ArrayBuffer.empty[String]
-    var i = 1
-    val end = t.length - 1
-    while (i < end) {
-      while (i < end && (t(i) == ',' || t(i).isWhitespace)) i += 1
-      if (i < end) {
-        require(t(i) == '"', s"bad ledger offset at index $i: $json")
-        i += 1
-        val sb = new StringBuilder
-        while (i < end && t(i) != '"') {
-          if (t(i) == '\\') {
-            require(i + 1 < end, s"dangling escape in ledger offset: $json")
-            t(i + 1) match {
-              case '"' => sb += '"'; i += 2
-              case '\\' => sb += '\\'; i += 2
-              case 'u' =>
-                require(i + 6 <= end, s"bad \\u escape in ledger offset: $json")
-                sb += Integer.parseInt(t.substring(i + 2, i + 6), 16).toChar
-                i += 6
-              case c => throw new IllegalArgumentException(
-                s"unsupported escape \\$c in ledger offset: $json")
-            }
-          } else { sb += t(i); i += 1 }
-        }
-        require(i < end && t(i) == '"', s"unterminated string in ledger offset: $json")
-        i += 1
-        names += sb.toString
-      }
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Inverse of [[LedgerStreamOffset.json]] for any file name, not just
+    * the writer's comma-free `part-NNNNN-hex.gl` shape (user-supplied
+    * dirs may contain renamed files). */
+  def fromJson(json: String): LedgerStreamOffset =
+    try LedgerStreamOffset(mapper.readValue(json, classOf[Array[String]]).toSeq)
+    catch { case e: java.io.IOException =>
+      throw new IllegalArgumentException(s"bad ledger offset: $json", e)
     }
-    LedgerStreamOffset(names.toSeq)
-  }
 }
 
 final class LedgerMicroBatchStream(path: String, required: StructType,

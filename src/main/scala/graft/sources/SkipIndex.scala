@@ -59,10 +59,11 @@ sealed abstract class SkipIndex(val prop: String, val kind: String,
             probes: Seq[Filter]): Boolean =
     probes.isEmpty || open(dir, dataFile, col)(read).forall(admits(_, probes))
 
-  /** Does a sidecar with this index's magic cover `dataFile`? Existence
-    * plus a header check, no body read: what `.indexes` reports. */
+  /** Does a well-formed sidecar cover `dataFile`, so that [[keeps]] can
+    * refute probes on it? What `.indexes` reports: the body is read as
+    * the scan reads it, so a torn sidecar reports unindexed. */
   def covers(dir: String, dataFile: String, col: String): Boolean =
-    open(dir, dataFile, col)(_ => Some(())).isDefined
+    open(dir, dataFile, col)(read).isDefined
 
   /** `body` over the sidecar's stream after its magic; None when there
     * is no sidecar, its magic is foreign or a read fails. */

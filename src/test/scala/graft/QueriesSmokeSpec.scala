@@ -3,7 +3,8 @@ package graft
 /** Wiring guard: every declared query runs at sf0.001 and every query
   * with an oracle entry has matching column names (the driver's compare
   * sorts columns by name before hashing — a name drift fails the round
-  * even when values agree). */
+  * even when values agree). The same runs record the plan census (see
+  * [[Census]]) that the last test checks against `CENSUS.json`. */
 class QueriesSmokeSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -40,11 +41,28 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(e.getMessage.endsWith("unknown query names: g28_siar_sweep nope"), e.getMessage)
   }
 
+  private val recorded = scala.collection.mutable.Map.empty[String, Census.Facts]
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
-      val df = fn(spark, sfDir)
-      assert(df.columns.nonEmpty)
-      df.write.mode("overwrite").format("noop").save()
+      // a cache left by an earlier query or suite would change the plan
+      GraftSession.release(spark)
+      recorded(name) = Census.record(spark) {
+        val df = fn(spark, sfDir)
+        assert(df.columns.nonEmpty)
+        df
+      }
     }
+  }
+
+  /** Every query's plan facts against the committed `CENSUS.json`; the
+    * recorded census is always written to `target/census.json`. */
+  test("the plan census matches CENSUS.json") {
+    val committed = Census.read(new java.io.File("CENSUS.json"))
+    val text = Census.render(recorded.toMap, committed.exemptions)
+    Census.write(new java.io.File("target/census.json"), text)
+    val diff = Census.diff(committed, text, SparkEntry.queries.keySet -- recorded.keySet)
+    if (diff.nonEmpty) fail(diff.mkString(s"${diff.size} census differences:\n  ", "\n  ",
+      "\nIf the change is intended, copy target/census.json over CENSUS.json."))
   }
 }

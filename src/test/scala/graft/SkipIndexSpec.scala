@@ -129,4 +129,22 @@ class SkipIndexSpec extends SparkSpec {
       }
     }
   }
+
+  test(".indexes reports a sidecar torn after its magic as unindexed, as the scan treats it") {
+    cases.filter(_._2 == "lang").foreach { case (ix, c) =>
+      withCatalog { (cat, root) =>
+        create(s"$cat.t", ix, c, mor = false)
+        val tdir = new File(root, "t").getPath
+        val torn = LedgerSource.ledgerFiles(tdir).map(_.getName).min
+        val side = ix.sidecar(tdir, torn, c).toPath
+        Files.write(side, Files.readAllBytes(side).take(4))
+        assert(ix.keeps(tdir, torn, c, Seq(EqualTo(c, "no such value"))),
+          s"${ix.prop}: a torn sidecar must back off to a scan")
+        val indexed = spark.table(s"$cat.t.indexes").where(col("kind") === ix.kind)
+          .collect().map(r => r.getString(0) -> r.getBoolean(3)).toMap
+        assert(indexed.size == 5 && indexed.count(!_._2) == 1 && !indexed(torn),
+          s"${ix.prop}: $indexed")
+      }
+    }
+  }
 }
